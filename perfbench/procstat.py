@@ -10,7 +10,9 @@ sampled on a background thread; the peak is over the sampled window.
 from __future__ import annotations
 
 import os
+import signal
 import threading
+import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
@@ -41,6 +43,40 @@ def _tree(root: int) -> list[int]:
         out.append(pid)
         stack.extend(children.get(pid, ()))
     return out
+
+
+def descendants(root: int) -> list[tuple[int, str]]:
+    """(pid, start time) of every live process below `root`; the start
+    time tells a process from a later one that reuses its pid."""
+    out = []
+    for pid in _tree(root)[1:]:
+        st = _stat(pid)
+        if st is not None:
+            out.append((pid, st[1][19]))  # stat field 22: starttime
+    return out
+
+
+def _running(pid: int, start: str) -> bool:
+    st = _stat(pid)
+    return st is not None and st[1][19] == start and st[1][0] != "Z"
+
+
+def end_all(procs: list[tuple[int, str]], grace_s: float = 20.0) -> None:
+    """Wait until each of `procs` (from descendants()) has ended. Those
+    still running after `grace_s` are killed, and waited for too."""
+    deadline = time.monotonic() + grace_s
+    left = [p for p in procs if _running(*p)]
+    while left and time.monotonic() < deadline:
+        time.sleep(0.05)
+        left = [p for p in left if _running(*p)]
+    for pid, _ in left:
+        try:
+            os.kill(pid, signal.SIGKILL)
+        except OSError:
+            pass  # ended meanwhile
+    while left:
+        time.sleep(0.05)
+        left = [p for p in left if _running(*p)]
 
 
 def tree_cpu_s(root: int) -> float:

@@ -11,9 +11,10 @@ prints one JSON object as its last stdout line.
 --trace 0 reports the end-to-end metrics. --trace 1 also enables Spark's
 event log and a StreamingQueryListener, times the kernel layers
 in-process, writes a per-layer table to .perfbench_out/ and reports the
-per-layer metrics. Its trace.overhead_frac compares its wall_s with an
-untraced run of the same workload, seed and --seconds: the one an earlier
-run in this checkout recorded, else one made first in a child process.
+per-layer metrics. Its trace.overhead_frac compares its wall_s with the
+median wall_s of the untraced runs of the same workload and --seconds that
+earlier runs in this checkout recorded; with none recorded, one is made
+first in a child process with the same seed.
 
 Run it from anywhere; all state lives under the checkout root in
 .perfbench_work/ (deleted on exit) and .perfbench_out/.
@@ -24,6 +25,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -75,22 +77,59 @@ OUT_DIR = os.path.join(ROOT, ".perfbench_out")
 
 
 def _wall_file(args) -> str:
-    return os.path.join(OUT_DIR, f"untraced-{args.workload}-seed{args.seed}"
-                                 f"-{args.seconds:g}s.json")
+    return os.path.join(OUT_DIR, f"untraced-{args.workload}-{args.seconds:g}s"
+                                 f"-seed{args.seed}.json")
 
 
 def _untraced_wall(args) -> float:
-    """wall_s of an untraced run with the same arguments: the one recorded
-    by an earlier run in this checkout, else a fresh run in a child
-    process."""
-    path = _wall_file(args)
-    if not os.path.exists(path):
+    """Median wall_s of the untraced runs of this workload and --seconds
+    recorded in this checkout. With none recorded, one is run first in a
+    child process, so that a traced run costs two runs only once."""
+    prefix = os.path.basename(_wall_file(args)).rsplit("-seed", 1)[0] + "-"
+
+    def recorded():
+        if not os.path.isdir(OUT_DIR):
+            return []
+        return [os.path.join(OUT_DIR, n) for n in os.listdir(OUT_DIR)
+                if n.startswith(prefix) and n.endswith(".json")]
+
+    if not recorded():
         cmd = [sys.executable, os.path.abspath(__file__), "--workload",
                args.workload, "--seed", str(args.seed), "--seconds",
                str(args.seconds), "--trace", "0"]
         subprocess.run(cmd, stdout=subprocess.DEVNULL, check=True)
-    with open(path) as f:
-        return json.load(f)["wall_s"]
+    walls = []
+    for path in recorded():
+        with open(path) as f:
+            walls.append(json.load(f)["wall_s"])
+    return _median(walls)
+
+
+def _end_processes() -> None:
+    """End the JVM this run launched and every process below this one
+    (the Python workers the JVM forks), and wait until each has ended.
+    Left alone, the JVM notices only after the driver has exited that its
+    stdin closed, so it outlives the run."""
+    from pyspark import SparkContext
+
+    from perfbench import procstat
+    procs = procstat.descendants(os.getpid())
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        SparkContext._gateway = SparkContext._jvm = None
+        try:
+            gateway.shutdown()
+        except Exception:  # the JVM side may be gone already
+            pass
+        proc = getattr(gateway, "proc", None)
+        if proc is not None:
+            proc.stdin.close()  # the JVM exits when its stdin closes
+            try:
+                proc.wait(timeout=20)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+    procstat.end_all(procs)
 
 
 def _remove_stale(base: str) -> None:
@@ -125,6 +164,7 @@ def main() -> None:
     try:
         result = _run(args, work, untraced_wall)
     finally:
+        _end_processes()
         shutil.rmtree(work, ignore_errors=True)
         try:
             os.rmdir(os.path.dirname(work))
@@ -132,8 +172,10 @@ def main() -> None:
             pass  # another run's work dir is still there
     if not args.trace:
         os.makedirs(OUT_DIR, exist_ok=True)
-        with open(_wall_file(args), "w") as f:
+        path = _wall_file(args)
+        with open(path + ".tmp", "w") as f:  # a killed run leaves no stub
             json.dump({"wall_s": result["metrics"]["wall_s"]["value"]}, f)
+        os.replace(path + ".tmp", path)
     for name, m in result["metrics"].items():
         note = result["notes"].get(name, "")
         print(f"{name:32s} {m['value']:.6g} {m['unit']} {note}".rstrip())
@@ -370,4 +412,6 @@ if __name__ == "__main__":
     sys.path[:0] = [ROOT, os.path.join(ROOT, "scripts")]
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    # a terminated run still ends its JVM and workers (main's finally)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     main()
