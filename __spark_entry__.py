@@ -20,10 +20,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from htmlparser_spark import multimodal, ops
-from htmlparser_spark.pipeline.kernel_stage import nodes_batch, parse_batch
-from htmlparser_spark.pipeline.links_stage import links_batch, page_meta_batch
-from htmlparser_spark.pipeline.schema import (
-    LINKS_SCHEMA, NODES_SCHEMA, PAGE_META_SCHEMA, PARSED_SCHEMA)
+from htmlparser_spark.pipeline.job import explode_pages, parse_pages
 from htmlparser_spark.synth import synth_charset_pages, synth_pages
 from htmlparser_spark.synth_links import synth_link_pages
 
@@ -44,6 +41,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _corpus(spark):
     return synth_pages(spark, N_CORPUS, seed=42, partitions=4)
+
+
+def _parsed(spark, columns):
+    """The kernel stage over the synthetic corpus, pruned to `columns`."""
+    return parse_pages(_corpus(spark), columns=columns)
+
+
+def _nodes(spark):
+    """Exploded arena DOM, one row per node of the 60-page corpus."""
+    parsed = parse_pages(synth_pages(spark, 60, seed=42, partitions=2),
+                         extract=False, columns=["url", "warc_ts", "nodes"])
+    return explode_pages(parsed, "nodes")
 
 
 def _fp(*cols):
@@ -70,7 +79,8 @@ def parse_corpus_extract(spark, sf_dir):
     md5(text) and md5(main_text), so BYTE-level drift of the extracted text
     anywhere in the 315-page corpus flips fp_sum and fails the value-hash
     gate (VALUES oracle regenerated by scripts/gen_pinned_oracles.py)."""
-    parsed = _corpus(spark).mapInPandas(parse_batch, schema=PARSED_SCHEMA)
+    parsed = _parsed(spark, ["url", "status", "title", "text", "main_text",
+                             "n_nodes", "n_elements"])
     row_fp = _fp(F.col("url"), F.col("title"), F.md5("text"),
                  F.md5("main_text"), F.col("n_nodes"), F.col("n_elements"))
     return (parsed
@@ -87,14 +97,14 @@ def parse_corpus_extract(spark, sf_dir):
 def parse_corpus_status(spark, sf_dir):
     """Status taxonomy of the mixed synthetic corpus: one row per kernel
     status (ok + every deterministic err:* class) with its page count."""
-    parsed = _corpus(spark).mapInPandas(parse_batch, schema=PARSED_SCHEMA)
+    parsed = _parsed(spark, ["status"])
     return parsed.groupBy("status").agg(F.count("*").alias("n"))
 
 
 def parse_error_counters(spark, sf_dir):
     """T16 error reporting rolled up corpus-wide: explode each page's
     parse-error counter map and sum per error code (S8)."""
-    parsed = _corpus(spark).mapInPandas(parse_batch, schema=PARSED_SCHEMA)
+    parsed = _parsed(spark, ["errors"])
     return (parsed.select(F.explode("errors").alias("code", "n"))
             .groupBy("code").agg(F.sum("n").alias("n")))
 
@@ -103,7 +113,7 @@ def parse_spans_explode(spark, sf_dir):
     """Span table (url, node_id, start, end into main_text) pinned per url:
     fp_sum is the summed md5 fingerprint of every exploded span row, so any
     drift in span boundaries or node assignment fails the hash gate."""
-    parsed = _corpus(spark).mapInPandas(parse_batch, schema=PARSED_SCHEMA)
+    parsed = _parsed(spark, ["url", "spans"])
     spans = (parsed.select("url", F.explode("spans").alias("s"))
              .select("url", "s.node_id", "s.start", "s.end"))
     row_fp = _fp(F.col("url"), F.col("node_id"), F.col("start"), F.col("end"))
@@ -151,8 +161,7 @@ def parse_tokens_explode(spark, sf_dir):
 def parse_nodes_stats(spark, sf_dir):
     """X1 per-node arena statistics (depth, text/link lengths, descendant
     counts) exploded one row per DOM node, fingerprint-pinned per tag."""
-    nodes = (synth_pages(spark, 60, seed=42, partitions=2)
-             .mapInPandas(nodes_batch, schema=NODES_SCHEMA))
+    nodes = _nodes(spark)
     # fp_sum pins the full arena row (parent/kind/tag/depth/text stats) of
     # every node in the 60-page corpus
     row_fp = _fp(F.col("url"), F.col("node_id"), F.col("parent_id"),
@@ -220,7 +229,7 @@ def spans_cover_main_text(spark, sf_dir):
     units — so the expected final end is length + count(astral chars).
     One fold over the spans array per document; the oracle pins the
     violation count at 0."""
-    parsed = _corpus(spark).mapInPandas(parse_batch, schema=PARSED_SCHEMA)
+    parsed = _parsed(spark, ["main_text", "spans"])
     acc = F.aggregate(
         "spans",
         F.struct(F.lit(0).alias("pe"), F.lit(0).alias("bad")),
@@ -424,8 +433,7 @@ def nodes_stats_consistency(spark, sf_dir):
     pins the violation count at 0 rows of violations => n_violations=0)."""
     import pandas as pd
 
-    nodes = (synth_pages(spark, 60, seed=42, partitions=2)
-             .mapInPandas(nodes_batch, schema=NODES_SCHEMA))
+    nodes = _nodes(spark)
 
     def check(pdf: pd.DataFrame) -> pd.DataFrame:
         parent = pdf.set_index("node_id")["parent_id"].to_dict()
@@ -449,16 +457,30 @@ def nodes_stats_consistency(spark, sf_dir):
 #     pinned VALUES oracles regenerated by scripts/gen_pinned_oracles.py) ----
 
 N_LINK_CORPUS = 240  # fixed-size deterministic link corpus (synth_links.py)
+# the page-meta table's kernel columns (n_links follows them)
+PAGE_META_COLS = ["url", "warc_ts", "lang", "status", "base_href",
+                  "canonical", "robots_noindex", "robots_nofollow",
+                  "meta_description"]
+
+
+def _link_pages(spark, columns):
+    """The kernel stage over the link corpus, web-graph walk on, main-content
+    extraction off."""
+    pages = synth_link_pages(spark, N_LINK_CORPUS, seed=42, partitions=4)
+    return parse_pages(pages, extract=False, columns=columns)
 
 
 def _links(spark):
-    return (synth_link_pages(spark, N_LINK_CORPUS, seed=42, partitions=4)
-            .mapInPandas(links_batch, schema=LINKS_SCHEMA))
+    """One row per outlink (LINKS_SCHEMA)."""
+    return explode_pages(_link_pages(spark, ["url", "warc_ts", "links"]),
+                         "links")
 
 
 def _page_meta(spark):
-    return (synth_link_pages(spark, N_LINK_CORPUS, seed=42, partitions=4)
-            .mapInPandas(page_meta_batch, schema=PAGE_META_SCHEMA))
+    """One row per page: its indexing metadata and outlink count."""
+    return (_link_pages(spark, PAGE_META_COLS + ["links"])
+            .select(*PAGE_META_COLS,
+                    F.size("links").cast("long").alias("n_links")))
 
 
 def parse_links_explode(spark, sf_dir):
@@ -658,8 +680,7 @@ def corpus_noindex_filter(spark, sf_dir):
     whose canonical link points elsewhere (the canonical copy will be kept
     under its own url). Map-only over the meta table — no corpus shuffle;
     the per-(lang, verdict) rollup pins kept AND dropped urls via fp_sum."""
-    meta = _page_meta(spark).select(
-        "url", "lang", "robots_noindex", "canonical")
+    meta = _link_pages(spark, ["url", "lang", "robots_noindex", "canonical"])
     verdict = (F.when(F.col("robots_noindex"), F.lit("drop:noindex"))
                .when((F.col("canonical") != "") &
                      (F.col("canonical") != F.col("url")),

@@ -93,15 +93,12 @@ def _links_measure(spark, n_pages: int) -> dict:
     total, which stays comparable across rounds."""
     from pyspark.sql import functions as F
     from htmlparser_spark.pipeline.job import (
-        parse_pages, read_pages, with_part_key)
-    from htmlparser_spark.pipeline.schema import PARSED_FULL_SCHEMA
+        EMIT_LINKS_COLUMNS, parse_pages, read_pages, with_part_key)
 
     path = ensure_corpus(spark, n_pages)
     t0 = time.monotonic()
     df = with_part_key(read_pages(spark, path))
-    parsed = parse_pages(
-        df, extract=True,
-        columns=[f.name for f in PARSED_FULL_SCHEMA.fields])
+    parsed = parse_pages(df, extract=True, columns=EMIT_LINKS_COLUMNS)
     agg = parsed.agg(
         F.count(F.lit(1)).alias("pages"),
         F.sum(F.size("links")).alias("links"),

@@ -179,20 +179,3 @@ def extract_links(document, page_url: str) -> tuple[list, dict]:
     }
     return links, meta
 
-
-def parse_page_graph(html, page_url: str, fast: bool = True) -> dict:
-    """Parse one document and extract its outlinks + indexing metadata.
-
-    Thin wrapper over api.parse_html(want_links=True) so the subtle
-    decode -> run -> budget fast/slow-fallback -> never-crash harness
-    exists in exactly ONE place; the standalone links/meta stages and the
-    combined emit_links kernel path (pipeline/kernel_stage.py) share it by
-    construction. Costs one extra document-text walk vs a bespoke runner
-    (parse_html always materializes `text`); the dedicated-query corpora
-    are small and the production path is the combined kernel anyway.
-    """
-    from .api import parse_html
-    r = parse_html(html, fast=fast, extract=False, want_dom=False,
-                   want_links=True, page_url=page_url)
-    return {"status": r["status"], "links": r["links"],
-            **{k: r[k] for k in _EMPTY_META}}

@@ -1688,8 +1688,7 @@ def parse_roundtrip(spark, sf_dir):
     tree builder + extractor, and return the extracted title/main_text.
     DuckDB oracle: identity on (doc_id, text) — so the driver's value-hash
     gate checks the kernel end-to-end."""
-    from .pipeline.kernel_stage import parse_batch
-    from .pipeline.schema import PARSED_SCHEMA
+    from .pipeline.job import parse_pages
 
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").rlike("^[a-z0-9 ]*$"))
@@ -1705,7 +1704,8 @@ def parse_roundtrip(spark, sf_dir):
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.encode("page", "utf-8").alias("html"),
         F.lit("").alias("lang"))
-    parsed = pages.mapInPandas(parse_batch, schema=PARSED_SCHEMA)
+    parsed = parse_pages(pages, columns=["url", "status", "title",
+                                         "main_text"])
     return parsed.select(
         F.col("url").cast("bigint").alias("doc_id"),
         F.col("status"), F.col("title"),
@@ -2250,7 +2250,7 @@ def host_pagerank(spark, sf_dir):
     # (documents has no link column; testdata has ~20 distinct sources) —
     # it is NOT a corpus-scale pattern and must never run over real hosts.
     # The production path is link_pagerank, whose edges come from the parse
-    # kernel's outlinks (pipeline/links_stage.py) with |edges| shuffle.
+    # kernel's outlinks (pipeline/job.py explode_pages) with |edges| shuffle.
     edges = (hosts.select(F.col("host").alias("src"))
              .crossJoin(hosts.select(F.col("host").alias("dst")))
              .filter(F.col("src") != F.col("dst"))

@@ -19,9 +19,9 @@ from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .kernel_stage import parse_batch
+from .kernel_stage import parse_batch, parsed_schema
 from .schema import (
-    LINEAGE_SCHEMA, PAGES_SCHEMA, PARSED_FULL_SCHEMA, PARSED_SCHEMA)
+    LINEAGE_SCHEMA, PAGES_SCHEMA, PARSED_LINK_FIELDS, PARSED_SCHEMA)
 
 DEFAULT_SALT_THRESHOLD = 1 << 20  # pages larger than 1 MiB get their own tier
 KERNEL_INPUT_COLS = ("url", "warc_ts", "html", "lang")
@@ -32,6 +32,9 @@ KERNEL_INPUT_COLS = ("url", "warc_ts", "html", "lang")
 # at N=64). With 4096 buckets every shuffle partition draws many keys and the
 # load evens out; resume granularity gets finer at the same time.
 PART_KEY_BUCKETS = 4096
+# The emit_links parsed sink: PARSED_SCHEMA plus the web-graph columns.
+EMIT_LINKS_COLUMNS = [f.name
+                      for f in PARSED_SCHEMA.fields + PARSED_LINK_FIELDS]
 
 
 def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
@@ -180,18 +183,31 @@ def repartition_pages(df: DataFrame, num_partitions: int,
 
 def parse_pages(df: DataFrame, extract: bool = True,
                 columns=None) -> DataFrame:
-    """Kernel stage. `columns` prunes the OUTPUT columns (see
-    kernel_stage.parsed_schema): a consumer that only aggregates
-    status/counters should not pay to build and Arrow-ship text/spans.
+    """Kernel stage — the one way to run the HTML kernel over a DataFrame.
+    `columns` prunes the OUTPUT columns (see kernel_stage.parsed_schema): a
+    consumer that only aggregates status/counters should not pay to build
+    and Arrow-ship text/spans. The optional `links` and `nodes` array
+    columns feed the per-link / per-node tables (explode_pages); their
+    consumers pass extract=False, which skips main-content extraction.
 
     If `df` carries an `encoding` column (charset.with_sniffed_encoding —
     or any caller-declared per-page codec label), the kernel re-encodes
     non-UTF-8 pages from it before parsing; absent the column, bytes are
     decoded UTF-8-with-replacement (reference parity)."""
-    from .kernel_stage import parsed_schema
     return df.mapInPandas(partial(parse_batch, extract=extract,
                                   columns=columns),
                           schema=parsed_schema(columns))
+
+
+def explode_pages(parsed: DataFrame, column: str, *keys: str) -> DataFrame:
+    """One row per element of the per-page array `column` of parse_pages'
+    output: the `keys` columns, the (url, warc_ts) page key, then the
+    element's struct fields — LINKS_SCHEMA for `links`, NODES_SCHEMA for
+    `nodes`. A JVM-side generate, so the kernel stage keeps one output row
+    per page and one output contract."""
+    key = [*keys, "url", "warc_ts"]
+    return (parsed.select(*key, F.explode(column).alias("_e"))
+            .select(*key, "_e.*"))
 
 
 def error_counters(parsed: DataFrame) -> DataFrame:
@@ -371,9 +387,8 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # repartition + size-tier salting (S3/S4) worth a raw-page shuffle
         df = repartition_pages(df, num_partitions,
                                salt_threshold=salt_threshold)
-    out_columns = ([f.name for f in PARSED_FULL_SCHEMA.fields]
-                   if emit_links else None)
-    parsed = parse_pages(df, extract=extract, columns=out_columns)
+    parsed = parse_pages(df, extract=extract,
+                         columns=EMIT_LINKS_COLUMNS if emit_links else None)
     # the single exchange: parsed rows, keyed on part_key — it clusters the
     # partitionBy(part_key) sink AND (because part_key is a function of url)
     # co-locates every snapshot of a url for the dedup window below
@@ -433,12 +448,7 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # a crash anywhere in between re-parses the unrecorded partitions
         # and dynamic overwrite makes the re-writes idempotent.
         links_path = os.path.join(out_dir, "links")
-        link_rows = (inc.select("part_key", "url", "warc_ts",
-                                F.explode("links").alias("l"))
-                     .select("part_key", "url", "warc_ts", "l.seq", "l.href",
-                             "l.href_abs", "l.dst_host", "l.anchor",
-                             "l.nofollow"))
-        (link_rows.write.mode("overwrite")
+        (explode_pages(inc, "links", "part_key").write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("part_key").parquet(links_path))
 

@@ -1,29 +1,61 @@
 """S5: the parse/extract kernel as a vectorized Arrow stage.
 
-``df.mapInPandas(parse_batch, PARSED_SCHEMA)`` — the only Python that runs on
-executors. Batches cross the JVM↔Python boundary as Arrow record batches
-(never per-row); inside a batch the kernel loops documents (SURVEY.md §4.3).
+``parse_batch`` under ``mapInPandas`` with output schema
+``parsed_schema(columns)`` — built only by ``pipeline.job.parse_pages`` —
+is the only Python that runs on executors.
+Batches cross the JVM↔Python boundary as Arrow record batches (never
+per-row); inside a batch the kernel loops documents (SURVEY.md §4.3). Every
+output is one row per page: per-link and per-node tables are JVM-side
+explodes of the `links` / `nodes` array columns (job.explode_pages).
 """
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Iterator
 
 import pandas as pd
 
 from ..kernel.api import parse_html
-from .schema import NODES_SCHEMA, PARSED_FULL_SCHEMA, PARSED_SCHEMA
+from .schema import (
+    LINK_TYPE, NODE_TYPE, PARSED_FULL_SCHEMA, PARSED_LINK_FIELDS,
+    PARSED_SCHEMA)
 
-_COLS = [f.name for f in PARSED_SCHEMA.fields]
 _FULL_COLS = [f.name for f in PARSED_FULL_SCHEMA.fields]
 _FIELDS = {f.name: f for f in PARSED_FULL_SCHEMA.fields}
-# web-graph columns (kernel/links.py) — built only when a consumer names
-# them (run_pipeline(emit_links=True)); never part of the default schema
-_LINK_COLS = frozenset(_FULL_COLS) - frozenset(_COLS)
+# web-graph columns (kernel/links.py) — the kernel walks for them only when
+# a consumer names one
+_LINK_COLS = frozenset(f.name for f in PARSED_LINK_FIELDS)
+# columns copied from the input row, with the value used when it lacks them
+_PASSTHROUGH = {"url": None, "warc_ts": None, "lang": "", "part_key": 0,
+                "content_hash": 0}
+
+
+def _structs(key, names):
+    """Getter: the result's `key` tuples as struct dicts (None stays None,
+    which the explode of an absent nodes arena drops)."""
+    def get(r):
+        rows = r[key]
+        return None if rows is None else [dict(zip(names, t)) for t in rows]
+    return get
+
+
+# kernel output column -> getter on the parse_html result
+_GETTERS = {
+    **{c: itemgetter(c) for c in (
+        "status", "title", "text", "main_text", "errors", "n_nodes",
+        "n_elements", "base_href", "canonical", "robots_noindex",
+        "robots_nofollow", "meta_description")},
+    "spans": lambda r: [{"node_id": a, "start": b, "end": c}
+                        for a, b, c in r["spans"]],
+    "n_errors": lambda r: sum(r["errors"].values()),
+    "links": _structs("links", LINK_TYPE.names),
+    "nodes": _structs("nodes", NODE_TYPE.names),
+}
 
 
 def parsed_schema(columns=None):
     """PARSED_SCHEMA, or the canonical-ordered subset named by `columns`
-    (which may also name the optional web-graph columns from
+    (which may also name the optional web-graph and nodes columns from
     PARSED_FULL_SCHEMA). Output-column pruning for the Python stage:
     Catalyst cannot prune through mapInPandas (the udf output is opaque to
     it), so a consumer that only needs e.g. status/counters declares its
@@ -41,19 +73,9 @@ def parsed_schema(columns=None):
 
 def parse_batch(batches: Iterator[pd.DataFrame], extract: bool = True,
                 columns=None) -> Iterator[pd.DataFrame]:
-    cols = _COLS if columns is None else [c for c in _FULL_COLS
-                                          if c in set(columns)]
-    want = set(cols)
-    want_links = bool(want & _LINK_COLS)
-    w_title = "title" in want
-    w_text = "text" in want
-    w_main = "main_text" in want
-    w_spans = "spans" in want
-    w_errmap = "errors" in want
-    w_nerr = "n_errors" in want
-    w_nodes = "n_nodes" in want
-    w_elems = "n_elements" in want
-    w_bytes = "html_bytes" in want
+    cols = [f.name for f in parsed_schema(columns).fields]
+    want_links = not _LINK_COLS.isdisjoint(cols)
+    want_nodes = "nodes" in cols
     decode_bytes = None
     for pdf in batches:
         n = len(pdf)
@@ -65,7 +87,7 @@ def parse_batch(batches: Iterator[pd.DataFrame], extract: bool = True,
         # whether or not the fused re-encode runs (run_pipeline only
         # guarantees content_hash stays raw; bytes must match it).
         raw_lens = ([len(h) if h is not None else 0 for h in htmls]
-                    if w_bytes else None)
+                    if "html_bytes" in cols else None)
         if "encoding" in pdf.columns:
             # fused charset transcode (run_pipeline(transcode=True)): the
             # sniff is a codegen column computed in the SAME scan projection,
@@ -81,97 +103,18 @@ def parse_batch(batches: Iterator[pd.DataFrame], extract: bool = True,
             htmls = [h if h is None or e == "utf-8"
                      else decode_bytes(h, e).encode("utf-8")
                      for h, e in zip(htmls, pdf["encoding"].tolist())]
-        out = {}
-        if "url" in want:
-            out["url"] = pdf["url"].tolist()
-        if "warc_ts" in want:
-            out["warc_ts"] = pdf["warc_ts"].tolist()
-        if "lang" in want:
-            out["lang"] = (pdf["lang"].tolist() if "lang" in pdf.columns
-                           else [""] * n)
-        if "part_key" in want:
-            out["part_key"] = (pdf["part_key"].tolist()
-                               if "part_key" in pdf.columns else [0] * n)
-        if "content_hash" in want:
-            out["content_hash"] = (pdf["content_hash"].tolist()
-                                   if "content_hash" in pdf.columns
-                                   else [0] * n)
-        kernel_lists = {c: [] for c in cols if c not in out}
-        status = kernel_lists.get("status")
         urls = pdf["url"].tolist() if want_links else [None] * n
-        for html, page_url in zip(htmls, urls):
-            r = parse_html(html, fast=True, extract=extract, want_dom=False,
-                           want_links=want_links, page_url=page_url or "")
-            if want_links:
-                if "links" in want:
-                    kernel_lists["links"].append(
-                        [{"seq": s, "href": h, "href_abs": ha,
-                          "dst_host": d, "anchor": a, "nofollow": nf}
-                         for s, h, ha, d, a, nf in r["links"]])
-                for c in ("base_href", "canonical", "robots_noindex",
-                          "robots_nofollow", "meta_description"):
-                    if c in want:
-                        kernel_lists[c].append(r[c])
-            if status is not None:
-                status.append(r["status"])
-            if w_title:
-                kernel_lists["title"].append(r["title"])
-            if w_text:
-                kernel_lists["text"].append(r["text"])
-            if w_main:
-                kernel_lists["main_text"].append(r["main_text"])
-            if w_spans:
-                kernel_lists["spans"].append(
-                    [{"node_id": a, "start": b, "end": c}
-                     for a, b, c in r["spans"]])
-            if w_errmap or w_nerr:
-                errors = {k: int(v) for k, v in r["errors"].items()}
-                if w_errmap:
-                    kernel_lists["errors"].append(errors)
-                if w_nerr:
-                    kernel_lists["n_errors"].append(sum(errors.values()))
-            if w_nodes:
-                kernel_lists["n_nodes"].append(r["n_nodes"])
-            if w_elems:
-                kernel_lists["n_elements"].append(r["n_elements"])
-        if w_bytes:
-            kernel_lists["html_bytes"] = raw_lens
-        out.update(kernel_lists)
+        results = [parse_html(html, fast=True, extract=extract,
+                              want_dom=False, want_nodes=want_nodes,
+                              want_links=want_links, page_url=url or "")
+                   for html, url in zip(htmls, urls)]
+        out = {}
+        for c in cols:
+            if c in _GETTERS:
+                out[c] = list(map(_GETTERS[c], results))
+            elif c == "html_bytes":
+                out[c] = raw_lens
+            else:
+                out[c] = (pdf[c].tolist() if c in pdf.columns
+                          else [_PASSTHROUGH[c]] * n)
         yield pd.DataFrame(out, columns=cols)
-
-
-def parse_batch_with_dom(batches: Iterator[pd.DataFrame]
-                         ) -> Iterator[pd.DataFrame]:
-    """Variant that also returns dom_s (golden-diff validation, S11)."""
-    for pdf in batches:
-        rows = []
-        for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            r = parse_html(html, fast=True, extract=True, want_dom=True)
-            rows.append((url, r["status"], r["dom_s"], r["text"],
-                         r["main_text"]))
-        yield pd.DataFrame(
-            rows, columns=["url", "status", "dom_s", "text", "main_text"])
-
-
-_NODE_COLS = [f.name for f in NODES_SCHEMA.fields]
-
-
-def nodes_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """S7-style exploded arena DOM: one row per DOM node (FIXTURES.md §4)."""
-    for pdf in batches:
-        rows = []
-        ts_list = (pdf["warc_ts"].tolist() if "warc_ts" in pdf.columns
-                   else [None] * len(pdf))
-        for url, ts, html in zip(pdf["url"].tolist(), ts_list,
-                                 pdf["html"].tolist()):
-            r = parse_html(html, fast=True, extract=False, want_dom=False,
-                           want_nodes=True)
-            if r["nodes"] is None:
-                continue
-            for (nid, parent, kind, tag, depth, direct_len, text_len,
-                 link_len, n_desc, anchor) in r["nodes"]:
-                # (url, warc_ts) is the page key — a url can have several
-                # snapshots in the corpus
-                rows.append((url, ts, nid, parent, kind, tag, depth,
-                             direct_len, text_len, link_len, n_desc, anchor))
-        yield pd.DataFrame(rows, columns=_NODE_COLS)

@@ -41,10 +41,25 @@ PARSED_SCHEMA = StructType([
     StructField("html_bytes", LongType()),
 ])
 
-# Exploded arena DOM (FIXTURES.md §4) for SQL-checkable X1/X2 stats
-NODES_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("warc_ts", TimestampType()),
+# (url, warc_ts) is the page key — a url can have several snapshots in the
+# corpus; the exploded per-element tables lead with it.
+PAGE_KEY_FIELDS = PARSED_SCHEMA.fields[:2]
+
+# One <a href> outlink (kernel/links.py); seq is the anchor's document-order
+# index.
+LINK_TYPE = StructType([
+    StructField("seq", IntegerType()),
+    StructField("href", StringType()),
+    StructField("href_abs", StringType()),
+    StructField("dst_host", StringType()),
+    StructField("anchor", StringType()),
+    StructField("nofollow", BooleanType()),
+])
+
+# One arena DOM node (FIXTURES.md §4) for SQL-checkable X1/X2 stats. The
+# arena's direct_text_len is text_len here, its subtree text_len is
+# subtree_text_len.
+NODE_TYPE = StructType([
     StructField("node_id", IntegerType()),
     StructField("parent_id", IntegerType()),
     StructField("kind", StringType()),
@@ -57,22 +72,9 @@ NODES_SCHEMA = StructType([
     StructField("is_anchor_desc", BooleanType()),
 ])
 
-# One <a href> outlink as a nested struct (the combined-kernel variant:
-# parse_batch with link columns carries links as an array per page, so ONE
-# parse of the raw html serves both the extraction sink and the exploded
-# links sink — run_pipeline(emit_links=True)).
-LINK_TYPE = StructType([
-    StructField("seq", IntegerType()),
-    StructField("href", StringType()),
-    StructField("href_abs", StringType()),
-    StructField("dst_host", StringType()),
-    StructField("anchor", StringType()),
-    StructField("nofollow", BooleanType()),
-])
-
 # Optional web-graph columns parse_batch can emit in ADDITION to
-# PARSED_SCHEMA (kernel_stage.parsed_schema selects them by name; default
-# consumers never build or ship them).
+# PARSED_SCHEMA: the page's outlinks and its indexing metadata (<base>,
+# <link rel=canonical>, <meta robots>, <meta name=description>).
 PARSED_LINK_FIELDS = [
     StructField("links", ArrayType(LINK_TYPE)),
     StructField("base_href", StringType()),
@@ -82,35 +84,16 @@ PARSED_LINK_FIELDS = [
     StructField("meta_description", StringType()),
 ]
 
-PARSED_FULL_SCHEMA = StructType(PARSED_SCHEMA.fields + PARSED_LINK_FIELDS)
+# Every column parse_batch can emit; kernel_stage.parsed_schema selects them
+# by name and default consumers never build or ship the optional ones.
+PARSED_FULL_SCHEMA = StructType(
+    PARSED_SCHEMA.fields + PARSED_LINK_FIELDS
+    + [StructField("nodes", ArrayType(NODE_TYPE))])
 
-# Web-graph stage output (kernel/links.py): one row per <a href> outlink.
-# (url, warc_ts) is the page key; seq is the anchor's document-order index.
-LINKS_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("warc_ts", TimestampType()),
-    StructField("seq", IntegerType()),
-    StructField("href", StringType()),
-    StructField("href_abs", StringType()),
-    StructField("dst_host", StringType()),
-    StructField("anchor", StringType()),
-    StructField("nofollow", BooleanType()),
-])
-
-# Per-page indexing metadata (kernel/links.py): <base>, <meta robots>,
-# <link rel=canonical>, <meta name=description>.
-PAGE_META_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("warc_ts", TimestampType()),
-    StructField("lang", StringType()),
-    StructField("status", StringType()),
-    StructField("base_href", StringType()),
-    StructField("canonical", StringType()),
-    StructField("robots_noindex", BooleanType()),
-    StructField("robots_nofollow", BooleanType()),
-    StructField("meta_description", StringType()),
-    StructField("n_links", LongType()),
-])
+# job.explode_pages of the links / nodes column: one row per outlink / per
+# DOM node.
+LINKS_SCHEMA = StructType(PAGE_KEY_FIELDS + LINK_TYPE.fields)
+NODES_SCHEMA = StructType(PAGE_KEY_FIELDS + NODE_TYPE.fields)
 
 # Per-partition lineage manifest (S9). Carries the byte/error tallies as
 # well so job-level metrics are a sum over ≤4096 manifest rows — never a

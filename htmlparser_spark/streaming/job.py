@@ -3,8 +3,8 @@
 A crawl is naturally a stream of WARC drops: new page files land in a
 directory (or Kafka/Iceberg CDC in prod) and the extractor keeps up
 incrementally. The streaming plan reuses the EXACT batch kernel stage —
-``mapInPandas(parse_batch)`` is stateless, so it is legal on a streaming
-DataFrame — plus:
+``pipeline.job.parse_pages`` is a stateless mapInPandas, so it is legal on a
+streaming DataFrame — plus:
 
   - file-source scan with ``maxFilesPerTrigger`` back-pressure (S1-stream),
   - the same url-hash partitioning expression (S3) computed per micro-batch,
@@ -24,7 +24,6 @@ executor count, and state is RocksDB-backed on a real cluster
 from __future__ import annotations
 
 import os
-from functools import partial
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -37,8 +36,8 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
 )
 
-from ..pipeline.kernel_stage import parse_batch
-from ..pipeline.schema import PAGES_SCHEMA, PARSED_SCHEMA
+from ..pipeline.job import explode_pages, parse_pages, with_part_key
+from ..pipeline.schema import LINKS_SCHEMA, PAGES_SCHEMA, PARSED_SCHEMA
 
 
 def read_page_stream(spark: SparkSession, src_dir: str,
@@ -90,24 +89,19 @@ def parse_page_stream(pages: DataFrame, extract: bool = True,
 
     transcode: same fused charset pass as the batch pipeline — the sniff
     columns are stateless per-row codegen and the re-encode lives inside
-    parse_batch, so it is legal on a streaming DataFrame and adds nothing
-    to the plan beyond the scan projection."""
+    the kernel stage, so it is legal on a streaming DataFrame and adds
+    nothing to the plan beyond the scan projection."""
     if transcode:
         from ..sources.charset import with_sniffed_encoding
         pages = with_sniffed_encoding(pages).drop("method")
-    with_key = (pages
-                .withColumn("part_key",
-                            F.pmod(F.xxhash64("url"), F.lit(4096))
-                            .cast("long"))
-                # raw-content fingerprint, same contract as the batch
-                # pipeline (pipeline/job.py run_pipeline): computed
-                # JVM-side on the RAW capture bytes (before any in-kernel
-                # transcode rebinding) and passed through the kernel.
-                # Without it every streamed row carries content_hash = 0
-                # and the Bloom dedup drain degenerates to flag-everything.
-                .withColumn("content_hash", F.xxhash64("html")))
-    return with_key.mapInPandas(
-        partial(parse_batch, extract=extract), schema=PARSED_SCHEMA)
+    # raw-content fingerprint, same contract as the batch pipeline
+    # (pipeline/job.py run_pipeline): computed JVM-side on the RAW capture
+    # bytes (before any in-kernel transcode rebinding) and passed through
+    # the kernel. Without it every streamed row carries content_hash = 0
+    # and the Bloom dedup drain degenerates to flag-everything.
+    with_key = with_part_key(pages).withColumn("content_hash",
+                                               F.xxhash64("html"))
+    return parse_pages(with_key, extract=extract)
 
 
 def write_parsed_stream(parsed: DataFrame, out_dir: str,
@@ -255,21 +249,12 @@ def _check_stream_flags(out_dir: str, transcode: bool,
         import json
         with open(marker) as f:
             have = json.load(f)
-        migrate = "kind" not in have
-        if migrate:
-            # marker written before the drain kind was recorded: adopt the
-            # requested kind once (transcode is still enforced) and upgrade
-            # the marker, instead of bricking every pre-existing sink on a
-            # whole-dict mismatch
-            have["kind"] = kind
         if have != want:
             raise ValueError(
                 f"stream flag mismatch for {out_dir!r}: this drain requested "
                 f"{want} but the sink was created with {have}; use a new "
                 "out_dir (or keep the original flags) — mixed decodes in one "
                 "parsed sink are unrecoverable")
-        if migrate:
-            _atomic_json_write(marker, want)
     else:
         os.makedirs(out_dir, exist_ok=True)
         _atomic_json_write(marker, want)
@@ -300,13 +285,13 @@ def run_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
 
 
 def links_stream(pages: DataFrame) -> DataFrame:
-    """Web-graph stage on a stream: links_batch is stateless, so the SAME
-    Arrow kernel that serves the batch path (pipeline/links_stage.py) is
+    """Web-graph stage on a stream: the SAME kernel stage and links explode
+    that serve the batch path (pipeline/job.py) are stateless, so they are
     legal per micro-batch — each drop of crawl pages yields its outlink
     rows incrementally."""
-    from ..pipeline.links_stage import links_batch
-    from ..pipeline.schema import LINKS_SCHEMA
-    return pages.mapInPandas(links_batch, schema=LINKS_SCHEMA)
+    parsed = parse_pages(pages, extract=False,
+                         columns=["url", "warc_ts", "links"])
+    return explode_pages(parsed, "links")
 
 
 def write_links_stream(links: DataFrame, out_dir: str,
@@ -327,8 +312,6 @@ def write_links_stream(links: DataFrame, out_dir: str,
 def run_links_stream_once(spark: SparkSession, src_dir: str,
                           out_dir: str) -> dict:
     """Drain pending page drops into out_dir/links exactly once."""
-    from ..pipeline.schema import LINKS_SCHEMA
-
     pages = read_page_stream(spark, src_dir)
     q = write_links_stream(links_stream(pages), out_dir)
     q.awaitTermination()

@@ -5,12 +5,22 @@ biased toward constructs the kernel supports, plus targeted mutations that
 hit error rows; every document must produce identical (status, dom_s, text,
 main_text, spans, errors) in both modes.
 """
+import json
 import os
 import random
+from pathlib import Path
 
 import pytest
 
 from htmlparser_spark.kernel import parse_html
+
+# the reference repository's sample page (test.html), as committed in the
+# golden fixtures
+REFERENCE_SAMPLE = next(
+    case["html"] for case in json.loads(
+        (Path(__file__).resolve().parent.parent / "fixtures"
+         / "test_html.json").read_text())
+    if case["name"] == "reference-sample")
 
 TAGS = ["div", "span", "p", "ul", "li", "a", "b", "i", "title", "script",
         "style", "meta", "link", "br", "table", "h1", "form", "template",
@@ -93,7 +103,7 @@ def test_differential_random(seed):
 
 
 def test_differential_reference_sample():
-    assert_equal_modes(open("/root/reference/test.html", "rb").read().decode())
+    assert_equal_modes(REFERENCE_SAMPLE)
 
 
 @pytest.mark.parametrize("html", [

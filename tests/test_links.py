@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from htmlparser_spark.kernel.links import (
-    ANCHOR_TEXT_CAP, parse_page_graph)
-from htmlparser_spark.pipeline.links_stage import links_batch, page_meta_batch
-from htmlparser_spark.pipeline.schema import LINKS_SCHEMA, PAGE_META_SCHEMA
+from htmlparser_spark.kernel.api import parse_html
+from htmlparser_spark.kernel.links import ANCHOR_TEXT_CAP
+from htmlparser_spark.pipeline.schema import LINKS_SCHEMA
 from htmlparser_spark.synth_links import gen_link_page, synth_link_pages
 
 PAGE = "https://www.Example.org/a/b/index.html"
@@ -32,8 +31,15 @@ def spark():
     s.stop()
 
 
+def _graph(html, url):
+    """One page through the kernel's web-graph walk, as the links stage
+    runs it (main-content extraction off)."""
+    return parse_html(html, extract=False, want_dom=False, want_links=True,
+                      page_url=url)
+
+
 def _links(html, url=PAGE):
-    return parse_page_graph(html.encode("utf-8"), url)
+    return _graph(html.encode("utf-8"), url)
 
 
 def _hrefs(r):
@@ -142,9 +148,9 @@ def test_error_page_yields_partial_links():
 
 
 def test_null_and_invalid_inputs():
-    r = parse_page_graph(None, PAGE)
+    r = _graph(None, PAGE)
     assert r["status"] == "err:null-input" and r["links"] == []
-    r2 = parse_page_graph(b"\xff\xfe plain", PAGE)
+    r2 = _graph(b"\xff\xfe plain", PAGE)
     assert r2["links"] == []
 
 
@@ -154,20 +160,27 @@ def test_synth_corpus_is_deterministic_and_parses_ok():
     assert a == b
     for i in range(40):
         url, ts, html, _, _lang = gen_link_page(42, i)
-        assert parse_page_graph(html, url)["status"] == "ok"
+        assert _graph(html, url)["status"] == "ok"
 
 
 def test_spark_stages_schemas_and_consistency(spark):
-    pages = synth_link_pages(spark, 60, seed=42, partitions=2)
-    links = pages.mapInPandas(links_batch, schema=LINKS_SCHEMA)
-    meta = pages.mapInPandas(page_meta_batch, schema=PAGE_META_SCHEMA)
+    """The links and page-meta tables the web-graph queries read: the links
+    explode has LINKS_SCHEMA, and the meta projection's n_links equals the
+    exploded per-page count."""
+    import __spark_entry__ as entry
+
+    links = entry._links(spark)
+    meta = entry._page_meta(spark)
+    assert links.schema == LINKS_SCHEMA
+    assert meta.columns == entry.PAGE_META_COLS + ["n_links"]
+    assert dict(meta.dtypes)["n_links"] == "bigint"
     # n_links in the meta table must equal the exploded per-page count
     per_page = links.groupBy("url").agg(F.count("*").alias("n"))
     joined = (meta.join(per_page, "url", "left")
               .select("n_links", F.coalesce("n", F.lit(0)).alias("n")))
     bad = joined.filter(F.col("n_links") != F.col("n")).count()
     assert bad == 0
-    assert meta.count() == 60
+    assert meta.count() == entry.N_LINK_CORPUS
     # seq is a dense 0..n-1 per page
     mx = (links.groupBy("url")
           .agg(F.count("*").alias("n"), (F.max("seq") + 1).alias("m"))
@@ -193,7 +206,7 @@ def test_link_host_graph_plan_shape(spark):
 
 def test_run_pipeline_emit_links_matches_stage(spark, tmp_path):
     """emit_links=True: one parse, two sinks — the exploded links table
-    must equal the standalone links_batch stage on the same corpus, and the
+    must equal the kernel's links applied page by page in-process, and the
     parsed sink must carry the metadata columns."""
     from pyspark.sql import functions as F
 
@@ -204,10 +217,10 @@ def test_run_pipeline_emit_links_matches_stage(spark, tmp_path):
     m = run_pipeline(spark, pages, out, num_partitions=4, emit_links=True)
     assert m["pages"] == 50 and m["ok_pages"] == 50
     sink = spark.read.parquet(out + "/links")
-    stage = pages.mapInPandas(links_batch, schema=LINKS_SCHEMA)
     key = ["url", "seq", "href", "href_abs", "dst_host", "anchor", "nofollow"]
     got = sorted(tuple(r) for r in sink.select(*key).collect())
-    exp = sorted(tuple(r) for r in stage.select(*key).collect())
+    exp = sorted((r.url, *link) for r in pages.collect()
+                 for link in _graph(r.html, r.url)["links"])
     assert got == exp and len(got) > 0
     parsed = spark.read.parquet(out + "/parsed")
     for c in ("links", "robots_noindex", "canonical", "meta_description"):
@@ -361,7 +374,7 @@ def test_links_kernel_crash_fuzz_returns_error_rows():
                 for _ in range(rng.randint(1, 4)):
                     if b:
                         b[rng.randrange(len(b))] = rng.randrange(256)
-            r = parse_page_graph(bytes(b), rng.choice(urls))
+            r = _graph(bytes(b), rng.choice(urls))
             assert isinstance(r["status"], str) and r["status"]
             assert isinstance(r["links"], list)
             assert all(len(row) == 6 for row in r["links"])

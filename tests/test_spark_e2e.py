@@ -15,10 +15,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from htmlparser_spark.kernel import parse_html
 from htmlparser_spark.pipeline.job import (
-    dedup_latest, error_counters, golden_diff, lineage_of, run_pipeline,
-    status_counts, with_part_key,
+    dedup_latest, error_counters, explode_pages, golden_diff, lineage_of,
+    parse_pages, run_pipeline, status_counts, with_part_key,
 )
-from htmlparser_spark.pipeline.kernel_stage import nodes_batch
 from htmlparser_spark.pipeline.schema import LINEAGE_SCHEMA, NODES_SCHEMA
 from htmlparser_spark.synth import synth_pages
 
@@ -262,9 +261,10 @@ def test_resume_migrates_legacy_lineage_schema(spark, corpus, tmp_path):
 def test_parse_pages_output_column_pruning(spark, corpus):
     """parse_pages(columns=...) must yield exactly the requested columns (in
     canonical schema order) with values identical to the full-schema run —
-    the manual mapInPandas equivalent of Catalyst column pruning."""
-    from htmlparser_spark.pipeline.job import parse_pages
+    the manual mapInPandas equivalent of Catalyst column pruning. The
+    optional links / meta / nodes columns prune the same way."""
     from htmlparser_spark.pipeline.kernel_stage import parsed_schema
+    from htmlparser_spark.pipeline.schema import PARSED_FULL_SCHEMA
 
     small = corpus.limit(40)
     cols = ("main_text", "status", "url", "html_bytes")  # order ≠ canonical
@@ -275,6 +275,19 @@ def test_parse_pages_output_column_pruning(spark, corpus):
                                      "html_bytes")
     assert sorted(map(tuple, pruned.collect())) == \
         sorted(map(tuple, full.collect()))
+    opt = ("nodes", "canonical", "warc_ts", "links", "robots_nofollow",
+           "url", "meta_description", "base_href", "robots_noindex")
+    pruned = parse_pages(small, extract=False, columns=opt)
+    names = [f.name for f in pruned.schema.fields]
+    assert names == ["url", "warc_ts", "links", "base_href", "canonical",
+                     "robots_noindex", "robots_nofollow", "meta_description",
+                     "nodes"]
+    every = [f.name for f in PARSED_FULL_SCHEMA.fields]
+    full = parse_pages(small, extract=False, columns=every).select(*names)
+    rows = pruned.collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, full.collect()))
+    assert sum(len(r.links) for r in rows) > 0
+    assert all(r.nodes for r in rows)
     with pytest.raises(ValueError, match="unknown parsed columns"):
         parsed_schema(("status", "nope"))
 
@@ -299,9 +312,20 @@ def test_error_counters_and_status(spark, corpus, tmp_path):
 
 
 def test_nodes_table(spark, corpus):
-    small = dedup_latest(corpus).limit(30)
-    nodes = small.select("url", "warc_ts", "html").mapInPandas(
-        nodes_batch, schema=NODES_SCHEMA)
+    pages = dedup_latest(corpus).limit(30).select("url", "warc_ts", "html")
+    pages = pages.collect()
+    small = spark.createDataFrame(pages, "url string, warc_ts timestamp, "
+                                         "html binary")
+    parsed = parse_pages(small, extract=False,
+                         columns=["url", "warc_ts", "nodes"])
+    nodes = explode_pages(parsed, "nodes")
+    assert nodes.schema == NODES_SCHEMA
+    # row-identical to the kernel's arena rows applied page by page
+    exp = sorted(
+        (r.url, r.warc_ts, *row) for r in pages
+        for row in parse_html(r.html, extract=False, want_dom=False,
+                              want_nodes=True)["nodes"])
+    assert sorted(map(tuple, nodes.collect())) == exp
     pdf = nodes.toPandas()
     assert (pdf.groupby("url")["node_id"].min() == 0).all()
     roots = pdf[pdf.node_id == 0]

@@ -182,8 +182,9 @@ def test_stream_dedup_drops_redelivered_snapshots(spark, tmp_path):
 
 def test_links_stream_incremental_and_matches_batch(spark, tmp_path):
     """Streaming web-graph stage: exactly-once drains, incremental on new
-    drops, and row-identical to the batch links stage on the same pages."""
-    from htmlparser_spark.pipeline.links_stage import links_batch
+    drops, and row-identical to the kernel's links applied page by page
+    in-process on the same pages."""
+    from htmlparser_spark.kernel.api import parse_html
     from htmlparser_spark.pipeline.schema import LINKS_SCHEMA
     from htmlparser_spark.streaming.job import run_links_stream_once
     from htmlparser_spark.synth_links import synth_link_pages
@@ -206,10 +207,12 @@ def test_links_stream_incremental_and_matches_batch(spark, tmp_path):
 
     got = (spark.read.schema(LINKS_SCHEMA)
            .parquet(os.path.join(out, "links")))
-    exp = (d1.unionByName(d2).mapInPandas(links_batch, schema=LINKS_SCHEMA))
+    exp = sorted(
+        (r.url, *link) for r in d1.unionByName(d2).collect()
+        for link in parse_html(r.html, extract=False, want_dom=False,
+                               want_links=True, page_url=r.url)["links"])
     key = ["url", "seq", "href", "href_abs", "dst_host", "anchor", "nofollow"]
-    assert (sorted(tuple(r) for r in got.select(*key).collect())
-            == sorted(tuple(r) for r in exp.select(*key).collect()))
+    assert sorted(tuple(r) for r in got.select(*key).collect()) == exp
 
 
 def test_stream_transcode_parses_legacy_charsets(spark, tmp_path):
@@ -580,11 +583,14 @@ def test_bloom_crash_between_commit_and_fold_recovers(spark, tmp_path):
     assert st["folded"] == files  # recovery + this drain both folded
 
 
-def test_stream_flags_legacy_marker_migrates(spark, tmp_path):
-    """A pre-kind _stream_flags.json (only {"transcode": ...}) must not
-    brick the sink: the resume adopts the requested kind, enforces
-    transcode, and upgrades the marker in place."""
+def test_stream_flags_legacy_marker_refused(spark, tmp_path):
+    """A marker without the drain kind (only {"transcode": ...}) is on-disk
+    state the drain cannot vouch for — it does not record which sink schema
+    the files were written with — so the drain refuses it instead of
+    adopting the requested kind, and leaves the marker untouched."""
     import json
+
+    import pytest
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -592,14 +598,9 @@ def test_stream_flags_legacy_marker_migrates(spark, tmp_path):
     os.makedirs(out, exist_ok=True)
     marker = os.path.join(out, "_stream_flags.json")
     with open(marker, "w") as f:
-        json.dump({"transcode": False}, f)  # as written before round 5
-    r = run_stream_once(spark, src, out)
-    assert r["rows_total"] > 0
-    with open(marker) as f:
-        assert json.load(f) == {"transcode": False, "kind": "plain"}
-    # the transcode flag is still enforced for legacy markers
-    import pytest
-    with open(marker, "w") as f:
-        json.dump({"transcode": True}, f)
+        json.dump({"transcode": False}, f)
     with pytest.raises(ValueError, match="stream flag mismatch"):
-        run_stream_once(spark, src, out, transcode=False)
+        run_stream_once(spark, src, out)
+    with open(marker) as f:
+        assert json.load(f) == {"transcode": False}
+    assert not os.path.exists(os.path.join(out, "parsed"))
