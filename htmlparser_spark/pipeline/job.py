@@ -25,13 +25,11 @@ from .schema import (
 
 DEFAULT_SALT_THRESHOLD = 1 << 20  # pages larger than 1 MiB get their own tier
 KERNEL_INPUT_COLS = ("url", "warc_ts", "html", "lang")
-# Lineage/resume bucket count. Deliberately much larger than any realistic
-# shuffle-partition count: repartition(N, part_key) hashes the key again, so
-# with only ~N distinct keys the balls-into-bins collisions leave ~1/e of the
-# partitions empty and give others 2-3x the load (measured 0..1063 pages/task
-# at N=64). With 4096 buckets every shuffle partition draws many keys and the
-# load evens out; resume granularity gets finer at the same time.
+# Ceiling of B, the bucket count of part_key = pmod(xxhash64(url), B). A
+# part_key dir is the unit of resume AND of sink files, so each run sizes B
+# to its input (sink_buckets) and a resume adopts the B in the manifest.
 PART_KEY_BUCKETS = 4096
+BUCKET_TARGET_BYTES = 256 << 20  # scanned source bytes per bucket
 # The emit_links parsed sink: PARSED_SCHEMA plus the web-graph columns.
 EMIT_LINKS_COLUMNS = [f.name
                       for f in PARSED_SCHEMA.fields + PARSED_LINK_FIELDS]
@@ -165,18 +163,30 @@ def with_part_key(df: DataFrame, num_buckets: int = PART_KEY_BUCKETS) -> DataFra
         "part_key", F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("long"))
 
 
+def sink_buckets(df: DataFrame, num_partitions: int) -> int:
+    """B for a fresh sink: one bucket per BUCKET_TARGET_BYTES of Catalyst's
+    size estimate of `df` (close to the file bytes for a parquet scan), at
+    least one per shuffle partition so the post-exchange sink stage stays
+    parallel when a Python source under-estimates, at most PART_KEY_BUCKETS."""
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    want = max(num_partitions, -(-est // BUCKET_TARGET_BYTES))
+    return max(1, min(PART_KEY_BUCKETS, want))
+
+
 def repartition_pages(df: DataFrame, num_partitions: int,
                       salt_threshold: int = DEFAULT_SALT_THRESHOLD,
                       salt_buckets: int = 16) -> DataFrame:
-    """Shuffle on (part_key, salt): huge pages (heavy CPU in the kernel) get
+    """Shuffle on (url, salt): huge pages (heavy CPU in the kernel) get
     spread across `salt_buckets` extra buckets so one hot partition can't
-    stall the stage; AQE skew handling is the backstop."""
+    stall the stage; AQE skew handling is the backstop. Keyed on the url
+    itself, not part_key: a run may have as few part_keys as partitions,
+    and hashing so few keys again would leave kernel tasks idle."""
     salt = F.when(
         F.length("html") > salt_threshold,
         F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt_buckets)),
     ).otherwise(F.lit(0))
     return df.withColumn("_salt", salt).repartition(
-        num_partitions, "part_key", "_salt").drop("_salt")
+        num_partitions, "url", "_salt").drop("_salt")
 
 
 # --- S5 + S8: kernel + metrics ----------------------------------------------
@@ -225,11 +235,12 @@ def status_counts(parsed: DataFrame) -> DataFrame:
 
 # --- S9: lineage + resume ----------------------------------------------------
 
-def lineage_of(parsed: DataFrame, transcode: bool = False) -> DataFrame:
+def lineage_of(parsed: DataFrame, transcode: bool = False,
+               buckets: int = PART_KEY_BUCKETS) -> DataFrame:
     """Per-partition manifest: row counts + an order-insensitive checksum of
     (url, status, main_text), plus the transcode flag the partition was
-    parsed under. Written alongside the output; resume anti-joins completed
-    part_keys."""
+    parsed under and the bucket count B its part_key was hashed with.
+    Written alongside the output; resume anti-joins completed part_keys."""
     row_hash = F.xxhash64("url", "status", "main_text")
     return parsed.groupBy("part_key").agg(
         F.count("*").alias("n_rows"),
@@ -238,7 +249,8 @@ def lineage_of(parsed: DataFrame, transcode: bool = False) -> DataFrame:
         F.sum("n_errors").alias("n_errors"),
         # bit_xor: order-insensitive and overflow-free under ANSI mode
         F.bit_xor(row_hash).alias("checksum"),
-    ).withColumn("transcode", F.lit(bool(transcode)))
+    ).withColumns({"transcode": F.lit(bool(transcode)),
+                   "buckets": F.lit(int(buckets))})
 
 
 def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
@@ -249,7 +261,9 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
                  emit_links: bool = False, transcode: bool = False) -> dict:
     """Full job. Returns a metrics dict (S8). Output layout:
     ``{out_dir}/parsed`` (parquet), ``{out_dir}/_lineage`` (parquet), and
-    with ``emit_links=True`` also ``{out_dir}/links`` (parquet).
+    with ``emit_links=True`` also ``{out_dir}/links`` (parquet). The sinks
+    are partitioned on part_key = pmod(xxhash64(url), B), with B sized to
+    the input (sink_buckets) and recorded in the manifest for resume.
 
     transcode: opt-in charset ingest pass (sources/charset.py) — sniff each
     page's encoding (BOM / meta prescan, pure codegen) and re-encode the
@@ -296,42 +310,27 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         df = src.select(*KERNEL_INPUT_COLS)
         if lang:
             df = df.filter(F.col("lang") == lang)
-    sc = spark.sparkContext
-    num_partitions = num_partitions or sc.defaultParallelism
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
-    # Pipeline shape (round 3): parse FIRST, map-only, then ONE exchange of
-    # the (much smaller) parsed output. The raw html never crosses an
-    # exchange: file/table scans already hand the kernel byte-balanced
-    # splits (maxPartitionBytes bin-packing — and parse cost is proportional
-    # to bytes, so these tasks are homogeneous without any salting), while
-    # the old scan→dedup-window→repartition→parse layout pushed the full
-    # raw corpus through TWO exchanges — 200 TB of extra shuffle I/O per
-    # 100 TB of input, and measured 1.6x slower locally (decomposition in
-    # BENCH/BASELINE.md). Duplicate snapshots (~5-20% of a crawl) are now
-    # parsed before being deduped — proportional extra CPU, deliberately
-    # traded for removing the full-corpus shuffles (parse is deterministic,
-    # so dedup-after-parse yields byte-identical output).
+    # Pipeline shape: parse FIRST, map-only, then ONE exchange of the (much
+    # smaller) parsed output. The raw html never crosses an exchange:
+    # file/table scans already hand the kernel byte-balanced splits, and
+    # parse cost is proportional to bytes (docs/PLANS.md §1). Duplicate
+    # snapshots (~5-20% of a crawl) are parsed before being deduped —
+    # proportional extra CPU, traded for no full-corpus shuffle (parse is
+    # deterministic, so dedup-after-parse yields byte-identical output).
     if transcode:
         # FUSED into the kernel stage: with_sniffed_encoding adds the
         # (codegen) `encoding` column in the same scan projection, and
-        # parse_batch re-encodes the detected non-UTF-8 minority right
-        # where the bytes already enter Python for the parse. One source
-        # scan — the union-shaped transcode_to_utf8 would execute the
-        # source once per branch (twice the I/O at 100 TB, or two fetches
-        # over a ranged-WARC source).
+        # parse_batch re-encodes the non-UTF-8 minority where the bytes
+        # enter Python anyway — one source scan, where the union-shaped
+        # transcode_to_utf8 would execute the source once per branch.
         from htmlparser_spark.sources.charset import with_sniffed_encoding
         df = with_sniffed_encoding(df).drop("method")
-    df = with_part_key(df)
-    # raw-content fingerprint for the post-parse dedup tiebreak, computed
-    # JVM-side while html is still in hand (passthrough through the kernel)
-    df = df.withColumn("content_hash", F.xxhash64("html"))
-
     parsed_path = os.path.join(out_dir, "parsed")
     lineage_path = os.path.join(out_dir, "_lineage")
-
-    # completed-partition manifest rows are COLLECTED (≤ PART_KEY_BUCKETS
-    # rows — tiny by construction) so the lineage update below can union
-    # them back without re-reading lineage_path while overwriting it
+    # manifest rows are COLLECTED (≤ B rows) so the lineage update below can
+    # union them back without re-reading lineage_path while overwriting it
     done_rows = []
     if resume:
         try:
@@ -339,29 +338,28 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
                          .parquet(lineage_path).collect())
         except Exception:
             done_rows = []
-    # a manifest written by an older schema reads with NULL tallies (parquet
-    # schema-on-read) — keep those partitions DONE for the parse anti-join,
-    # but drop their manifest rows so the lineage update below re-hashes
-    # them from the sink instead of baking the nulls in permanently
     if done_rows:
-        # completed partitions are never re-parsed, so flipping transcode
-        # on a resumed sink would leave the corpus half-decoded one way and
-        # half the other with nothing recording which — fail fast instead.
-        # Manifests from before the flag existed read NULL = no transcode.
-        prior = {bool(r.transcode) if r.transcode is not None else False
-                 for r in done_rows}
+        # completed partitions are never re-parsed, so a resume adopts the
+        # recorded B and transcode flag, and refuses what it cannot vouch for
+        recorded = {r.buckets for r in done_rows}
+        if None in recorded or len(recorded) != 1:
+            raise ValueError(f"resumed sink's manifest records bucket counts "
+                             f"{recorded}, not one; re-run with resume=False "
+                             f"(full re-parse) or a fresh out_dir")
+        (num_buckets,) = recorded
+        prior = {r.transcode for r in done_rows}
         if prior != {bool(transcode)}:
             raise ValueError(
                 f"transcode={bool(transcode)} on a resumed sink whose "
                 f"completed partitions were parsed with "
-                f"transcode={sorted(prior)}; re-run with resume=False "
-                f"(full re-parse) or a fresh out_dir")
+                f"transcode={sorted(prior, key=str)}; re-run with "
+                f"resume=False (full re-parse) or a fresh out_dir")
+    else:
+        num_buckets = sink_buckets(df, num_partitions)
     if emit_links and done_rows:
-        # upgrading an existing sink to emit_links under resume would skip
-        # the completed part_keys — whose parquet predates the link columns
-        # — so the read-back explode would either fail to resolve `links`
-        # or silently leave holes in the links sink. Fail fast with the
-        # real cause instead.
+        # the completed part_keys of a sink written without link columns
+        # are never re-parsed, so the read-back explode would fail to
+        # resolve `links` or leave holes in the links sink: fail fast
         try:
             sink_cols = set(spark.read.parquet(parsed_path).columns)
         except Exception:
@@ -371,14 +369,15 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
                 "emit_links=True on a resumed sink that was written without "
                 "link columns; re-run with resume=False (full re-parse) or "
                 "a fresh out_dir")
-    legacy_keys = sorted({r.part_key for r in done_rows
-                          if r.n_bytes is None or r.n_errors is None})
-    done_key_list = sorted({r.part_key for r in done_rows})
-    done_rows = [r for r in done_rows if r.part_key not in set(legacy_keys)]
-    if done_key_list:
-        done_keys = spark.createDataFrame(
-            [(k,) for k in done_key_list], "part_key long")
-        df = df.join(F.broadcast(done_keys), "part_key", "left_anti")
+    df = with_part_key(df, num_buckets)
+    # raw-content fingerprint for the post-parse dedup tiebreak, computed
+    # JVM-side while html is in hand and passed through the kernel
+    df = df.withColumn("content_hash", F.xxhash64("html"))
+    done_keys = sorted({r.part_key for r in done_rows})
+    if done_keys:
+        df = df.join(F.broadcast(spark.createDataFrame(
+            [(k,) for k in done_keys], "part_key long")), "part_key",
+            "left_anti")
 
     if not isinstance(src, str):
         # a caller-supplied DataFrame gives no byte-balance guarantee (it
@@ -387,8 +386,8 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # repartition + size-tier salting (S3/S4) worth a raw-page shuffle
         df = repartition_pages(df, num_partitions,
                                salt_threshold=salt_threshold)
-    parsed = parse_pages(df, extract=extract,
-                         columns=EMIT_LINKS_COLUMNS if emit_links else None)
+    columns = EMIT_LINKS_COLUMNS if emit_links else None
+    parsed = parse_pages(df, extract=extract, columns=columns)
     # the single exchange: parsed rows, keyed on part_key — it clusters the
     # partitionBy(part_key) sink AND (because part_key is a function of url)
     # co-locates every snapshot of a url for the dedup window below
@@ -415,29 +414,26 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     # reason about (and re-write) whole partitions, and downstream scans get
     # partition pruning on the same key. DYNAMIC partition overwrite (not
     # append) closes the crash window between this write committing and the
-    # lineage manifest below being written: a driver death in between leaves
-    # parsed part_keys unrecorded, and the next resume run re-parses them —
-    # with append that re-parse DUPLICATED the rows permanently; with
-    # dynamic overwrite it replaces exactly those part_key partitions
-    # (byte-identical content — the kernel is deterministic), while
-    # partitions not in the re-run's output are left untouched. This is the
-    # parquet mirror of the Iceberg sink's overwritePartitions().
+    # lineage manifest below being written: the next resume re-parses the
+    # unrecorded part_keys and replaces exactly those partitions, never
+    # duplicating rows (the parquet mirror of the Iceberg sink's
+    # overwritePartitions()). With no completed partition this run
+    # re-parses everything, so the overwrite is STATIC: a sink whose
+    # manifest never landed may be keyed with another B.
+    overwrite = "dynamic" if done_rows else "static"
     (parsed.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
+     .option("partitionOverwriteMode", overwrite)
      .partitionBy("part_key").parquet(parsed_path))
 
-    out = spark.read.parquet(parsed_path)
+    # known schema: no footer-inference job over the sink's files
+    out = spark.read.schema(parsed_schema(columns)).parquet(parsed_path)
     # INCREMENTAL lineage: hash only the partitions THIS run (re)wrote —
     # the isin() literal on the hive partition column prunes at planning,
-    # so a resume run never re-reads main_text for the terabytes of
-    # already-completed partitions (the previous full-sink lineage_of
-    # recompute was an O(sink) scan per run). Completed partitions keep
+    # so a resume run never re-reads the completed partitions, which keep
     # their collected manifest rows verbatim; crash-window partitions
     # (parsed but unrecorded) are NOT in done_rows, so they are re-hashed
     # from the freshly overwritten data.
-    kept_keys = [r.part_key for r in done_rows]  # complete manifest rows only
-    inc = (out.filter(~F.col("part_key").isin(kept_keys))
-           if kept_keys else out)
+    inc = out.filter(~F.col("part_key").isin(done_keys)) if done_keys else out
     if emit_links:
         # exploded links table from the sink just written — `inc` scans only
         # this run's partitions (isin prunes at planning) and parquet reads
@@ -449,17 +445,17 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # and dynamic overwrite makes the re-writes idempotent.
         links_path = os.path.join(out_dir, "links")
         (explode_pages(inc, "links", "part_key").write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
+         .option("partitionOverwriteMode", overwrite)
          .partitionBy("part_key").parquet(links_path))
 
-    new_lineage = lineage_of(inc, transcode=transcode)
+    new_lineage = lineage_of(inc, transcode=transcode, buckets=num_buckets)
     if done_rows:
         new_lineage = new_lineage.unionByName(
             spark.createDataFrame(done_rows, LINEAGE_SCHEMA))
     new_lineage.write.mode("overwrite").parquet(lineage_path)
 
-    # job metrics come from the manifest (≤ PART_KEY_BUCKETS rows — the
-    # write above just computed it), never from a scan of the sink; the
+    # job metrics come from the manifest (≤ B rows — the write above just
+    # computed it), never from a scan of the sink; the
     # Spark-side `observe` above still exposes this run's live counters on
     # the write's query execution for listeners
     m = (spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)

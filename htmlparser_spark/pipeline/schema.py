@@ -95,9 +95,9 @@ PARSED_FULL_SCHEMA = StructType(
 LINKS_SCHEMA = StructType(PAGE_KEY_FIELDS + LINK_TYPE.fields)
 NODES_SCHEMA = StructType(PAGE_KEY_FIELDS + NODE_TYPE.fields)
 
-# Per-partition lineage manifest (S9). Carries the byte/error tallies as
-# well so job-level metrics are a sum over ≤4096 manifest rows — never a
-# scan of the sink.
+# Per-partition lineage manifest (S9): ≤ B rows, one per part_key. Carries
+# the byte/error tallies as well so job-level metrics are a sum over the
+# manifest — never a scan of the sink.
 LINEAGE_SCHEMA = StructType([
     StructField("part_key", LongType()),
     StructField("n_rows", LongType()),
@@ -107,7 +107,9 @@ LINEAGE_SCHEMA = StructType([
     StructField("checksum", LongType()),
     # flag the partition was parsed under (run_pipeline(transcode=...)):
     # resume compares it against the current run's flag and fails fast on
-    # mismatch, since completed partitions are never re-parsed. Manifests
-    # written before this column read NULL = parsed without transcode.
+    # mismatch, since completed partitions are never re-parsed.
     StructField("transcode", BooleanType()),
+    # the B of part_key = pmod(xxhash64(url), B) (job.sink_buckets): resume
+    # adopts it and refuses a manifest without exactly one value
+    StructField("buckets", IntegerType()),
 ])

@@ -414,8 +414,10 @@ def _bloom_fold_pending(spark: SparkSession, out_dir: str,
      .write.mode("overwrite").parquet(os.path.join(bits_root, f"v{nxt}")))
     new_state = {"version": nxt, "folded": files}
     _bloom_state_save(out_dir, new_state)
-    shutil.rmtree(os.path.join(bits_root, f"v{state['version']}"),
-                  ignore_errors=True)
+    # GC every superseded version: a crash before this loop leaves one
+    for d in os.listdir(bits_root):
+        if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < nxt:
+            shutil.rmtree(os.path.join(bits_root, d), ignore_errors=True)
     return new_state
 
 

@@ -181,6 +181,7 @@ def test_resume_after_kill(spark, corpus, tmp_path):
     parsed_path = os.path.join(out_resume, "parsed")
     keys = sorted(int(d.split("=")[1]) for d in os.listdir(parsed_path)
                   if d.startswith("part_key="))
+    assert len(keys) >= 2  # else killing half the partitions is vacuous
     killed = keys[::2]
     for k in killed:
         shutil.rmtree(os.path.join(parsed_path, f"part_key={k}"))
@@ -215,6 +216,7 @@ def test_resume_after_lineage_lost_does_not_duplicate(spark, corpus, tmp_path):
     # parsed data (the write committed; the manifest didn't)
     keys = sorted(int(d.split("=")[1]) for d in os.listdir(parsed_path)
                   if d.startswith("part_key="))
+    assert len(keys) >= 2  # else losing half the manifest is vacuous
     lost = keys[::2]
     keep = spark.read.parquet(lineage_path).filter(
         ~F.col("part_key").isin(lost)).collect()
@@ -237,25 +239,92 @@ def test_missing_kernel_columns_fail_fast(spark, corpus, tmp_path):
         run_pipeline(spark, bad, str(tmp_path / "out"))
 
 
-def test_resume_migrates_legacy_lineage_schema(spark, corpus, tmp_path):
-    """A manifest written before the tally columns existed reads with NULL
-    n_bytes/n_errors; a resume run must re-hash those partitions from the
-    sink (not bake the nulls in) and report complete job metrics."""
+def test_resume_refuses_lineage_without_one_bucket_count(spark, corpus,
+                                                        tmp_path):
+    """A manifest that does not record exactly one bucket count B — written
+    before the `buckets` column existed, or mixing two counts — cannot tell
+    a resume how urls were keyed into part_keys. The resume must refuse it,
+    naming the ways out, and leave the sink and the manifest untouched."""
     out = str(tmp_path / "out")
-    m_full = run_pipeline(spark, corpus, out, num_partitions=4)
+    run_pipeline(spark, corpus, out, num_partitions=4)
     lineage_path = os.path.join(out, "_lineage")
-    legacy = (spark.read.parquet(lineage_path)
-              .select("part_key", "n_rows", "n_ok", "checksum").collect())
-    shutil.rmtree(lineage_path)
-    spark.createDataFrame(
-        legacy, "part_key long, n_rows long, n_ok long, checksum long"
-    ).write.parquet(lineage_path)
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).collect()
+    assert len(rows) >= 2 and {r.buckets for r in rows} == {4}
+    legacy = [(r.part_key, r.n_rows, r.n_ok, r.checksum) for r in rows]
+    mixed = [tuple(r)[:-1] + (4 + i % 2,) for i, r in enumerate(rows)]
 
-    m = run_pipeline(spark, corpus, out, num_partitions=4)
-    assert m == m_full  # metrics complete, nothing re-parsed or dropped
-    migrated = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-    assert migrated.filter(F.col("n_bytes").isNull()
-                           | F.col("n_errors").isNull()).count() == 0
+    def snapshot():
+        return sorted((os.path.join(d, f), os.stat(os.path.join(d, f)).st_size,
+                       os.stat(os.path.join(d, f)).st_mtime_ns)
+                      for d, _, files in os.walk(out) for f in files)
+
+    for manifest, schema in (
+            (legacy, "part_key long, n_rows long, n_ok long, checksum long"),
+            (mixed, LINEAGE_SCHEMA)):
+        shutil.rmtree(lineage_path)
+        spark.createDataFrame(manifest, schema).write.parquet(lineage_path)
+        before = snapshot()
+        with pytest.raises(ValueError,
+                           match=r"bucket counts.*resume=False.*fresh out_dir"):
+            run_pipeline(spark, corpus, out, num_partitions=4)
+        assert snapshot() == before
+
+
+def test_sink_layout_sized_to_input(spark, tmp_path):
+    """Over a small parquet source the sink has B = num_partitions buckets,
+    not one per page: one parquet file per part_key dir, at most B dirs,
+    and B on every manifest row. A resume under another num_partitions
+    adopts the recorded B; a rerun whose whole manifest was lost derives
+    its own B and replaces the sink, leaving no partition of the old
+    layout behind."""
+    src = str(tmp_path / "src")
+    synth_pages(spark, 120, seed=5).write.parquet(src)
+    out = str(tmp_path / "out")
+    parsed_path = os.path.join(out, "parsed")
+    lineage_path = os.path.join(out, "_lineage")
+
+    def layout():
+        dirs = sorted(d for d in os.listdir(parsed_path)
+                      if d.startswith("part_key="))
+        n_files = [sum(f.endswith(".parquet")
+                       for f in os.listdir(os.path.join(parsed_path, d)))
+                   for d in dirs]
+        return dirs, n_files
+
+    def sink_rows():
+        return sorted(map(tuple, spark.read.parquet(parsed_path)
+                          .select("part_key", "url", "warc_ts",
+                                  "main_text").collect()))
+
+    def recorded_buckets():
+        return {r.buckets for r in
+                spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+                .collect()}
+
+    run_pipeline(spark, src, out, num_partitions=5)
+    dirs, n_files = layout()
+    assert 2 <= len(dirs) <= 5 and n_files == [1] * len(dirs)
+    assert recorded_buckets() == {5}
+    full = sink_rows()
+
+    killed = int(dirs[0].split("=")[1])
+    shutil.rmtree(os.path.join(parsed_path, dirs[0]))
+    keep = (spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+            .filter(F.col("part_key") != killed).collect())
+    shutil.rmtree(lineage_path)
+    spark.createDataFrame(keep, LINEAGE_SCHEMA).write.parquet(lineage_path)
+    run_pipeline(spark, src, out, num_partitions=3)
+    assert layout() == (dirs, n_files)
+    assert recorded_buckets() == {5}
+    assert sink_rows() == full
+
+    shutil.rmtree(lineage_path)
+    run_pipeline(spark, src, out, num_partitions=3)
+    dirs, n_files = layout()
+    assert 2 <= len(dirs) <= 3 and n_files == [1] * len(dirs)
+    assert recorded_buckets() == {3}
+    rows = sink_rows()
+    assert sorted(r[1:] for r in rows) == sorted(r[1:] for r in full)
 
 
 def test_parse_pages_output_column_pruning(spark, corpus):

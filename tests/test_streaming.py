@@ -583,6 +583,37 @@ def test_bloom_crash_between_commit_and_fold_recovers(spark, tmp_path):
     assert st["folded"] == files  # recovery + this drain both folded
 
 
+def test_bloom_fold_gcs_every_superseded_version(spark, tmp_path):
+    """A crash between a fold's state save and its cleanup leaves an older
+    bit-set version on disk. The next fold must remove every version below
+    the one it commits, not only its direct predecessor, or the orphan
+    leaks for good."""
+    import json
+    import shutil
+
+    from htmlparser_spark.streaming.job import run_bloom_stream_once
+
+    src_h, out_h = str(tmp_path / "src_h"), str(tmp_path / "out_h")
+    src_n, out_n = str(tmp_path / "src_n"), str(tmp_path / "out_n")
+    _write_batch(spark, src_h, 20, 1, "hist")
+    run_stream_once(spark, src_h, out_h)
+    hist_dir = os.path.join(out_h, "parsed")
+
+    _write_batch(spark, src_n, 20, 3, "drop1")
+    run_bloom_stream_once(spark, src_n, out_n, hist_dir)
+    bits_root = os.path.join(out_n, "_bloom_bits")
+    assert sorted(os.listdir(bits_root)) == ["v1"]
+    # the orphan a crash right after the v1 state save would leave behind
+    shutil.copytree(os.path.join(bits_root, "v1"),
+                    os.path.join(bits_root, "v0"))
+
+    _write_batch(spark, src_n, 20, 5, "drop2")
+    run_bloom_stream_once(spark, src_n, out_n, hist_dir)
+    with open(os.path.join(out_n, "_bloom_state.json")) as f:
+        assert json.load(f)["version"] == 2
+    assert sorted(os.listdir(bits_root)) == ["v2"]
+
+
 def test_stream_flags_legacy_marker_refused(spark, tmp_path):
     """A marker without the drain kind (only {"transcode": ...}) is on-disk
     state the drain cannot vouch for — it does not record which sink schema
