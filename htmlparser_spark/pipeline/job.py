@@ -30,6 +30,10 @@ KERNEL_INPUT_COLS = ("url", "warc_ts", "html", "lang")
 # to its input (sink_buckets) and a resume adopts the B in the manifest.
 PART_KEY_BUCKETS = 4096
 BUCKET_TARGET_BYTES = 256 << 20  # scanned source bytes per bucket
+# Floor of B per shuffle partition: repartition(N, part_key) hashes the key
+# again, and B = N keys leave ~1/e of the post-exchange tasks empty and the
+# fullest at 2-5x the mean; B = 4N leaves none empty up to N = 64 (1.5-2.75x).
+MIN_BUCKETS_PER_PARTITION = 4
 # The emit_links parsed sink: PARSED_SCHEMA plus the web-graph columns.
 EMIT_LINKS_COLUMNS = [f.name
                       for f in PARSED_SCHEMA.fields + PARSED_LINK_FIELDS]
@@ -166,10 +170,12 @@ def with_part_key(df: DataFrame, num_buckets: int = PART_KEY_BUCKETS) -> DataFra
 def sink_buckets(df: DataFrame, num_partitions: int) -> int:
     """B for a fresh sink: one bucket per BUCKET_TARGET_BYTES of Catalyst's
     size estimate of `df` (close to the file bytes for a parquet scan), at
-    least one per shuffle partition so the post-exchange sink stage stays
-    parallel when a Python source under-estimates, at most PART_KEY_BUCKETS."""
+    least MIN_BUCKETS_PER_PARTITION per shuffle partition so the
+    post-exchange sink stage stays balanced on a small or under-estimated
+    (Python source) input, at most PART_KEY_BUCKETS."""
     est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    want = max(num_partitions, -(-est // BUCKET_TARGET_BYTES))
+    want = max(MIN_BUCKETS_PER_PARTITION * num_partitions,
+               -(-est // BUCKET_TARGET_BYTES))
     return max(1, min(PART_KEY_BUCKETS, want))
 
 
@@ -235,8 +241,8 @@ def status_counts(parsed: DataFrame) -> DataFrame:
 
 # --- S9: lineage + resume ----------------------------------------------------
 
-def lineage_of(parsed: DataFrame, transcode: bool = False,
-               buckets: int = PART_KEY_BUCKETS) -> DataFrame:
+def lineage_of(parsed: DataFrame, buckets: int,
+               transcode: bool = False) -> DataFrame:
     """Per-partition manifest: row counts + an order-insensitive checksum of
     (url, status, main_text), plus the transcode flag the partition was
     parsed under and the bucket count B its part_key was hashed with.
@@ -329,6 +335,7 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         df = with_sniffed_encoding(df).drop("method")
     parsed_path = os.path.join(out_dir, "parsed")
     lineage_path = os.path.join(out_dir, "_lineage")
+    links_path = os.path.join(out_dir, "links")
     # manifest rows are COLLECTED (≤ B rows) so the lineage update below can
     # union them back without re-reading lineage_path while overwriting it
     done_rows = []
@@ -419,8 +426,15 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     # duplicating rows (the parquet mirror of the Iceberg sink's
     # overwritePartitions()). With no completed partition this run
     # re-parses everything, so the overwrite is STATIC: a sink whose
-    # manifest never landed may be keyed with another B.
+    # manifest never landed may be keyed with another B. It drops the old
+    # sink first, so the old manifest and links go before it: a crash then
+    # leaves no manifest, and the next resume starts over.
     overwrite = "dynamic" if done_rows else "static"
+    if not done_rows:
+        conf = spark._jsc.hadoopConfiguration()
+        for stale in (lineage_path, links_path):
+            stale = spark._jvm.org.apache.hadoop.fs.Path(stale)
+            stale.getFileSystem(conf).delete(stale, True)
     (parsed.write.mode("overwrite")
      .option("partitionOverwriteMode", overwrite)
      .partitionBy("part_key").parquet(parsed_path))
@@ -443,12 +457,11 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # skips it for good, so every derived sink has to be durable first —
         # a crash anywhere in between re-parses the unrecorded partitions
         # and dynamic overwrite makes the re-writes idempotent.
-        links_path = os.path.join(out_dir, "links")
         (explode_pages(inc, "links", "part_key").write.mode("overwrite")
          .option("partitionOverwriteMode", overwrite)
          .partitionBy("part_key").parquet(links_path))
 
-    new_lineage = lineage_of(inc, transcode=transcode, buckets=num_buckets)
+    new_lineage = lineage_of(inc, num_buckets, transcode=transcode)
     if done_rows:
         new_lineage = new_lineage.unionByName(
             spark.createDataFrame(done_rows, LINEAGE_SCHEMA))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from htmlparser_spark.kernel import parse_html
+from htmlparser_spark.pipeline import job
 from htmlparser_spark.pipeline.job import (
     dedup_latest, error_counters, explode_pages, golden_diff, lineage_of,
     parse_pages, run_pipeline, status_counts, with_part_key,
@@ -38,6 +39,12 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+def recorded_buckets(spark, out):
+    """The set of bucket counts B on the manifest rows of sink `out`."""
+    return {r.buckets for r in spark.read.schema(LINEAGE_SCHEMA)
+            .parquet(os.path.join(out, "_lineage")).collect()}
 
 
 @pytest.fixture(scope="session")
@@ -172,7 +179,8 @@ def test_resume_after_kill(spark, corpus, tmp_path):
     out_resume = str(tmp_path / "resume")
     run_pipeline(spark, corpus, out_full, num_partitions=8)
     full = spark.read.parquet(os.path.join(out_full, "parsed"))
-    full_checksum = lineage_of(full).orderBy("part_key").collect()
+    (buckets,) = recorded_buckets(spark, out_full)
+    full_checksum = lineage_of(full, buckets).orderBy("part_key").collect()
 
     # fresh run, then simulate a kill: drop half the output partitions and
     # their lineage rows
@@ -193,7 +201,8 @@ def test_resume_after_kill(spark, corpus, tmp_path):
     # resume: must reprocess exactly the killed partitions
     run_pipeline(spark, corpus, out_resume, num_partitions=8)
     resumed = spark.read.parquet(parsed_path)
-    resumed_checksum = lineage_of(resumed).orderBy("part_key").collect()
+    assert recorded_buckets(spark, out_resume) == {buckets}
+    resumed_checksum = lineage_of(resumed, buckets).orderBy("part_key").collect()
     assert [r.asDict() for r in resumed_checksum] == \
            [r.asDict() for r in full_checksum]
 
@@ -249,9 +258,9 @@ def test_resume_refuses_lineage_without_one_bucket_count(spark, corpus,
     run_pipeline(spark, corpus, out, num_partitions=4)
     lineage_path = os.path.join(out, "_lineage")
     rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).collect()
-    assert len(rows) >= 2 and {r.buckets for r in rows} == {4}
+    assert len(rows) >= 2 and {r.buckets for r in rows} == {16}
     legacy = [(r.part_key, r.n_rows, r.n_ok, r.checksum) for r in rows]
-    mixed = [tuple(r)[:-1] + (4 + i % 2,) for i, r in enumerate(rows)]
+    mixed = [tuple(r)[:-1] + (16 + i % 2,) for i, r in enumerate(rows)]
 
     def snapshot():
         return sorted((os.path.join(d, f), os.stat(os.path.join(d, f)).st_size,
@@ -271,8 +280,8 @@ def test_resume_refuses_lineage_without_one_bucket_count(spark, corpus,
 
 
 def test_sink_layout_sized_to_input(spark, tmp_path):
-    """Over a small parquet source the sink has B = num_partitions buckets,
-    not one per page: one parquet file per part_key dir, at most B dirs,
+    """Over a small parquet source the sink has B = 4 x num_partitions
+    buckets, not one per page: one parquet file per part_key dir, at most B dirs,
     and B on every manifest row. A resume under another num_partitions
     adopts the recorded B; a rerun whose whole manifest was lost derives
     its own B and replaces the sink, leaving no partition of the old
@@ -296,15 +305,10 @@ def test_sink_layout_sized_to_input(spark, tmp_path):
                           .select("part_key", "url", "warc_ts",
                                   "main_text").collect()))
 
-    def recorded_buckets():
-        return {r.buckets for r in
-                spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-                .collect()}
-
     run_pipeline(spark, src, out, num_partitions=5)
     dirs, n_files = layout()
-    assert 2 <= len(dirs) <= 5 and n_files == [1] * len(dirs)
-    assert recorded_buckets() == {5}
+    assert 2 <= len(dirs) <= 20 and n_files == [1] * len(dirs)
+    assert recorded_buckets(spark, out) == {20}
     full = sink_rows()
 
     killed = int(dirs[0].split("=")[1])
@@ -315,16 +319,50 @@ def test_sink_layout_sized_to_input(spark, tmp_path):
     spark.createDataFrame(keep, LINEAGE_SCHEMA).write.parquet(lineage_path)
     run_pipeline(spark, src, out, num_partitions=3)
     assert layout() == (dirs, n_files)
-    assert recorded_buckets() == {5}
+    assert recorded_buckets(spark, out) == {20}
     assert sink_rows() == full
 
     shutil.rmtree(lineage_path)
     run_pipeline(spark, src, out, num_partitions=3)
     dirs, n_files = layout()
-    assert 2 <= len(dirs) <= 3 and n_files == [1] * len(dirs)
-    assert recorded_buckets() == {3}
+    assert 2 <= len(dirs) <= 12 and n_files == [1] * len(dirs)
+    assert recorded_buckets(spark, out) == {12}
     rows = sink_rows()
     assert sorted(r[1:] for r in rows) == sorted(r[1:] for r in full)
+
+
+def test_fresh_run_crash_before_manifest_resumes_in_full(spark, corpus,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """A run with no completed partition overwrites the sink statically,
+    which drops every old partition before it writes. If it dies between
+    the sink write and the manifest write, the old manifest must not
+    survive to vouch for the new sink (here keyed with another B): the next
+    resume re-derives B, re-parses everything and ends with the sink and
+    metrics of a full run."""
+    out = str(tmp_path / "out")
+
+    def sink_rows():
+        return sorted(map(tuple, spark.read.parquet(os.path.join(out, "parsed"))
+                          .select("part_key", "url", "warc_ts", "status",
+                                  "main_text").collect()))
+
+    m_full = run_pipeline(spark, corpus, out, num_partitions=8)
+    full, buckets = sink_rows(), recorded_buckets(spark, out)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("driver died before the manifest write")
+
+    monkeypatch.setattr(job, "lineage_of", crash)
+    with pytest.raises(RuntimeError, match="driver died"):
+        run_pipeline(spark, corpus, out, num_partitions=2, resume=False)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(out, "_lineage"))
+
+    m = run_pipeline(spark, corpus, out, num_partitions=8)
+    assert sink_rows() == full
+    assert recorded_buckets(spark, out) == buckets
+    assert m == m_full
 
 
 def test_parse_pages_output_column_pruning(spark, corpus):
