@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import itertools
 import os
+from functools import partial
+from hashlib import md5 as _md5
 
 import numpy as np
 import pandas as pd
@@ -164,8 +166,6 @@ def _shingle_stage(df, minhash=False, simhash=False):
     empties, trigram join (so runs of spaces survive inside shingles),
     docs with < 3 words yield their words joined, first-occurrence
     distinct, empty strings dropped."""
-    from hashlib import md5 as _md5
-
     out_cols = "doc_id long, shs array<string>"
     if minhash:
         out_cols += ", mh array<long>"
@@ -181,48 +181,54 @@ def _shingle_stage(df, minhash=False, simhash=False):
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
 
-    def stage(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"].tolist(),
-                                    pdf["text"].tolist()):
-                ws = (text or "").split(" ")
-                n = len(ws)
-                tri = [" ".join(ws[i:i + 3]) for i in range(max(n - 2, 1))]
-                shs = [s for s in dict.fromkeys(tri) if s]
-                row = [doc_id, shs]
-                # docs with zero shingles get NULL signatures: the old
-                # exploded pipelines simply had no rows for them, and
-                # consumers must keep excluding them
-                if minhash:
-                    if shs:
-                        # int(hexdigest[8r:8r+8], 16) == big-endian u32 of
-                        # digest bytes [4r:4r+4] — raw digests concat into
-                        # one buffer, numpy does the slicing and the min
-                        digests = b"".join(
-                            _md5(b"%d:%s" % (b, s.encode())).digest()
-                            for s in shs for b in range(N_BANDS))
-                        arr = np.frombuffer(digests, dtype=">u4") \
-                            .reshape(len(shs), N_MINHASH)
-                        row.append([int(v) for v in arr.min(axis=0)])
-                    else:
-                        row.append(None)
-                if simhash:
-                    if shs:
-                        nsh = len(shs)
-                        hs = np.frombuffer(
-                            b"".join(_md5(b"0:" + s.encode()).digest()[:4]
-                                     for s in shs), dtype=">u4")
-                        ones = ((hs[:, None] >> np.arange(32)) & 1).sum(0)
-                        votes = (2 * ones - nsh > 0).astype(np.int64)
-                        row.append(int((votes << np.arange(32)).sum()))
-                    else:
-                        row.append(None)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[c.split()[0] for c in
-                                              out_cols.split(", ")])
+    # bound with partial, not a closure: the function pickles by reference,
+    # so its workers import the package (and its _pyworker fix)
+    return df.mapInPandas(
+        partial(_shingle_batches, minhash=minhash, simhash=simhash,
+                columns=tuple(c.split()[0] for c in out_cols.split(", "))),
+        out_cols)
 
-    return df.mapInPandas(stage, out_cols)
+
+def _shingle_batches(batches, minhash, simhash, columns):
+    """_shingle_stage's per-batch function: `columns` name its output."""
+    for pdf in batches:
+        rows = []
+        for doc_id, text in zip(pdf["doc_id"].tolist(),
+                                pdf["text"].tolist()):
+            ws = (text or "").split(" ")
+            n = len(ws)
+            tri = [" ".join(ws[i:i + 3]) for i in range(max(n - 2, 1))]
+            shs = [s for s in dict.fromkeys(tri) if s]
+            row = [doc_id, shs]
+            # docs with zero shingles get NULL signatures: the old
+            # exploded pipelines simply had no rows for them, and
+            # consumers must keep excluding them
+            if minhash:
+                if shs:
+                    # int(hexdigest[8r:8r+8], 16) == big-endian u32 of
+                    # digest bytes [4r:4r+4] — raw digests concat into
+                    # one buffer, numpy does the slicing and the min
+                    digests = b"".join(
+                        _md5(b"%d:%s" % (b, s.encode())).digest()
+                        for s in shs for b in range(N_BANDS))
+                    arr = np.frombuffer(digests, dtype=">u4") \
+                        .reshape(len(shs), N_MINHASH)
+                    row.append([int(v) for v in arr.min(axis=0)])
+                else:
+                    row.append(None)
+            if simhash:
+                if shs:
+                    nsh = len(shs)
+                    hs = np.frombuffer(
+                        b"".join(_md5(b"0:" + s.encode()).digest()[:4]
+                                 for s in shs), dtype=">u4")
+                    ones = ((hs[:, None] >> np.arange(32)) & 1).sum(0)
+                    votes = (2 * ones - nsh > 0).astype(np.int64)
+                    row.append(int((votes << np.arange(32)).sum()))
+                else:
+                    row.append(None)
+            rows.append(row)
+        yield pd.DataFrame(rows, columns=list(columns))
 
 
 def _shingle_array(df, n=3):
@@ -2066,12 +2072,16 @@ def dedup_bloom(spark, sf_dir):
     m/k by. Split convention matches dedup_incremental (doc_id % 5 == 0 is
     the new batch).
 
-    Scale shape: the filter is O(m) bits REGARDLESS of history size — the
-    one structure that still broadcasts when history is 10^12 docs.
-    History folds map-side to ≤m distinct positions (partial distinct
-    below the exchange); the probe is a broadcast hash join; the
-    ground-truth join broadcasts the small new batch's hashes. Per-ingest
-    cost is O(|batch| + m), independent of |history|."""
+    Scale shape: the filter is O(m) bits REGARDLESS of history size, so its
+    broadcast stays bounded. History folds map-side to ≤m distinct
+    positions (partial distinct below the exchange); the probe is a
+    broadcast hash join; the ground-truth join broadcasts the small new
+    batch's hashes. Per-ingest cost is O(|batch| + m), independent of
+    |history|. The false-positive rate is NOT bounded: the geometry is
+    fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), which suits this
+    corpus's small history but saturates as history grows — ~3% of
+    distinct new docs read positive at 10³ history docs, ~93% at 10⁴
+    (ROADMAP item 1 sizes a windowed filter to a target rate)."""
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", F.md5("text").alias("h")))
     is_new = F.col("doc_id") % INC_NEW_MOD == 0

@@ -339,7 +339,16 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     # manifest rows are COLLECTED (≤ B rows) so the lineage update below can
     # union them back without re-reading lineage_path while overwriting it
     done_rows = []
-    if resume:
+    conf = spark._jsc.hadoopConfiguration()
+
+    def hadoop_path(path):
+        path = spark._jvm.org.apache.hadoop.fs.Path(path)
+        return path, path.getFileSystem(conf)
+
+    # a fresh out_dir has no manifest: ask the filesystem rather than let a
+    # Spark read fail; the except still covers a manifest it cannot read
+    lineage, lineage_fs = hadoop_path(lineage_path)
+    if resume and lineage_fs.exists(lineage):
         try:
             done_rows = (spark.read.schema(LINEAGE_SCHEMA)
                          .parquet(lineage_path).collect())
@@ -431,10 +440,9 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     # leaves no manifest, and the next resume starts over.
     overwrite = "dynamic" if done_rows else "static"
     if not done_rows:
-        conf = spark._jsc.hadoopConfiguration()
         for stale in (lineage_path, links_path):
-            stale = spark._jvm.org.apache.hadoop.fs.Path(stale)
-            stale.getFileSystem(conf).delete(stale, True)
+            path, fs = hadoop_path(stale)
+            fs.delete(path, True)
     (parsed.write.mode("overwrite")
      .option("partitionOverwriteMode", overwrite)
      .partitionBy("part_key").parquet(parsed_path))

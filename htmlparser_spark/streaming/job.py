@@ -329,8 +329,11 @@ def bloom_history_bits(history: DataFrame) -> DataFrame:
     SHARED ops._bloom_position helper (also used by the batch dedup_bloom),
     so the stream and batch paths cannot drift. Map-side explode + partial
     distinct below ONE exchange; output is ≤ m rows regardless of history
-    size — the one dedup structure that still broadcasts when history is
-    10¹² documents."""
+    size, so the broadcast stays bounded. The false-positive rate does not:
+    the geometry is fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), and
+    the filter saturates as history grows — ~3% of distinct new pages
+    read positive at 10³ history documents, ~30% at 3·10³, ~93% at 10⁴
+    (ROADMAP item 1 sizes a windowed filter to a target rate)."""
     from ..ops import BLOOM_K, _bloom_position
 
     pos = [_bloom_position(F.col("content_hash"), j).alias("pos")
@@ -434,13 +437,16 @@ def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
     after the sink commits, folds ONLY the newly committed parquet files
     back in, writing the next bit-set version and advancing
     ``_bloom_state.json`` atomically. End-to-end per-drain cost is
-    therefore O(|batch|) + O(BLOOM_M), independent of accumulated history —
-    the property that makes the drain viable against a 10¹²-document
-    history. Crash-safe because bit-folding is idempotent (bits are a set:
-    replaying a batch re-sets the same positions), the state json is the
-    commit point, AND pending unfolded sink files are folded BEFORE each
-    drain tags — a crash between a drain's sink commit and its fold can
-    therefore never cost a false negative on the next drain; superseded
+    therefore O(|batch|) + O(BLOOM_M), independent of accumulated history.
+    Its accuracy is not: the geometry is fixed (m = 8192 bits, k = 3), so
+    the filter saturates — ~93% of distinct new pages read maybe_dup = 1
+    once the history reaches 10⁴ documents, ~100% at 10⁵ (see
+    bloom_history_bits and ROADMAP item 1). Crash-safe because
+    bit-folding is idempotent (bits are a set: replaying a batch re-sets
+    the same positions), the state json is the commit point, AND pending
+    unfolded sink files are folded BEFORE each drain tags — a crash
+    between a drain's sink commit and its fold can therefore never cost a
+    false negative on the next drain; superseded
     bit-set versions are GC'd. New-file discovery lists the local sink
     directory against the folded-file manifest; on an object-store sink,
     swap in the file sink's own _spark_metadata batch manifest — the fold

@@ -8,7 +8,7 @@ import shutil
 import sys
 
 import pytest
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -238,6 +238,34 @@ def test_resume_after_lineage_lost_does_not_duplicate(spark, corpus, tmp_path):
     dups = (resumed.groupBy("url", "warc_ts").count()
             .filter(F.col("count") > 1).count())
     assert dups == 0
+
+
+def test_lineage_probe_reads_only_an_existing_manifest(spark, corpus, tmp_path,
+                                                       monkeypatch):
+    """A fresh out_dir is recognised by a filesystem check, not by a Spark
+    read of the missing manifest; a manifest that exists but cannot be
+    read still falls back to a full re-parse."""
+    read_parquet = DataFrameReader.parquet
+    missing = []
+
+    def spy(self, *paths, **kw):
+        missing.extend(p for p in paths if not os.path.exists(p))
+        return read_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    out = str(tmp_path / "out")
+    first = run_pipeline(spark, corpus, out, num_partitions=4)
+    assert missing == []
+
+    lineage_path = os.path.join(out, "_lineage")
+    shutil.rmtree(lineage_path)
+    os.makedirs(lineage_path)
+    with open(os.path.join(lineage_path, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    assert run_pipeline(spark, corpus, out, num_partitions=4) == first
+    sink = spark.read.parquet(os.path.join(out, "parsed"))
+    assert sink.count() == sink.select("url", "warc_ts").distinct().count()
+    assert recorded_buckets(spark, out) == {16}
 
 
 def test_missing_kernel_columns_fail_fast(spark, corpus, tmp_path):
