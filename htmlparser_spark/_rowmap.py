@@ -1,0 +1,44 @@
+"""The one row-expanding Python stage shared by every source, generator and
+media operator: each input row becomes zero or more output rows.
+
+``fn`` must pickle by reference — a module-level function or a
+``functools.partial`` of one, never a closure — so every worker that runs
+the stage imports the package (and its ``_pyworker`` fix) when it
+unpickles it.
+"""
+from __future__ import annotations
+
+from functools import partial
+
+import pandas as pd
+
+
+def flat_map(df, fn, cols, schema):
+    """``df.mapInPandas`` whose output is ``fn(*row)`` for every input row:
+    ``row`` holds the values of ``cols`` (plain Python objects, in that
+    order) and ``fn`` returns an iterable of tuples, one per output row,
+    laid out like ``schema``."""
+    return df.mapInPandas(partial(_flat_map, fn, tuple(cols)), schema)
+
+
+def _flat_map(fn, cols, batches):
+    # output columns are matched to the schema by position; a batch with
+    # no output rows is a frame with no columns, which PySpark accepts
+    for pdf in batches:
+        yield pd.DataFrame(
+            [out for row in zip(*(pdf[c].tolist() for c in cols))
+             for out in fn(*row)])
+
+
+def one_row(fn, *args):
+    """``[fn(*args)]``: lifts a one-row generator into a ``flat_map`` fn
+    (bind it with ``partial(one_row, fn, ...)``)."""
+    return [fn(*args)]
+
+
+def id_range(spark, n, partitions=None):
+    """Ids ``0..n-1`` (column ``id``) in ``partitions`` partitions, by
+    default ``max(defaultParallelism, 4)`` — the input of the seeded
+    generators, each of which is a pure function of (seed, id)."""
+    partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
+    return spark.range(0, n, 1, partitions)

@@ -3,8 +3,9 @@
 Real deployments decode media with PIL/ffmpeg; those libraries are not in
 this container, so the DECODER here parses a deterministic synthetic format
 ("FIMG"/"FAUD" headers + payload) — but everything Spark-side is production
-shaped: binary columns travel as Arrow buffers through ``mapInPandas``, the
-batch functions unpack bytes with ``struct``, and outputs are typed columns.
+shaped: binary columns travel as Arrow buffers through one ``mapInPandas``
+stage (``_rowmap.flat_map``), the per-row functions unpack bytes with
+``struct``, and outputs are typed columns.
 Swapping `_decode_image_blob` for PIL is a one-function change.
 
 The synthetic metadata is a pure function of media_id, so the DuckDB oracle
@@ -28,14 +29,14 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
-
-import pandas as pd
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from ._rowmap import flat_map, id_range
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -76,19 +77,15 @@ def make_blob(media_id: int) -> tuple[str, bytes]:
                      + _payload(media_id, ns * 2))
 
 
+def _media_row(media_id: int):
+    return [(media_id, *make_blob(media_id))]
+
+
 def synth_media(spark: SparkSession, n_rows: int,
                 partitions: int = 8) -> DataFrame:
     """Distributed deterministic media table (never driver-materialized)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].tolist():
-                kind, blob = make_blob(int(i))
-                rows.append((int(i), kind, blob))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "blob"])
-
-    return spark.range(0, n_rows, 1, partitions).mapInPandas(
-        gen, schema=MEDIA_SCHEMA)
+    return flat_map(id_range(spark, n_rows, partitions), _media_row, ["id"],
+                    MEDIA_SCHEMA)
 
 
 # --- decode (the PIL/ffmpeg stand-in) ----------------------------------------
@@ -120,26 +117,20 @@ def _decode_audio_blob(blob: bytes):
     return sr, ns, len(blob) - 12
 
 
-def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for mid, blob in zip(pdf["media_id"].tolist(), pdf["blob"].tolist()):
-            b = bytes(blob)
-            if b[:4] == b"FIMG":
-                w, h, c, plen = _decode_image_blob(b)
-                rows.append((mid, "image", w, h, c, None, None, plen))
-            elif b[:4] == b"FAUD":
-                sr, ns, plen = _decode_audio_blob(b)
-                rows.append((mid, "audio", None, None, None, sr, ns, plen))
-            else:
-                rows.append((mid, "unknown", None, None, None, None, None,
-                             len(b)))
-        yield pd.DataFrame(rows, columns=[f.name for f in DECODE_SCHEMA.fields])
+def _decoded(mid: int, blob: bytes):
+    b = bytes(blob)
+    if b[:4] == b"FIMG":
+        w, h, c, plen = _decode_image_blob(b)
+        return [(mid, "image", w, h, c, None, None, plen)]
+    if b[:4] == b"FAUD":
+        sr, ns, plen = _decode_audio_blob(b)
+        return [(mid, "audio", None, None, None, sr, ns, plen)]
+    return [(mid, "unknown", None, None, None, None, None, len(b))]
 
 
 def media_decode(spark: SparkSession, n_rows: int = 400) -> DataFrame:
-    return synth_media(spark, n_rows).mapInPandas(decode_batch,
-                                                  schema=DECODE_SCHEMA)
+    return flat_map(synth_media(spark, n_rows), _decoded,
+                    ["media_id", "blob"], DECODE_SCHEMA)
 
 
 # --- resize (image) -----------------------------------------------------------
@@ -153,28 +144,22 @@ RESIZE_SCHEMA = StructType([
 ])
 
 
-def resize_batch(batches: Iterator[pd.DataFrame],
-                 factor: int = 2) -> Iterator[pd.DataFrame]:
+def _resized(mid: int, blob: bytes, factor: int = 2):
     """Half-size "resize": deterministic byte subsample standing in for a
     vectorized PIL/cv2 resize; the output blob length is what a packed
     (w//2, h//2, c) image would occupy (capped by available payload)."""
-    for pdf in batches:
-        rows = []
-        for mid, blob in zip(pdf["media_id"].tolist(), pdf["blob"].tolist()):
-            b = bytes(blob)
-            if b[:4] != b"FIMG":
-                continue
-            w, h, c, plen = _decode_image_blob(b)
-            w2, h2 = max(w // factor, 1), max(h // factor, 1)
-            out = b[13:][::factor * factor][:w2 * h2 * c]
-            rows.append((mid, w2, h2, c, len(out)))
-        yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    b = bytes(blob)
+    if b[:4] != b"FIMG":
+        return []
+    w, h, c, _plen = _decode_image_blob(b)
+    w2, h2 = max(w // factor, 1), max(h // factor, 1)
+    out = b[13:][::factor * factor][:w2 * h2 * c]
+    return [(mid, w2, h2, c, len(out))]
 
 
 def image_resize(spark: SparkSession, n_rows: int = 400) -> DataFrame:
-    return (synth_media(spark, n_rows)
-            .filter("kind = 'image'")
-            .mapInPandas(resize_batch, schema=RESIZE_SCHEMA))
+    return flat_map(synth_media(spark, n_rows).filter("kind = 'image'"),
+                    _resized, ["media_id", "blob"], RESIZE_SCHEMA)
 
 
 # --- frame sampling (audio) ---------------------------------------------------
@@ -189,31 +174,24 @@ FRAME_STRIDE = 1000   # samples between frame starts
 FRAME_LEN = 256       # samples per frame
 
 
-def frame_sample_batch(batches: Iterator[pd.DataFrame]
-                       ) -> Iterator[pd.DataFrame]:
+def _audio_frames(mid: int, blob: bytes):
     """Every FRAME_STRIDE samples take a FRAME_LEN-sample frame (ffmpeg
     keyframe-sample stand-in); one output row per frame."""
-    for pdf in batches:
-        rows = []
-        for mid, blob in zip(pdf["media_id"].tolist(), pdf["blob"].tolist()):
-            b = bytes(blob)
-            if b[:4] != b"FAUD":
-                continue
-            _sr, ns, plen = _decode_audio_blob(b)
-            payload = b[12:]
-            idx = 0
-            for start in range(0, ns, FRAME_STRIDE):
-                take = min(FRAME_LEN, ns - start) * 2
-                frame = payload[start * 2:start * 2 + take]
-                rows.append((mid, idx, len(frame)))
-                idx += 1
-        yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    b = bytes(blob)
+    if b[:4] != b"FAUD":
+        return []
+    _sr, ns, _plen = _decode_audio_blob(b)
+    payload = b[12:]
+    rows = []
+    for idx, start in enumerate(range(0, ns, FRAME_STRIDE)):
+        take = min(FRAME_LEN, ns - start) * 2
+        rows.append((mid, idx, len(payload[start * 2:start * 2 + take])))
+    return rows
 
 
 def audio_frame_sample(spark: SparkSession, n_rows: int = 400) -> DataFrame:
-    return (synth_media(spark, n_rows)
-            .filter("kind = 'audio'")
-            .mapInPandas(frame_sample_batch, schema=FRAME_SCHEMA))
+    return flat_map(synth_media(spark, n_rows).filter("kind = 'audio'"),
+                    _audio_frames, ["media_id", "blob"], FRAME_SCHEMA)
 
 
 # --- video frame sampling -----------------------------------------------------
@@ -251,21 +229,18 @@ def make_video_blob(media_id: int) -> bytes:
     return b"FVID" + struct.pack(">HHBH", w, h, fps, nf) + payload
 
 
+def _keyed_blob(make, media_id: int):
+    return [(media_id, make(media_id))]
+
+
 def synth_videos(spark: SparkSession, n_rows: int,
                  partitions: int = 8) -> DataFrame:
     schema = StructType([
         StructField("media_id", LongType()),
         StructField("blob", BinaryType()),
     ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(i), make_video_blob(int(i)))
-                    for i in pdf["id"].tolist()]
-            yield pd.DataFrame(rows, columns=["media_id", "blob"])
-
-    return spark.range(0, n_rows, 1, partitions).mapInPandas(gen,
-                                                             schema=schema)
+    return flat_map(id_range(spark, n_rows, partitions),
+                    partial(_keyed_blob, make_video_blob), ["id"], schema)
 
 
 def _decode_video_blob(blob: bytes):
@@ -276,25 +251,18 @@ def _decode_video_blob(blob: bytes):
     return w, h, fps, nf, blob[11:]
 
 
-def video_frame_batch(batches: Iterator[pd.DataFrame]
-                      ) -> Iterator[pd.DataFrame]:
+def _video_frames(mid: int, blob: bytes):
     """Every VIDEO_SAMPLE_EVERY-th frame: one output row with its timestamp
     (frame/fps) and the bytes available for it in the payload (16-byte
     digest per stored frame, 0 past the stored window)."""
-    for pdf in batches:
-        rows = []
-        for mid, blob in zip(pdf["media_id"].tolist(), pdf["blob"].tolist()):
-            w, h, fps, nf, payload = _decode_video_blob(bytes(blob))
-            for idx, f in enumerate(range(0, nf, VIDEO_SAMPLE_EVERY)):
-                frame = payload[f * 16:(f + 1) * 16]
-                rows.append((mid, idx, (f * 1000) // fps, len(frame)))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields])
+    _w, _h, fps, nf, payload = _decode_video_blob(bytes(blob))
+    return [(mid, idx, (f * 1000) // fps, len(payload[f * 16:(f + 1) * 16]))
+            for idx, f in enumerate(range(0, nf, VIDEO_SAMPLE_EVERY))]
 
 
 def video_frame_sample(spark: SparkSession, n_rows: int = 200) -> DataFrame:
-    return synth_videos(spark, n_rows).mapInPandas(video_frame_batch,
-                                                   schema=VIDEO_FRAME_SCHEMA)
+    return flat_map(synth_videos(spark, n_rows), _video_frames,
+                    ["media_id", "blob"], VIDEO_FRAME_SCHEMA)
 
 
 # --- PDF text/layout extraction (north-rule tier: "PDF/layout parse") --------
@@ -342,14 +310,8 @@ def make_pdf_blob(doc_id: int) -> bytes:
 
 def synth_pdfs(spark: SparkSession, n_rows: int,
                partitions: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(i), make_pdf_blob(int(i)))
-                    for i in pdf["id"].tolist()]
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-
-    return spark.range(0, n_rows, 1, partitions).mapInPandas(
-        gen, schema=PDF_SCHEMA)
+    return flat_map(id_range(spark, n_rows, partitions),
+                    partial(_keyed_blob, make_pdf_blob), ["id"], PDF_SCHEMA)
 
 
 def _decode_pdf_blob(blob: bytes) -> list[str]:
@@ -367,19 +329,14 @@ def _decode_pdf_blob(blob: bytes) -> list[str]:
     return pages
 
 
-def pdf_text_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for did, blob in zip(pdf["doc_id"].tolist(), pdf["blob"].tolist()):
-            for p, text in enumerate(_decode_pdf_blob(bytes(blob))):
-                rows.append((did, p, text, text.count(" ") + 1, len(text)))
-        yield pd.DataFrame(rows,
-                           columns=[f.name for f in PDF_PAGE_SCHEMA.fields])
+def _pdf_pages(did: int, blob: bytes):
+    return [(did, p, text, text.count(" ") + 1, len(text))
+            for p, text in enumerate(_decode_pdf_blob(bytes(blob)))]
 
 
 def pdf_text_extract(spark: SparkSession, n_rows: int = 200) -> DataFrame:
-    return synth_pdfs(spark, n_rows).mapInPandas(pdf_text_batch,
-                                                 schema=PDF_PAGE_SCHEMA)
+    return flat_map(synth_pdfs(spark, n_rows), _pdf_pages,
+                    ["doc_id", "blob"], PDF_PAGE_SCHEMA)
 
 
 # --- feature extraction stub --------------------------------------------------
@@ -397,16 +354,11 @@ def media_feature_vector(spark: SparkSession, n_rows: int = 400) -> DataFrame:
         StructField("feature", ArrayType(DoubleType())),
     ])
 
-    def feat(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, blob in zip(pdf["media_id"].tolist(),
-                                       pdf["kind"].tolist(),
-                                       pdf["blob"].tolist()):
-                d = hashlib.md5(bytes(blob)).digest()
-                vec = [((d[i] << 8 | d[i + 1]) / 65535.0) - 0.5
-                       for i in range(0, FEATURE_DIM * 2, 2)]
-                rows.append((mid, kind, vec))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "feature"])
+    return flat_map(synth_media(spark, n_rows), _feature,
+                    ["media_id", "kind", "blob"], schema)
 
-    return synth_media(spark, n_rows).mapInPandas(feat, schema=schema)
+
+def _feature(mid: int, kind: str, blob: bytes):
+    d = hashlib.md5(bytes(blob)).digest()
+    return [(mid, kind, [((d[i] << 8 | d[i + 1]) / 65535.0) - 0.5
+                         for i in range(0, FEATURE_DIM * 2, 2)])]

@@ -638,10 +638,7 @@ def embedding_ann_lsh(spark, sf_dir, k=3, n_queries=5, n_planes=8):
         return pd.Series(["".join("1" if b else "0" for b in row)
                           for row in bits])
 
-    emb = (_t(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding",
-                                         lambda x: x.cast("double")).alias("v")))
-    emb = emb.withColumn("bucket", signature(F.col("v")))
+    emb = _emb(spark, sf_dir).withColumn("bucket", signature(F.col("v")))
     q = (emb.filter(F.col("vec_id") < n_queries)
          .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
                  F.col("bucket")))
@@ -700,19 +697,27 @@ def _ivf_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     cent_ids = np.array([r["cent_id"] for r in rows], dtype=np.int64)
     C = np.array([r["cv"] for r in rows], dtype=np.float64)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    return emb.mapInPandas(partial(_ivf_assign_batches, cent_ids, Cn),
+                           "vec_id bigint, v array<double>, cell bigint")
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            best = np.argmax(Vn @ Cn.T, axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                                "v": pdf["v"],
-                                "cell": cent_ids[best]})
 
-    return emb.mapInPandas(assign, "vec_id bigint, v array<double>, cell bigint")
+def _ivf_assign_batches(cent_ids, Cn, batches):
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        V = np.array(pdf["v"].tolist(), dtype=np.float64)
+        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+        best = np.argmax(Vn @ Cn.T, axis=1)
+        yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
+                            "v": pdf["v"],
+                            "cell": cent_ids[best]})
+
+
+def _ivf_centroids(emb: DataFrame, n_cent: int) -> DataFrame:
+    """The IVF codebook (cent_id, cv): the vectors with vec_id < n_cent —
+    deterministic, so the DuckDB oracle rebuilds the same codebook."""
+    return (emb.filter(F.col("vec_id") < n_cent)
+            .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
 
 
 def _ivf_topk(emb, n_cent, k, n_queries, q_lo=0, probes=None):
@@ -723,8 +728,7 @@ def _ivf_topk(emb, n_cent, k, n_queries, q_lo=0, probes=None):
     result (unlike sign-LSH whose recall depends on plane draws). At 100 TB
     the assignment is one map-side numpy pass and each query touches
     ~probes/cells of the corpus; cells are the shuffle key."""
-    cents = (emb.filter(F.col("vec_id") < n_cent)
-             .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
+    cents = _ivf_centroids(emb, n_cent)
     assigned = _ivf_assign(emb, cents)
     return _ivf_search(emb, cents, assigned, k, n_queries, q_lo, probes)
 
@@ -814,9 +818,7 @@ def embedding_ann_probe_sweep(spark, sf_dir, k=3, n_queries=5):
         # shared by every probe budget: build each once per distribution and
         # materialize, instead of re-running the full-corpus assignment pass
         # and exact scan inside all |SWEEP_PROBES| branches
-        cents = (emb.filter(F.col("vec_id") < n_cent)
-                 .select(F.col("vec_id").alias("cent_id"),
-                         F.col("v").alias("cv")))
+        cents = _ivf_centroids(emb, n_cent)
         assigned = _materialized(_ivf_assign(emb, cents),
                                  f"sweep_assigned_{dist}")
         exact = _materialized(
@@ -852,12 +854,8 @@ def dedup_embedding_cosine(spark, sf_dir, threshold=0.40, max_cell=None):
     pair set (driver-proven via dedup_embedding_cosine_balanced's oracle).
     Default None keeps the plain join: on near-uniform corpora the split's
     extra broadcast + replication buys nothing."""
-    emb = (_t(spark, sf_dir, "embeddings")
-           .select("vec_id", F.transform("embedding",
-                                         lambda x: x.cast("double")).alias("v")))
-    n_cent = _ivf_n_centroids(_emb_count(spark, sf_dir))
-    cents = (emb.filter(F.col("vec_id") < n_cent)
-             .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
+    emb = _emb(spark, sf_dir)
+    cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
     assigned = _ivf_assign(emb, cents)
     if max_cell is not None:
         pairs = _cell_pairs_balanced(assigned, max_cell)
@@ -895,10 +893,7 @@ def embedding_ivf_cell_stats(spark, sf_dir):
     parts = []
     for dist, emb in (("uniform", _emb(spark, sf_dir)),
                       ("clustered", _emb_clustered(spark, sf_dir))):
-        cents = (emb.filter(F.col("vec_id") < n_cent)
-                 .select(F.col("vec_id").alias("cent_id"),
-                         F.col("v").alias("cv")))
-        pops = _cell_pops(_ivf_assign(emb, cents))
+        pops = _cell_pops(_ivf_assign(emb, _ivf_centroids(emb, n_cent)))
         parts.append(pops.agg(
             F.count(F.lit(1)).alias("n_cells"),
             F.min("pop").alias("min_pop"),
@@ -986,9 +981,7 @@ def dedup_embedding_cosine_balanced(spark, sf_dir, threshold=0.95,
     balanced plan emits the bit-identical pair set (the dedup analogue of
     'recall unchanged')."""
     emb = _emb_clustered(spark, sf_dir)
-    n_cent = _ivf_n_centroids(_emb_count(spark, sf_dir))
-    cents = (emb.filter(F.col("vec_id") < n_cent)
-             .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
+    cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
     pairs = (_cell_pairs_balanced(_ivf_assign(emb, cents), max_cell)
              .withColumn("cos", _cosine(F.col("va"), F.col("vb")))
              .filter(F.col("cos") >= threshold))
@@ -2497,7 +2490,7 @@ def _emb_fp(spark, sf_dir):
 def _argmin_l2(X: np.ndarray, C: np.ndarray,
                c_sq: np.ndarray) -> tuple:
     """Exact int64 argmin-L2 kernel shared by every assignment/encode
-    closure: one ‖x‖² − 2·x·Cᵀ + ‖c‖² matmul, argmin returning the FIRST
+    batch function: one ‖x‖² − 2·x·Cᵀ + ‖c‖² matmul, argmin returning the FIRST
     minimal index — the tie rule every DuckDB oracle mirrors with
     ORDER BY dist ASC, id ASC. Centralized so a tie-break or overflow
     change can never drift between the k-means, PQ, and IVF-PQ kernels.
@@ -2509,7 +2502,7 @@ def _argmin_l2(X: np.ndarray, C: np.ndarray,
 
 def _l2_assign(embfp: DataFrame, cent_rows: list) -> DataFrame:
     """Nearest-centroid assignment under exact integer squared-L2: the
-    ≤k-row codebook ships inside the udf closure (same broadcast-codebook
+    ≤k-row codebook is bound into the batch function (same broadcast-codebook
     pattern as _ivf_assign) and each Arrow batch runs the shared
     _argmin_l2 kernel. Zero shuffle; ties resolve to the lowest cent_id
     (cent_rows is sorted), matching the oracle's
@@ -2517,20 +2510,21 @@ def _l2_assign(embfp: DataFrame, cent_rows: list) -> DataFrame:
     cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
     C = np.array([r[1] for r in cent_rows], dtype=np.int64)
     c_sq = np.square(C).sum(axis=1)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["x"].tolist(), dtype=np.int64)
-            best, dist = _argmin_l2(X, C, c_sq)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                                "x": pdf["x"],
-                                "cell": cent_ids[best],
-                                "dist": dist})
-
     return embfp.mapInPandas(
-        assign, "vec_id bigint, x array<bigint>, cell bigint, dist bigint")
+        partial(_l2_assign_batches, cent_ids, C, c_sq),
+        "vec_id bigint, x array<bigint>, cell bigint, dist bigint")
+
+
+def _l2_assign_batches(cent_ids, C, c_sq, batches):
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        X = np.array(pdf["x"].tolist(), dtype=np.int64)
+        best, dist = _argmin_l2(X, C, c_sq)
+        yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
+                            "x": pdf["x"],
+                            "cell": cent_ids[best],
+                            "dist": dist})
 
 
 def _kmeans_update(assigned: DataFrame) -> DataFrame:
@@ -2559,7 +2553,7 @@ def _kmeans_fit(embfp: DataFrame, k: int, rounds: int):
     vectors with vec_id < k — deterministic, like the IVF codebook. Each
     round collects the ≤k×dim centroid table to the driver (the broadcast-
     codebook pattern), which also truncates the plan: round r+1's lineage
-    restarts from the embedding scan + a closure constant, never stacking r
+    restarts from the embedding scan + a bound constant, never stacking r
     shuffle stages. Cost is the textbook one: `rounds` passes over the data.
     Returns (final-round assignment DataFrame, final centroid rows) — the
     assignment is vs the round-(R−1) centroids, the rows are the round-R
@@ -2653,32 +2647,9 @@ def _pq_update_codebook(embfp: DataFrame, CB: np.ndarray) -> np.ndarray:
     map-side combine done in the kernel itself). New component =
     floor(sum/count), same arithmetic as _kmeans_update; codes that lose
     every member keep their old entry (deterministic)."""
-    M, KS, sub_d = CB.shape
-    cb_sq = np.square(CB).sum(axis=2)
-
-    def partials(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["x"].tolist(), dtype=np.int64)
-            codes, _ = _pq_sub_codes(X, CB, cb_sq)
-            out = {"sub": [], "code": [], "pos": [], "s": [], "n": []}
-            for s in range(M):
-                cs = codes[s::M]
-                Xs = X[:, s * sub_d:(s + 1) * sub_d]
-                for c in np.unique(cs):
-                    sel = Xs[cs == c]
-                    sums = sel.sum(axis=0)
-                    for p in range(sub_d):
-                        out["sub"].append(s)
-                        out["code"].append(int(c))
-                        out["pos"].append(p)
-                        out["s"].append(int(sums[p]))
-                        out["n"].append(len(sel))
-            yield pd.DataFrame(out)
-
     agg = (embfp.mapInPandas(
-        partials, "sub bigint, code bigint, pos bigint, s bigint, n bigint")
+        partial(_pq_partials, CB, np.square(CB).sum(axis=2)),
+        "sub bigint, code bigint, pos bigint, s bigint, n bigint")
         .groupBy("sub", "code", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .withColumn("c", F.floor(F.col("s") / F.col("n")).cast("long"))
@@ -2687,6 +2658,29 @@ def _pq_update_codebook(embfp: DataFrame, CB: np.ndarray) -> np.ndarray:
     for r in agg:
         new[r["sub"], r["code"], r["pos"]] = r["c"]
     return new
+
+
+def _pq_partials(CB, cb_sq, batches):
+    M, KS, sub_d = CB.shape
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        X = np.array(pdf["x"].tolist(), dtype=np.int64)
+        codes, _ = _pq_sub_codes(X, CB, cb_sq)
+        out = {"sub": [], "code": [], "pos": [], "s": [], "n": []}
+        for s in range(M):
+            cs = codes[s::M]
+            Xs = X[:, s * sub_d:(s + 1) * sub_d]
+            for c in np.unique(cs):
+                sel = Xs[cs == c]
+                sums = sel.sum(axis=0)
+                for p in range(sub_d):
+                    out["sub"].append(s)
+                    out["code"].append(int(c))
+                    out["pos"].append(p)
+                    out["s"].append(int(sums[p]))
+                    out["n"].append(len(sel))
+        yield pd.DataFrame(out)
 
 
 def _pq_codebook_trained(embfp: DataFrame,
@@ -2727,32 +2721,32 @@ def _pq_encode_df(embfp: DataFrame, CB: np.ndarray) -> DataFrame:
     """The map-only encode pass given a prebuilt codebook — shared by
     embedding_pq_encode and the ADC searchers so composing them never
     re-collects the training rows."""
-    M = CB.shape[0]
-    cb_sq = np.square(CB).sum(axis=2)
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["x"].tolist(), dtype=np.int64)
-            codes, dists = _pq_sub_codes(X, CB, cb_sq)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M),
-                "sub": np.tile(np.arange(M, dtype=np.int64), len(X)),
-                "code": codes,
-                "sqdist": dists})
-
     return embfp.mapInPandas(
-        encode, "vec_id bigint, sub bigint, code bigint, sqdist bigint")
+        partial(_pq_encode_batches, CB, np.square(CB).sum(axis=2)),
+        "vec_id bigint, sub bigint, code bigint, sqdist bigint")
+
+
+def _pq_encode_batches(CB, cb_sq, batches):
+    M = CB.shape[0]
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        X = np.array(pdf["x"].tolist(), dtype=np.int64)
+        codes, dists = _pq_sub_codes(X, CB, cb_sq)
+        yield pd.DataFrame({
+            "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M),
+            "sub": np.tile(np.arange(M, dtype=np.int64), len(X)),
+            "code": codes,
+            "sqdist": dists})
 
 
 def embedding_pq_encode(spark, sf_dir, trained=False):
     """Product-quantization encode: each vector compresses to M=4 sub-codes
     (one per 16-dim slice, nearest codebook entry by integer squared-L2),
     i.e. 512 B of float32 becomes 4 small ints — the memory path that lets a
-    10⁹-vector index live in RAM. One map-only numpy pass (codebook in the
-    closure); long format (vec_id, sub, code, sqdist) keeps the schema
-    stable and the oracle a plain argmin join. By construction the KS
+    10⁹-vector index live in RAM. One map-only numpy pass (codebook bound
+    into the batch function); long format (vec_id, sub, code, sqdist)
+    keeps the schema stable and the oracle a plain argmin join. By construction the KS
     training vectors encode to themselves with sqdist 0 — pinned in
     tests. trained=True swaps in the per-subspace-k-means codebook
     (_pq_codebook_trained); the encode pass itself is identical."""
@@ -2881,25 +2875,25 @@ def _ivfpq_index(embfp: DataFrame, cent_rows: list, CB: np.ndarray) \
     10⁹ vectors. Output is M rows per vector: (vec_id, cell, sub, code)."""
     cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
     C = np.array([r[1] for r in cent_rows], dtype=np.int64)
-    c_sq = np.square(C).sum(axis=1)
-    M = CB.shape[0]
-    cb_sq = np.square(CB).sum(axis=2)
-
-    def build(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["x"].tolist(), dtype=np.int64)
-            best, _ = _argmin_l2(X, C, c_sq)
-            codes, _ = _pq_sub_codes(X, CB, cb_sq)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M),
-                "cell": np.repeat(cent_ids[best], M),
-                "sub": np.tile(np.arange(M, dtype=np.int64), len(X)),
-                "code": codes})
-
     return embfp.mapInPandas(
-        build, "vec_id bigint, cell bigint, sub bigint, code bigint")
+        partial(_ivfpq_batches, cent_ids, C, np.square(C).sum(axis=1),
+                CB, np.square(CB).sum(axis=2)),
+        "vec_id bigint, cell bigint, sub bigint, code bigint")
+
+
+def _ivfpq_batches(cent_ids, C, c_sq, CB, cb_sq, batches):
+    M = CB.shape[0]
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        X = np.array(pdf["x"].tolist(), dtype=np.int64)
+        best, _ = _argmin_l2(X, C, c_sq)
+        codes, _ = _pq_sub_codes(X, CB, cb_sq)
+        yield pd.DataFrame({
+            "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M),
+            "cell": np.repeat(cent_ids[best], M),
+            "sub": np.tile(np.arange(M, dtype=np.int64), len(X)),
+            "code": codes})
 
 
 def embedding_ann_ivfpq(spark, sf_dir, k=3, n_queries=5, probes=None,

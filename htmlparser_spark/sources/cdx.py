@@ -33,10 +33,9 @@ import hashlib
 import json
 import os
 import random
-from typing import Iterator
 from urllib.parse import urlsplit
 
-import pandas as pd
+from ._shards import lines_of, scan_files
 
 CDX_TS_FMT = "%Y%m%d%H%M%S"
 
@@ -110,35 +109,20 @@ def synth_cdx(path: str, n: int, seed: int = 42, *,
     return write_cdx(path, rows, compress=compress)
 
 
+def _captures_of(path: str, content):
+    for line in lines_of(path, content):
+        key, tss, payload = line.split(" ", 2)
+        obj = json.loads(payload)
+        yield (key, _dt.datetime.strptime(tss, CDX_TS_FMT),
+               obj["url"], int(obj["status"]), obj["mime"], obj["digest"],
+               int(obj["length"]), int(obj["offset"]), obj["filename"])
+
+
 def read_cdx(spark, path: str):
     """CDX shard(s)/glob → DataFrame(surt_key, ts, url, status, mime,
     digest, length, offset, filename) — one shard per task, no shuffle."""
-    blobs = (spark.read.format("binaryFile").load(path)
-             .select("path", "content"))
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["surt_key", "ts", "url", "status", "mime", "digest",
-                "length", "offset", "filename"]
-        for pdf in batches:
-            rows = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if p.endswith(".gz"):
-                    data = gzip.decompress(data)
-                for line in data.decode("utf-8").splitlines():
-                    if not line:
-                        continue
-                    key, tss, payload = line.split(" ", 2)
-                    obj = json.loads(payload)
-                    rows.append((
-                        key,
-                        _dt.datetime.strptime(tss, CDX_TS_FMT),
-                        obj["url"], int(obj["status"]), obj["mime"],
-                        obj["digest"], int(obj["length"]),
-                        int(obj["offset"]), obj["filename"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    schema = ("surt_key string, ts timestamp, url string, status int, "
-              "mime string, digest string, length long, offset long, "
-              "filename string")
-    return blobs.mapInPandas(split, schema=schema)
+    return scan_files(
+        spark, path, _captures_of,
+        "surt_key string, ts timestamp, url string, status int, "
+        "mime string, digest string, length long, offset long, "
+        "filename string")

@@ -17,13 +17,12 @@ from __future__ import annotations
 
 import base64
 import datetime as _dt
-import gzip
-import io
 import json
-import os
-from typing import Iterator
+from functools import partial
 
 import pandas as pd
+
+from ._shards import lines_of, scan_files, write_shards
 
 _SIMPLE = {"string", "boolean", "tinyint", "smallint", "int", "bigint",
            "float", "double"}
@@ -59,80 +58,47 @@ def _cell(v, kind: str):
     return v.item() if hasattr(v, "item") else v  # numpy scalars
 
 
+def _fields(schema) -> tuple:
+    return tuple((f.name, f.dataType.simpleString()) for f in schema.fields)
+
+
+def _jsonl_shard(fields, _name, rows) -> bytes:
+    """``fields`` = ((column, kind), ...) in row order."""
+    return "".join(
+        json.dumps({c: _cell(v, kind) for (c, kind), v in zip(fields, row)},
+                   ensure_ascii=False, sort_keys=True,
+                   separators=(",", ":")) + "\n"
+        for row in rows).encode("utf-8")
+
+
 def write_jsonl(df, out_dir: str) -> list:
     """Distributed JSONL sink: each task writes its partition as one
     ``part-NNNNN.jsonl.gz`` shard. Returns [(path, n_records), ...]."""
-    from pyspark import TaskContext
-
     _check_schema(df.schema)
-    kinds = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    cols = list(df.columns)
-    os.makedirs(out_dir, exist_ok=True)
+    return write_shards(df, out_dir, ".jsonl.gz",
+                        partial(_jsonl_shard, _fields(df.schema)))
 
-    def w(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}.jsonl.gz")
-        buf = io.StringIO()
-        n = 0
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                obj = {c: _cell(v, kinds[c]) for c, v in zip(cols, row)}
-                buf.write(json.dumps(obj, ensure_ascii=False,
-                                     sort_keys=True,
-                                     separators=(",", ":")))
-                buf.write("\n")
-                n += 1
-        if n:
-            tmp = f"{path}.attempt-{TaskContext.get().attemptNumber()}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(gzip.compress(buf.getvalue().encode("utf-8"),
-                                      mtime=0))
-            os.replace(tmp, path)
-        yield pd.DataFrame({"path": [path if n else None],
-                            "n_records": [n]})
 
-    manifest = (df.mapInPandas(w, schema="path string, n_records long")
-                .collect())
-    out = [(r["path"], r["n_records"]) for r in manifest if r["path"]]
-    # idempotent re-runs: drop shards a previous (wider) run left behind
-    from ._shards import gc_stale_shards
-    gc_stale_shards(out_dir, ".jsonl.gz", [p for p, _n in out])
-    return out
+def _records_of(fields, path: str, content):
+    for line in lines_of(path, content):
+        obj = json.loads(line)
+        yield tuple(_value(obj.get(c), kind) for c, kind in fields)
+
+
+def _value(v, kind: str):
+    """Inverse of _cell."""
+    if v is None:
+        return None
+    if kind == "timestamp":
+        return _dt.datetime.fromisoformat(v)
+    if kind == "binary":
+        return base64.b64decode(v)
+    return v
 
 
 def read_jsonl(spark, path: str, schema):
     """JSONL shard(s)/glob → DataFrame(schema) — one shard per task via
     binaryFile (no shuffle), inverse of write_jsonl's type mapping."""
     _check_schema(schema)
-    kinds = {f.name: f.dataType.simpleString() for f in schema.fields}
-    names = [f.name for f in schema.fields]
-
-    blobs = (spark.read.format("binaryFile").load(path)
-             .select("path", "content"))
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if p.endswith(".gz"):
-                    data = gzip.decompress(data)
-                for line in data.decode("utf-8").splitlines():
-                    if not line:
-                        continue
-                    obj = json.loads(line)
-                    out = []
-                    for c in names:
-                        v = obj.get(c)
-                        if v is None:
-                            out.append(None)
-                        elif kinds[c] == "timestamp":
-                            out.append(_dt.datetime.fromisoformat(v))
-                        elif kinds[c] == "binary":
-                            out.append(base64.b64decode(v))
-                        else:
-                            out.append(v)
-                    rows.append(tuple(out))
-            yield pd.DataFrame(rows, columns=names)
-
-    return blobs.mapInPandas(split, schema=schema)
+    return scan_files(spark, path, partial(_records_of, _fields(schema)),
+                      schema)

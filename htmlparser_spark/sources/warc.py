@@ -30,11 +30,15 @@ import gzip
 import io
 import os
 import zlib
-from typing import Iterator
+from functools import partial
 
 import pandas as pd
 
+from ._shards import scan_files, write_shards
+
 WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+_SYNTH_INFO = b"software: htmlparser-spark-synth\r\n"
 
 
 def _warc_record(rtype: str, headers: dict[str, str], body: bytes) -> bytes:
@@ -44,33 +48,49 @@ def _warc_record(rtype: str, headers: dict[str, str], body: bytes) -> bytes:
     return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
 
 
+def _utc(ts) -> _dt.datetime:
+    """``ts`` as an aware datetime, a naive one read as UTC. A missing ts
+    (``read_warc`` yields None for a record whose WARC-Date was malformed;
+    it arrives in a sink as pandas NaT) reads as the epoch, so salvaged
+    text is written rather than failing its whole task on every retry."""
+    if ts is None or pd.isna(ts):
+        return _EPOCH
+    if isinstance(ts, pd.Timestamp):
+        ts = ts.to_pydatetime()
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    return ts
+
+
+def _warc_date(ts) -> str:
+    return _utc(ts).astimezone(_dt.timezone.utc).strftime(WARC_DATE_FMT)
+
+
+def _warcinfo(name: str, body: bytes) -> bytes:
+    return _warc_record("warcinfo", {"WARC-Filename": name}, body)
+
+
+def _response_record(url: str, ts, html: bytes) -> bytes:
+    """A crawl ``response`` record: the html wrapped in an HTTP 200."""
+    http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+            + f"Content-Length: {len(html)}\r\n\r\n".encode() + html)
+    return _warc_record(
+        "response", {"WARC-Target-URI": url, "WARC-Date": _warc_date(ts)},
+        http)
+
+
 def write_warc(path: str, rows, *, compress: bool = False) -> int:
     """Write (url, warc_ts, html_bytes) rows as a WARC file (optionally
     gzipped whole-file). Returns the record count (excluding warcinfo)."""
-    buf = io.BytesIO()
-    buf.write(_warc_record("warcinfo",
-                           {"WARC-Filename": os.path.basename(path)},
-                           b"software: htmlparser-spark-synth\r\n"))
-    n = 0
-    for url, ts, html in rows:
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                + f"Content-Length: {len(html)}\r\n\r\n".encode() + html)
-        buf.write(_warc_record(
-            "response",
-            {"WARC-Target-URI": url,
-             "WARC-Date": ts.astimezone(_dt.timezone.utc)
-                            .strftime(WARC_DATE_FMT)},
-            http))
-        n += 1
-    data = buf.getvalue()
+    records = [_response_record(url, ts, html) for url, ts, html in rows]
+    data = b"".join([_warcinfo(os.path.basename(path), _SYNTH_INFO)]
+                    + records)
     if compress:
         # mtime=0 → byte-deterministic output for a given input
         data = gzip.compress(data, mtime=0)
     with open(path, "wb") as f:
         f.write(data)
-    return n
+    return len(records)
 
 
 def synth_warc(path: str, n_pages: int, seed: int = 42,
@@ -162,28 +182,32 @@ def iter_warc_records(data: bytes, types: tuple[bytes, ...] = (b"response",),
         yield url, ts, body
 
 
+def _segment(path: str, content) -> tuple[bytes, bool]:
+    """A segment's bytes (gunzipped with salvage if ``.gz``) and whether
+    its gzip stream was cut short or corrupt."""
+    data = bytes(content)
+    return _gunzip_salvage(data) if path.endswith(".gz") else (data, False)
+
+
+def _pages_of(path: str, content):
+    data, _bad = _segment(path, content)
+    for url, ts, html in iter_warc_records(data):
+        yield url, ts, html, "", ""
+
+
 def read_warc(spark, path: str):
     """WARC file(s)/glob → DataFrame with the pages schema — a drop-in
     ``run_pipeline`` source. One binaryFile task per segment, record split
     inside the task, no shuffle (pinned in tests/test_warc.py)."""
     from ..pipeline.schema import PAGES_SCHEMA
+    return scan_files(spark, path, _pages_of, PAGES_SCHEMA)
 
-    blobs = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
 
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if p.endswith(".gz"):
-                    data, _bad = _gunzip_salvage(data)
-                for url, ts, html in iter_warc_records(data):
-                    out.append((url, ts, html, "", ""))
-            yield pd.DataFrame(
-                out, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return blobs.mapInPandas(split, schema=PAGES_SCHEMA)
+def _segment_stats(path: str, content):
+    data, corrupt = _segment(path, content)
+    st: dict = {}
+    n = sum(1 for _ in iter_warc_records(data, stats=st))
+    return [(path, n, st["malformed"], st["truncated"], corrupt)]
 
 
 def warc_scan_stats(spark, path: str):
@@ -193,29 +217,19 @@ def warc_scan_stats(spark, path: str):
     the exact same salvage/resync logic as ``read_warc`` (so its counts ARE
     the records the pipeline would see), one file per task, no shuffle.
     A fleet-wide rollup is a plain aggregate over its output."""
+    return scan_files(
+        spark, path, _segment_stats,
+        "path string, records long, malformed long, truncated long, "
+        "gzip_corrupt boolean")
 
-    blobs = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                corrupt = False
-                if p.endswith(".gz"):
-                    data, corrupt = _gunzip_salvage(data)
-                st: dict = {}
-                n = sum(1 for _ in iter_warc_records(data, stats=st))
-                out.append((p, n, st["malformed"], st["truncated"],
-                            corrupt))
-            yield pd.DataFrame(
-                out, columns=["path", "records", "malformed", "truncated",
-                              "gzip_corrupt"])
-
-    return blobs.mapInPandas(
-        scan, schema="path string, records long, malformed long, "
-                     "truncated long, gzip_corrupt boolean")
+def _wet_shard(name: str, rows) -> bytes:
+    return b"".join([_warcinfo(name, b"format: WET\r\n")] + [
+        _warc_record("conversion",
+                     {"WARC-Target-URI": url, "WARC-Date": _warc_date(ts),
+                      "Content-Type": "text/plain"},
+                     (text or "").encode("utf-8"))
+        for url, ts, text in rows])
 
 
 def write_wet(parsed_df, out_dir: str) -> list:
@@ -229,83 +243,21 @@ def write_wet(parsed_df, out_dir: str) -> list:
 
     Input: any DataFrame with (url, warc_ts, main_text) — e.g.
     ``{out}/parsed`` from run_pipeline."""
-    from pyspark import TaskContext
+    return write_shards(parsed_df.select("url", "warc_ts", "main_text"),
+                        out_dir, ".warc.wet.gz", _wet_shard)
 
-    os.makedirs(out_dir, exist_ok=True)
 
-    def w(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}.warc.wet.gz")
-        buf = io.BytesIO()
-        buf.write(_warc_record("warcinfo",
-                               {"WARC-Filename": os.path.basename(path)},
-                               b"format: WET\r\n"))
-        n = 0
-        for pdf in batches:
-            for url, ts, text in zip(pdf["url"], pdf["warc_ts"],
-                                     pdf["main_text"]):
-                # read_warc yields ts=None for records whose WARC-Date was
-                # malformed (a tolerated salvage path); that arrives here as
-                # pandas NaT, whose strftime raises and would fail the whole
-                # sink task on every retry. Substitute the epoch sentinel
-                # rather than dropping salvaged text over a bad date.
-                if ts is None or pd.isna(ts):
-                    ts = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-                else:
-                    ts = ts.to_pydatetime()
-                    if ts.tzinfo is None:
-                        ts = ts.replace(tzinfo=_dt.timezone.utc)
-                buf.write(_warc_record(
-                    "conversion",
-                    {"WARC-Target-URI": url,
-                     "WARC-Date": ts.astimezone(_dt.timezone.utc)
-                                    .strftime(WARC_DATE_FMT),
-                     "Content-Type": "text/plain"},
-                    (text or "").encode("utf-8")))
-                n += 1
-        if n:
-            # Write-then-rename so a killed/speculative task attempt never
-            # leaves a half-written segment where a reader (or a retry of
-            # THIS task) can see it: the rename is atomic on POSIX, and a
-            # second attempt renaming over the first is byte-identical
-            # (deterministic gzip, same partition contents).
-            tmp = f"{path}.attempt-{TaskContext.get().attemptNumber()}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(gzip.compress(buf.getvalue(), mtime=0))
-            os.replace(tmp, path)
-        yield pd.DataFrame({"path": [path if n else None],
-                            "n_records": [n]})
-
-    manifest = (parsed_df.select("url", "warc_ts", "main_text")
-                .mapInPandas(w, schema="path string, n_records long")
-                .collect())
-    out = [(r["path"], r["n_records"]) for r in manifest if r["path"]]
-    # idempotent re-runs: drop shards a previous (wider) run left behind
-    from ._shards import gc_stale_shards
-    gc_stale_shards(out_dir, ".warc.wet.gz", [p for p, _n in out])
-    return out
+def _texts_of(path: str, content):
+    data, _bad = _segment(path, content)
+    for url, ts, body in iter_warc_records(data, types=(b"conversion",)):
+        yield url, ts, body.decode("utf-8", "replace")
 
 
 def read_wet(spark, path: str):
     """WET file(s)/glob → DataFrame (url, warc_ts, text) — same
     one-file-per-task, no-shuffle shape as read_warc."""
-    blobs = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if p.endswith(".gz"):
-                    data, _bad = _gunzip_salvage(data)
-                for url, ts, body in iter_warc_records(
-                        data, types=(b"conversion",)):
-                    out.append((url, ts, body.decode("utf-8", "replace")))
-            yield pd.DataFrame(out, columns=["url", "warc_ts", "text"])
-
-    return blobs.mapInPandas(
-        split, schema="url string, warc_ts timestamp, text string")
+    return scan_files(spark, path, _texts_of,
+                      "url string, warc_ts timestamp, text string")
 
 
 # --- member-gzip segments + CDX-driven ranged record fetch -------------------------------
@@ -320,23 +272,14 @@ def write_warc_members(path: str, rows) -> list:
     see _gunzip_salvage). Returns the capture manifest
     [(url, ts, offset, length), ...] the index is written from."""
     out = io.BytesIO()
-    info = gzip.compress(
-        _warc_record("warcinfo", {"WARC-Filename": os.path.basename(path)},
-                     b"software: htmlparser-spark-synth\r\n"), mtime=0)
+    info = gzip.compress(_warcinfo(os.path.basename(path), _SYNTH_INFO),
+                         mtime=0)
     out.write(info)
     manifest = []
     pos = len(info)
     for url, ts, html in rows:
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                + f"Content-Length: {len(html)}\r\n\r\n".encode() + html)
-        member = gzip.compress(_warc_record(
-            "response",
-            {"WARC-Target-URI": url,
-             "WARC-Date": ts.astimezone(_dt.timezone.utc)
-                            .strftime(WARC_DATE_FMT)},
-            http), mtime=0)
+        ts = _utc(ts)
+        member = gzip.compress(_response_record(url, ts, html), mtime=0)
         out.write(member)
         manifest.append((url, ts, pos, len(member)))
         pos += len(member)
@@ -360,30 +303,33 @@ def read_warc_ranged(spark, base_dir: str, plan_df):
     plan = (plan_df.select("filename", "offset", "length")
             .repartition("filename")
             .sortWithinPartitions("filename", "offset"))
+    return plan.mapInPandas(partial(_fetch_ranges, base_dir),
+                            schema=PAGES_SCHEMA)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            handle, handle_name = None, None
-            for fname, off, length in zip(pdf["filename"].tolist(),
-                                          pdf["offset"].tolist(),
-                                          pdf["length"].tolist()):
-                if fname != handle_name:
-                    if handle is not None:
-                        handle.close()
-                    handle = open(os.path.join(base_dir, fname), "rb")
-                    handle_name = fname
-                handle.seek(int(off))
-                raw = handle.read(int(length))
-                try:
-                    data = gzip.decompress(raw)
-                except (OSError, EOFError, zlib.error):
-                    continue  # bad range/member: drop this record only
-                for url, ts, html in iter_warc_records(data):
-                    out.append((url, ts, html, "", ""))
-            if handle is not None:
-                handle.close()
-            yield pd.DataFrame(
-                out, columns=["url", "warc_ts", "html", "text", "lang"])
 
-    return plan.mapInPandas(fetch, schema=PAGES_SCHEMA)
+def _fetch_ranges(base_dir: str, batches):
+    """read_warc_ranged's batch function: it keeps one file open across
+    the rows of a batch, so it is its own stage rather than a flat_map."""
+    for pdf in batches:
+        out = []
+        handle, handle_name = None, None
+        for fname, off, length in zip(pdf["filename"].tolist(),
+                                      pdf["offset"].tolist(),
+                                      pdf["length"].tolist()):
+            if fname != handle_name:
+                if handle is not None:
+                    handle.close()
+                handle = open(os.path.join(base_dir, fname), "rb")
+                handle_name = fname
+            handle.seek(int(off))
+            raw = handle.read(int(length))
+            try:
+                data = gzip.decompress(raw)
+            except (OSError, EOFError, zlib.error):
+                continue  # bad range/member: drop this record only
+            for url, ts, html in iter_warc_records(data):
+                out.append((url, ts, html, "", ""))
+        if handle is not None:
+            handle.close()
+        yield pd.DataFrame(
+            out, columns=["url", "warc_ts", "html", "text", "lang"])

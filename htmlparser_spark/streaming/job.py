@@ -24,6 +24,7 @@ executor count, and state is RocksDB-backed on a real cluster
 from __future__ import annotations
 
 import os
+from functools import partial
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -36,6 +37,7 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from .._rowmap import flat_map, one_row
 from ..pipeline.job import explode_pages, parse_pages, with_part_key
 from ..pipeline.schema import LINKS_SCHEMA, PAGES_SCHEMA, PARSED_SCHEMA
 
@@ -73,14 +75,8 @@ def _rate_rows_to_pages(raw: DataFrame, seed: int = 42) -> DataFrame:
     """(timestamp, value) -> PAGES_SCHEMA rows via the deterministic batch
     page generator (stateless per-row, so legal on a stream)."""
     from ..synth import gen_page
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [gen_page(seed, int(v)) for v in pdf["value"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return raw.mapInPandas(gen, PAGES_SCHEMA)
+    return flat_map(raw, partial(one_row, gen_page, seed), ["value"],
+                    PAGES_SCHEMA)
 
 
 def parse_page_stream(pages: DataFrame, extract: bool = True,

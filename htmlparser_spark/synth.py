@@ -2,8 +2,8 @@
 
 No external data: pages are generated from a seeded per-id RNG, so any row is
 reproducible from (seed, i) alone. Generation is distributed — an id range
-DataFrame is expanded to pages inside mapInPandas — so bench-scale corpora
-(≥500 MB raw HTML) never bottleneck on the driver.
+DataFrame is expanded to pages by ``_rowmap.flat_map`` — so bench-scale
+corpora (≥500 MB raw HTML) never bottleneck on the driver.
 
 Mix (FIXTURES.md §3): 70% clean skeleton, 10% entity-heavy, 10% script/style
 heavy, 5% malformed-tag mutations, 5% crasher constructs (expected error
@@ -16,9 +16,9 @@ from __future__ import annotations
 
 import datetime as _dt
 import random
-from typing import Iterator
+from functools import partial
 
-import pandas as pd
+from ._rowmap import flat_map, id_range, one_row
 
 WORDS = ("the quick brown fox jumps over a lazy dog while zephyrs vex "
          "daft jim pack my box with five dozen liquor jugs amazingly "
@@ -138,38 +138,26 @@ def gen_page(seed: int, i: int) -> tuple[str, _dt.datetime, bytes, str, str]:
     return url, ts, data, "", lang
 
 
-def gen_rows(seed: int, ids) -> list[tuple]:
-    rows = []
-    for i in ids:
-        url, ts, data, text, lang = gen_page(seed, int(i))
-        rows.append((url, ts, data, text, lang))
-        if i % 20 == 0:  # ~5% duplicate url with a later snapshot (S6)
-            rng2 = random.Random(f"{seed}:{i}:dup")
-            html2 = _clean_page(rng2)
-            rows.append((url, ts + _dt.timedelta(days=1),
-                         html2.encode("utf-8"), text, lang))
+def page_rows(seed: int, i: int) -> list[tuple]:
+    """Page i, plus a later snapshot of its url for ~5% of ids (S6)."""
+    rows = [gen_page(seed, i)]
+    if i % 20 == 0:
+        url, ts, _data, text, lang = rows[0]
+        html2 = _clean_page(random.Random(f"{seed}:{i}:dup"))
+        rows.append((url, ts + _dt.timedelta(days=1), html2.encode("utf-8"),
+                     text, lang))
     return rows
+
+
+def gen_rows(seed: int, ids) -> list[tuple]:
+    return [row for i in ids for row in page_rows(seed, int(i))]
 
 
 def synth_pages(spark, n_rows: int, seed: int = 42, partitions: int | None = None):
     """Distributed deterministic corpus as a DataFrame(PAGES_SCHEMA)."""
     from .pipeline.schema import PAGES_SCHEMA
-
-    partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = gen_rows(seed, pdf["id"].tolist())
-            yield pd.DataFrame(rows,
-                               columns=["url", "warc_ts", "html", "text", "lang"])
-
-    ids = spark.range(0, n_rows, 1, partitions)
-    return ids.mapInPandas(expand, schema=PAGES_SCHEMA)
-
-
-def synth_pages_local(n_rows: int, seed: int = 42) -> list[tuple]:
-    """Driver-side variant for tiny unit tests."""
-    return gen_rows(seed, range(n_rows))
+    return flat_map(id_range(spark, n_rows, partitions),
+                    partial(page_rows, seed), ["id"], PAGES_SCHEMA)
 
 
 # --- mixed-encoding corpus for the charset sniff/transcode stage ------------
@@ -271,14 +259,6 @@ def synth_charset_pages(spark, n_rows: int, seed: int = 42,
                         partitions: int | None = None):
     """Distributed deterministic mixed-encoding corpus (pages schema)."""
     from .pipeline.schema import PAGES_SCHEMA
-
-    partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [gen_charset_page(seed, int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    ids = spark.range(0, n_rows, 1, partitions)
-    return ids.mapInPandas(expand, schema=PAGES_SCHEMA)
+    return flat_map(id_range(spark, n_rows, partitions),
+                    partial(one_row, gen_charset_page, seed), ["id"],
+                    PAGES_SCHEMA)

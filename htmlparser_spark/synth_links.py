@@ -13,10 +13,9 @@ from __future__ import annotations
 
 import datetime as _dt
 import random
-from typing import Iterator
+from functools import partial
 
-import pandas as pd
-
+from ._rowmap import flat_map, id_range, one_row
 from .synth import WORDS, EPOCH
 
 _SCHEMES = ["javascript:void(0)", "mailto:ed@example.org",
@@ -114,14 +113,6 @@ def synth_link_pages(spark, n_rows: int, seed: int = 42,
                      partitions: int | None = None):
     """Distributed deterministic link corpus as a DataFrame(PAGES_SCHEMA)."""
     from .pipeline.schema import PAGES_SCHEMA
-
-    partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [gen_link_page(seed, int(i)) for i in pdf["id"].tolist()]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    ids = spark.range(0, n_rows, 1, partitions)
-    return ids.mapInPandas(expand, schema=PAGES_SCHEMA)
+    return flat_map(id_range(spark, n_rows, partitions),
+                    partial(one_row, gen_link_page, seed), ["id"],
+                    PAGES_SCHEMA)

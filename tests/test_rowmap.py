@@ -1,0 +1,143 @@
+"""The shared row-expanding stage (htmlparser_spark._rowmap) and the rule
+that every Python stage of the package pickles by reference."""
+import ast
+import os
+import sys
+
+import pandas as pd
+import pytest
+from pyspark.sql import SparkSession
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from htmlparser_spark._rowmap import _flat_map, flat_map, id_range
+
+PKG = os.path.join(REPO, "htmlparser_spark")
+STAGES = ("mapInPandas", "mapInArrow", "applyInPandas",
+          "applyInPandasWithState")
+
+
+def _handed_function(call):
+    """The expression a stage call is handed as its function, with any
+    ``partial(fn, ...)`` unwrapped."""
+    fn = call.args[0] if call.args else next(
+        (k.value for k in call.keywords if k.arg == "func"), None)
+    while (isinstance(fn, ast.Call) and fn.args
+           and getattr(fn.func, "id", getattr(fn.func, "attr", None))
+           == "partial"):
+        fn = fn.args[0]
+    return fn
+
+
+def _nested_stage_functions(tree):
+    """(line, name) of every stage call handed a lambda or a function
+    defined inside the function that makes the call."""
+    bad = []
+    for outer in ast.walk(tree):
+        if not isinstance(outer, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        inner = {n.name for n in ast.walk(outer)
+                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                 and n is not outer}
+        inner |= {t.id for n in ast.walk(outer)
+                  if isinstance(n, ast.Assign)
+                  and isinstance(n.value, ast.Lambda)
+                  for t in n.targets if isinstance(t, ast.Name)}
+        for call in ast.walk(outer):
+            if not (isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr in STAGES):
+                continue
+            fn = _handed_function(call)
+            if isinstance(fn, ast.Lambda):
+                bad.append((call.lineno, "<lambda>"))
+            elif isinstance(fn, ast.Name) and fn.id in inner:
+                bad.append((call.lineno, fn.id))
+    return sorted(set(bad))
+
+
+def test_no_stage_is_handed_a_nested_function():
+    """A closure pickles by value, so a worker that runs only closure
+    stages never imports the package or loads its ``_pyworker`` fix."""
+    found = {}
+    for root, _dirs, files in os.walk(PKG):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                with open(path, encoding="utf-8") as f:
+                    bad = _nested_stage_functions(ast.parse(f.read()))
+                if bad:
+                    found[os.path.relpath(path, REPO)] = bad
+    assert not found, found
+
+
+def test_guard_sees_closures_partials_and_lambdas():
+    src = '''
+from functools import partial
+def a(df):
+    def split(batches):
+        yield from batches
+    return df.mapInPandas(split, "x long")
+def b(df):
+    def enc(batches):
+        yield from batches
+    return df.mapInPandas(partial(enc, 1), schema="x long")
+def c(df):
+    f = lambda it: it
+    return df.groupBy("k").applyInPandas(f, "x long")
+def d(df):
+    return df.mapInPandas(partial(_top, 1), "x long")
+def _top(n, batches):
+    yield from batches
+'''
+    assert _nested_stage_functions(ast.parse(src)) == [
+        (6, "split"), (10, "enc"), (13, "f")]
+
+
+@pytest.fixture(scope="module")
+def spark():
+    s = (SparkSession.builder.master("local[2]")
+         .appName("rowmap-tests")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false")
+         .getOrCreate())
+    yield s
+    s.stop()
+
+
+def test_flat_map_empty_batches_dropped_and_expanded_rows(spark):
+    # the test's functions are closures, shipped by value: workers need
+    # not import this test module
+    def rows(i):
+        """0 rows when i % 3 == 0, 1 row when 1, i rows when 2."""
+        return [(i, f"r{j}", j) for j in range({0: 0, 1: 1, 2: i}[i % 3])]
+
+    n, parts = 9, 16  # more partitions than ids: most batches are empty,
+    # and the ids 0, 3, 6 alone in a partition yield a batch with no
+    # output row, which goes back as a frame with no columns
+    (none,) = _flat_map(rows, ("id",), [pd.DataFrame({"id": [3]})])
+    assert none.empty and len(none.columns) == 0
+    ids = id_range(spark, n, parts)
+    assert ids.rdd.getNumPartitions() == parts
+    out = flat_map(ids, rows, ["id"], "k long, tag string, n int")
+    assert out.columns == ["k", "tag", "n"]
+    assert [t for _c, t in out.dtypes] == ["bigint", "string", "int"]
+    got = sorted(tuple(r) for r in out.collect())
+    exp = sorted(row for i in range(n) for row in rows(i))
+    assert got == exp
+    assert len(got) == 3 + (2 + 5 + 8)
+
+
+def test_flat_map_column_order_follows_cols(spark):
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "n long, s string")
+    out = flat_map(df, lambda s, n: [(f"{s}{n}", n * 10)], ["s", "n"],
+                   "sn string, n10 long")
+    assert sorted(tuple(r) for r in out.collect()) == [("a1", 10),
+                                                        ("b2", 20)]
+
+
+def test_flat_map_every_row_dropped(spark):
+    out = flat_map(id_range(spark, 5, 2), lambda i: [], ["id"], "k long")
+    assert out.columns == ["k"]
+    assert out.count() == 0
