@@ -610,35 +610,32 @@ def embedding_topk(spark, sf_dir, k=3, n_queries=5):
     return _exact_topk(_emb(spark, sf_dir), k, n_queries)
 
 
+def _lsh_planes(n_planes: int) -> np.ndarray:
+    """The (n_planes × 64) sign-LSH hyperplanes, seeded from md5, so every
+    worker derives the same matrix from n_planes alone."""
+    return np.array([[int(_md5(f"plane:{p}:{d}".encode()).hexdigest()[:8],
+                          16) / 0x7FFFFFFF - 1.0
+                      for d in range(64)] for p in range(n_planes)],
+                    dtype=np.float64)
+
+
+@pandas_udf(StringType())
+def _lsh_signature(v: pd.Series, n_planes: pd.Series) -> pd.Series:
+    """Sign bits of each vector against the hyperplanes: ONE matmul per
+    Arrow batch instead of n_planes interpreted-HOF folds per row."""
+    V = np.array(v.tolist(), dtype=np.float64)
+    bits = (V @ _lsh_planes(int(n_planes.iloc[0])).T >= 0).astype(np.uint8)
+    return pd.Series(["".join("1" if b else "0" for b in row)
+                      for row in bits])
+
+
 def embedding_ann_lsh(spark, sf_dir, k=3, n_queries=5, n_planes=8):
     """Sign-LSH bucketed ANN (the 100TB path: equi-join on bucket signature
     instead of a cross join). Hyperplanes are seeded pseudo-random vectors
     derived from md5 — deterministic. Rows-only checked (recall < 1 by
     design vs the brute-force baseline)."""
-    import hashlib
-
-    dim = 64
-
-    def plane(p):
-        vals = []
-        for d in range(dim):
-            hx = hashlib.md5(f"plane:{p}:{d}".encode()).hexdigest()[:8]
-            vals.append((int(hx, 16) / 0x7FFFFFFF) - 1.0)
-        return vals
-
-    # plane matrix is tiny (n_planes × dim) and ships to executors inside the
-    # udf closure; signs come from ONE matmul per Arrow batch instead of
-    # n_planes interpreted-HOF folds per row
-    P = np.array([plane(p) for p in range(n_planes)], dtype=np.float64)
-
-    @pandas_udf(StringType())
-    def signature(v: pd.Series) -> pd.Series:
-        V = np.array(v.tolist(), dtype=np.float64)
-        bits = (V @ P.T >= 0).astype(np.uint8)
-        return pd.Series(["".join("1" if b else "0" for b in row)
-                          for row in bits])
-
-    emb = _emb(spark, sf_dir).withColumn("bucket", signature(F.col("v")))
+    emb = _emb(spark, sf_dir).withColumn(
+        "bucket", _lsh_signature(F.col("v"), F.lit(n_planes)))
     q = (emb.filter(F.col("vec_id") < n_queries)
          .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
                  F.col("bucket")))

@@ -24,6 +24,7 @@ executor count, and state is RocksDB-backed on a real cluster
 from __future__ import annotations
 
 import os
+import re
 from functools import partial
 from typing import Iterator, Tuple
 
@@ -39,7 +40,7 @@ from pyspark.sql.types import (
 
 from .._rowmap import flat_map, one_row
 from ..pipeline.job import explode_pages, parse_pages, with_part_key
-from ..pipeline.schema import LINKS_SCHEMA, PAGES_SCHEMA, PARSED_SCHEMA
+from ..pipeline.schema import PAGES_SCHEMA, PARSED_SCHEMA
 
 
 def read_page_stream(spark: SparkSession, src_dir: str,
@@ -216,14 +217,22 @@ def host_rollup_stream(parsed: DataFrame) -> DataFrame:
 
 
 def _atomic_json_write(path: str, obj: dict) -> None:
-    """tmp-then-rename JSON persistence shared by the flags marker and the
-    Bloom bit-set state, so a durability fix (e.g. fsync-before-replace)
-    lands in one place."""
+    """tmp-then-rename JSON persistence shared by the flags marker, the
+    drain totals and the Bloom bit-set state, so a durability fix (e.g.
+    fsync-before-replace) lands in one place."""
     import json
     tmp = f"{path}.tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
+
+
+def _load_json(path: str) -> dict | None:
+    if not os.path.exists(path):
+        return None
+    import json
+    with open(path) as f:
+        return json.load(f)
 
 
 def _check_stream_flags(out_dir: str, transcode: bool,
@@ -241,19 +250,77 @@ def _check_stream_flags(out_dir: str, transcode: bool,
     Spark owns that layout)."""
     marker = os.path.join(out_dir, "_stream_flags.json")
     want = {"transcode": bool(transcode), "kind": kind}
-    if os.path.exists(marker):
-        import json
-        with open(marker) as f:
-            have = json.load(f)
-        if have != want:
-            raise ValueError(
-                f"stream flag mismatch for {out_dir!r}: this drain requested "
-                f"{want} but the sink was created with {have}; use a new "
-                "out_dir (or keep the original flags) — mixed decodes in one "
-                "parsed sink are unrecoverable")
-    else:
+    have = _load_json(marker)
+    if have is None:
         os.makedirs(out_dir, exist_ok=True)
         _atomic_json_write(marker, want)
+    elif have != want:
+        raise ValueError(
+            f"stream flag mismatch for {out_dir!r}: this drain requested "
+            f"{want} but the sink was created with {have}; use a new "
+            "out_dir (or keep the original flags) — mixed decodes in one "
+            "parsed sink are unrecoverable")
+
+
+def _last_committed_batch(spark: SparkSession, sink_dir: str) -> int:
+    """Latest batch id in a file sink's ``_spark_metadata`` log (-1 if none),
+    from its file names ("7", "9.compact") via the Hadoop FileSystem, so
+    hdfs:// and s3a:// sinks work too. The listing crosses py4j as ONE
+    "{path,...}" string (a round trip per entry cost 0.6-1.4 ms); a comma
+    in a parent dir can only yield a wrong id, which _counted_drain's
+    batch-id check turns into a recount."""
+    hfs = spark._jvm.org.apache.hadoop.fs
+    log = hfs.Path(os.path.join(sink_dir, "_spark_metadata"))
+    fs = log.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(log):
+        return -1
+    paths = spark._jvm.org.apache.commons.lang3.ArrayUtils.toString(
+        hfs.FileUtil.stat2Paths(fs.listStatus(log)))[1:-1].split(",")
+    ids = (re.fullmatch(r"(\d+)(\.compact)?", p.rsplit("/", 1)[-1])
+           for p in paths)
+    return max((int(m[1]) for m in ids if m), default=-1)
+
+
+def _counted_drain(spark: SparkSession, frame: DataFrame, start,
+                   out_dir: str, sink: str, totals: dict) -> dict:
+    """Drain ``frame`` through ``start(frame, out_dir)``, an availableNow
+    query into the file sink ``out_dir/<sink>``, and return the sink's
+    running ``totals`` (name -> aggregate). The drain observes its own rows
+    and adds them to ``out_dir/_<sink>_totals.json`` = ``{last_batch,
+    totals}`` only if the sink's log ended at ``last_batch`` before the
+    drain (a replayed batch is a skipped write that observes 0 rows) and
+    the progress reports exactly the batches after it (``recentProgress``
+    keeps ~100); otherwise it re-reads the whole sink once."""
+    sink_dir = os.path.join(out_dir, sink)
+    path = os.path.join(out_dir, f"_{sink}_totals.json")
+    state = _load_json(path) or {"last_batch": -1,
+                                 "totals": dict.fromkeys(totals, 0)}
+    before = _last_committed_batch(spark, sink_dir)
+    q = start(frame.observe("drain", *[c.alias(k) for k, c in totals.items()]),
+              out_dir)
+    q.awaitTermination()
+    after = _last_committed_batch(spark, sink_dir)
+    seen = {p.batchId: p.observedMetrics["drain"] for p in q.recentProgress
+            if "drain" in p.observedMetrics}
+    if (state["last_batch"] == before
+            and sorted(seen) == list(range(before + 1, after + 1))):
+        got = {k: state["totals"][k] + sum(int(m[k] or 0)
+                                           for m in seen.values())
+               for k in totals}
+    else:
+        got = _recount(spark, sink_dir, frame.schema, totals)
+    _atomic_json_write(path, {"last_batch": after, "totals": got})
+    return got
+
+
+def _recount(spark: SparkSession, sink_dir: str, schema, totals: dict) -> dict:
+    """The recovery path of ``_counted_drain``: aggregate the whole sink."""
+    try:
+        row = (spark.read.schema(schema).parquet(sink_dir)
+               .agg(*[c.alias(k) for k, c in totals.items()]).collect()[0])
+    except AnalysisException:
+        return dict.fromkeys(totals, 0)  # no commit yet: no output path
+    return {k: int(row[k] or 0) for k in totals}
 
 
 def run_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
@@ -266,18 +333,8 @@ def run_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
     _check_stream_flags(out_dir, transcode, kind="plain")
     pages = read_page_stream(spark, src_dir)
     parsed = parse_page_stream(pages, transcode=transcode)
-    q = write_parsed_stream(parsed, out_dir)
-    q.awaitTermination()
-    parsed_dir = os.path.join(out_dir, "parsed")
-    try:
-        out = spark.read.schema(PARSED_SCHEMA).parquet(parsed_dir)
-        n = out.count()
-    except AnalysisException:
-        # empty source on the first run: the file sink never creates the
-        # output path, which is "0 rows", not an error. Probed through
-        # Spark's reader (not os.path) so hdfs://-s3a:// sinks work too.
-        return {"rows_total": 0}
-    return {"rows_total": n}
+    return _counted_drain(spark, parsed, write_parsed_stream, out_dir,
+                          "parsed", {"rows_total": F.count(F.lit(1))})
 
 
 def links_stream(pages: DataFrame) -> DataFrame:
@@ -309,14 +366,8 @@ def run_links_stream_once(spark: SparkSession, src_dir: str,
                           out_dir: str) -> dict:
     """Drain pending page drops into out_dir/links exactly once."""
     pages = read_page_stream(spark, src_dir)
-    q = write_links_stream(links_stream(pages), out_dir)
-    q.awaitTermination()
-    links_dir = os.path.join(out_dir, "links")
-    try:
-        n = spark.read.schema(LINKS_SCHEMA).parquet(links_dir).count()
-    except AnalysisException:
-        return {"links_total": 0}
-    return {"links_total": n}
+    return _counted_drain(spark, links_stream(pages), write_links_stream,
+                          out_dir, "links", {"links_total": F.count(F.lit(1))})
 
 
 def bloom_history_bits(history: DataFrame) -> DataFrame:
@@ -371,15 +422,6 @@ def bloom_dedup_stream(parsed: DataFrame, hist_bits: DataFrame) -> DataFrame:
                     *[f"_set{j}" for j in range(BLOOM_K)])
 
 
-def _bloom_state_load(out_dir: str) -> dict | None:
-    path = os.path.join(out_dir, "_bloom_state.json")
-    if not os.path.exists(path):
-        return None
-    import json
-    with open(path) as f:
-        return json.load(f)
-
-
 def _bloom_state_save(out_dir: str, state: dict) -> None:
     _atomic_json_write(os.path.join(out_dir, "_bloom_state.json"), state)
 
@@ -397,9 +439,11 @@ def _bloom_fold_pending(spark: SparkSession, out_dir: str,
     parsed_dir = os.path.join(out_dir, "parsed")
     bits_root = os.path.join(out_dir, "_bloom_bits")
     try:
-        files = sorted(f for f in os.listdir(parsed_dir)
-                       if f.endswith(".parquet"))
-    except FileNotFoundError:
+        # the sink's commit log, read on the driver: part files of failed
+        # or retried tasks that it never committed are not folded
+        files = sorted(os.path.basename(f) for f in spark.read.schema(
+            PARSED_SCHEMA).parquet(parsed_dir).inputFiles())
+    except AnalysisException:
         return state
     new = sorted(set(files) - set(state["folded"]))
     if not new:
@@ -443,17 +487,17 @@ def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
     unfolded sink files are folded BEFORE each drain tags — a crash
     between a drain's sink commit and its fold can therefore never cost a
     false negative on the next drain; superseded
-    bit-set versions are GC'd. New-file discovery lists the local sink
-    directory against the folded-file manifest; on an object-store sink,
-    swap in the file sink's own _spark_metadata batch manifest — the fold
-    itself is storage-agnostic.
+    bit-set versions are GC'd. New files are the sink's committed files
+    (its _spark_metadata log, read on the driver) not yet in the
+    folded-file manifest, so orphan part files of failed tasks are never
+    folded.
 
     This drain always parses untranscoded (same marker contract as
     run_stream_once: resuming an out_dir a transcoded — or plain-kind —
     drain created fails fast instead of mixing sink schemas)."""
     _check_stream_flags(out_dir, transcode=False, kind="bloom")
     bits_root = os.path.join(out_dir, "_bloom_bits")
-    state = _bloom_state_load(out_dir)
+    state = _load_json(os.path.join(out_dir, "_bloom_state.json"))
     if state is None:
         hist = spark.read.schema(PARSED_SCHEMA).parquet(history_dir)
         bloom_history_bits(hist).write.mode("overwrite").parquet(
@@ -467,19 +511,10 @@ def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
         os.path.join(bits_root, f"v{state['version']}"))
 
     pages = read_page_stream(spark, src_dir)
-    parsed = parse_page_stream(pages)
-    tagged = bloom_dedup_stream(parsed, hist_bits)
-    q = write_parsed_stream(tagged, out_dir)
-    q.awaitTermination()
-
+    tagged = bloom_dedup_stream(parse_page_stream(pages), hist_bits)
+    got = _counted_drain(spark, tagged, write_parsed_stream, out_dir, "parsed",
+                         {"rows_total": F.count(F.lit(1)),
+                          "maybe_dup_total": F.sum("maybe_dup")})
     # fold ONLY this drain's newly committed files into the bit set
     _bloom_fold_pending(spark, out_dir, state)
-
-    parsed_dir = os.path.join(out_dir, "parsed")
-    try:
-        out = spark.read.parquet(parsed_dir)
-        row = out.agg(F.count(F.lit(1)).alias("n"),
-                      F.sum("maybe_dup").alias("d")).collect()[0]
-    except AnalysisException:
-        return {"rows_total": 0, "maybe_dup_total": 0}
-    return {"rows_total": row["n"], "maybe_dup_total": int(row["d"] or 0)}
+    return got

@@ -15,7 +15,15 @@ from htmlparser_spark._rowmap import _flat_map, flat_map, id_range
 
 PKG = os.path.join(REPO, "htmlparser_spark")
 STAGES = ("mapInPandas", "mapInArrow", "applyInPandas",
-          "applyInPandasWithState")
+          "applyInPandasWithState", "pandas_udf")
+
+
+def _callee(node):
+    """Name of the function a call or decorator names: ``f``, ``x.f``,
+    ``f(...)``."""
+    if isinstance(node, ast.Call):
+        node = node.func
+    return getattr(node, "id", getattr(node, "attr", None))
 
 
 def _handed_function(call):
@@ -32,22 +40,24 @@ def _handed_function(call):
 
 def _nested_stage_functions(tree):
     """(line, name) of every stage call handed a lambda or a function
-    defined inside the function that makes the call."""
+    defined inside the function that makes the call, and of every such
+    function decorated with ``pandas_udf``."""
     bad = []
     for outer in ast.walk(tree):
         if not isinstance(outer, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
-        inner = {n.name for n in ast.walk(outer)
-                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-                 and n is not outer}
+        nested = [n for n in ast.walk(outer)
+                  if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                  and n is not outer]
+        bad += [(n.lineno, n.name) for n in nested
+                if any(_callee(d) == "pandas_udf" for d in n.decorator_list)]
+        inner = {n.name for n in nested}
         inner |= {t.id for n in ast.walk(outer)
                   if isinstance(n, ast.Assign)
                   and isinstance(n.value, ast.Lambda)
                   for t in n.targets if isinstance(t, ast.Name)}
         for call in ast.walk(outer):
-            if not (isinstance(call, ast.Call)
-                    and isinstance(call.func, ast.Attribute)
-                    and call.func.attr in STAGES):
+            if not (isinstance(call, ast.Call) and _callee(call) in STAGES):
                 continue
             fn = _handed_function(call)
             if isinstance(fn, ast.Lambda):
@@ -59,7 +69,8 @@ def _nested_stage_functions(tree):
 
 def test_no_stage_is_handed_a_nested_function():
     """A closure pickles by value, so a worker that runs only closure
-    stages never imports the package or loads its ``_pyworker`` fix."""
+    stages (``pandas_udf`` ones included) never imports the package or
+    loads its ``_pyworker`` fix."""
     found = {}
     for root, _dirs, files in os.walk(PKG):
         for fn in files:
@@ -93,6 +104,25 @@ def _top(n, batches):
 '''
     assert _nested_stage_functions(ast.parse(src)) == [
         (6, "split"), (10, "enc"), (13, "f")]
+
+
+def test_guard_sees_pandas_udf_closures():
+    src = '''
+def a(df):
+    @F.pandas_udf("string")
+    def sig(v):
+        return v
+    return df.select(sig("v"))
+def b(df):
+    g = lambda v: v
+    return df.select(pandas_udf(g, "string")("v"))
+@pandas_udf("string")
+def _top(v):
+    return v
+def c(df):
+    return df.select(_top("v"), pandas_udf(_top.func, "string")("v"))
+'''
+    assert _nested_stage_functions(ast.parse(src)) == [(4, "sig"), (9, "g")]
 
 
 @pytest.fixture(scope="module")
