@@ -1,5 +1,6 @@
 """The one row-expanding Python stage shared by every source, generator and
-media operator: each input row becomes zero or more output rows.
+media operator: each input row becomes zero or more output rows. Also the
+seeded generators' id input and the one builder of driver-side tables.
 
 ``fn`` must pickle by reference — a module-level function or a
 ``functools.partial`` of one, never a closure — so every worker that runs
@@ -11,6 +12,9 @@ from __future__ import annotations
 from functools import partial
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def flat_map(df, fn, cols, schema):
@@ -42,3 +46,16 @@ def id_range(spark, n, partitions=None):
     generators, each of which is a pure function of (seed, id)."""
     partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
     return spark.range(0, n, 1, partitions)
+
+
+def local_frame(spark, rows, schema):
+    """Driver-side rows (tuples or ``Row``s; ``schema`` is DDL or a
+    ``StructType``) as a ``LocalRelation`` shipped as Arrow. A list is a
+    Python RDD that starts a daemon and a worker per core; a pandas frame
+    falls back to it silently where this ``pa.Table`` raises."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)],
+        schema=arrow), schema)

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType, StringType
 
+from ._rowmap import local_frame
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -2015,8 +2017,7 @@ def corpus_url_filter(spark, sf_dir):
                F.concat(F.lit("?ref="), F.repeat(F.lit("x"), 110)))
          .otherwise(""))
     host = F.regexp_extract(url, "^[a-z]+://([^/:?#]+)", 1)
-    block = spark.createDataFrame(
-        [(h,) for h in URL_BLOCK_HOSTS], "host string")
+    block = local_frame(spark, [(h,) for h in URL_BLOCK_HOSTS], "host string")
     u = (d.select("doc_id", url.alias("url"), host.alias("host"))
          .join(F.broadcast(block.withColumn("blocked", F.lit(1))),
                "host", "left"))
@@ -2427,8 +2428,8 @@ def corpus_robots_filter(spark, sf_dir):
         F.when(F.col("doc_id") % 11 == 0, "/tag/").otherwise("/p/"),
         (F.col("doc_id") % 100).cast("string"))
     host = F.concat(F.col("source"), F.lit(".example.com"))
-    rules = spark.createDataFrame(_robots_rules(),
-                                  "host string, prefix string, allow int")
+    rules = local_frame(spark, _robots_rules(),
+                        "host string, prefix string, allow int")
     per_host = (rules.groupBy("host")
                 .agg(F.collect_list(F.struct("prefix", "allow"))
                      .alias("rules")))
@@ -2581,8 +2582,8 @@ def embedding_kmeans(spark, sf_dir, k=KMEANS_K, rounds=KMEANS_ROUNDS):
     assigned, cent_rows = _kmeans_fit(embfp, k, rounds)
     pops = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dist").alias("inertia"))
-    cents = spark.createDataFrame(
-        [(int(cid), int(sum(cx))) for cid, cx in cent_rows],
+    cents = local_frame(
+        spark, [(int(cid), int(sum(cx))) for cid, cx in cent_rows],
         "cell bigint, cent_sum bigint")
     return (pops.join(F.broadcast(cents), "cell")
             .select("cell", "n", "inertia", "cent_sum"))
@@ -2790,8 +2791,8 @@ def embedding_pq_topk(spark, sf_dir, k=3, n_queries=5, q_lo=0,
     CB = (_pq_codebook_trained(embfp) if trained
           else _pq_codebook_from_rows(rows))
     q_rows = [r for r in rows if q_lo <= r["vec_id"] < q_lo + n_queries]
-    adc_df = spark.createDataFrame(
-        _adc_rows(q_rows, CB),
+    adc_df = local_frame(
+        spark, _adc_rows(q_rows, CB),
         "query_id bigint, sub bigint, code bigint, pdist bigint")
     codes = _pq_encode_df(embfp, CB).select("vec_id", "sub", "code")
     cand = (codes.join(F.broadcast(adc_df), ["sub", "code"])
@@ -2933,10 +2934,9 @@ def embedding_ann_ivfpq(spark, sf_dir, k=3, n_queries=5, probes=None,
         order = np.lexsort((cent_ids, d))  # dist asc, cent_id asc on ties
         probe_rows.extend((int(r["vec_id"]), int(cent_ids[i]))
                           for i in order[:probes])
-    probe_df = spark.createDataFrame(probe_rows,
-                                     "query_id bigint, cell bigint")
-    adc_df = spark.createDataFrame(
-        _adc_rows(q_rows, CB),
+    probe_df = local_frame(spark, probe_rows, "query_id bigint, cell bigint")
+    adc_df = local_frame(
+        spark, _adc_rows(q_rows, CB),
         "query_id bigint, sub bigint, code bigint, pdist bigint")
     cand = (index.join(F.broadcast(probe_df), "cell")
             .filter(F.col("vec_id") != F.col("query_id"))

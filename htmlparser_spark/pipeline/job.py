@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import os
 import re
-from functools import partial
+from functools import lru_cache, partial, reduce
 
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .._rowmap import local_frame
 from .kernel_stage import parse_batch, parsed_schema
 from .schema import (
     LINEAGE_SCHEMA, PAGES_SCHEMA, PARSED_LINK_FIELDS, PARSED_SCHEMA)
@@ -63,10 +64,28 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
          # of drop dirs paid a ~0.25 s listing job per scan and per trigger
          .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                  "1024")
+         # no call-site capture (~4 py4j round trips per Column call, IPython
+         # import on the first); errors lose it unless extra_conf sets "true"
+         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
          .config("spark.ui.enabled", "false"))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@lru_cache(maxsize=None)
+def jvm_class(jvm, name: str):
+    """The py4j class ``name`` (a full name) of the gateway view ``jvm``,
+    resolved once per view: ``jvm.a.b.C`` is one round trip per segment
+    (3.7 ms for ``org.apache.hadoop.fs.Path``, 0.6 ms on a resolved one)."""
+    return reduce(getattr, name.split("."), jvm)
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop ``Path``, its ``FileSystem``) of ``path``, for any scheme
+    the session can reach (file, hdfs, s3a)."""
+    path = jvm_class(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+    return path, path.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 # --- S1/S2: scan with pruning ------------------------------------------------
@@ -343,15 +362,9 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     # manifest rows are COLLECTED (≤ B rows) so the lineage update below can
     # union them back without re-reading lineage_path while overwriting it
     done_rows = []
-    conf = spark._jsc.hadoopConfiguration()
-
-    def hadoop_path(path):
-        path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        return path, path.getFileSystem(conf)
-
     # a fresh out_dir has no manifest: ask the filesystem rather than let a
     # Spark read fail; the except still covers a manifest it cannot read
-    lineage, lineage_fs = hadoop_path(lineage_path)
+    lineage, lineage_fs = hadoop_path(spark, lineage_path)
     if resume and lineage_fs.exists(lineage):
         try:
             done_rows = (spark.read.schema(LINEAGE_SCHEMA)
@@ -395,8 +408,8 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     df = df.withColumn("content_hash", F.xxhash64("html"))
     done_keys = sorted({r.part_key for r in done_rows})
     if done_keys:
-        df = df.join(F.broadcast(spark.createDataFrame(
-            [(k,) for k in done_keys], "part_key long")), "part_key",
+        df = df.join(F.broadcast(local_frame(
+            spark, [(k,) for k in done_keys], "part_key long")), "part_key",
             "left_anti")
 
     if not isinstance(src, str):
@@ -445,7 +458,7 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     overwrite = "dynamic" if done_rows else "static"
     if not done_rows:
         for stale in (lineage_path, links_path):
-            path, fs = hadoop_path(stale)
+            path, fs = hadoop_path(spark, stale)
             fs.delete(path, True)
     (parsed.write.mode("overwrite")
      .option("partitionOverwriteMode", overwrite)
@@ -476,7 +489,7 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     new_lineage = lineage_of(inc, num_buckets, transcode=transcode)
     if done_rows:
         new_lineage = new_lineage.unionByName(
-            spark.createDataFrame(done_rows, LINEAGE_SCHEMA))
+            local_frame(spark, done_rows, LINEAGE_SCHEMA))
     new_lineage.write.mode("overwrite").parquet(lineage_path)
 
     # job metrics come from the manifest (≤ B rows — the write above just

@@ -39,7 +39,8 @@ from pyspark.sql.types import (
 )
 
 from .._rowmap import flat_map, one_row
-from ..pipeline.job import explode_pages, parse_pages, with_part_key
+from ..pipeline.job import (
+    explode_pages, hadoop_path, jvm_class, parse_pages, with_part_key)
 from ..pipeline.schema import PAGES_SCHEMA, PARSED_SCHEMA
 
 
@@ -269,13 +270,13 @@ def _last_committed_batch(spark: SparkSession, sink_dir: str) -> int:
     "{path,...}" string (a round trip per entry cost 0.6-1.4 ms); a comma
     in a parent dir can only yield a wrong id, which _counted_drain's
     batch-id check turns into a recount."""
-    hfs = spark._jvm.org.apache.hadoop.fs
-    log = hfs.Path(os.path.join(sink_dir, "_spark_metadata"))
-    fs = log.getFileSystem(spark._jsc.hadoopConfiguration())
+    log, fs = hadoop_path(spark, os.path.join(sink_dir, "_spark_metadata"))
     if not fs.exists(log):
         return -1
-    paths = spark._jvm.org.apache.commons.lang3.ArrayUtils.toString(
-        hfs.FileUtil.stat2Paths(fs.listStatus(log)))[1:-1].split(",")
+    jvm = spark._jvm
+    paths = jvm_class(jvm, "org.apache.commons.lang3.ArrayUtils").toString(
+        jvm_class(jvm, "org.apache.hadoop.fs.FileUtil").stat2Paths(
+            fs.listStatus(log)))[1:-1].split(",")
     ids = (re.fullmatch(r"(\d+)(\.compact)?", p.rsplit("/", 1)[-1])
            for p in paths)
     return max((int(m[1]) for m in ids if m), default=-1)

@@ -1,17 +1,22 @@
-"""The shared row-expanding stage (htmlparser_spark._rowmap) and the rule
-that every Python stage of the package pickles by reference."""
+"""The shared row-expanding stage and literal tables
+(htmlparser_spark._rowmap), the rule that every Python stage of the package
+pickles by reference, and the rule that every literal table is a
+``LocalRelation``."""
 import ast
 import os
 import sys
 
 import pandas as pd
 import pytest
-from pyspark.sql import SparkSession
+from pyspark.sql import Row, SparkSession
+from pyspark.sql.types import DataType
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from htmlparser_spark._rowmap import _flat_map, flat_map, id_range
+from htmlparser_spark._rowmap import _flat_map, flat_map, id_range, local_frame
+from htmlparser_spark.pipeline.schema import LINEAGE_SCHEMA
+from perfbench.procstat import descendants
 
 PKG = os.path.join(REPO, "htmlparser_spark")
 STAGES = ("mapInPandas", "mapInArrow", "applyInPandas",
@@ -67,19 +72,25 @@ def _nested_stage_functions(tree):
     return sorted(set(bad))
 
 
-def test_no_stage_is_handed_a_nested_function():
-    """A closure pickles by value, so a worker that runs only closure
-    stages (``pandas_udf`` ones included) never imports the package or
-    loads its ``_pyworker`` fix."""
+def _package_findings(check):
+    """{file: check(its AST)} for every package file where it finds any."""
     found = {}
     for root, _dirs, files in os.walk(PKG):
         for fn in files:
             if fn.endswith(".py"):
                 path = os.path.join(root, fn)
                 with open(path, encoding="utf-8") as f:
-                    bad = _nested_stage_functions(ast.parse(f.read()))
+                    bad = check(ast.parse(f.read()))
                 if bad:
                     found[os.path.relpath(path, REPO)] = bad
+    return found
+
+
+def test_no_stage_is_handed_a_nested_function():
+    """A closure pickles by value, so a worker that runs only closure
+    stages (``pandas_udf`` ones included) never imports the package or
+    loads its ``_pyworker`` fix."""
+    found = _package_findings(_nested_stage_functions)
     assert not found, found
 
 
@@ -125,6 +136,40 @@ def c(df):
     assert _nested_stage_functions(ast.parse(src)) == [(4, "sig"), (9, "g")]
 
 
+def _create_dataframe_calls(tree):
+    """Line of every ``createDataFrame(...)`` call outside a function
+    named ``local_frame``."""
+    inside = {id(n) for f in ast.walk(tree)
+              if isinstance(f, ast.FunctionDef) and f.name == "local_frame"
+              for n in ast.walk(f)}
+    return sorted(n.lineno for n in ast.walk(tree)
+                  if isinstance(n, ast.Call) and id(n) not in inside
+                  and _callee(n) == "createDataFrame")
+
+
+def test_literal_tables_go_through_local_frame():
+    """``createDataFrame(list)`` is a Python RDD: a literal table of a few
+    rows starts a daemon and a Python worker per core. ``local_frame``
+    ships it to the JVM as Arrow instead."""
+    found = _package_findings(_create_dataframe_calls)
+    assert not found, found
+
+
+def test_guard_sees_create_dataframe_calls():
+    src = '''
+def local_frame(spark, rows, schema):
+    return spark.createDataFrame(rows, schema)
+def a(spark):
+    return spark.createDataFrame([(1,)], "x long")
+def b(spark):
+    make = spark.createDataFrame
+    return local_frame(spark, [(1,)], "x long").union(make([(2,)]))
+t = spark.createDataFrame(
+    [], "x long")
+'''
+    assert _create_dataframe_calls(ast.parse(src)) == [5, 9]
+
+
 @pytest.fixture(scope="module")
 def spark():
     s = (SparkSession.builder.master("local[2]")
@@ -134,6 +179,56 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+def _plan(df):
+    """Class name of the root of ``df``'s analyzed plan, and the plan."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName(), plan.toString()
+
+
+def test_local_frame_builds_no_python_process(spark):
+    """Runs before any other Python stage of this module's session, whose
+    worker pool is then empty: an RDD-backed table would fork the daemon."""
+    if not os.path.isdir("/proc/self"):
+        pytest.skip("reads the process tree from /proc")
+    before = set(descendants(os.getpid()))
+    rows = [(i, f"h{i}") for i in range(320)]
+    assert local_frame(spark, rows, "k long, h string").collect() == rows
+    assert set(descendants(os.getpid())) - before == set()
+    if len(before) == 1:  # only the JVM: the pool is cold, so the list
+        # path must show up, or the check above could not fail
+        spark.createDataFrame(rows, "k long, h string").collect()
+        assert set(descendants(os.getpid())) - before
+
+
+@pytest.mark.parametrize("rows,schema", [
+    ([], "part_key long"),
+    ([(1, None), (None, 2)], "a bigint, b bigint"),
+    ([("a.com", "/p", 1)], "host string, prefix string, allow int"),
+])
+def test_local_frame_is_a_local_relation(spark, rows, schema):
+    df = local_frame(spark, rows, schema)
+    root, plan = _plan(df)
+    assert root == "LocalRelation" and "LogicalRDD" not in plan
+    assert df.schema == DataType.fromDDL(schema)
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_local_frame_takes_manifest_rows(spark, tmp_path):
+    """The resume path re-ships the lineage manifest it collected: ``Row``s
+    with bigint, boolean and int fields."""
+    path = str(tmp_path / "_lineage")
+    written = [Row(part_key=k, n_rows=3 * k, n_ok=k, n_bytes=1 << 40,
+                   n_errors=0, checksum=-k, transcode=k % 2 == 0, buckets=16)
+               for k in range(5)]
+    local_frame(spark, written, LINEAGE_SCHEMA).write.parquet(path)
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(path).collect()
+    df = local_frame(spark, rows, LINEAGE_SCHEMA)
+    root, plan = _plan(df)
+    assert root == "LocalRelation" and "LogicalRDD" not in plan
+    assert df.schema == LINEAGE_SCHEMA
+    assert sorted(df.collect()) == sorted(rows) == written
 
 
 def test_flat_map_empty_batches_dropped_and_expanded_rows(spark):
@@ -171,3 +266,4 @@ def test_flat_map_every_row_dropped(spark):
     out = flat_map(id_range(spark, 5, 2), lambda i: [], ["id"], "k long")
     assert out.columns == ["k"]
     assert out.count() == 0
+

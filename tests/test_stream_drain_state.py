@@ -2,11 +2,13 @@
 per-sink state file, and re-read the sink only to recover: every reported
 total must equal a full count of the sink, through crashes between the sink
 commit and the state write, lost state, replayed batches and lost progress.
-Also: the drop-directory listing stays on the driver, and the Bloom drain
-folds only files the sink committed."""
+Also: the drop-directory listing stays on the driver, the commit-log
+listing resolves its py4j classes once, build_session captures no call
+sites, and the Bloom drain folds only files the sink committed."""
 import json
 import os
 import shutil
+import subprocess
 import sys
 
 import pytest
@@ -15,7 +17,7 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from htmlparser_spark.pipeline.job import build_session
+from htmlparser_spark.pipeline.job import build_session, jvm_class
 from htmlparser_spark.pipeline.schema import PARSED_SCHEMA
 from htmlparser_spark.streaming import job
 from htmlparser_spark.synth import gen_rows
@@ -96,6 +98,51 @@ def test_drop_dir_listing_launches_no_job(spark, tmp_path):
         assert jobs_of("listing-default") == 1
     finally:
         spark.conf.set(key, configured)
+
+
+def test_commit_log_listing_resolves_jvm_classes_once(spark, tmp_path,
+                                                     monkeypatch):
+    """``spark._jvm.a.b.C`` sends one lookup per name segment; jvm_class
+    resolves each class once per gateway view, so a second listing sends
+    none."""
+    log = tmp_path / "sink" / "_spark_metadata"
+    log.mkdir(parents=True)
+    for name in ("0", "1", "2.compact", "3.tmp"):
+        (log / name).touch()
+    client = spark._jvm._gateway_client
+    send, sent = client.send_command, []
+    monkeypatch.setattr(client, "send_command", lambda c, *a, **k:
+                        sent.append(c) or send(c, *a, **k))
+    jvm_class.cache_clear()
+    lookups = []
+    for _ in range(2):
+        sent.clear()
+        assert job._last_committed_batch(spark, str(tmp_path / "sink")) == 2
+        lookups.append(sum(c.startswith("r\nu\n") for c in sent))
+    assert lookups[1] == 0 < lookups[0]
+
+
+def test_build_session_captures_no_call_site():
+    """build_session turns off DataFrame call-site capture. The conf is
+    static, so it holds only in a driver whose session build_session
+    creates: the probe runs in a fresh interpreter, where a Column function
+    then sends no ``PySparkCurrentOrigin`` update."""
+    probe = """
+from pyspark.sql import functions as F
+from htmlparser_spark.pipeline.job import build_session
+spark = build_session(cpus=1)
+client = spark._jvm._gateway_client
+send, sent = client.send_command, []
+client.send_command = lambda c, *a, **k: sent.append(c) or send(c, *a, **k)
+F.col("x") + F.lit(1)
+print(len(sent), sum("PySparkCurrentOrigin" in c for c in sent))
+spark.stop()
+"""
+    out = subprocess.run([sys.executable, "-c", probe], cwd=REPO, env={
+        **os.environ, "PYTHONPATH": REPO}, capture_output=True, text=True,
+        timeout=300, check=True).stdout
+    n_sent, n_origin = map(int, out.split()[-2:])
+    assert n_sent > 0 and n_origin == 0
 
 
 def test_twelve_drains_report_full_counts_without_rereading(
