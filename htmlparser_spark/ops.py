@@ -2072,7 +2072,7 @@ def dedup_bloom(spark, sf_dir):
     fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), which suits this
     corpus's small history but saturates as history grows — ~3% of
     distinct new docs read positive at 10³ history docs, ~93% at 10⁴
-    (ROADMAP item 1 sizes a windowed filter to a target rate)."""
+    (ROADMAP item 3 sizes a windowed filter to a target rate)."""
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", F.md5("text").alias("h")))
     is_new = F.col("doc_id") % INC_NEW_MOD == 0

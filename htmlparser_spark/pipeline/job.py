@@ -43,33 +43,47 @@ EMIT_LINKS_COLUMNS = [f.name
 def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
                   extra_conf=None) -> SparkSession:
     """Session tuned for the kernel stage: Arrow batches sized for large
-    binary cells, AQE on as the skew backstop, Python workers reused."""
+    binary cells, AQE on as the skew backstop, Python workers reused.
+    ``getOrCreate`` hands back a running session without applying static
+    confs, so a running session whose master or static confs differ from
+    these is refused (ValueError) rather than returned unconfigured."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    b = (SparkSession.builder.appName(app)
-         .master(f"local[{cpus}]")
-         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-         # rows are also BYTE-capped per batch, so a run of multi-MB pages
-         # can't assemble a 512-row x 5 MB = 2.5 GB Arrow batch in a worker
-         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
-         .config("spark.python.worker.reuse", "true")
-         .config("spark.driver.memory",
-                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-         .config("spark.sql.files.maxPartitionBytes", "128m")
-         # list up to 1024 dirs on the driver: above the default 32 a stream
-         # of drop dirs paid a ~0.25 s listing job per scan and per trigger
-         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                 "1024")
-         # no call-site capture (~4 py4j round trips per Column call, IPython
-         # import on the first); errors lose it unless extra_conf sets "true"
-         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-         .config("spark.ui.enabled", "false"))
-    for k, v in (extra_conf or {}).items():
+    master = f"local[{cpus}]"
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+        # rows are also BYTE-capped per batch, so a run of multi-MB pages
+        # can't assemble a 512-row x 5 MB = 2.5 GB Arrow batch in a worker
+        "spark.sql.execution.arrow.maxBytesPerBatch": str(64 << 20),
+        "spark.python.worker.reuse": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.sql.files.maxPartitionBytes": "128m",
+        # list up to 1024 dirs on the driver: above the default 32 a stream
+        # of drop dirs paid a ~0.25 s listing job per scan and per trigger
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
+        # no call-site capture (~4 py4j round trips per Column call, IPython
+        # import on the first); errors lose it unless extra_conf sets "true"
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.ui.enabled": "false",
+        **(extra_conf or {})}
+    b = SparkSession.builder.appName(app).master(master)
+    for k, v in conf.items():
         b = b.config(k, v)
+    active = SparkSession.getActiveSession()
+    if active is not None:  # getOrCreate would hand it back as it is
+        stale = {k: active.conf.get(k, None) for k, v in conf.items()
+                 if not active.conf.isModifiable(k)
+                 and active.conf.get(k, None) != v}
+        if active.sparkContext.master != master or stale:
+            raise ValueError(
+                f"build_session: the running session (master "
+                f"{active.sparkContext.master!r}, static confs {stale}) was "
+                f"not built with master {master!r} and these confs; call "
+                "spark.stop() on it first")
     return b.getOrCreate()
 
 

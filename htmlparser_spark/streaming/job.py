@@ -23,6 +23,7 @@ executor count, and state is RocksDB-backed on a real cluster
 """
 from __future__ import annotations
 
+import json
 import os
 import re
 from functools import partial
@@ -38,7 +39,8 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
 )
 
-from .._rowmap import flat_map, one_row
+from .._rowmap import flat_map, local_frame, one_row
+from ..ops import BLOOM_K, BLOOM_M, _bloom_position
 from ..pipeline.job import (
     explode_pages, hadoop_path, jvm_class, parse_pages, with_part_key)
 from ..pipeline.schema import PAGES_SCHEMA, PARSED_SCHEMA
@@ -64,19 +66,13 @@ def read_rate_page_stream(spark: SparkSession, rows_per_second: int = 200,
     generator as the batch synth corpus, so for any consumed value range the
     stream's contents are reproducible. Going live is a two-line swap:
     ``format("kafka") + options`` in place of ``format("rate")``, and a
-    (key, value)->page decode in place of _rate_rows_to_pages — everything
-    downstream (kernel, sinks, watermarks, stateful rollups) is source-
-    agnostic."""
+    (key, value)->page decode in place of the ``value``->page generator
+    (stateless per-row, so legal on a stream) — everything downstream
+    (kernel, sinks, watermarks, stateful rollups) is source-agnostic."""
+    from ..synth import gen_page
     raw = (spark.readStream.format("rate")
            .option("rowsPerSecond", rows_per_second)
            .option("numPartitions", partitions).load())
-    return _rate_rows_to_pages(raw, seed)
-
-
-def _rate_rows_to_pages(raw: DataFrame, seed: int = 42) -> DataFrame:
-    """(timestamp, value) -> PAGES_SCHEMA rows via the deterministic batch
-    page generator (stateless per-row, so legal on a stream)."""
-    from ..synth import gen_page
     return flat_map(raw, partial(one_row, gen_page, seed), ["value"],
                     PAGES_SCHEMA)
 
@@ -102,18 +98,19 @@ def parse_page_stream(pages: DataFrame, extract: bool = True,
     return parse_pages(with_key, extract=extract)
 
 
-def write_parsed_stream(parsed: DataFrame, out_dir: str,
-                        trigger_available_now: bool = True):
-    """S10-stream: exactly-once parquet sink (file-sink commit log in the
-    checkpoint dir makes re-runs idempotent)."""
-    writer = (parsed.writeStream
-              .format("parquet")
-              .option("path", os.path.join(out_dir, "parsed"))
-              .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-              .outputMode("append"))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def write_parsed_stream(parsed: DataFrame, out_dir: str, sink: str = "parsed"):
+    """S10-stream: start an availableNow query into the exactly-once parquet
+    sink ``out_dir/<sink>`` (file-sink commit log in the checkpoint dir
+    makes re-runs idempotent). Each sink keeps its own checkpoint, so the
+    parsed and links streams run and recover separately."""
+    ckpt = "_checkpoint" if sink == "parsed" else f"_{sink}_checkpoint"
+    return (parsed.writeStream
+            .format("parquet")
+            .option("path", os.path.join(out_dir, sink))
+            .option("checkpointLocation", os.path.join(out_dir, ckpt))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def dedup_page_stream(pages: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -218,49 +215,35 @@ def host_rollup_stream(parsed: DataFrame) -> DataFrame:
 
 
 def _atomic_json_write(path: str, obj: dict) -> None:
-    """tmp-then-rename JSON persistence shared by the flags marker, the
-    drain totals and the Bloom bit-set state, so a durability fix (e.g.
-    fsync-before-replace) lands in one place."""
-    import json
+    """tmp-then-rename write of a sink's state file: the drain's commit."""
     tmp = f"{path}.tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
 
 
-def _load_json(path: str) -> dict | None:
-    if not os.path.exists(path):
-        return None
-    import json
-    with open(path) as f:
-        return json.load(f)
-
-
-def _check_stream_flags(out_dir: str, transcode: bool,
-                        kind: str = "plain") -> None:
-    """Enforce the flag-constancy contract across drains of one out_dir,
-    mirroring the batch pipeline's lineage-manifest check: a caller flipping
-    transcode between drains would otherwise silently produce a parsed sink
-    half-decoded each way with nothing recording which. The marker also
-    records the DRAIN KIND ("plain" vs "bloom"): the two drains write
-    different sink schemas (the Bloom drain adds maybe_dup), so resuming a
-    plain out_dir with the Bloom drain (or vice versa) would mix files with
-    and without the column — the exact silent-mixed-sink condition the
-    marker exists to fail fast on. The flag is persisted once in a marker
-    file next to the checkpoint dir (it cannot live IN the checkpoint:
-    Spark owns that layout)."""
-    marker = os.path.join(out_dir, "_stream_flags.json")
-    want = {"transcode": bool(transcode), "kind": kind}
-    have = _load_json(marker)
-    if have is None:
-        os.makedirs(out_dir, exist_ok=True)
-        _atomic_json_write(marker, want)
-    elif have != want:
+def _load_state(out_dir: str, sink: str, want: dict) -> dict | None:
+    """The state of the sink ``out_dir/<sink>``, None for a new sink. State
+    of another format, drain kind or transcode flag is refused, and so is
+    a state file of an earlier layout (never migrated by guesswork): a
+    flipped transcode would leave the sink half-decoded each way, and the
+    Bloom kind's sink schema adds maybe_dup to the plain one."""
+    old = [n for n in ("_stream_flags.json", f"_{sink}_totals.json",
+                       "_bloom_state.json")
+           if os.path.exists(os.path.join(out_dir, n))]
+    path = os.path.join(out_dir, f"_{sink}_state.json")
+    state = None
+    if os.path.exists(path):
+        with open(path) as f:
+            state = json.load(f)
+    have = old or state and {k: state.get(k) for k in want}
+    if old or (state is not None and have != want):
         raise ValueError(
             f"stream flag mismatch for {out_dir!r}: this drain requested "
             f"{want} but the sink was created with {have}; use a new "
             "out_dir (or keep the original flags) — mixed decodes in one "
             "parsed sink are unrecoverable")
+    return state
 
 
 def _last_committed_batch(spark: SparkSession, sink_dir: str) -> int:
@@ -268,8 +251,8 @@ def _last_committed_batch(spark: SparkSession, sink_dir: str) -> int:
     from its file names ("7", "9.compact") via the Hadoop FileSystem, so
     hdfs:// and s3a:// sinks work too. The listing crosses py4j as ONE
     "{path,...}" string (a round trip per entry cost 0.6-1.4 ms); a comma
-    in a parent dir can only yield a wrong id, which _counted_drain's
-    batch-id check turns into a recount."""
+    in a parent dir can only yield a wrong id, which _drain's batch-id
+    check turns into a recount."""
     log, fs = hadoop_path(spark, os.path.join(sink_dir, "_spark_metadata"))
     if not fs.exists(log):
         return -1
@@ -282,46 +265,105 @@ def _last_committed_batch(spark: SparkSession, sink_dir: str) -> int:
     return max((int(m[1]) for m in ids if m), default=-1)
 
 
-def _counted_drain(spark: SparkSession, frame: DataFrame, start,
-                   out_dir: str, sink: str, totals: dict) -> dict:
-    """Drain ``frame`` through ``start(frame, out_dir)``, an availableNow
-    query into the file sink ``out_dir/<sink>``, and return the sink's
-    running ``totals`` (name -> aggregate). The drain observes its own rows
-    and adds them to ``out_dir/_<sink>_totals.json`` = ``{last_batch,
-    totals}`` only if the sink's log ended at ``last_batch`` before the
-    drain (a replayed batch is a skipped write that observes 0 rows) and
-    the progress reports exactly the batches after it (``recentProgress``
-    keeps ~100); otherwise it re-reads the whole sink once."""
+def _bits_metric():
+    """A frame's set Bloom bit positions as ONE aggregate (≤ BLOOM_M ints)."""
+    return F.array_distinct(F.concat(*[
+        F.collect_set(_bloom_position(F.col("content_hash"), j))
+        for j in range(BLOOM_K)]))
+
+
+def _bitmap(positions, bitmap: str | None = None) -> str:
+    """``bitmap`` ∪ ``positions`` packed as BLOOM_M/4 hex digits (2 KiB)."""
+    n = int(bitmap or "0", 16)
+    for p in positions:
+        n |= 1 << p
+    return f"{n:0{BLOOM_M // 4}x}"
+
+
+def _seed_bits(spark: SparkSession, history_dir: str) -> str:
+    """Bitmap of a parsed history sink's content hashes. A non-empty
+    history whose hashes are all 0 would flag every page: refused."""
+    row = (spark.read.schema(PARSED_SCHEMA).parquet(history_dir)
+           .agg(F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col("content_hash") != 0).alias("hashed"),
+                _bits_metric().alias("bits")).collect()[0])
+    if row.n and not row.hashed:
+        raise ValueError(
+            f"Bloom history {history_dir!r}: all {row.n} rows have "
+            "content_hash 0, so every page would read maybe_dup = 1; re-run "
+            "it with resume=False (full re-parse) or into a fresh out_dir")
+    return _bitmap(row.bits)
+
+
+def _recount(spark: SparkSession, sink_dir: str, metrics: dict):
+    """The one recovery path of ``_drain``: ``metrics`` over the whole
+    committed sink in one aggregate (read through its commit log, so part
+    files of failed or retried tasks are not counted)."""
+    try:
+        return (spark.read.parquet(sink_dir)
+                .agg(*[c.alias(k) for k, c in metrics.items()]).collect()[0])
+    except AnalysisException:
+        return dict.fromkeys(metrics)  # no commit (or no file) yet
+
+
+def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
+           kind: str, transcode: bool, aggs: dict,
+           history_dir: str | None = None) -> dict:
+    """Drain ``frame`` with one availableNow query into the file sink
+    ``out_dir/<sink>``; return the sink's running totals of ``aggs``.
+
+    State: ``out_dir/_<sink>_state.json`` = {format (bump it with any
+    layout change), kind, transcode, last_batch, totals} + the "bloom"
+    kind's packed ``seed_bits`` and ``bits``; fixed-size, written once
+    after the query. The drain adds what it observes (``aggs``, and the
+    Bloom kind's bit positions) only if its progress reports exactly the
+    batches after ``last_batch`` (``recentProgress`` keeps ~100; a
+    replayed batch is a skipped write that observes 0 rows). Otherwise,
+    and on entry when the sink's log does not end at ``last_batch`` (a
+    crash between the sink commit and the state write, lost state),
+    ``_recount`` aggregates the committed sink once — on entry before the
+    Bloom kind tags ``frame``."""
+    bloom = kind == "bloom"
+    want = {"format": 1, "kind": kind, "transcode": bool(transcode)}
+    state = _load_state(out_dir, sink, want)
+    if state is None:
+        state = {**want, "last_batch": -1, "totals": dict.fromkeys(aggs, 0)}
+        if bloom:
+            state["seed_bits"] = state["bits"] = _seed_bits(spark, history_dir)
+    metrics = {**aggs, "bits": _bits_metric()} if bloom else aggs
     sink_dir = os.path.join(out_dir, sink)
-    path = os.path.join(out_dir, f"_{sink}_totals.json")
-    state = _load_json(path) or {"last_batch": -1,
-                                 "totals": dict.fromkeys(totals, 0)}
+
+    def advance(rows, last_batch, base):
+        new = {**state, "last_batch": last_batch, "totals": {
+            k: base["totals"][k] + sum(int(r[k] or 0) for r in rows)
+            for k in aggs}}
+        if bloom:
+            new["bits"] = _bitmap((p for r in rows for p in r["bits"] or ()),
+                                  base["bits"])
+        return new
+
+    # a recount adds the whole committed sink to the empty (seeded) state
+    empty = {"totals": dict.fromkeys(aggs, 0), "bits": state.get("seed_bits")}
     before = _last_committed_batch(spark, sink_dir)
-    q = start(frame.observe("drain", *[c.alias(k) for k, c in totals.items()]),
-              out_dir)
+    if state["last_batch"] != before:
+        state = advance([_recount(spark, sink_dir, metrics)], before, empty)
+    if bloom:
+        bits = int(state["bits"], 16)
+        frame = bloom_dedup_stream(frame, local_frame(spark, [
+            (p,) for p in range(BLOOM_M) if bits >> p & 1], "pos bigint"))
+    q = write_parsed_stream(
+        frame.observe("drain", *[c.alias(k) for k, c in metrics.items()]),
+        out_dir, sink)
     q.awaitTermination()
     after = _last_committed_batch(spark, sink_dir)
     seen = {p.batchId: p.observedMetrics["drain"] for p in q.recentProgress
             if "drain" in p.observedMetrics}
-    if (state["last_batch"] == before
-            and sorted(seen) == list(range(before + 1, after + 1))):
-        got = {k: state["totals"][k] + sum(int(m[k] or 0)
-                                           for m in seen.values())
-               for k in totals}
+    if sorted(seen) == list(range(state["last_batch"] + 1, after + 1)):
+        state = advance(seen.values(), after, state)
     else:
-        got = _recount(spark, sink_dir, frame.schema, totals)
-    _atomic_json_write(path, {"last_batch": after, "totals": got})
-    return got
-
-
-def _recount(spark: SparkSession, sink_dir: str, schema, totals: dict) -> dict:
-    """The recovery path of ``_counted_drain``: aggregate the whole sink."""
-    try:
-        row = (spark.read.schema(schema).parquet(sink_dir)
-               .agg(*[c.alias(k) for k, c in totals.items()]).collect()[0])
-    except AnalysisException:
-        return dict.fromkeys(totals, 0)  # no commit yet: no output path
-    return {k: int(row[k] or 0) for k in totals}
+        state = advance([_recount(spark, sink_dir, metrics)], after, empty)
+    _atomic_json_write(os.path.join(out_dir, f"_{sink}_state.json"), state)
+    return state["totals"]
 
 
 def run_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
@@ -330,12 +372,11 @@ def run_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
     out_dir/parsed exactly once (availableNow), then stop. Re-running after
     new files arrive processes ONLY the new files (checkpoint). transcode
     must stay constant across drains of one out_dir (same contract as the
-    batch pipeline's resumed sinks) — enforced via a marker file."""
-    _check_stream_flags(out_dir, transcode, kind="plain")
-    pages = read_page_stream(spark, src_dir)
-    parsed = parse_page_stream(pages, transcode=transcode)
-    return _counted_drain(spark, parsed, write_parsed_stream, out_dir,
-                          "parsed", {"rows_total": F.count(F.lit(1))})
+    batch pipeline's resumed sinks) — enforced via the sink's state file."""
+    parsed = parse_page_stream(read_page_stream(spark, src_dir),
+                               transcode=transcode)
+    return _drain(spark, parsed, out_dir, "parsed", "plain", transcode,
+                  {"rows_total": F.count(F.lit(1))})
 
 
 def links_stream(pages: DataFrame) -> DataFrame:
@@ -348,27 +389,12 @@ def links_stream(pages: DataFrame) -> DataFrame:
     return explode_pages(parsed, "links")
 
 
-def write_links_stream(links: DataFrame, out_dir: str,
-                       trigger_available_now: bool = True):
-    """Exactly-once links sink (own commit log, independent of the parsed
-    sink's checkpoint so the two streams can run and recover separately)."""
-    writer = (links.writeStream
-              .format("parquet")
-              .option("path", os.path.join(out_dir, "links"))
-              .option("checkpointLocation",
-                      os.path.join(out_dir, "_links_checkpoint"))
-              .outputMode("append"))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_links_stream_once(spark: SparkSession, src_dir: str,
                           out_dir: str) -> dict:
     """Drain pending page drops into out_dir/links exactly once."""
-    pages = read_page_stream(spark, src_dir)
-    return _counted_drain(spark, links_stream(pages), write_links_stream,
-                          out_dir, "links", {"links_total": F.count(F.lit(1))})
+    links = links_stream(read_page_stream(spark, src_dir))
+    return _drain(spark, links, out_dir, "links", "links", False,
+                  {"links_total": F.count(F.lit(1))})
 
 
 def bloom_history_bits(history: DataFrame) -> DataFrame:
@@ -381,9 +407,7 @@ def bloom_history_bits(history: DataFrame) -> DataFrame:
     the geometry is fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), and
     the filter saturates as history grows — ~3% of distinct new pages
     read positive at 10³ history documents, ~30% at 3·10³, ~93% at 10⁴
-    (ROADMAP item 1 sizes a windowed filter to a target rate)."""
-    from ..ops import BLOOM_K, _bloom_position
-
+    (ROADMAP item 3 sizes a windowed filter to a target rate)."""
     pos = [_bloom_position(F.col("content_hash"), j).alias("pos")
            for j in range(BLOOM_K)]
     return history.select(F.explode(F.array(*pos)).alias("pos")).distinct()
@@ -401,11 +425,9 @@ def bloom_dedup_stream(parsed: DataFrame, hist_bits: DataFrame) -> DataFrame:
 
     Scale shape: the probe never shuffles the stream — k broadcast joins +
     codegen hashes; per-micro-batch cost is O(|batch|), independent of
-    history size. run_bloom_stream_once persists the bit set and folds
-    only each drained batch back in, so filter maintenance is O(|batch|)
-    too."""
-    from ..ops import BLOOM_K, _bloom_position
-
+    history size. run_bloom_stream_once keeps the bit set in its state
+    file and folds in each drain's observed bit positions, so filter
+    maintenance is O(|batch|) too."""
     out = parsed
     hits = []
     for j in range(BLOOM_K):
@@ -423,99 +445,27 @@ def bloom_dedup_stream(parsed: DataFrame, hist_bits: DataFrame) -> DataFrame:
                     *[f"_set{j}" for j in range(BLOOM_K)])
 
 
-def _bloom_state_save(out_dir: str, state: dict) -> None:
-    _atomic_json_write(os.path.join(out_dir, "_bloom_state.json"), state)
-
-
-def _bloom_fold_pending(spark: SparkSession, out_dir: str,
-                        state: dict) -> dict:
-    """Fold every committed sink file not yet in the folded-file manifest
-    into the next bit-set version and return the advanced state (or the
-    unchanged state when nothing is pending). Idempotent — bits are a
-    set — and called both BEFORE a drain (so a crash between a previous
-    drain's sink commit and its fold can never leave committed rows out
-    of the filter when the next batch is tagged) and after it (folding
-    the drain's own output for the future)."""
-    import shutil
-    parsed_dir = os.path.join(out_dir, "parsed")
-    bits_root = os.path.join(out_dir, "_bloom_bits")
-    try:
-        # the sink's commit log, read on the driver: part files of failed
-        # or retried tasks that it never committed are not folded
-        files = sorted(os.path.basename(f) for f in spark.read.schema(
-            PARSED_SCHEMA).parquet(parsed_dir).inputFiles())
-    except AnalysisException:
-        return state
-    new = sorted(set(files) - set(state["folded"]))
-    if not new:
-        return state
-    old_bits = spark.read.parquet(
-        os.path.join(bits_root, f"v{state['version']}"))
-    batch = spark.read.schema(PARSED_SCHEMA).parquet(
-        *[os.path.join(parsed_dir, f) for f in new])
-    nxt = state["version"] + 1
-    (bloom_history_bits(batch).union(old_bits).distinct()
-     .write.mode("overwrite").parquet(os.path.join(bits_root, f"v{nxt}")))
-    new_state = {"version": nxt, "folded": files}
-    _bloom_state_save(out_dir, new_state)
-    # GC every superseded version: a crash before this loop leaves one
-    for d in os.listdir(bits_root):
-        if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < nxt:
-            shutil.rmtree(os.path.join(bits_root, d), ignore_errors=True)
-    return new_state
-
-
 def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
                           history_dir: str) -> dict:
     """Continuous-ingest dedup drain: parse pending page drops and tag
     every parsed row against the history Bloom filter, writing
     parsed + maybe_dup exactly once.
 
-    The bit set is PERSISTED and maintained incrementally: the FIRST drain
-    of an out_dir folds history_dir (any parsed parquet sink — a batch run
-    or a previous drain) into ``out_dir/_bloom_bits/v0`` once; every drain
-    after that reads the ≤ BLOOM_M-row bit-set parquet (never history) and,
-    after the sink commits, folds ONLY the newly committed parquet files
-    back in, writing the next bit-set version and advancing
-    ``_bloom_state.json`` atomically. End-to-end per-drain cost is
+    The bit set lives in the sink's state file as a packed BLOOM_M-bit
+    bitmap: the FIRST drain of an out_dir reads history_dir (any parsed
+    parquet sink — a batch run or a previous drain) once to seed it; every
+    drain probes the bitmap (never history) and adds the bit positions it
+    observes in its own committed rows. End-to-end per-drain cost is
     therefore O(|batch|) + O(BLOOM_M), independent of accumulated history.
     Its accuracy is not: the geometry is fixed (m = 8192 bits, k = 3), so
     the filter saturates — ~93% of distinct new pages read maybe_dup = 1
     once the history reaches 10⁴ documents, ~100% at 10⁵ (see
-    bloom_history_bits and ROADMAP item 1). Crash-safe because
-    bit-folding is idempotent (bits are a set: replaying a batch re-sets
-    the same positions), the state json is the commit point, AND pending
-    unfolded sink files are folded BEFORE each drain tags — a crash
-    between a drain's sink commit and its fold can therefore never cost a
-    false negative on the next drain; superseded
-    bit-set versions are GC'd. New files are the sink's committed files
-    (its _spark_metadata log, read on the driver) not yet in the
-    folded-file manifest, so orphan part files of failed tasks are never
-    folded.
+    bloom_history_bits and ROADMAP item 3). Crash-safe: see ``_drain``.
 
-    This drain always parses untranscoded (same marker contract as
-    run_stream_once: resuming an out_dir a transcoded — or plain-kind —
-    drain created fails fast instead of mixing sink schemas)."""
-    _check_stream_flags(out_dir, transcode=False, kind="bloom")
-    bits_root = os.path.join(out_dir, "_bloom_bits")
-    state = _load_json(os.path.join(out_dir, "_bloom_state.json"))
-    if state is None:
-        hist = spark.read.schema(PARSED_SCHEMA).parquet(history_dir)
-        bloom_history_bits(hist).write.mode("overwrite").parquet(
-            os.path.join(bits_root, "v0"))
-        state = {"version": 0, "folded": []}
-        _bloom_state_save(out_dir, state)
-    # crash recovery: fold files a previous drain committed but never
-    # folded, so this drain tags against the complete history
-    state = _bloom_fold_pending(spark, out_dir, state)
-    hist_bits = spark.read.parquet(
-        os.path.join(bits_root, f"v{state['version']}"))
-
-    pages = read_page_stream(spark, src_dir)
-    tagged = bloom_dedup_stream(parse_page_stream(pages), hist_bits)
-    got = _counted_drain(spark, tagged, write_parsed_stream, out_dir, "parsed",
-                         {"rows_total": F.count(F.lit(1)),
-                          "maybe_dup_total": F.sum("maybe_dup")})
-    # fold ONLY this drain's newly committed files into the bit set
-    _bloom_fold_pending(spark, out_dir, state)
-    return got
+    This drain always parses untranscoded, and resuming an out_dir a
+    transcoded or plain-kind drain created fails fast instead of mixing
+    sink schemas."""
+    parsed = parse_page_stream(read_page_stream(spark, src_dir))
+    return _drain(spark, parsed, out_dir, "parsed", "bloom", False,
+                  {"rows_total": F.count(F.lit(1)),
+                   "maybe_dup_total": F.sum("maybe_dup")}, history_dir)

@@ -25,7 +25,7 @@ from htmlparser_spark.synth import synth_pages
 N_PAGES = 400
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture(scope="module")
 def spark():
     os.environ.setdefault("PYTHONPATH",
                           os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -47,7 +47,7 @@ def recorded_buckets(spark, out):
             .parquet(os.path.join(out, "_lineage")).collect()}
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture(scope="module")
 def corpus(spark):
     df = synth_pages(spark, N_PAGES, seed=42, partitions=4)
     df.cache()

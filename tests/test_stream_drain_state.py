@@ -1,10 +1,13 @@
-"""Stream drains report their sink totals from the rows they observe plus a
-per-sink state file, and re-read the sink only to recover: every reported
-total must equal a full count of the sink, through crashes between the sink
-commit and the state write, lost state, replayed batches and lost progress.
-Also: the drop-directory listing stays on the driver, the commit-log
-listing resolves its py4j classes once, build_session captures no call
-sites, and the Bloom drain folds only files the sink committed."""
+"""Stream drains report their sink totals from the rows they observe plus
+one fixed-size state file per sink, and re-read the sink only to recover:
+every reported total (and the Bloom drain's bit set) must equal a full
+aggregate of the sink, through crashes between the sink commit and the
+state write, lost state, replayed batches and lost progress. Also: the
+drop-directory listing stays on the driver, the commit-log listing resolves
+its py4j classes once, build_session captures no call sites and refuses a
+running session it did not configure, a Bloom drain after the first
+launches no job outside its query, a degenerate Bloom seed is refused, and
+the Bloom recount reads only files the sink committed."""
 import json
 import os
 import shutil
@@ -17,6 +20,7 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from htmlparser_spark.ops import BLOOM_M
 from htmlparser_spark.pipeline.job import build_session, jvm_class
 from htmlparser_spark.pipeline.schema import PARSED_SCHEMA
 from htmlparser_spark.streaming import job
@@ -39,9 +43,9 @@ def recounts(monkeypatch):
     seen = []
     recount = job._recount
 
-    def spy(spark, sink_dir, schema, totals):
+    def spy(spark, sink_dir, metrics):
         seen.append(os.path.basename(sink_dir))
-        return recount(spark, sink_dir, schema, totals)
+        return recount(spark, sink_dir, metrics)
 
     monkeypatch.setattr(job, "_recount", spy)
     return seen
@@ -71,6 +75,37 @@ def _drain(spark, kind, src, out, history=None):
     return job.run_bloom_stream_once(spark, src, out, history)
 
 
+def _state(out, sink="parsed"):
+    with open(os.path.join(out, f"_{sink}_state.json")) as f:
+        return json.load(f)
+
+
+def _state_bits(out):
+    """Bit positions set in the Bloom drain's state bitmap."""
+    bits = int(_state(out)["bits"], 16)
+    return {p for p in range(BLOOM_M) if bits >> p & 1}
+
+
+def _rebuilt_bits(spark, *sinks):
+    """Bit positions of a filter rebuilt from scratch over parsed sinks."""
+    rows = [spark.read.schema(PARSED_SCHEMA).parquet(d).select("content_hash")
+            for d in sinks]
+    for r in rows[1:]:
+        rows[0] = rows[0].union(r)
+    return {r.pos for r in job.bloom_history_bits(rows[0]).collect()}
+
+
+def _jobs_in_group(sc, group, fn):
+    """Spark jobs ``fn()`` launches in the caller's job group ``group``."""
+    sc.setJobGroup(group, group)
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group)) - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_drop_dir_listing_launches_no_job(spark, tmp_path):
     """Above 32 paths Spark lists directories with a parallel job, one task
     each (spark.sql.sources.parallelPartitionDiscovery.threshold); a stream
@@ -82,13 +117,8 @@ def test_drop_dir_listing_launches_no_job(spark, tmp_path):
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
     def jobs_of(group):
-        sc.setJobGroup(group, "read_page_stream over 40 drop dirs")
-        try:
-            before = len(sc.statusTracker().getJobIdsForGroup(group))
-            job.read_page_stream(spark, src)
-            return len(sc.statusTracker().getJobIdsForGroup(group)) - before
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        return _jobs_in_group(sc, group,
+                              lambda: job.read_page_stream(spark, src))
 
     assert jobs_of("listing-session") == 0
     # the default threshold shows the cliff, so the probe can see a job
@@ -145,11 +175,39 @@ spark.stop()
     assert n_sent > 0 and n_origin == 0
 
 
+def test_build_session_refuses_a_session_it_did_not_configure(spark):
+    """getOrCreate hands back a running session and drops static confs, so
+    build_session refuses a running session whose master or static confs
+    differ from the ones it asks for, and leaves that session as it was."""
+    assert build_session(cpus=2, extra_conf={
+        "spark.executorEnv.PYTHONPATH": REPO}) is spark
+    with pytest.raises(ValueError, match=r"spark\.stop\(\)"):
+        build_session(cpus=3)
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    with pytest.raises(ValueError, match=key.replace(".", r"\.")):
+        build_session(cpus=2, extra_conf={key: "true"})
+    assert spark.sparkContext.master == "local[2]"
+    assert spark.conf.get(key) == "false"
+
+
+def _size_less_counters(path):
+    """A state file's byte size less the decimal digits of its counters
+    (last_batch and totals), the only part of it that may grow."""
+    with open(path) as f:
+        st = json.load(f)
+    return os.path.getsize(path) - sum(
+        len(str(v)) for v in (st["last_batch"], *st["totals"].values()))
+
+
 def test_twelve_drains_report_full_counts_without_rereading(
         spark, tmp_path, recounts):
     src = str(tmp_path / "src")
     out_p, out_b = str(tmp_path / "out_p"), str(tmp_path / "out_b")
     history = os.path.join(out_p, "parsed")
+    states = [os.path.join(out_p, "_parsed_state.json"),
+              os.path.join(out_p, "_links_state.json"),
+              os.path.join(out_b, "_parsed_state.json")]
+    sizes = []
     for d in range(12):
         _drop(src, d)
         assert job.run_stream_once(spark, src, out_p) == _full(spark, out_p)
@@ -157,19 +215,75 @@ def test_twelve_drains_report_full_counts_without_rereading(
                 == _full(spark, out_p, "links"))
         got = job.run_bloom_stream_once(spark, src, out_b, history)
         assert got == _full(spark, out_b)
+        if d:  # drains 2-12: no state file grows but for counter digits
+            sizes.append([_size_less_counters(p) for p in states])
+    assert all(s == sizes[0] for s in sizes), sizes
     # drop 0 is the Bloom history, so its rows read maybe_dup = 1
     assert got["maybe_dup_total"] >= 6
     assert recounts == []
     for sink in ("parsed", "links"):
-        with open(os.path.join(out_p, f"_{sink}_totals.json")) as f:
-            assert json.load(f)["last_batch"] == 11
+        assert _state(out_p, sink)["last_batch"] == 11
+    st = _state(out_b)
+    assert len(st["bits"]) == len(st["seed_bits"]) == BLOOM_M // 4
+    # the observed bit positions fold to the filter a rebuild reads
+    assert _state_bits(out_b) == _rebuilt_bits(
+        spark, history, os.path.join(out_b, "parsed"))
+    # nothing accumulates beside the sinks, their checkpoints and states
+    assert sorted(os.listdir(out_p)) == [
+        "_checkpoint", "_links_checkpoint", "_links_state.json",
+        "_parsed_state.json", "links", "parsed"]
+    assert sorted(os.listdir(out_b)) == [
+        "_checkpoint", "_parsed_state.json", "parsed"]
+
+
+def test_bloom_drain_after_the_first_launches_no_job(spark, tmp_path,
+                                                     recounts):
+    """After its first drain (which reads the history once), a Bloom drain
+    runs no Spark job outside its streaming query, whose jobs run in the
+    query's own job group: the filter is folded from the query's observed
+    metrics and probed from a driver-side table."""
+    hsrc, src = str(tmp_path / "hsrc"), str(tmp_path / "src")
+    hist_out, out = str(tmp_path / "hist"), str(tmp_path / "out")
+    _drop(hsrc, 0)
+    job.run_stream_once(spark, hsrc, hist_out)
+    history = os.path.join(hist_out, "parsed")
+    _drop(src, 0)
+    job.run_bloom_stream_once(spark, src, out, history)
+    _drop(src, 1)
+    got = []
+
+    def drain():
+        got.append(job.run_bloom_stream_once(spark, src, out, history))
+
+    assert _jobs_in_group(spark.sparkContext, "bloom-drain", drain) == 0
+    assert got == [_full(spark, out)] and _state(out)["last_batch"] == 1
+    assert recounts == []
+
+
+def test_bloom_seed_with_all_zero_hashes_is_refused(spark, tmp_path):
+    """A history whose content_hash is 0 on every row (a sink written before
+    the stream computed the hash) would make every page read maybe_dup = 1;
+    the first Bloom drain refuses it and leaves out_dir untouched."""
+    hsrc, src = str(tmp_path / "hsrc"), str(tmp_path / "src")
+    hist_out, out = str(tmp_path / "hist"), str(tmp_path / "out")
+    _drop(hsrc, 0)
+    job.run_stream_once(spark, hsrc, hist_out)
+    zeroed = str(tmp_path / "zeroed")
+    (spark.read.parquet(os.path.join(hist_out, "parsed"))
+     .withColumn("content_hash", F.lit(0).cast("long"))
+     .write.parquet(zeroed))
+    _drop(src, 0)
+    with pytest.raises(ValueError, match=r"content_hash 0.*resume=False"):
+        job.run_bloom_stream_once(spark, src, out, zeroed)
+    assert not os.path.exists(out)
 
 
 @pytest.mark.parametrize("kind", ["plain", "bloom"])
 def test_crash_before_totals_write_recovers(spark, tmp_path, monkeypatch,
                                             recounts, kind):
     """The sink commits, then the state write fails: the next drain finds
-    the sink one batch past the state and re-reads it once."""
+    the sink one batch past the state and re-reads it once, and the Bloom
+    drain's recovered bits are those of history ∪ the committed sink."""
     src, out = str(tmp_path / "src"), str(tmp_path / "out")
     history = str(tmp_path / "hist")
     _drop(str(tmp_path / "hsrc"), 0)
@@ -184,7 +298,7 @@ def test_crash_before_totals_write_recovers(spark, tmp_path, monkeypatch,
     crashed = []
 
     def crash_once(path, obj):
-        if path.endswith("_parsed_totals.json") and not crashed:
+        if path.endswith("_parsed_state.json") and not crashed:
             crashed.append(path)
             raise OSError("injected crash after the sink commit")
         return write(path, obj)
@@ -198,9 +312,14 @@ def test_crash_before_totals_write_recovers(spark, tmp_path, monkeypatch,
     _drop(src, 2)
     assert _drain(spark, kind, src, out, history) == _full(spark, out)
     assert recounts == ["parsed"]
+    sink = os.path.join(out, "parsed")
+    if kind == "bloom":
+        assert _state_bits(out) == _rebuilt_bits(spark, history, sink)
     _drop(src, 3)
     assert _drain(spark, kind, src, out, history) == _full(spark, out)
     assert recounts == ["parsed"]  # back on the counted path
+    if kind == "bloom":
+        assert _state_bits(out) == _rebuilt_bits(spark, history, sink)
 
 
 def test_lost_state_and_lost_progress_recover(spark, tmp_path, recounts):
@@ -209,8 +328,8 @@ def test_lost_state_and_lost_progress_recover(spark, tmp_path, recounts):
         _drop(src, d)
         job.run_stream_once(spark, src, out)
         job.run_links_stream_once(spark, src, out)
-    os.remove(os.path.join(out, "_parsed_totals.json"))
-    os.remove(os.path.join(out, "_links_totals.json"))
+    os.remove(os.path.join(out, "_parsed_state.json"))
+    os.remove(os.path.join(out, "_links_state.json"))
     # no new drop: the drain still cannot vouch for a sink it has no state of
     assert job.run_stream_once(spark, src, out) == _full(spark, out)
     _drop(src, 2)
@@ -236,7 +355,7 @@ def test_replayed_batch_is_recounted(spark, tmp_path, recounts):
     src, out = str(tmp_path / "src"), str(tmp_path / "out")
     _drop(src, 0)
     job.run_stream_once(spark, src, out)
-    state_path = os.path.join(out, "_parsed_totals.json")
+    state_path = os.path.join(out, "_parsed_state.json")
     with open(state_path) as f:
         after_first = json.load(f)
     _drop(src, 1)
@@ -250,15 +369,16 @@ def test_replayed_batch_is_recounted(spark, tmp_path, recounts):
 
     _drop(src, 2)
     assert job.run_stream_once(spark, src, out) == _full(spark, out)
-    assert recounts == ["parsed"]
+    # once on entry (the sink's log ends past the state), once after the
+    # query (its progress reports the replayed batch 1, observed at 0 rows)
+    assert recounts == ["parsed", "parsed"]
 
 
-def test_bloom_fold_skips_uncommitted_files(spark, tmp_path):
+def test_bloom_fold_skips_uncommitted_files(spark, tmp_path, recounts):
     """A part file in the sink directory that the sink's commit log never
     recorded (a failed or retried task's output) is not folded into the
-    Bloom filter: the bits equal those of history plus committed rows."""
-    from htmlparser_spark.streaming.job import bloom_history_bits
-
+    Bloom filter by the recovery recount: the bits equal those of history
+    plus committed rows."""
     hsrc, src = str(tmp_path / "hsrc"), str(tmp_path / "src")
     hist_out, out = str(tmp_path / "hist"), str(tmp_path / "out")
     _drop(hsrc, 0)
@@ -277,21 +397,17 @@ def test_bloom_fold_skips_uncommitted_files(spark, tmp_path):
     orphan_name = "part-99999-orphan.c000.snappy.parquet"
     shutil.copy(os.path.join(orphan_dir, part),
                 os.path.join(out, "parsed", orphan_name))
+    # rewind the state, so the next drain recounts with the orphan present
+    st = _state(out)
+    job._atomic_json_write(os.path.join(out, "_parsed_state.json"),
+                           {**st, "last_batch": -1})
 
     _drop(src, 1)
     got = job.run_bloom_stream_once(spark, src, out, history)
     assert got == _full(spark, out)
-    with open(os.path.join(out, "_bloom_state.json")) as f:
-        state = json.load(f)
-    assert orphan_name not in state["folded"]
-    bits = {r.pos for r in spark.read.parquet(
-        os.path.join(out, "_bloom_bits", f"v{state['version']}")).collect()}
-    committed = spark.read.schema(PARSED_SCHEMA).parquet(
-        os.path.join(out, "parsed"))
-    hist = spark.read.schema(PARSED_SCHEMA).parquet(history)
-    want = {r.pos for r in bloom_history_bits(
-        hist.unionByName(committed)).collect()}
-    assert bits == want
-    orphan_bits = {r.pos for r in bloom_history_bits(
-        spark.read.parquet(orphan_dir)).collect()}
+    assert recounts == ["parsed"]
+    assert os.path.exists(os.path.join(out, "parsed", orphan_name))
+    want = _rebuilt_bits(spark, history, os.path.join(out, "parsed"))
+    assert _state_bits(out) == want
+    orphan_bits = _rebuilt_bits(spark, orphan_dir)
     assert orphan_bits - want  # the orphan would have set new bits

@@ -438,9 +438,10 @@ def test_bloom_incremental_drain_never_rescans_history(spark, tmp_path):
     """VERDICT r4 item 5: the Bloom drain persists its bit set and folds
     only each drained batch back in. Drain 2 (a) runs with a NONEXISTENT
     history_dir — so any attempt to rebuild the filter from history would
-    crash, (b) folds exactly its own new sink files into the next bit-set
-    version (manifest diff), and (c) produces maybe_dup tags identical to
-    the rebuild-from-scratch filter over (history ∪ drain-1 output)."""
+    crash, (b) folds exactly its own committed rows into the state's bits
+    (equal to a rebuild over history ∪ sink), and (c) produces maybe_dup
+    tags identical to the rebuild-from-scratch filter over (history ∪
+    drain-1 output)."""
     import json
 
     from htmlparser_spark.ops import BLOOM_M
@@ -462,20 +463,31 @@ def test_bloom_incremental_drain_never_rescans_history(spark, tmp_path):
     assert r1["maybe_dup_total"] >= n_dup
     assert r1["maybe_dup_total"] - n_dup <= n_f1 * 0.2
 
-    state_path = os.path.join(out_n, "_bloom_state.json")
-    with open(state_path) as f:
-        st1 = json.load(f)
-    assert st1["version"] == 1  # v0 = history seed, v1 = + drain-1 fold
+    state_path = os.path.join(out_n, "_parsed_state.json")
     parsed_dir = os.path.join(out_n, "parsed")
+
+    def state_bits():
+        with open(state_path) as f:
+            st = json.load(f)
+        bits = int(st["bits"], 16)
+        return st, {p for p in range(BLOOM_M) if bits >> p & 1}
+
+    def rebuilt_bits(*dirs):
+        rows = spark.read.parquet(hist_dir).select("content_hash")
+        for d in dirs:
+            rows = rows.union(spark.read.parquet(d).select("content_hash"))
+        return {r.pos for r in bloom_history_bits(rows).collect()}
+
+    st1, bits1 = state_bits()
+    assert st1["last_batch"] == 0
+    # exactly history ∪ this drain's committed rows
+    assert bits1 == rebuilt_bits(parsed_dir)
+    # the persisted filter is a fixed m-bit bitmap, not a history copy
+    assert len(st1["bits"]) == BLOOM_M // 4
+    assert sorted(os.listdir(out_n)) == [
+        "_checkpoint", "_parsed_state.json", "parsed"]
     files1 = sorted(f for f in os.listdir(parsed_dir)
                     if f.endswith(".parquet"))
-    assert st1["folded"] == files1  # exactly this drain's committed files
-
-    # the persisted filter is the ≤ m-row structure, not a history copy
-    bits = spark.read.parquet(os.path.join(out_n, "_bloom_bits", "v1"))
-    assert bits.count() <= BLOOM_M
-    # superseded version GC'd
-    assert not os.path.exists(os.path.join(out_n, "_bloom_bits", "v0"))
 
     # drain 2: duplicates of drain-1's fresh docs + new fresh (seed=5);
     # history_dir is a path that DOES NOT EXIST — reading it would raise,
@@ -486,12 +498,11 @@ def test_bloom_incremental_drain_never_rescans_history(spark, tmp_path):
                                str(tmp_path / "no_such_history"))
     assert r2["rows_total"] == n_dup + n_f1 + n_dof + n_f2
 
-    with open(state_path) as f:
-        st2 = json.load(f)
-    assert st2["version"] == 2
+    st2, bits2 = state_bits()
+    assert st2["last_batch"] == 1
+    assert bits2 == rebuilt_bits(parsed_dir)
     files2 = sorted(f for f in os.listdir(parsed_dir)
                     if f.endswith(".parquet"))
-    assert st2["folded"] == files2
     new_files = sorted(set(files2) - set(files1))
     assert new_files  # drain 2 committed its own files
 
@@ -540,12 +551,14 @@ def test_stream_drain_kind_must_stay_constant(spark, tmp_path):
 
 def test_bloom_crash_between_commit_and_fold_recovers(spark, tmp_path):
     """Code-review finding: if a drain crashes after its sink commit but
-    before its fold, the NEXT drain must fold the pending files BEFORE
-    tagging — otherwise duplicates of the crashed drain's rows would slip
-    through untagged (a Bloom false negative). Simulated by rewinding
-    _bloom_state.json to its post-seed value after a completed drain."""
+    before its state write, the NEXT drain must fold the committed rows
+    into the filter BEFORE tagging — otherwise duplicates of the crashed
+    drain's rows would slip through untagged (a Bloom false negative).
+    Simulated by rewinding the state file to its post-seed value after a
+    completed drain."""
     import json
 
+    from htmlparser_spark.ops import BLOOM_M
     from htmlparser_spark.streaming.job import (
         bloom_history_bits, run_bloom_stream_once)
 
@@ -559,79 +572,61 @@ def test_bloom_crash_between_commit_and_fold_recovers(spark, tmp_path):
     r1 = run_bloom_stream_once(spark, src_n, out_n, hist_dir)
     assert r1["rows_total"] == n1
 
-    # rewind to the crash state: sink files committed, fold never ran
-    state_path = os.path.join(out_n, "_bloom_state.json")
+    # rewind to the crash state: sink files committed, state never written
+    state_path = os.path.join(out_n, "_parsed_state.json")
+    with open(state_path) as f:
+        st = json.load(f)
     with open(state_path, "w") as f:
-        json.dump({"version": 0, "folded": []}, f)
-    hist = spark.read.parquet(hist_dir)
-    bloom_history_bits(hist).write.mode("overwrite").parquet(
-        os.path.join(out_n, "_bloom_bits", "v0"))
+        json.dump({**st, "last_batch": -1, "bits": st["seed_bits"],
+                   "totals": {"rows_total": 0, "maybe_dup_total": 0}}, f)
 
     # drain 2 repeats drop1's content: every row is a duplicate of rows
     # already committed to this sink, so all must be flagged — which only
-    # happens if the pre-drain fold recovered the pending files
+    # happens if the recount on entry recovered the committed rows
     n2 = _write_batch(spark, src_n, 50, 3, "drop1_again")
     r2 = run_bloom_stream_once(spark, src_n, out_n,
                                str(tmp_path / "no_such_history"))
     assert r2["rows_total"] == n1 + n2
     assert r2["maybe_dup_total"] >= n2  # no false negatives after crash
     with open(state_path) as f:
-        st = json.load(f)
-    parsed_dir = os.path.join(out_n, "parsed")
-    files = sorted(f for f in os.listdir(parsed_dir)
-                   if f.endswith(".parquet"))
-    assert st["folded"] == files  # recovery + this drain both folded
-
-
-def test_bloom_fold_gcs_every_superseded_version(spark, tmp_path):
-    """A crash between a fold's state save and its cleanup leaves an older
-    bit-set version on disk. The next fold must remove every version below
-    the one it commits, not only its direct predecessor, or the orphan
-    leaks for good."""
-    import json
-    import shutil
-
-    from htmlparser_spark.streaming.job import run_bloom_stream_once
-
-    src_h, out_h = str(tmp_path / "src_h"), str(tmp_path / "out_h")
-    src_n, out_n = str(tmp_path / "src_n"), str(tmp_path / "out_n")
-    _write_batch(spark, src_h, 20, 1, "hist")
-    run_stream_once(spark, src_h, out_h)
-    hist_dir = os.path.join(out_h, "parsed")
-
-    _write_batch(spark, src_n, 20, 3, "drop1")
-    run_bloom_stream_once(spark, src_n, out_n, hist_dir)
-    bits_root = os.path.join(out_n, "_bloom_bits")
-    assert sorted(os.listdir(bits_root)) == ["v1"]
-    # the orphan a crash right after the v1 state save would leave behind
-    shutil.copytree(os.path.join(bits_root, "v1"),
-                    os.path.join(bits_root, "v0"))
-
-    _write_batch(spark, src_n, 20, 5, "drop2")
-    run_bloom_stream_once(spark, src_n, out_n, hist_dir)
-    with open(os.path.join(out_n, "_bloom_state.json")) as f:
-        assert json.load(f)["version"] == 2
-    assert sorted(os.listdir(bits_root)) == ["v2"]
+        bits = int(json.load(f)["bits"], 16)
+    rows = (spark.read.parquet(hist_dir).select("content_hash")
+            .union(spark.read.parquet(os.path.join(out_n, "parsed"))
+                   .select("content_hash")))
+    # recovery + this drain both folded: bits = history ∪ committed sink
+    assert ({p for p in range(BLOOM_M) if bits >> p & 1}
+            == {r.pos for r in bloom_history_bits(rows).collect()})
 
 
 def test_stream_flags_legacy_marker_refused(spark, tmp_path):
-    """A marker without the drain kind (only {"transcode": ...}) is on-disk
-    state the drain cannot vouch for — it does not record which sink schema
-    the files were written with — so the drain refuses it instead of
-    adopting the requested kind, and leaves the marker untouched."""
+    """On-disk state the drain cannot vouch for is refused, not adopted or
+    migrated: a marker without the drain kind (only {"transcode": ...})
+    does not record which sink schema the files were written with, the
+    other files of the earlier layout (per-sink totals, Bloom manifest) are
+    not this drain's, and a state file of a missing or other format may
+    mean anything. Each leaves the file untouched and writes no sink."""
     import json
 
     import pytest
 
     src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
     _write_batch(spark, src, 10, 42, "d1")
-    os.makedirs(out, exist_ok=True)
-    marker = os.path.join(out, "_stream_flags.json")
-    with open(marker, "w") as f:
-        json.dump({"transcode": False}, f)
-    with pytest.raises(ValueError, match="stream flag mismatch"):
-        run_stream_once(spark, src, out)
-    with open(marker) as f:
-        assert json.load(f) == {"transcode": False}
-    assert not os.path.exists(os.path.join(out, "parsed"))
+    plain = {"kind": "plain", "transcode": False, "last_batch": -1,
+             "totals": {"rows_total": 0}}
+    cases = {"_stream_flags.json": {"transcode": False},
+             "_parsed_totals.json": {"last_batch": -1,
+                                     "totals": {"rows_total": 0}},
+             "_bloom_state.json": {"version": 0, "folded": []},
+             "_parsed_state.json": plain}
+    for i, (name, have) in enumerate([*cases.items(), (
+            "_parsed_state.json", {**plain, "format": 2})]):
+        out = str(tmp_path / f"out{i}")
+        os.makedirs(out)
+        marker = os.path.join(out, name)
+        with open(marker, "w") as f:
+            json.dump(have, f)
+        with pytest.raises(ValueError, match="stream flag mismatch"):
+            run_stream_once(spark, src, out)
+        with open(marker) as f:
+            assert json.load(f) == have
+        assert os.listdir(out) == [name]
