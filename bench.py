@@ -38,8 +38,11 @@ SEED = 42
 
 def _session(cpus: int):
     from htmlparser_spark.pipeline.job import build_session
+    # every number here is a warm repeat, where C2 pays back: the C1-only
+    # driver ran the relational suite ~28% slower (README), so keep C2
     return build_session(app=f"bench-local{cpus}", cpus=cpus,
-                         shuffle_partitions=max(cpus, 8))
+                         shuffle_partitions=max(cpus, 8),
+                         extra_conf={"spark.driver.defaultJavaOptions": ""})
 
 
 def _corpus_path(n_pages: int) -> str:

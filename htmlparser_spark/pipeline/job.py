@@ -35,6 +35,7 @@ BUCKET_TARGET_BYTES = 256 << 20  # scanned source bytes per bucket
 # again, and B = N keys leave ~1/e of the post-exchange tasks empty and the
 # fullest at 2-5x the mean; B = 4N leaves none empty up to N = 64 (1.5-2.75x).
 MIN_BUCKETS_PER_PARTITION = 4
+LINEAGE_FORMAT = 1  # bump it with any change to LINEAGE_SCHEMA's meaning
 # The emit_links parsed sink: PARSED_SCHEMA plus the web-graph columns.
 EMIT_LINKS_COLUMNS = [f.name
                       for f in PARSED_SCHEMA.fields + PARSED_LINK_FIELDS]
@@ -68,6 +69,9 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
         # no call-site capture (~4 py4j round trips per Column call, IPython
         # import on the first); errors lose it unless extra_conf sets "true"
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # C1-only driver JVM, and on local[N] so is all task code: C2 took
+        # ~half its CPU compiling code a one-shot job runs a few times (README)
+        "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
         "spark.ui.enabled": "false",
         **(extra_conf or {})}
     b = SparkSession.builder.appName(app).master(master)
@@ -282,8 +286,9 @@ def lineage_of(parsed: DataFrame, buckets: int,
                transcode: bool = False) -> DataFrame:
     """Per-partition manifest: row counts + an order-insensitive checksum of
     (url, status, main_text), plus the transcode flag the partition was
-    parsed under and the bucket count B its part_key was hashed with.
-    Written alongside the output; resume anti-joins completed part_keys."""
+    parsed under, the bucket count B its part_key was hashed with and the
+    manifest's LINEAGE_FORMAT. Written alongside the output; resume
+    anti-joins completed part_keys."""
     row_hash = F.xxhash64("url", "status", "main_text")
     return parsed.groupBy("part_key").agg(
         F.count("*").alias("n_rows"),
@@ -293,7 +298,8 @@ def lineage_of(parsed: DataFrame, buckets: int,
         # bit_xor: order-insensitive and overflow-free under ANSI mode
         F.bit_xor(row_hash).alias("checksum"),
     ).withColumns({"transcode": F.lit(bool(transcode)),
-                   "buckets": F.lit(int(buckets))})
+                   "buckets": F.lit(int(buckets)),
+                   "format": F.lit(LINEAGE_FORMAT)})
 
 
 def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
@@ -388,6 +394,11 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     if done_rows:
         # completed partitions are never re-parsed, so a resume adopts the
         # recorded B and transcode flag, and refuses what it cannot vouch for
+        formats = {r.format for r in done_rows}
+        if formats != {LINEAGE_FORMAT}:
+            raise ValueError(f"resumed sink's manifest has format {formats}, "
+                             f"not {{{LINEAGE_FORMAT}}}; re-run with resume="
+                             f"False (full re-parse) or a fresh out_dir")
         recorded = {r.buckets for r in done_rows}
         if None in recorded or len(recorded) != 1:
             raise ValueError(f"resumed sink's manifest records bucket counts "

@@ -112,4 +112,6 @@ LINEAGE_SCHEMA = StructType([
     # the B of part_key = pmod(xxhash64(url), B) (job.sink_buckets): resume
     # adopts it and refuses a manifest without exactly one value
     StructField("buckets", IntegerType()),
+    # the manifest layout (job.LINEAGE_FORMAT): resume refuses any other
+    StructField("format", IntegerType()),
 ])

@@ -317,8 +317,9 @@ def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
     kind's packed ``seed_bits`` and ``bits``; fixed-size, written once
     after the query. The drain adds what it observes (``aggs``, and the
     Bloom kind's bit positions) only if its progress reports exactly the
-    batches after ``last_batch`` (``recentProgress`` keeps ~100; a
-    replayed batch is a skipped write that observes 0 rows). Otherwise,
+    batches after ``last_batch`` (``recentProgress`` keeps ~100); a
+    replayed batch, a skipped write that observes 0 rows, has an id
+    ≤ ``last_batch`` and is already in the state. Otherwise,
     and on entry when the sink's log does not end at ``last_batch`` (a
     crash between the sink commit and the state write, lost state),
     ``_recount`` aggregates the committed sink once — on entry before the
@@ -357,7 +358,8 @@ def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
     q.awaitTermination()
     after = _last_committed_batch(spark, sink_dir)
     seen = {p.batchId: p.observedMetrics["drain"] for p in q.recentProgress
-            if "drain" in p.observedMetrics}
+            if "drain" in p.observedMetrics
+            and p.batchId > state["last_batch"]}
     if sorted(seen) == list(range(state["last_batch"] + 1, after + 1)):
         state = advance(seen.values(), after, state)
     else:

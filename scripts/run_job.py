@@ -9,8 +9,9 @@ Usage:
 
 The module zip is built by scripts/make_pyfiles.py. On a cluster the master /
 executor topology comes from spark-submit flags; this script only declares the
-logical job. `--synth N` generates the deterministic synthetic corpus instead
-of reading --src (for smoke tests without input data).
+logical job. On a local master, add the driver's C1-only `--conf` from the
+README "Running" command. `--synth N` generates the deterministic synthetic
+corpus instead of reading --src (for smoke tests without input data).
 """
 from __future__ import annotations
 

@@ -220,7 +220,8 @@ def test_local_frame_takes_manifest_rows(spark, tmp_path):
     with bigint, boolean and int fields."""
     path = str(tmp_path / "_lineage")
     written = [Row(part_key=k, n_rows=3 * k, n_ok=k, n_bytes=1 << 40,
-                   n_errors=0, checksum=-k, transcode=k % 2 == 0, buckets=16)
+                   n_errors=0, checksum=-k, transcode=k % 2 == 0, buckets=16,
+                   format=1)
                for k in range(5)]
     local_frame(spark, written, LINEAGE_SCHEMA).write.parquet(path)
     rows = spark.read.schema(LINEAGE_SCHEMA).parquet(path).collect()

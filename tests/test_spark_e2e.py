@@ -276,35 +276,63 @@ def test_missing_kernel_columns_fail_fast(spark, corpus, tmp_path):
         run_pipeline(spark, bad, str(tmp_path / "out"))
 
 
-def test_resume_refuses_lineage_without_one_bucket_count(spark, corpus,
-                                                        tmp_path):
-    """A manifest that does not record exactly one bucket count B — written
-    before the `buckets` column existed, or mixing two counts — cannot tell
-    a resume how urls were keyed into part_keys. The resume must refuse it,
+def _resume_refuses(spark, corpus, tmp_path, cases):
+    """Each of ``cases`` — (rows of the written manifest → the manifest to
+    put in its place, its schema, refusal regex) — makes a resume refuse,
     naming the ways out, and leave the sink and the manifest untouched."""
     out = str(tmp_path / "out")
     run_pipeline(spark, corpus, out, num_partitions=4)
     lineage_path = os.path.join(out, "_lineage")
     rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).collect()
-    assert len(rows) >= 2 and {r.buckets for r in rows} == {16}
-    legacy = [(r.part_key, r.n_rows, r.n_ok, r.checksum) for r in rows]
-    mixed = [tuple(r)[:-1] + (16 + i % 2,) for i, r in enumerate(rows)]
+    assert len(rows) >= 2 and {(r.buckets, r.format) for r in rows} == {(16, 1)}
 
     def snapshot():
         return sorted((os.path.join(d, f), os.stat(os.path.join(d, f)).st_size,
                        os.stat(os.path.join(d, f)).st_mtime_ns)
                       for d, _, files in os.walk(out) for f in files)
 
-    for manifest, schema in (
-            (legacy, "part_key long, n_rows long, n_ok long, checksum long"),
-            (mixed, LINEAGE_SCHEMA)):
+    for manifest, schema, refusal in cases:
         shutil.rmtree(lineage_path)
-        spark.createDataFrame(manifest, schema).write.parquet(lineage_path)
+        spark.createDataFrame(manifest(rows), schema).write.parquet(
+            lineage_path)
         before = snapshot()
         with pytest.raises(ValueError,
-                           match=r"bucket counts.*resume=False.*fresh out_dir"):
+                           match=refusal + r".*resume=False.*fresh out_dir"):
             run_pipeline(spark, corpus, out, num_partitions=4)
         assert snapshot() == before
+
+
+def _ddl(fields):
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
+
+
+def test_resume_refuses_lineage_without_one_bucket_count(spark, corpus,
+                                                        tmp_path):
+    """A manifest that does not record exactly one bucket count B — without
+    a `buckets` value, or mixing two counts — cannot tell a resume how urls
+    were keyed into part_keys."""
+    _resume_refuses(spark, corpus, tmp_path, [
+        (lambda rows: [{**r.asDict(), "buckets": None} for r in rows],
+         LINEAGE_SCHEMA, r"bucket counts \{None\}"),
+        (lambda rows: [{**r.asDict(), "buckets": 16 + i % 2}
+                       for i, r in enumerate(rows)],
+         LINEAGE_SCHEMA, r"bucket counts \{16, 17\}")])
+
+
+def test_resume_refuses_lineage_of_another_format(spark, corpus, tmp_path):
+    """A manifest whose rows lack the layout `format` (written before it
+    existed, with or without `buckets`) or hold another one is refused
+    before any of its other columns is read."""
+    no_format = [f for f in LINEAGE_SCHEMA.fields if f.name != "format"]
+    legacy = [f for f in no_format if f.name in (
+        "part_key", "n_rows", "n_ok", "checksum")]
+    _resume_refuses(spark, corpus, tmp_path, [
+        (lambda rows: [tuple(r[f.name] for f in legacy) for r in rows],
+         _ddl(legacy), r"format \{None\}"),
+        (lambda rows: [tuple(r[f.name] for f in no_format) for r in rows],
+         _ddl(no_format), r"format \{None\}"),
+        (lambda rows: [{**r.asDict(), "format": 2} for r in rows],
+         LINEAGE_SCHEMA, r"format \{2\}")])
 
 
 def test_sink_layout_sized_to_input(spark, tmp_path):

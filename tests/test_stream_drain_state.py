@@ -4,10 +4,11 @@ every reported total (and the Bloom drain's bit set) must equal a full
 aggregate of the sink, through crashes between the sink commit and the
 state write, lost state, replayed batches and lost progress. Also: the
 drop-directory listing stays on the driver, the commit-log listing resolves
-its py4j classes once, build_session captures no call sites and refuses a
-running session it did not configure, a Bloom drain after the first
-launches no job outside its query, a degenerate Bloom seed is refused, and
-the Bloom recount reads only files the sink committed."""
+its py4j classes once, build_session captures no call sites, runs the
+driver JVM C1-only and refuses a running session it did not configure, a
+Bloom drain after the first launches no job outside its query, a degenerate
+Bloom seed is refused, and the Bloom recount reads only files the sink
+committed."""
 import json
 import os
 import shutil
@@ -173,6 +174,25 @@ spark.stop()
         timeout=300, check=True).stdout
     n_sent, n_origin = map(int, out.split()[-2:])
     assert n_sent > 0 and n_origin == 0
+
+
+@pytest.mark.parametrize("extra_conf, c1_only", [
+    (None, True), ({"spark.driver.defaultJavaOptions": ""}, False)])
+def test_build_session_runs_the_driver_jvm_c1_only(extra_conf, c1_only):
+    """build_session launches the driver JVM with C2 off; an extra_conf
+    naming ``spark.driver.defaultJavaOptions`` replaces it. The JVM starts
+    once per interpreter, so each case runs in a fresh one."""
+    probe = f"""
+from htmlparser_spark.pipeline.job import build_session
+spark = build_session(cpus=1, extra_conf={extra_conf!r})
+print("\\n".join(spark._jvm.java.lang.management.ManagementFactory
+                .getRuntimeMXBean().getInputArguments()))
+spark.stop()
+"""
+    out = subprocess.run([sys.executable, "-c", probe], cwd=REPO, env={
+        **os.environ, "PYTHONPATH": REPO}, capture_output=True, text=True,
+        timeout=300, check=True).stdout
+    assert ("-XX:TieredStopAtLevel=1" in out.splitlines()) is c1_only
 
 
 def test_build_session_refuses_a_session_it_did_not_configure(spark):
@@ -351,7 +371,8 @@ def test_lost_state_and_lost_progress_recover(spark, tmp_path, recounts):
 def test_replayed_batch_is_recounted(spark, tmp_path, recounts):
     """A crash after the sink commit but before the checkpoint commit makes
     the next drain replay that batch; the file sink skips the write, so the
-    drain observes 0 rows for it and must not trust its own count."""
+    drain observes 0 rows for it and must not count it. The entry recount
+    already covers it, so the sink is read once."""
     src, out = str(tmp_path / "src"), str(tmp_path / "out")
     _drop(src, 0)
     job.run_stream_once(spark, src, out)
@@ -369,9 +390,9 @@ def test_replayed_batch_is_recounted(spark, tmp_path, recounts):
 
     _drop(src, 2)
     assert job.run_stream_once(spark, src, out) == _full(spark, out)
-    # once on entry (the sink's log ends past the state), once after the
-    # query (its progress reports the replayed batch 1, observed at 0 rows)
-    assert recounts == ["parsed", "parsed"]
+    # once on entry (the sink's log ends past the state); the replayed
+    # batch 1, observed at 0 rows, is ≤ the recounted last_batch
+    assert recounts == ["parsed"]
 
 
 def test_bloom_fold_skips_uncommitted_files(spark, tmp_path, recounts):
