@@ -74,11 +74,11 @@ def active() -> bool:
 
 
 def report(batches):
-    """mapInPandas function (schema ``active boolean``) reporting, from
+    """mapInArrow function (schema ``active boolean``) reporting, from
     inside the task, whether its worker re-reads zips only when they
     change. It pickles by reference, so running it loads the fix."""
-    import pandas as pd
+    import pyarrow as pa
 
     for _ in batches:
         pass
-    yield pd.DataFrame({"active": [active()]})
+    yield pa.RecordBatch.from_pydict({"active": [active()]})

@@ -3,7 +3,7 @@
 Real deployments decode media with PIL/ffmpeg; those libraries are not in
 this container, so the DECODER here parses a deterministic synthetic format
 ("FIMG"/"FAUD" headers + payload) — but everything Spark-side is production
-shaped: binary columns travel as Arrow buffers through one ``mapInPandas``
+shaped: binary columns travel as Arrow buffers through one ``mapInArrow``
 stage (``_rowmap.flat_map``), the per-row functions unpack bytes with
 ``struct``, and outputs are typed columns.
 Swapping `_decode_image_blob` for PIL is a one-function change.
@@ -270,7 +270,7 @@ def video_frame_sample(spark: SparkSession, n_rows: int = 200) -> DataFrame:
 # Real deployments parse PDFs with pypdf/pdfminer/poppler; none ship in this
 # container, so the DECODER parses a deterministic synthetic container
 # ("FPDF" | u8 n_pages | per page: u16 byte_len | utf-8 text) — but the
-# Spark side is production-shaped: binary blobs through mapInPandas, one
+# Spark side is production-shaped: binary blobs through mapInArrow, one
 # output row per page. The page text is a pure function of (doc_id, page,
 # word) through md5, so the DuckDB oracle recomputes the exact strings and
 # the value-hash gate verifies the real byte round-trip.

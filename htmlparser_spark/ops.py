@@ -987,7 +987,7 @@ def dedup_embedding_cosine_balanced(spark, sf_dir, threshold=0.95,
     return pairs.select("vec_a", "vec_b", F.round("cos", 4).alias("cos_r"))
 
 
-def dedup_semantic_cc(spark, sf_dir, threshold=0.40, max_cell=None):
+def dedup_semantic_cc(spark, sf_dir, threshold=0.40):
     """SemDeDup-shaped semantic dedup: connected components over the
     embedding-cosine near-dup pair graph, keeping one canonical vector per
     semantic cluster. Same reason as dedup_cluster_cc: cosine similarity is
@@ -999,7 +999,7 @@ def dedup_semantic_cc(spark, sf_dir, threshold=0.40, max_cell=None):
     the CC rounds shuffle only the pair set (O(log n) rounds, see
     _cc_labels), and the final labeling join strategy is left to AQE."""
     pairs = _materialized(
-        dedup_embedding_cosine(spark, sf_dir, threshold, max_cell=max_cell)
+        dedup_embedding_cosine(spark, sf_dir, threshold)
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")),
         "semantic_cc_pairs")
     labels = _cc_labels(pairs).select(F.col("doc_id").alias("vec_id"),

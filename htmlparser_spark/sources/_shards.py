@@ -23,9 +23,7 @@ import gzip
 import os
 from functools import partial
 
-import pandas as pd
-
-from .._rowmap import flat_map
+from .._rowmap import arrow_batch, arrow_schema, flat_map
 
 
 def scan_files(spark, path: str, rows_of, schema):
@@ -53,22 +51,24 @@ def write_shards(df, out_dir: str, suffix: str, encode) -> list:
     [(path, n_records), ...] manifest, which it returns; an empty
     partition writes no shard."""
     os.makedirs(out_dir, exist_ok=True)
-    manifest = (df.mapInPandas(
-        partial(_write_shard, out_dir, suffix, encode, tuple(df.columns)),
-        schema="path string, n_records long").collect())
+    schema = "path string, n_records long"
+    manifest = (df.mapInArrow(
+        partial(_write_shard, out_dir, suffix, encode, tuple(df.columns),
+                arrow_schema(schema)),
+        schema).collect())
     out = [(r["path"], r["n_records"]) for r in manifest if r["path"]]
     # idempotent re-runs: drop shards a previous (wider) run left behind
     gc_stale_shards(out_dir, suffix, [p for p, _n in out])
     return out
 
 
-def _write_shard(out_dir, suffix, encode, cols, batches):
+def _write_shard(out_dir, suffix, encode, cols, arrow, batches):
     from pyspark import TaskContext
 
     task = TaskContext.get()
     path = os.path.join(out_dir, f"part-{task.partitionId():05d}{suffix}")
-    rows = [row for pdf in batches
-            for row in zip(*(pdf[c].tolist() for c in cols))]
+    rows = [row for batch in batches
+            for row in zip(*(batch.column(c).to_pylist() for c in cols))]
     if rows:
         # Write-then-rename so a killed/speculative task attempt never
         # leaves a half-written shard where a reader (or a retry of THIS
@@ -80,8 +80,7 @@ def _write_shard(out_dir, suffix, encode, cols, batches):
             f.write(gzip.compress(encode(os.path.basename(path), rows),
                                   mtime=0))
         os.replace(tmp, path)
-    yield pd.DataFrame({"path": [path if rows else None],
-                        "n_records": [len(rows)]})
+    yield arrow_batch([(path if rows else None, len(rows))], arrow)
 
 
 def gc_stale_shards(out_dir: str, suffix: str, keep: list) -> int:

@@ -61,7 +61,7 @@ def surt_key(url: str) -> str:
 
 
 def write_cdx(path: str, rows, *, compress: bool = True) -> int:
-    """Write (url, ts:datetime, status, mime, digest, length, offset,
+    """Write (url, ts:UTC datetime, status, mime, digest, length, offset,
     filename) rows as a CDX-J shard, sorted by (SURT key, timestamp) per
     the format invariant. Deterministic bytes; returns the line count."""
     lines = []
@@ -91,7 +91,7 @@ def synth_cdx(path: str, n: int, seed: int = 42, *,
     statuses (200/301/404/503), mimes (text/html, application/pdf,
     image/jpeg, text/css), and 8 WARC segment files."""
     rng = random.Random(seed)
-    epoch = _dt.datetime(2025, 1, 1)
+    epoch = _dt.datetime(2025, 1, 1, tzinfo=_dt.timezone.utc)
     rows = []
     for i in range(n):
         host = f"www.site{i % 37:03d}.example"
@@ -113,7 +113,8 @@ def _captures_of(path: str, content):
     for line in lines_of(path, content):
         key, tss, payload = line.split(" ", 2)
         obj = json.loads(payload)
-        yield (key, _dt.datetime.strptime(tss, CDX_TS_FMT),
+        ts = _dt.datetime.strptime(tss, CDX_TS_FMT)
+        yield (key, ts.replace(tzinfo=_dt.timezone.utc),
                obj["url"], int(obj["status"]), obj["mime"], obj["digest"],
                int(obj["length"]), int(obj["offset"]), obj["filename"])
 

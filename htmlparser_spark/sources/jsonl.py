@@ -20,13 +20,10 @@ import datetime as _dt
 import json
 from functools import partial
 
-import pandas as pd
-
 from ._shards import lines_of, scan_files, write_shards
 
 _SIMPLE = {"string", "boolean", "tinyint", "smallint", "int", "bigint",
            "float", "double"}
-_INTS = {"tinyint", "smallint", "int", "bigint"}
 
 
 def _check_schema(schema):
@@ -40,22 +37,14 @@ def _check_schema(schema):
 
 
 def _cell(v, kind: str):
-    if v is None or v is pd.NaT or (isinstance(v, float) and v != v):
+    # NaN is not valid JSON: a NaN double is written as null
+    if v is None or (isinstance(v, float) and v != v):
         return None
-    if kind == "timestamp":
-        ts = v.to_pydatetime() if isinstance(v, pd.Timestamp) else v
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
-        return ts.astimezone(_dt.timezone.utc).isoformat()
+    if kind == "timestamp":  # Arrow hands the task aware datetimes
+        return v.astimezone(_dt.timezone.utc).isoformat()
     if kind == "binary":
-        return base64.b64encode(bytes(v)).decode("ascii")
-    if kind in _INTS:
-        # a batch holding any null promotes the pandas column to float64;
-        # serialize the surviving values as ints regardless of batch shape
-        return int(v)
-    if isinstance(v, (bool, int, float, str)):
-        return v
-    return v.item() if hasattr(v, "item") else v  # numpy scalars
+        return base64.b64encode(v).decode("ascii")
+    return v
 
 
 def _fields(schema) -> tuple:

@@ -12,7 +12,7 @@ per-record compression both decode through the same call.
 Scale shape (100 TB = ~100k segment files): the standard Spark strategy —
 and this module's — is ONE FILE = ONE TASK. The ``binaryFile`` scan lists
 segments into tasks with no shuffle; record splitting happens inside the
-task in an Arrow-batched ``mapInPandas`` (the kernel's own slow path is
+task in an Arrow-batched ``mapInArrow`` (the kernel's own slow path is
 ~100× the record-split cost, so the split never dominates); the output is
 exactly the pages schema ``(url, warc_ts, html, text, lang)``, so
 ``run_pipeline`` consumes it unchanged. Record boundaries advance by
@@ -32,8 +32,7 @@ import os
 import zlib
 from functools import partial
 
-import pandas as pd
-
+from .._rowmap import arrow_batch, arrow_schema
 from ._shards import scan_files, write_shards
 
 WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
@@ -50,13 +49,11 @@ def _warc_record(rtype: str, headers: dict[str, str], body: bytes) -> bytes:
 
 def _utc(ts) -> _dt.datetime:
     """``ts`` as an aware datetime, a naive one read as UTC. A missing ts
-    (``read_warc`` yields None for a record whose WARC-Date was malformed;
-    it arrives in a sink as pandas NaT) reads as the epoch, so salvaged
-    text is written rather than failing its whole task on every retry."""
-    if ts is None or pd.isna(ts):
+    (``read_warc`` yields None for a record whose WARC-Date was malformed)
+    reads as the epoch, so salvaged text is written rather than failing
+    its whole task on every retry."""
+    if ts is None:
         return _EPOCH
-    if isinstance(ts, pd.Timestamp):
-        ts = ts.to_pydatetime()
     if ts.tzinfo is None:
         ts = ts.replace(tzinfo=_dt.timezone.utc)
     return ts
@@ -303,26 +300,26 @@ def read_warc_ranged(spark, base_dir: str, plan_df):
     plan = (plan_df.select("filename", "offset", "length")
             .repartition("filename")
             .sortWithinPartitions("filename", "offset"))
-    return plan.mapInPandas(partial(_fetch_ranges, base_dir),
-                            schema=PAGES_SCHEMA)
+    return plan.mapInArrow(
+        partial(_fetch_ranges, base_dir, arrow_schema(PAGES_SCHEMA)),
+        PAGES_SCHEMA)
 
 
-def _fetch_ranges(base_dir: str, batches):
+def _fetch_ranges(base_dir: str, arrow, batches):
     """read_warc_ranged's batch function: it keeps one file open across
     the rows of a batch, so it is its own stage rather than a flat_map."""
-    for pdf in batches:
+    for batch in batches:
         out = []
         handle, handle_name = None, None
-        for fname, off, length in zip(pdf["filename"].tolist(),
-                                      pdf["offset"].tolist(),
-                                      pdf["length"].tolist()):
+        # the plan's columns: filename, offset, length
+        for fname, off, length in zip(*(c.to_pylist() for c in batch.columns)):
             if fname != handle_name:
                 if handle is not None:
                     handle.close()
                 handle = open(os.path.join(base_dir, fname), "rb")
                 handle_name = fname
-            handle.seek(int(off))
-            raw = handle.read(int(length))
+            handle.seek(off)
+            raw = handle.read(length)
             try:
                 data = gzip.decompress(raw)
             except (OSError, EOFError, zlib.error):
@@ -331,5 +328,4 @@ def _fetch_ranges(base_dir: str, batches):
                 out.append((url, ts, html, "", ""))
         if handle is not None:
             handle.close()
-        yield pd.DataFrame(
-            out, columns=["url", "warc_ts", "html", "text", "lang"])
+        yield arrow_batch(out, arrow)

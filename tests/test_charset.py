@@ -97,10 +97,10 @@ def test_sniff_is_pure_codegen(spark):
     pages = synth_charset_pages(spark, 20, seed=SEED, partitions=2)
     plan = (with_sniffed_encoding(pages).select("url", "encoding", "method")
             ._jdf.queryExecution().executedPlan().toString())
-    # the corpus generator itself is one mapInPandas (ArrowEvalPython /
-    # MapInPandas node); the sniff must not add a second Python node
-    n_python = (plan.count("BatchEvalPython")
-                + plan.count("ArrowEvalPython") + plan.count("MapInPandas"))
+    # the corpus generator itself is one Python node (a row-shaped
+    # MapInArrow); the sniff must not add a second one
+    n_python = (plan.count("BatchEvalPython") + plan.count("ArrowEvalPython")
+                + plan.count("MapInPandas") + plan.count("MapInArrow"))
     assert n_python == 1, plan
     assert "Exchange" not in plan, plan
 

@@ -72,8 +72,8 @@ def test_jsonl_shards_are_deterministic(spark, tmp_path):
 
 
 def test_jsonl_int_column_with_nulls_stays_int(spark, tmp_path):
-    # a null in the batch promotes the pandas column to float64; surviving
-    # ints must still serialize as JSON ints (5, not 5.0)
+    # a batch mixing nulls and ints must still serialize the ints as JSON
+    # ints (5, not 5.0) and the null as null
     df = spark.createDataFrame(
         [("a", 5), ("b", None), ("c", 7)], "url string, n bigint")
     out = str(tmp_path / "shards")

@@ -200,8 +200,9 @@ def test_link_host_graph_plan_shape(spark):
         or "HashAggregate" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    # exactly one source parse: synth expand + links kernel, nothing more
-    assert plan.count("MapInPandas") == 2
+    # exactly one source parse: synth expand (a row-shaped mapInArrow) +
+    # links kernel (mapInPandas), nothing more
+    assert plan.count("MapInArrow") == 1 and plan.count("MapInPandas") == 1
 
 
 def test_run_pipeline_emit_links_matches_stage(spark, tmp_path):

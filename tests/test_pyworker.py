@@ -122,6 +122,6 @@ def test_package_stage_loads_fix_in_its_worker(spark):
     the fix is active (on CPython 3.10-3.12; elsewhere it stays off)."""
     df = spark.range(0, 2, 1, 2)
     for _ in range(2):
-        rows = df.mapInPandas(_pyworker.report, "active boolean").collect()
+        rows = df.mapInArrow(_pyworker.report, "active boolean").collect()
     assert [r.active for r in rows] == [LAZY, LAZY]
     assert not _pyworker.active()  # the driver is never patched

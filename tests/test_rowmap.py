@@ -1,12 +1,13 @@
 """The shared row-expanding stage and literal tables
 (htmlparser_spark._rowmap), the rule that every Python stage of the package
-pickles by reference, and the rule that every literal table is a
-``LocalRelation``."""
+pickles by reference, the rule that every literal table is a
+``LocalRelation``, and the rule that only the named column-shaped stages
+cross the boundary as pandas."""
 import ast
 import os
 import sys
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import Row, SparkSession
 from pyspark.sql.types import DataType
@@ -14,7 +15,8 @@ from pyspark.sql.types import DataType
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from htmlparser_spark._rowmap import _flat_map, flat_map, id_range, local_frame
+from htmlparser_spark._rowmap import (
+    _flat_map, arrow_schema, flat_map, id_range, local_frame)
 from htmlparser_spark.pipeline.schema import LINEAGE_SCHEMA
 from perfbench.procstat import descendants
 
@@ -170,6 +172,56 @@ t = spark.createDataFrame(
     assert _create_dataframe_calls(ast.parse(src)) == [5, 9]
 
 
+# the stages that stay on mapInPandas, by file and top-level function: the
+# HTML kernel and the shingle / ANN numpy stages, which the benchmark's
+# event-log reader and per-layer tracer find as MapInPandas nodes
+PANDAS_STAGES = {
+    "htmlparser_spark/pipeline/job.py": {"parse_pages"},
+    "htmlparser_spark/ops.py": {"_shingle_stage", "_ivf_assign", "_l2_assign",
+                                "_pq_update_codebook", "_pq_encode_df",
+                                "_ivfpq_index"},
+}
+
+
+def _pandas_stage_calls(tree):
+    """(line, top-level definition or None) of every ``mapInPandas``
+    call."""
+    return sorted(
+        (n.lineno, getattr(top, "name", None)) for top in tree.body
+        for n in ast.walk(top)
+        if isinstance(n, ast.Call) and _callee(n) == "mapInPandas")
+
+
+def test_only_the_named_stages_cross_as_pandas():
+    """A row-shaped stage reads and writes plain Python values, so it goes
+    through ``mapInArrow`` (``flat_map``, ``write_shards``): the pandas
+    hop costs code and reads naive datetimes in the session time zone."""
+    found = _package_findings(_pandas_stage_calls)
+    stray = {f: [(line, fn) for line, fn in calls
+                 if fn not in PANDAS_STAGES.get(f, ())]
+             for f, calls in found.items()}
+    stray = {f: calls for f, calls in stray.items() if calls}
+    assert not stray, stray
+    # and the list names no stage that has since moved off pandas
+    assert {f: {fn for _l, fn in c} for f, c in found.items()} \
+        == PANDAS_STAGES
+
+
+def test_pandas_guard_sees_a_call():
+    src = '''
+def parse_pages(df):
+    return df.mapInPandas(f, "x long")
+def g(df):
+    def h(batches):
+        yield from batches
+    return df.mapInPandas(h, "x long").mapInArrow(h, "x long")
+x = spark.range(1).mapInPandas(
+    f, "x long")
+'''
+    assert _pandas_stage_calls(ast.parse(src)) == [
+        (3, "parse_pages"), (7, "g"), (8, None)]
+
+
 @pytest.fixture(scope="module")
 def spark():
     s = (SparkSession.builder.master("local[2]")
@@ -241,12 +293,19 @@ def test_flat_map_empty_batches_dropped_and_expanded_rows(spark):
 
     n, parts = 9, 16  # more partitions than ids: most batches are empty,
     # and the ids 0, 3, 6 alone in a partition yield a batch with no
-    # output row, which goes back as a frame with no columns
-    (none,) = _flat_map(rows, ("id",), [pd.DataFrame({"id": [3]})])
-    assert none.empty and len(none.columns) == 0
+    # output row, which goes back as an empty batch of the output schema
+    schema = "k long, tag string, n int"
+    arrow = arrow_schema(schema)
+    (none, two) = _flat_map(rows, ("id",), arrow,
+                            [pa.RecordBatch.from_pydict({"id": [3]}),
+                             pa.RecordBatch.from_pydict({"id": [1, 2]})])
+    assert none.num_rows == 0 and none.schema == arrow
+    assert two.schema == arrow
+    assert two.to_pylist() == [dict(zip(("k", "tag", "n"), r))
+                               for r in rows(1) + rows(2)]
     ids = id_range(spark, n, parts)
     assert ids.rdd.getNumPartitions() == parts
-    out = flat_map(ids, rows, ["id"], "k long, tag string, n int")
+    out = flat_map(ids, rows, ["id"], schema)
     assert out.columns == ["k", "tag", "n"]
     assert [t for _c, t in out.dtypes] == ["bigint", "string", "int"]
     got = sorted(tuple(r) for r in out.collect())
