@@ -127,29 +127,24 @@ def parse_spans_explode(spark, sf_dir):
 def parse_tokens_explode(spark, sf_dir):
     """Tokenizer-only entry point (Program.cs:8-26 commented harness) exposed
     as a debug tokens table: one row per emitted token."""
-    import pandas as pd
+    from htmlparser_spark._rowmap import flat_map
     from htmlparser_spark.kernel.api import tokenize
     from htmlparser_spark.kernel.tokenizer import to_wellformed
 
-    def tok_batch(batches):
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                toks, _errs = tokenize(bytes(html))
-                for i, t in enumerate(toks):
-                    name = t[1] if t[0] in ("start", "end") else ""
-                    data = t[1] if t[0] in ("chars", "comment") else ""
-                    # token payloads are UTF-16 code units (may hold lone
-                    # surrogates) — recombine before they hit Arrow
-                    rows.append((url, i, t[0], str(name),
-                                 to_wellformed(str(data)[:64])))
-            yield pd.DataFrame(
-                rows, columns=["url", "pos", "token_type", "tag", "data_prefix"])
+    def tok_rows(url, html):
+        rows = []
+        for i, t in enumerate(tokenize(bytes(html))[0]):
+            name = t[1] if t[0] in ("start", "end") else ""
+            data = t[1] if t[0] in ("chars", "comment") else ""
+            # token payloads are UTF-16 code units (may hold lone
+            # surrogates) — recombine before they hit Arrow
+            rows.append((url, i, t[0], str(name),
+                         to_wellformed(str(data)[:64])))
+        return rows
 
-    toks = (synth_pages(spark, 60, seed=42, partitions=2)
-            .mapInPandas(tok_batch,
-                         "url string, pos long, token_type string, "
-                         "tag string, data_prefix string"))
+    toks = flat_map(synth_pages(spark, 60, seed=42, partitions=2), tok_rows,
+                    ["url", "html"], "url string, pos long, token_type "
+                    "string, tag string, data_prefix string")
     # pinned per token type: fp_sum fingerprints every (url, pos, type, tag,
     # data_prefix) row, so token-stream drift fails the value-hash gate
     row_fp = _fp(F.col("url"), F.col("pos"), F.col("token_type"),
@@ -431,14 +426,15 @@ def nodes_stats_consistency(spark, sf_dir):
     text_len must equal parent-chain aggregation over the exploded nodes
     table (computed here with a Spark self-join; the DuckDB oracle just
     pins the violation count at 0 rows of violations => n_violations=0)."""
-    import pandas as pd
+    import pyarrow as pa
 
     nodes = _nodes(spark)
 
-    def check(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent = pdf.set_index("node_id")["parent_id"].to_dict()
-        direct = pdf.set_index("node_id")["text_len"].to_dict()
-        expect = pdf.set_index("node_id")["subtree_text_len"].to_dict()
+    def check(table):
+        parent, direct, expect = (
+            dict(zip(table.column("node_id").to_pylist(),
+                     table.column(c).to_pylist()))
+            for c in ("parent_id", "text_len", "subtree_text_len"))
         totals = {nid: 0 for nid in parent}
         for nid, d in direct.items():  # propagate up every parent chain
             cur = nid
@@ -446,10 +442,10 @@ def nodes_stats_consistency(spark, sf_dir):
                 totals[cur] += int(d)
                 cur = parent.get(cur)
         bad = sum(1 for nid in parent if totals[nid] != expect[nid])
-        return pd.DataFrame({"n_violations": [bad]})
+        return pa.table({"n_violations": [bad]})
 
     per_page = (nodes.groupBy("url", "warc_ts")
-                .applyInPandas(check, schema="n_violations long"))
+                .applyInArrow(check, schema="n_violations long"))
     return per_page.agg(F.sum("n_violations").alias("n_violations"))
 
 

@@ -20,12 +20,13 @@ from hashlib import md5 as _md5
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType, LongType, StringType
 
-from ._rowmap import local_frame
+from ._rowmap import arrow_schema, local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -533,8 +534,35 @@ def dedup_simhash(spark, sf_dir):
 
 # --- similarity search over embeddings --------------------------------------------
 
-@pandas_udf(DoubleType())
-def _cosine(a: pd.Series, b: pd.Series) -> pd.Series:
+def _matrix(col: pa.Array) -> np.ndarray:
+    """An Arrow column of equal-length vectors as one (n, d) numpy array of
+    its element type."""
+    return np.stack(col.to_numpy(zero_copy_only=False))
+
+
+def _vector_stage(df, vec, kernel, schema):
+    """The one numpy vector stage: ``df.mapInArrow`` calling
+    ``kernel(batch, X)`` on every non-empty batch, ``X`` being its ``vec``
+    column as a ``_matrix``. The kernel returns the output columns in
+    ``schema``'s order, each an Arrow column of the batch (passed through
+    as it is) or anything ``pa.array`` takes. Bind the kernel with
+    ``partial`` of a module function, so it pickles by reference."""
+    return df.mapInArrow(
+        partial(_vector_batches, kernel, vec, arrow_schema(schema)), schema)
+
+
+def _vector_batches(kernel, vec, arrow, batches):
+    for batch in batches:
+        if batch.num_rows:
+            cols = kernel(batch, _matrix(batch.column(vec)))
+            yield pa.RecordBatch.from_arrays(
+                [c.cast(f.type) if isinstance(c, pa.Array)
+                 else pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                schema=arrow)
+
+
+@arrow_udf(DoubleType())
+def _cosine(a: pa.Array, b: pa.Array) -> pa.Array:
     """Vectorized cosine of two array<double> columns: one Arrow batch in,
     numpy stacks the vectors and BLAS/SIMD does the dot products. Replaces
     the round-2 F.aggregate/zip_with expression, which ran in Spark's
@@ -551,12 +579,11 @@ def _cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     and the gate is empirically hash-green at sf0.001/0.01/0.1. Data with
     EXACT ties (duplicated vectors) would already have been fragile under
     the old interpreted fold vs DuckDB."""
-    A = np.array(a.tolist(), dtype=np.float64)
-    B = np.array(b.tolist(), dtype=np.float64)
+    A, B = _matrix(a), _matrix(b)
     dot = np.einsum("ij,ij->i", A, B)
     na = np.sqrt(np.einsum("ij,ij->i", A, A))
     nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-    return pd.Series(dot / (na * nb))
+    return pa.array(dot / (na * nb))
 
 
 def _emb(spark, sf_dir):
@@ -621,14 +648,14 @@ def _lsh_planes(n_planes: int) -> np.ndarray:
                     dtype=np.float64)
 
 
-@pandas_udf(StringType())
-def _lsh_signature(v: pd.Series, n_planes: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def _lsh_signature(v: pa.Array, n_planes: pa.Array) -> pa.Array:
     """Sign bits of each vector against the hyperplanes: ONE matmul per
     Arrow batch instead of n_planes interpreted-HOF folds per row."""
-    V = np.array(v.tolist(), dtype=np.float64)
-    bits = (V @ _lsh_planes(int(n_planes.iloc[0])).T >= 0).astype(np.uint8)
-    return pd.Series(["".join("1" if b else "0" for b in row)
-                      for row in bits])
+    bits = (_matrix(v) @ _lsh_planes(n_planes[0].as_py()).T >= 0
+            ).astype(np.uint8)
+    return pa.array(["".join("1" if b else "0" for b in row)
+                     for row in bits], pa.string())
 
 
 def embedding_ann_lsh(spark, sf_dir, k=3, n_queries=5, n_planes=8):
@@ -696,20 +723,14 @@ def _ivf_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     cent_ids = np.array([r["cent_id"] for r in rows], dtype=np.int64)
     C = np.array([r["cv"] for r in rows], dtype=np.float64)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    return emb.mapInPandas(partial(_ivf_assign_batches, cent_ids, Cn),
-                           "vec_id bigint, v array<double>, cell bigint")
+    return _vector_stage(emb, "v", partial(_ivf_assign_kernel, cent_ids, Cn),
+                         "vec_id bigint, v array<double>, cell bigint")
 
 
-def _ivf_assign_batches(cent_ids, Cn, batches):
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        V = np.array(pdf["v"].tolist(), dtype=np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        best = np.argmax(Vn @ Cn.T, axis=1)
-        yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                            "v": pdf["v"],
-                            "cell": cent_ids[best]})
+def _ivf_assign_kernel(cent_ids, Cn, batch, V):
+    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+    best = np.argmax(Vn @ Cn.T, axis=1)
+    return batch.column("vec_id"), batch.column("v"), cent_ids[best]
 
 
 def _ivf_centroids(emb: DataFrame, n_cent: int) -> DataFrame:
@@ -2508,21 +2529,14 @@ def _l2_assign(embfp: DataFrame, cent_rows: list) -> DataFrame:
     cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
     C = np.array([r[1] for r in cent_rows], dtype=np.int64)
     c_sq = np.square(C).sum(axis=1)
-    return embfp.mapInPandas(
-        partial(_l2_assign_batches, cent_ids, C, c_sq),
+    return _vector_stage(
+        embfp, "x", partial(_l2_assign_kernel, cent_ids, C, c_sq),
         "vec_id bigint, x array<bigint>, cell bigint, dist bigint")
 
 
-def _l2_assign_batches(cent_ids, C, c_sq, batches):
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        X = np.array(pdf["x"].tolist(), dtype=np.int64)
-        best, dist = _argmin_l2(X, C, c_sq)
-        yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                            "x": pdf["x"],
-                            "cell": cent_ids[best],
-                            "dist": dist})
+def _l2_assign_kernel(cent_ids, C, c_sq, batch, X):
+    best, dist = _argmin_l2(X, C, c_sq)
+    return batch.column("vec_id"), batch.column("x"), cent_ids[best], dist
 
 
 def _kmeans_update(assigned: DataFrame) -> DataFrame:
@@ -2645,8 +2659,8 @@ def _pq_update_codebook(embfp: DataFrame, CB: np.ndarray) -> np.ndarray:
     map-side combine done in the kernel itself). New component =
     floor(sum/count), same arithmetic as _kmeans_update; codes that lose
     every member keep their old entry (deterministic)."""
-    agg = (embfp.mapInPandas(
-        partial(_pq_partials, CB, np.square(CB).sum(axis=2)),
+    agg = (_vector_stage(
+        embfp, "x", partial(_pq_partials, CB, np.square(CB).sum(axis=2)),
         "sub bigint, code bigint, pos bigint, s bigint, n bigint")
         .groupBy("sub", "code", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
@@ -2658,27 +2672,18 @@ def _pq_update_codebook(embfp: DataFrame, CB: np.ndarray) -> np.ndarray:
     return new
 
 
-def _pq_partials(CB, cb_sq, batches):
+def _pq_partials(CB, cb_sq, _batch, X):
+    """One batch's (sub, code, pos, sum, count) rows: sub_d per (subspace,
+    code) that the batch's vectors encode to."""
     M, KS, sub_d = CB.shape
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        X = np.array(pdf["x"].tolist(), dtype=np.int64)
-        codes, _ = _pq_sub_codes(X, CB, cb_sq)
-        out = {"sub": [], "code": [], "pos": [], "s": [], "n": []}
-        for s in range(M):
-            cs = codes[s::M]
-            Xs = X[:, s * sub_d:(s + 1) * sub_d]
-            for c in np.unique(cs):
-                sel = Xs[cs == c]
-                sums = sel.sum(axis=0)
-                for p in range(sub_d):
-                    out["sub"].append(s)
-                    out["code"].append(int(c))
-                    out["pos"].append(p)
-                    out["s"].append(int(sums[p]))
-                    out["n"].append(len(sel))
-        yield pd.DataFrame(out)
+    codes, _ = _pq_sub_codes(X, CB, cb_sq)
+    groups = [(s, c, X[codes[s::M] == c, s * sub_d:(s + 1) * sub_d])
+              for s in range(M) for c in np.unique(codes[s::M])]
+    return (np.repeat([s for s, _c, _sel in groups], sub_d),
+            np.repeat([c for _s, c, _sel in groups], sub_d),
+            np.tile(np.arange(sub_d), len(groups)),
+            np.concatenate([sel.sum(axis=0) for *_k, sel in groups]),
+            np.repeat([len(sel) for *_k, sel in groups], sub_d))
 
 
 def _pq_codebook_trained(embfp: DataFrame,
@@ -2719,23 +2724,17 @@ def _pq_encode_df(embfp: DataFrame, CB: np.ndarray) -> DataFrame:
     """The map-only encode pass given a prebuilt codebook — shared by
     embedding_pq_encode and the ADC searchers so composing them never
     re-collects the training rows."""
-    return embfp.mapInPandas(
-        partial(_pq_encode_batches, CB, np.square(CB).sum(axis=2)),
+    return _vector_stage(
+        embfp, "x",
+        partial(_pq_encode_kernel, CB, np.square(CB).sum(axis=2)),
         "vec_id bigint, sub bigint, code bigint, sqdist bigint")
 
 
-def _pq_encode_batches(CB, cb_sq, batches):
+def _pq_encode_kernel(CB, cb_sq, batch, X):
     M = CB.shape[0]
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        X = np.array(pdf["x"].tolist(), dtype=np.int64)
-        codes, dists = _pq_sub_codes(X, CB, cb_sq)
-        yield pd.DataFrame({
-            "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M),
-            "sub": np.tile(np.arange(M, dtype=np.int64), len(X)),
-            "code": codes,
-            "sqdist": dists})
+    codes, dists = _pq_sub_codes(X, CB, cb_sq)
+    return (np.repeat(batch.column("vec_id").to_numpy(), M),
+            np.tile(np.arange(M, dtype=np.int64), len(X)), codes, dists)
 
 
 def embedding_pq_encode(spark, sf_dir, trained=False):
@@ -2806,13 +2805,11 @@ def embedding_pq_topk(spark, sf_dir, k=3, n_queries=5, q_lo=0,
             .select("query_id", "vec_id", "rank", "adist"))
 
 
-@pandas_udf(LongType())
-def _sqdist_fp(a: pd.Series, b: pd.Series) -> pd.Series:
+@arrow_udf(LongType())
+def _sqdist_fp(a: pa.Array, b: pa.Array) -> pa.Array:
     """Exact integer squared-L2 between fixed-point component arrays —
     numpy per Arrow batch, same reason as _cosine."""
-    A = np.array(a.tolist(), dtype=np.int64)
-    B = np.array(b.tolist(), dtype=np.int64)
-    return pd.Series(np.square(A - B).sum(axis=1))
+    return pa.array(np.square(_matrix(a) - _matrix(b)).sum(axis=1))
 
 
 def _exact_l2_topk(embfp, k, n_queries, q_lo=0):
@@ -2873,25 +2870,17 @@ def _ivfpq_index(embfp: DataFrame, cent_rows: list, CB: np.ndarray) \
     10⁹ vectors. Output is M rows per vector: (vec_id, cell, sub, code)."""
     cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
     C = np.array([r[1] for r in cent_rows], dtype=np.int64)
-    return embfp.mapInPandas(
-        partial(_ivfpq_batches, cent_ids, C, np.square(C).sum(axis=1),
+    return _vector_stage(
+        embfp, "x",
+        partial(_ivfpq_kernel, cent_ids, C, np.square(C).sum(axis=1),
                 CB, np.square(CB).sum(axis=2)),
         "vec_id bigint, cell bigint, sub bigint, code bigint")
 
 
-def _ivfpq_batches(cent_ids, C, c_sq, CB, cb_sq, batches):
-    M = CB.shape[0]
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        X = np.array(pdf["x"].tolist(), dtype=np.int64)
-        best, _ = _argmin_l2(X, C, c_sq)
-        codes, _ = _pq_sub_codes(X, CB, cb_sq)
-        yield pd.DataFrame({
-            "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M),
-            "cell": np.repeat(cent_ids[best], M),
-            "sub": np.tile(np.arange(M, dtype=np.int64), len(X)),
-            "code": codes})
+def _ivfpq_kernel(cent_ids, C, c_sq, CB, cb_sq, batch, X):
+    vec_ids, subs, codes, _ = _pq_encode_kernel(CB, cb_sq, batch, X)
+    best, _ = _argmin_l2(X, C, c_sq)
+    return vec_ids, np.repeat(cent_ids[best], len(CB)), subs, codes
 
 
 def embedding_ann_ivfpq(spark, sf_dir, k=3, n_queries=5, probes=None,

@@ -41,6 +41,28 @@ EMIT_LINKS_COLUMNS = [f.name
                       for f in PARSED_SCHEMA.fields + PARSED_LINK_FIELDS]
 
 
+# The runtime confs of every session of the job (build_session's and
+# scripts/run_job.py's); the launcher sets master, shuffles and JVM options.
+SESSION_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+    # rows are also BYTE-capped per batch, so a run of multi-MB pages
+    # can't assemble a 512-row x 5 MB = 2.5 GB Arrow batch in a worker
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 << 20),
+    "spark.python.worker.reuse": "true",
+    "spark.sql.files.maxPartitionBytes": "128m",
+    # list up to 1024 dirs on the driver: above the default 32 a stream
+    # of drop dirs paid a ~0.25 s listing job per scan and per trigger
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
+    # no call-site capture (~4 py4j round trips per Column call, IPython
+    # import on the first); errors lose it unless extra_conf sets "true"
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
+
 def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
                   extra_conf=None) -> SparkSession:
     """Session tuned for the kernel stage: Arrow batches sized for large
@@ -52,31 +74,13 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
     master = f"local[{cpus}]"
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-        # rows are also BYTE-capped per batch, so a run of multi-MB pages
-        # can't assemble a 512-row x 5 MB = 2.5 GB Arrow batch in a worker
-        "spark.sql.execution.arrow.maxBytesPerBatch": str(64 << 20),
-        "spark.python.worker.reuse": "true",
+        **SESSION_CONF,
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-        "spark.sql.files.maxPartitionBytes": "128m",
-        # list up to 1024 dirs on the driver: above the default 32 a stream
-        # of drop dirs paid a ~0.25 s listing job per scan and per trigger
-        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
-        # no call-site capture (~4 py4j round trips per Column call, IPython
-        # import on the first); errors lose it unless extra_conf sets "true"
-        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # C1-only driver JVM, and on local[N] so is all task code: C2 took
         # ~half its CPU compiling code a one-shot job runs a few times (README)
         "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
         "spark.ui.enabled": "false",
         **(extra_conf or {})}
-    b = SparkSession.builder.appName(app).master(master)
-    for k, v in conf.items():
-        b = b.config(k, v)
     active = SparkSession.getActiveSession()
     if active is not None:  # getOrCreate would hand it back as it is
         stale = {k: active.conf.get(k, None) for k, v in conf.items()
@@ -88,7 +92,8 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
                 f"{active.sparkContext.master!r}, static confs {stale}) was "
                 f"not built with master {master!r} and these confs; call "
                 "spark.stop() on it first")
-    return b.getOrCreate()
+    return (SparkSession.builder.appName(app).master(master)
+            .config(map=conf).getOrCreate())
 
 
 @lru_cache(maxsize=None)

@@ -61,12 +61,15 @@ def surt_key(url: str) -> str:
 
 
 def write_cdx(path: str, rows, *, compress: bool = True) -> int:
-    """Write (url, ts:UTC datetime, status, mime, digest, length, offset,
-    filename) rows as a CDX-J shard, sorted by (SURT key, timestamp) per
-    the format invariant. Deterministic bytes; returns the line count."""
+    """Write (url, ts, status, mime, digest, length, offset, filename) rows
+    as a CDX-J shard, sorted by (SURT key, UTC timestamp) per the format
+    invariant; an aware ``ts`` is converted to UTC, a naive one is read as
+    UTC. Deterministic bytes; returns the line count."""
     lines = []
     for url, ts, status, mime, digest, length, offset, filename in rows:
         key = surt_key(url)
+        if ts.tzinfo is not None:
+            ts = ts.astimezone(_dt.timezone.utc)
         tss = ts.strftime(CDX_TS_FMT)
         payload = json.dumps(
             {"url": url, "mime": mime, "status": str(int(status)),

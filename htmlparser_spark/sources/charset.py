@@ -9,8 +9,8 @@ or a ``<meta charset>``. Feeding those bytes to a UTF-8-only decode turns
 every non-ASCII character into U+FFFD mojibake. This module is the opt-in
 ingest pass that fixes that WITHOUT touching kernel parity: sniff the
 encoding per page (pure codegen — zero Python), transcode only the non-UTF-8
-minority to UTF-8 bytes (vectorized pandas_udf on that small slice), and
-hand the kernel what it already expects.
+minority to UTF-8 bytes (an ``arrow_udf`` on that small slice), and hand
+the kernel what it already expects.
 
 Sniffing follows the WHATWG "encoding sniffing algorithm" shape
 (https://html.spec.whatwg.org/multipage/parsing.html#determining-the-character-encoding),
@@ -34,13 +34,13 @@ to a char), so the regex runs JVM-side on any input. Unknown labels fall
 through to the default, like a browser.
 
 Scale shape: the sniff is per-row codegen expressions (no exchange, no
-Python); the transcode pandas_udf runs only on rows whose sniffed encoding
+Python); the transcode ``arrow_udf`` runs only on rows whose sniffed encoding
 is not already UTF-8 — at Common-Crawl ratios ~95% of bytes never leave the
 JVM, and the slow slice is Arrow-batched numpy-free string codec work.
 """
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
@@ -121,17 +121,16 @@ def decode_bytes(data: bytes, encoding: str) -> str:
     return s
 
 
-@F.pandas_udf(StringType())
-def _decode_udf(html: pd.Series, encoding: pd.Series) -> pd.Series:
-    return pd.Series([decode_bytes(b, e) for b, e in zip(html, encoding)],
-                     dtype=object)
+@F.arrow_udf(StringType())
+def _decode_udf(html: pa.Array, encoding: pa.Array) -> pa.Array:
+    return pa.array([decode_bytes(b, e) for b, e in
+                     zip(html.to_pylist(), encoding.to_pylist())], pa.string())
 
 
-@F.pandas_udf(BinaryType())
-def _transcode_udf(html: pd.Series, encoding: pd.Series) -> pd.Series:
-    return pd.Series(
-        [decode_bytes(b, e).encode("utf-8") for b, e in zip(html, encoding)],
-        dtype=object)
+@F.arrow_udf(BinaryType())
+def _transcode_udf(html: pa.Array, encoding: pa.Array) -> pa.Array:
+    return pa.array([decode_bytes(b, e).encode("utf-8") for b, e in
+                     zip(html.to_pylist(), encoding.to_pylist())], pa.binary())
 
 
 def decoded_text(df: DataFrame, html_col: str = "html",

@@ -20,6 +20,14 @@ import json
 import sys
 
 
+def job_session(builder):
+    """The job's session from ``builder`` (``SparkSession.builder``): the
+    pipeline's runtime confs on whatever master spark-submit launched."""
+    from htmlparser_spark.pipeline.job import SESSION_CONF
+    return (builder.appName("htmlparser-extract").config(map=SESSION_CONF)
+            .getOrCreate())
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", help="input pages parquet/Iceberg path")
@@ -57,7 +65,7 @@ def main(argv=None):
     from htmlparser_spark.pipeline.job import run_pipeline
     from htmlparser_spark.synth import synth_pages
 
-    spark = SparkSession.builder.appName("htmlparser-extract").getOrCreate()
+    spark = job_session(SparkSession.builder)
     src = args.src
     if args.synth:
         src = synth_pages(spark, args.synth, seed=42)

@@ -32,6 +32,12 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _python_nodes(plan: str) -> list:
+    """The Python-evaluating plan nodes named in ``plan``."""
+    return [n for n in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                        "MapInArrow") if n in plan]
+
+
 def test_sessionize_single_exchange(spark):
     """Lag window + running session numbering + session aggregate must all
     reuse ONE user_id exchange (group keys ⊇ window partition key)."""
@@ -55,7 +61,7 @@ def test_heavy_hitters_distributed_topk(spark):
 
 
 def test_ivf_assignment_is_map_only(spark):
-    """Nearest-centroid assignment = codebook matmul in mapInPandas over an
+    """Nearest-centroid assignment = codebook matmul in mapInArrow over an
     already-partitioned corpus: zero Exchange, zero joined rows."""
     import numpy as np
     rng = np.random.RandomState(0)
@@ -66,7 +72,7 @@ def test_ivf_assignment_is_map_only(spark):
              .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
     p = plan_of(ops._ivf_assign(emb, cents))
     # the input repartition is the only exchange; assignment adds none
-    assert p.count("Exchange") == 1 and p.count("MapInPandas") == 1, p
+    assert p.count("Exchange") == 1 and p.count("MapInArrow") == 1, p
     assert "Join" not in p, p
 
 
@@ -126,7 +132,7 @@ def test_url_dedup_single_exchange_no_python(spark):
     p = plan_of(ops.corpus_url_dedup(spark, SF))
     assert p.count("Exchange") == 1, p
     assert "hashpartitioning(canonical_url" in p, p
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p, p
+    assert not _python_nodes(p), p
 
 
 def test_dsir_scoring_broadcasts_log_ratio_table(spark):
@@ -154,7 +160,7 @@ def test_span_scrub_no_cartesian_no_python(spark):
     blowup, no Python eval anywhere."""
     p = plan_of(ops.text_span_scrub(spark, SF))
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p, p
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p, p
+    assert not _python_nodes(p), p
 
 
 def test_lm_perplexity_broadcasts_bucket_table(spark):
@@ -208,7 +214,7 @@ def test_line_dedup_no_cartesian_no_python(spark):
     Python eval."""
     p = plan_of(ops.text_line_dedup(spark, SF))
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p, p
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p, p
+    assert not _python_nodes(p), p
     assert "partial_count" in p, p
 
 
@@ -287,7 +293,7 @@ def test_balanced_pair_join_broadcasts_subcell_table(spark):
 
 def test_ivfpq_index_build_is_map_only(spark):
     """The IVF-PQ index build (cell + codes) must be ONE map-only pass:
-    zero Exchange between the embeddings scan and mapInPandas."""
+    zero Exchange between the embeddings scan and mapInArrow."""
     embfp = ops._emb_fp(spark, SF)
     cent_rows = [(r["cent_id"], list(r["cx"])) for r in
                  embfp.filter(F.col("vec_id") < 16)
@@ -297,7 +303,7 @@ def test_ivfpq_index_build_is_map_only(spark):
     p = plan_of(ops._ivfpq_index(embfp, cent_rows,
                                  ops._pq_codebook(embfp)))
     assert "Exchange" not in p, p
-    assert "MapInPandas" in p, p
+    assert "MapInArrow" in p, p
 
 
 def test_pq_topk_broadcasts_adc_table(spark):

@@ -8,8 +8,10 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -332,3 +334,66 @@ def test_ivfpq_trained_out_of_training_queries(spark):
         assert all(r["n_exact"] == 10 for r in rows) and len(rows) == 30
         hits[trained] = sum(r["n_hits"] for r in rows)
     assert hits[True] >= hits[False]
+
+
+def _vector_stage_rows(spark):
+    """What each numpy vector stage returns over the sf0.001 embeddings."""
+    emb, embfp = ops._emb(spark, SF), ops._emb_fp(spark, SF)
+    n_cent = ops._ivf_n_centroids(ops._emb_count(spark, SF))
+    cent_rows = [(r["vec_id"], list(r["x"])) for r in
+                 embfp.filter(F.col("vec_id") < n_cent).orderBy("vec_id")
+                 .collect()]
+    CB = ops._pq_codebook(embfp)
+    assigned, cents = ops._kmeans_fit(embfp, ops.KMEANS_K, ops.KMEANS_ROUNDS)
+    q = (emb.filter(F.col("vec_id") < 3)
+         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")))
+    return {
+        "ivf_assign": sorted(ops._ivf_assign(
+            emb, ops._ivf_centroids(emb, n_cent)).collect()),
+        "l2_assign": (sorted(assigned.collect()), cents),
+        "pq_trained": ops._pq_codebook_trained(embfp).tolist(),
+        "pq_encode": sorted(ops._pq_encode_df(embfp, CB).collect()),
+        "ivfpq_index": sorted(
+            ops._ivfpq_index(embfp, cent_rows, CB).collect()),
+        "cosine": sorted(emb.crossJoin(q).select(
+            "query_id", "vec_id",
+            ops._cosine(F.col("qv"), F.col("v")).alias("cos")).collect()),
+    }
+
+
+def test_vector_stages_do_not_depend_on_the_batch_size(spark):
+    """Seven-row Arrow batches split every partition into many batches,
+    so _pq_partials' per-batch partial sums are summed across batches;
+    each stage must return exactly the rows of one batch per partition."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    want = _vector_stage_rows(spark)
+    spark.conf.set(key, "7")
+    try:
+        sizes = [r["n"] for r in ops._vector_stage(
+            ops._emb_fp(spark, SF), "x", lambda batch, X: ([len(X)],),
+            "n long").collect()]
+        assert max(sizes) == 7 and sum(sizes) == 500
+        got = _vector_stage_rows(spark)
+    finally:
+        spark.conf.set(key, before)
+    for stage in want:
+        assert got[stage] == want[stage], stage
+
+
+def test_vector_stage_skips_empty_batches():
+    arrow = pa.schema([("vec_id", pa.int64()), ("n", pa.int64())])
+    schema = pa.schema([("vec_id", pa.int64()), ("x", pa.list_(pa.int64()))])
+    empty = pa.RecordBatch.from_pydict({"vec_id": [], "x": []}, schema)
+    two = pa.RecordBatch.from_pydict(
+        {"vec_id": [4, 5], "x": [[1, 2], [1, 2]]}, schema)
+    seen = []
+
+    def kernel(batch, X):
+        seen.append(X.shape)
+        return batch.column("vec_id"), X.sum(axis=1)
+
+    out = list(ops._vector_batches(kernel, "x", arrow, [empty, two, empty]))
+    assert seen == [(2, 2)]
+    assert [b.to_pylist() for b in out] == [
+        [{"vec_id": 4, "n": 3}, {"vec_id": 5, "n": 3}]]

@@ -1,8 +1,8 @@
 """The shared row-expanding stage and literal tables
 (htmlparser_spark._rowmap), the rule that every Python stage of the package
 pickles by reference, the rule that every literal table is a
-``LocalRelation``, and the rule that only the named column-shaped stages
-cross the boundary as pandas."""
+``LocalRelation``, and the rule that only the three named stages cross
+the boundary as pandas."""
 import ast
 import os
 import sys
@@ -21,8 +21,9 @@ from htmlparser_spark.pipeline.schema import LINEAGE_SCHEMA
 from perfbench.procstat import descendants
 
 PKG = os.path.join(REPO, "htmlparser_spark")
+UDFS = ("pandas_udf", "arrow_udf")
 STAGES = ("mapInPandas", "mapInArrow", "applyInPandas",
-          "applyInPandasWithState", "pandas_udf")
+          "applyInPandasWithState", "applyInArrow") + UDFS
 
 
 def _callee(node):
@@ -48,7 +49,7 @@ def _handed_function(call):
 def _nested_stage_functions(tree):
     """(line, name) of every stage call handed a lambda or a function
     defined inside the function that makes the call, and of every such
-    function decorated with ``pandas_udf``."""
+    function decorated with ``pandas_udf`` or ``arrow_udf``."""
     bad = []
     for outer in ast.walk(tree):
         if not isinstance(outer, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -57,7 +58,7 @@ def _nested_stage_functions(tree):
                   if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
                   and n is not outer]
         bad += [(n.lineno, n.name) for n in nested
-                if any(_callee(d) == "pandas_udf" for d in n.decorator_list)]
+                if any(_callee(d) in UDFS for d in n.decorator_list)]
         inner = {n.name for n in nested}
         inner |= {t.id for n in ast.walk(outer)
                   if isinstance(n, ast.Assign)
@@ -74,24 +75,24 @@ def _nested_stage_functions(tree):
     return sorted(set(bad))
 
 
-def _package_findings(check):
-    """{file: check(its AST)} for every package file where it finds any."""
+def _package_findings(check, *files):
+    """{file: check(its AST)} for every package file, and each of ``files``
+    (repo-relative), where it finds any."""
+    paths = [os.path.join(root, fn) for root, _dirs, fns in os.walk(PKG)
+             for fn in fns if fn.endswith(".py")]
     found = {}
-    for root, _dirs, files in os.walk(PKG):
-        for fn in files:
-            if fn.endswith(".py"):
-                path = os.path.join(root, fn)
-                with open(path, encoding="utf-8") as f:
-                    bad = check(ast.parse(f.read()))
-                if bad:
-                    found[os.path.relpath(path, REPO)] = bad
+    for path in paths + [os.path.join(REPO, f) for f in files]:
+        with open(path, encoding="utf-8") as f:
+            bad = check(ast.parse(f.read()))
+        if bad:
+            found[os.path.relpath(path, REPO)] = bad
     return found
 
 
 def test_no_stage_is_handed_a_nested_function():
     """A closure pickles by value, so a worker that runs only closure
-    stages (``pandas_udf`` ones included) never imports the package or
-    loads its ``_pyworker`` fix."""
+    stages (UDF ones included) never imports the package or loads its
+    ``_pyworker`` fix."""
     found = _package_findings(_nested_stage_functions)
     assert not found, found
 
@@ -134,8 +135,14 @@ def _top(v):
     return v
 def c(df):
     return df.select(_top("v"), pandas_udf(_top.func, "string")("v"))
+def d(df):
+    @F.arrow_udf("string")
+    def sig(v):
+        return v
+    return df.groupBy("k").applyInArrow(lambda t: t, "x long")
 '''
-    assert _nested_stage_functions(ast.parse(src)) == [(4, "sig"), (9, "g")]
+    assert _nested_stage_functions(ast.parse(src)) == [
+        (4, "sig"), (9, "g"), (17, "sig"), (19, "<lambda>")]
 
 
 def _create_dataframe_calls(tree):
@@ -172,31 +179,38 @@ t = spark.createDataFrame(
     assert _create_dataframe_calls(ast.parse(src)) == [5, 9]
 
 
-# the stages that stay on mapInPandas, by file and top-level function: the
-# HTML kernel and the shingle / ANN numpy stages, which the benchmark's
-# event-log reader and per-layer tracer find as MapInPandas nodes
+# the stages that stay on pandas, by file and top-level function
 PANDAS_STAGES = {
+    # the HTML kernel: perfbench/layers.py drives parse_batch with pandas
+    # frames
     "htmlparser_spark/pipeline/job.py": {"parse_pages"},
-    "htmlparser_spark/ops.py": {"_shingle_stage", "_ivf_assign", "_l2_assign",
-                                "_pq_update_codebook", "_pq_encode_df",
-                                "_ivfpq_index"},
+    # the last curate_ops stage that perfbench/eventlog.py finds by the node
+    # name MapInPandas, which keeps the traced arrow.* readings non-zero
+    "htmlparser_spark/ops.py": {"_shingle_stage"},
+    # the per-host rollup (applyInPandasWithState) moves to
+    # transformWithState only if that is less code (ROADMAP item 5)
+    "htmlparser_spark/streaming/job.py": {"host_rollup_stream"},
 }
+PANDAS_CALLS = ("mapInPandas", "applyInPandas", "applyInPandasWithState",
+                "pandas_udf")
 
 
 def _pandas_stage_calls(tree):
-    """(line, top-level definition or None) of every ``mapInPandas``
-    call."""
-    return sorted(
-        (n.lineno, getattr(top, "name", None)) for top in tree.body
+    """(line, top-level definition or None) of every call of a pandas
+    stage and of every function decorator naming ``pandas_udf``."""
+    return sorted({
+        (m.lineno, getattr(top, "name", None)) for top in tree.body
         for n in ast.walk(top)
-        if isinstance(n, ast.Call) and _callee(n) == "mapInPandas")
+        for m in ([n] if isinstance(n, ast.Call)
+                  else getattr(n, "decorator_list", []))
+        if _callee(m) in PANDAS_CALLS})
 
 
 def test_only_the_named_stages_cross_as_pandas():
-    """A row-shaped stage reads and writes plain Python values, so it goes
-    through ``mapInArrow`` (``flat_map``, ``write_shards``): the pandas
-    hop costs code and reads naive datetimes in the session time zone."""
-    found = _package_findings(_pandas_stage_calls)
+    """Every other Python stage crosses as Arrow (``mapInArrow``,
+    ``arrow_udf``, ``applyInArrow``): the pandas hop costs code and a copy
+    per batch, and reads naive datetimes in the session time zone."""
+    found = _package_findings(_pandas_stage_calls, "__spark_entry__.py")
     stray = {f: [(line, fn) for line, fn in calls
                  if fn not in PANDAS_STAGES.get(f, ())]
              for f, calls in found.items()}
@@ -217,9 +231,25 @@ def g(df):
     return df.mapInPandas(h, "x long").mapInArrow(h, "x long")
 x = spark.range(1).mapInPandas(
     f, "x long")
+@F.pandas_udf(DoubleType())
+def _cos(a, b):
+    return a
+@pandas_udf
+def _sig(v):
+    return v
+@F.arrow_udf(DoubleType())
+def _dot(a, b):
+    return a
+def k(df):
+    a = df.groupBy("k").applyInPandas(f, "x long")
+    b = df.groupBy("k").applyInArrow(f, "x long")
+    s = df.groupBy("k").applyInPandasWithState(
+        f, "x long", "s long", "append", "NoTimeout")
+    return s.select(F.pandas_udf(f, "long")("x"))
 '''
     assert _pandas_stage_calls(ast.parse(src)) == [
-        (3, "parse_pages"), (7, "g"), (8, None)]
+        (3, "parse_pages"), (7, "g"), (8, None), (10, "_cos"), (13, "_sig"),
+        (20, "k"), (22, "k"), (24, "k")]
 
 
 @pytest.fixture(scope="module")

@@ -1,13 +1,16 @@
 """Timestamps cross the Python boundary as instants: the CDX source, the
 JSONL sink and reader and the WET sink and reader give the same epoch
 seconds and the same written text whatever ``spark.sql.session.timeZone``
-is."""
+is, and ``write_cdx`` stamps every capture in UTC whatever zone it is
+given in."""
 import calendar
+import datetime as dt
 import gzip
 import json
 import os
 import sys
 import time
+from zoneinfo import ZoneInfo
 
 import pytest
 from pyspark.sql import SparkSession
@@ -16,7 +19,8 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from htmlparser_spark.sources import (
-    read_cdx, read_jsonl, read_wet, synth_cdx, write_jsonl, write_wet)
+    read_cdx, read_jsonl, read_wet, synth_cdx, write_cdx, write_jsonl,
+    write_wet)
 
 T = 1735689600  # 2025-01-01T00:00:00Z
 
@@ -77,3 +81,17 @@ def test_timestamps_are_instants_in_any_session_zone(spark, tmp_path, zone):
         assert back.select(F.unix_timestamp("warc_ts")).first()[0] == T
     finally:
         spark.conf.set("spark.sql.session.timeZone", before)
+
+
+def test_write_cdx_stamps_aware_times_in_utc(tmp_path):
+    """An aware capture time is stamped, and sorted, as its UTC instant; a
+    naive one is read as UTC."""
+    at = dt.datetime.fromtimestamp(T, dt.timezone.utc)
+    rows = [("https://a.example/", ts, 200, "text/html", "D", 1, 0, "s.gz")
+            for ts in (at.astimezone(ZoneInfo("America/New_York")),
+                       dt.datetime(2024, 12, 31, 20))]
+    path = str(tmp_path / "cdx-00000")
+    assert write_cdx(path, rows, compress=False) == 2
+    with open(path, encoding="utf-8") as f:
+        stamps = [line.split(" ")[1] for line in f]
+    assert stamps == ["20241231200000", "20250101000000"]

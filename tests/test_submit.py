@@ -2,19 +2,84 @@
 
 Runs the real spark-submit CLI from a directory OUTSIDE the repo with only
 the built zip on --py-files: driver AND executor Python workers must resolve
-htmlparser_spark from the zip."""
+htmlparser_spark from the zip. Also pins the confs each way of starting
+the job puts on its session."""
 import json
 import os
 import shutil
 import subprocess
 import sys
+from types import SimpleNamespace
 
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from htmlparser_spark.pipeline import job
 from scripts.make_pyfiles import build
+
+
+class _Builder:
+    """A session builder that records what it is given; ``getOrCreate``
+    hands back the builder itself."""
+
+    def __init__(self):
+        self.app = self.master_url = None
+        self.conf = {}
+
+    def appName(self, name):
+        self.app = name
+        return self
+
+    def master(self, url):
+        self.master_url = url
+        return self
+
+    def config(self, key=None, value=None, *, map=None):
+        self.conf.update(map or {key: value})
+        return self
+
+    def getOrCreate(self):
+        return self
+
+
+def test_build_session_conf_is_unchanged(monkeypatch):
+    b = _Builder()
+    monkeypatch.setattr(job, "SparkSession", SimpleNamespace(
+        builder=b, getActiveSession=lambda: None))
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert job.build_session(cpus=4) is b
+    assert (b.app, b.master_url) == ("htmlparser-spark", "local[4]")
+    assert b.conf == {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+        "spark.sql.execution.arrow.maxBytesPerBatch": "67108864",
+        "spark.python.worker.reuse": "true",
+        "spark.driver.memory": "8g",
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
+        "spark.ui.enabled": "false",
+    }
+
+
+def test_submitted_job_runs_with_the_pipeline_session_conf():
+    """``run_job.py`` applies the same runtime confs as ``build_session``
+    and leaves the master, shuffle partitions and driver JVM options to
+    spark-submit."""
+    from scripts.run_job import job_session
+    b = job_session(_Builder())
+    assert b.app == "htmlparser-extract" and b.master_url is None
+    assert b.conf == job.SESSION_CONF
+    assert b.conf["spark.sql.execution.arrow.maxRecordsPerBatch"] == "512"
+    assert not {"spark.sql.shuffle.partitions", "spark.driver.memory",
+                "spark.driver.defaultJavaOptions"} & set(b.conf)
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
