@@ -13,14 +13,13 @@ cluster):
 """
 from __future__ import annotations
 
-import itertools
-import os
 from functools import partial
 from hashlib import md5 as _md5
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
@@ -266,60 +265,32 @@ def _shingles(df, n=3):
         "doc_id", F.explode("shs").alias("shingle"))
 
 
-_CKPT_SEQ = itertools.count()
-_CKPT_PATHS: list[str] = []
+_MATERIALIZED: list[DataFrame] = []
 
 
 def cleanup_checkpoints() -> int:
-    """Delete every parquet checkpoint _materialized has written in this
-    process and return how many were removed. Call it once the DataFrames
-    returned by the dedup operators have been fully consumed — they lazily
-    re-scan these paths, so cleaning up mid-query breaks them. A long-lived
-    application that never calls this (or doesn't put SPARK_GRAFT_CKPT_DIR
-    on storage with an external TTL) accumulates checkpoints without
-    bound.
-
-    Also drops every memoized DataFrame handle (_CC_PAIRS_CACHE): those
-    handles lazily read the paths reclaimed here, so keeping them would
-    hand later dedup_cluster_* calls a DataFrame over a deleted directory
-    instead of letting them re-materialize. Cache-mode entries are
-    unpersisted for the same reason — reclaim means reclaim."""
-    import shutil
-    for df in _CC_PAIRS_CACHE.values():
+    """Unpersist every DataFrame _materialized has cached in this process
+    and return how many it unpersisted. A DataFrame an operator returned
+    stays valid: it recomputes from lineage what it read from the cache."""
+    n = len(_MATERIALIZED)
+    while _MATERIALIZED:
         try:
-            df.unpersist()
-        except Exception:
+            _MATERIALIZED.pop().unpersist()
+        except Py4JError:
             pass  # session already stopped; nothing to release
-    _CC_PAIRS_CACHE.clear()
-    n = 0
-    while _CKPT_PATHS:
-        shutil.rmtree(_CKPT_PATHS.pop(), ignore_errors=True)
-        n += 1
     return n
 
 
-def _materialized(df: DataFrame, name: str) -> DataFrame:
-    """Reuse a computed intermediate across the multiple consumers of the
-    dedup plans. Default: executor-memory cache — right for bench scale. At
-    100 TB set SPARK_GRAFT_CKPT_DIR: the shingle set (>> memory) is written
-    once to storage as parquet and re-scanned, instead of thrashing the
-    block manager / recomputing the explode per consumer. The path gets a
-    per-process unique suffix so a later invocation (other corpus,
-    concurrent job) can never clobber data a previously returned DataFrame
-    still lazily reads."""
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CKPT_DIR")
-    if ckpt_dir:
-        path = os.path.join(ckpt_dir,
-                            f"{name}-{os.getpid()}-{next(_CKPT_SEQ)}")
-        df.write.mode("overwrite").parquet(path)
-        _CKPT_PATHS.append(path)  # reclaimed by cleanup_checkpoints()
-        return df.sparkSession.read.parquet(path)
+def _materialized(df: DataFrame) -> DataFrame:
+    """Reuse a computed intermediate across the multiple consumers of a
+    plan: cache it in executor memory, released by cleanup_checkpoints()."""
     df = df.cache()
     # eager fill: a lazy cache is raced by the first job's parallel
     # consumers (e.g. both sides of a self-join), each recomputing the full
     # lineage before any block lands — measured ~1.7s of duplicated minhash
     # signature work at sf0.1
     df.count()
+    _MATERIALIZED.append(df)
     return df
 
 
@@ -342,7 +313,7 @@ def dedup_ngram_jaccard(spark, sf_dir, threshold=0.5):
     pair count is bounded by |shingles|·CAP². The hot list itself is tiny
     (only shingles above the cap), so the filter is a broadcast anti-join.
     The DuckDB oracle applies the identical cap."""
-    sh_all = _materialized(_shingle_sets(spark, sf_dir), "jaccard_shingles")
+    sh_all = _materialized(_shingle_sets(spark, sf_dir))
     hot = (sh_all.groupBy("shingle").agg(F.count("*").alias("df"))
            .filter(F.col("df") > SHINGLE_DF_CAP).select("shingle"))
     sh = sh_all.join(F.broadcast(hot), "shingle", "left_anti")
@@ -404,8 +375,7 @@ def dedup_minhash_lsh(spark, sf_dir, threshold=0.5):
     from banding, exactly as the old explode path dropped them."""
     st = _materialized(
         _shingle_stage(_t(spark, sf_dir, "documents")
-                       .select("doc_id", "text"), minhash=True),
-        "minhash_shingle_stage")
+                       .select("doc_id", "text"), minhash=True))
     sig = _band_signatures(st)
     a = sig.alias("a")
     b = sig.alias("b")
@@ -471,8 +441,7 @@ def dedup_incremental(spark, sf_dir, threshold=0.5):
     the broadcast array_intersect pattern. Cost per ingest is
     O(|batch| + |collisions|), independent of |history|."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    st = _materialized(_shingle_stage(docs, minhash=True),
-                       "incremental_shingle_stage")
+    st = _materialized(_shingle_stage(docs, minhash=True))
     sig = _band_signatures(st)
     is_new = F.col("doc_id") % INC_NEW_MOD == 0
     new_sig = (sig.filter(is_new)
@@ -683,19 +652,11 @@ N_IVF_MIN_CENTROIDS = 16
 N_IVF_PROBES = 2
 
 
-_EMB_COUNT_CACHE: dict = {}
-
-
 def _emb_count(spark, sf_dir) -> int:
-    """Corpus size for IVF codebook sizing, memoized per (app, table) so
-    composing both IVF operators costs ONE column-pruned count, not one
-    full scan per DataFrame construction. A production deployment would
-    read this from table statistics (Iceberg snapshot summary / ANALYZE)
-    instead of counting at all."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_COUNT_CACHE:
-        _EMB_COUNT_CACHE[key] = _t(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_CACHE[key]
+    """Corpus size for IVF codebook sizing: one column-pruned count. A
+    production deployment would read this from table statistics (Iceberg
+    snapshot summary / ANALYZE) instead of counting at all."""
+    return _t(spark, sf_dir, "embeddings").count()
 
 
 def _ivf_n_centroids(n_vectors: int) -> int:
@@ -839,11 +800,10 @@ def embedding_ann_probe_sweep(spark, sf_dir, k=3, n_queries=5):
         # materialize, instead of re-running the full-corpus assignment pass
         # and exact scan inside all |SWEEP_PROBES| branches
         cents = _ivf_centroids(emb, n_cent)
-        assigned = _materialized(_ivf_assign(emb, cents),
-                                 f"sweep_assigned_{dist}")
+        assigned = _materialized(_ivf_assign(emb, cents))
         exact = _materialized(
             _exact_topk(emb, k, n_queries, q_lo=SWEEP_Q_LO)
-            .select("query_id", "vec_id"), f"sweep_exact_{dist}")
+            .select("query_id", "vec_id"))
         for probes in SWEEP_PROBES:
             approx = _ivf_search(emb, cents, assigned, k, n_queries,
                                  q_lo=SWEEP_Q_LO, probes=probes) \
@@ -1021,8 +981,7 @@ def dedup_semantic_cc(spark, sf_dir, threshold=0.40):
     _cc_labels), and the final labeling join strategy is left to AQE."""
     pairs = _materialized(
         dedup_embedding_cosine(spark, sf_dir, threshold)
-        .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")),
-        "semantic_cc_pairs")
+        .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")))
     labels = _cc_labels(pairs).select(F.col("doc_id").alias("vec_id"),
                                       "cluster_id")
     vecs = _t(spark, sf_dir, "embeddings").select("vec_id")
@@ -1363,8 +1322,7 @@ def text_tfidf_top_terms(spark, sf_dir, k=3):
     tok = (docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
            .filter(F.col("token") != ""))
     tf = _materialized(
-        tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")),
-        "tfidf_tf")
+        tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
     df = tf.groupBy("token").agg(F.count("*").alias("df"))
     idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1))
     scored = (tf.join(df, "token")
@@ -1457,21 +1415,6 @@ def text_fingerprint(spark, sf_dir):
 CC_MAX_ITERS = 25
 
 
-def _plan_truncated(df: DataFrame, name: str) -> DataFrame:
-    """Materialize AND truncate the logical plan. An iterative algorithm
-    that feeds each round's output into the next multiplies the logical
-    plan tree per round (each round references its input several times);
-    `cache()` alone avoids recomputation but the analyzer still walks the
-    full exponential tree every round — measured OOM by round ~10. With
-    SPARK_GRAFT_CKPT_DIR set the parquet round-trip of _materialized
-    truncates reliably (the 100 TB setting); otherwise eager
-    localCheckpoint stores the partitions on executors and cuts lineage
-    (fine single-job; not resilient to executor loss)."""
-    if os.environ.get("SPARK_GRAFT_CKPT_DIR"):
-        return _materialized(df, name)
-    return df.localCheckpoint(eager=True)
-
-
 def _cc_labels(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """Connected components over an undirected pair set via the alternating
     large-star / small-star algorithm (Kiveris et al., "Connected Components
@@ -1492,7 +1435,7 @@ def _cc_labels(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
          .filter(F.col("u") != F.col("v"))
          .distinct())
     prev = None
-    for it in range(max_iters):
+    for _ in range(max_iters):
         # large-star: every neighbor v > u re-links to m = min(N(u) ∪ {u})
         nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         large = (nbrs.groupBy("u").agg(F.min("v").alias("mn"))
@@ -1504,13 +1447,14 @@ def _cc_labels(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
         # small-star: all edges now point child → smaller parent; re-link
         # every parent (and the child itself) to the child's min parent
         small = e.groupBy("u").agg(F.min("v").alias("m"))
-        e = _plan_truncated(
-            (e.join(small, "u")
+        # truncate the plan: each round references its input several times,
+        # and without it the analyzer ran out of memory by about round 10
+        e = (e.join(small, "u")
              .select(F.col("v").alias("u"), F.col("m").alias("v"))
              .union(small.select("u", F.col("m").alias("v")))
              .filter(F.col("u") != F.col("v"))
-             .distinct()),
-            f"cc_iter{it}")
+             .distinct()
+             .localCheckpoint(eager=True))
         row = e.agg(F.count("*").alias("n"),
                     F.bit_xor(F.xxhash64("u", "v")).alias("h")).collect()[0]
         cur = (row["n"], row["h"])
@@ -1523,21 +1467,12 @@ def _cc_labels(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
         "large-star/small-star rounds — input pair set is pathological")
 
 
-_CC_PAIRS_CACHE: dict = {}
-
-
 def _minhash_pairs(spark, sf_dir, threshold) -> DataFrame:
-    """Materialized MinHash-LSH pair set shared by the CC dedups: running
-    dedup_cluster_cc and dedup_cluster_keep_best in one session reuses ONE
-    cached pair computation (memoized per app/corpus/threshold, same
-    pattern as _EMB_COUNT_CACHE) instead of re-shingling the corpus and
-    double-caching identical data."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    if key not in _CC_PAIRS_CACHE:
-        _CC_PAIRS_CACHE[key] = _materialized(
-            dedup_minhash_lsh(spark, sf_dir, threshold)
-            .select("doc_a", "doc_b"), "cc_pairs")
-    return _CC_PAIRS_CACHE[key]
+    """Materialized MinHash-LSH pair set of the CC dedups. Running
+    dedup_cluster_cc and dedup_cluster_keep_best in one session caches it
+    once: cache() of a plan already cached returns the existing entry."""
+    return _materialized(
+        dedup_minhash_lsh(spark, sf_dir, threshold).select("doc_a", "doc_b"))
 
 
 def dedup_cluster_cc(spark, sf_dir, threshold=0.5):
@@ -2291,20 +2226,19 @@ def pagerank_fixed_point(hosts: DataFrame, edges: DataFrame) -> DataFrame:
     base = F.expr(f"({PR_SCALE} * 15 div 100) div n")
     r = (hosts.crossJoin(F.broadcast(nh))
          .select("host", F.expr(f"{PR_SCALE} div n").alias("r")))
-    for it in range(PR_ITERS):
+    for _ in range(PR_ITERS):
         contrib = (edges
                    .join(r.withColumnRenamed("host", "src"), "src")
                    .join(outdeg, "src")
                    .select(F.col("dst").alias("host"),
                            F.expr("r div deg").alias("c")))
         agg = contrib.groupBy("host").agg(F.sum("c").alias("s"))
-        r = _plan_truncated(
-            (hosts.join(agg, "host", "left")
+        r = (hosts.join(agg, "host", "left")
              .crossJoin(F.broadcast(nh))
              .select("host",
                      (base + F.expr("85 * coalesce(s, 0) div 100"))
-                     .alias("r"))),
-            f"pagerank_iter{it}")
+                     .alias("r"))
+             .localCheckpoint(eager=True))
     return r.select("host", F.col("r").alias("rank_fp"))
 
 

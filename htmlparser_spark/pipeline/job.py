@@ -25,6 +25,7 @@ from .schema import (
     LINEAGE_SCHEMA, PAGES_SCHEMA, PARSED_LINK_FIELDS, PARSED_SCHEMA)
 
 DEFAULT_SALT_THRESHOLD = 1 << 20  # pages larger than 1 MiB get their own tier
+SALT_BUCKETS = 16  # salt values that such a page is spread across
 KERNEL_INPUT_COLS = ("url", "warc_ts", "html", "lang")
 # Ceiling of B, the bucket count of part_key = pmod(xxhash64(url), B). A
 # part_key dir is the unit of resume AND of sink files, so each run sizes B
@@ -225,17 +226,15 @@ def sink_buckets(df: DataFrame, num_partitions: int) -> int:
     return max(1, min(PART_KEY_BUCKETS, want))
 
 
-def repartition_pages(df: DataFrame, num_partitions: int,
-                      salt_threshold: int = DEFAULT_SALT_THRESHOLD,
-                      salt_buckets: int = 16) -> DataFrame:
+def repartition_pages(df: DataFrame, num_partitions: int) -> DataFrame:
     """Shuffle on (url, salt): huge pages (heavy CPU in the kernel) get
-    spread across `salt_buckets` extra buckets so one hot partition can't
+    spread across SALT_BUCKETS extra buckets so one hot partition can't
     stall the stage; AQE skew handling is the backstop. Keyed on the url
     itself, not part_key: a run may have as few part_keys as partitions,
     and hashing so few keys again would leave kernel tasks idle."""
     salt = F.when(
-        F.length("html") > salt_threshold,
-        F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt_buckets)),
+        F.length("html") > DEFAULT_SALT_THRESHOLD,
+        F.pmod(F.xxhash64("url", F.lit(1)), F.lit(SALT_BUCKETS)),
     ).otherwise(F.lit(0))
     return df.withColumn("_salt", salt).repartition(
         num_partitions, "url", "_salt").drop("_salt")
@@ -309,7 +308,6 @@ def lineage_of(parsed: DataFrame, buckets: int,
 
 def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
                  *, num_partitions: int | None = None,
-                 salt_threshold: int = DEFAULT_SALT_THRESHOLD,
                  lang: str | None = None, dedup: bool = True,
                  resume: bool = True, extract: bool = True,
                  emit_links: bool = False, transcode: bool = False) -> dict:
@@ -447,8 +445,7 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # may be the output of a row-balanced shuffle holding all the huge
         # pages in one partition) — only here is the explicit url-hash
         # repartition + size-tier salting (S3/S4) worth a raw-page shuffle
-        df = repartition_pages(df, num_partitions,
-                               salt_threshold=salt_threshold)
+        df = repartition_pages(df, num_partitions)
     columns = EMIT_LINKS_COLUMNS if emit_links else None
     parsed = parse_pages(df, extract=extract, columns=columns)
     # the single exchange: parsed rows, keyed on part_key — it clusters the

@@ -11,9 +11,9 @@ streaming DataFrame — plus:
   - exactly-once parquet sink via checkpointed file-sink commit log (S10),
   - watermarked tumbling-window error-counter aggregation (S8-stream):
     late pages beyond the watermark are dropped deterministically,
-  - a custom stateful operator via ``applyInPandasWithState``: per-host
-    running crawl stats (pages, bytes, error pages seen so far) — the
-    streaming analogue of a hypertable rollup.
+  - a stateful streaming aggregate: per-host running crawl stats (pages,
+    bytes, error pages seen so far) — the streaming analogue of a
+    hypertable rollup.
 
 Scale shape: each micro-batch is a normal Spark job, so everything said in
 pipeline/job.py about partitioning, salting, and skew applies per batch; the
@@ -27,17 +27,10 @@ import json
 import os
 import re
 from functools import partial
-from typing import Iterator, Tuple
-
-import pandas as pd
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType, StringType, StructField, StructType, TimestampType,
-)
 
 from .._rowmap import flat_map, local_frame, one_row
 from ..ops import BLOOM_K, BLOOM_M, _bloom_position
@@ -146,47 +139,7 @@ def error_window_stream(parsed: DataFrame, window: str = "1 hour",
                     "status", "n", "n_errors"))
 
 
-# --- custom stateful operator: per-host running crawl stats -------------------
-
-HOST_STATE_SCHEMA = StructType([
-    StructField("pages", LongType()),
-    StructField("bytes", LongType()),
-    StructField("err_pages", LongType()),
-])
-
-HOST_ROLLUP_SCHEMA = StructType([
-    StructField("host", StringType()),
-    StructField("pages", LongType()),
-    StructField("bytes", LongType()),
-    StructField("err_pages", LongType()),
-    StructField("batch_ts", TimestampType()),
-])
-
-
-def _host_rollup(key: Tuple[str], batches: Iterator[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-    """Running (pages, bytes, error-pages) per host across micro-batches."""
-    pages = 0
-    byte_count = 0
-    err = 0
-    last_ts = None
-    for pdf in batches:
-        pages += len(pdf)
-        byte_count += int(pdf["html_bytes"].sum())
-        err += int((pdf["status"] != "ok").sum())
-        ts = pdf["warc_ts"].max()
-        if last_ts is None or (ts is not None and ts > last_ts):
-            last_ts = ts
-    if state.exists:
-        p0, b0, e0 = state.get
-    else:
-        p0, b0, e0 = 0, 0, 0
-    new = (p0 + pages, b0 + byte_count, e0 + err)
-    state.update(new)
-    yield pd.DataFrame({"host": [key[0]], "pages": [new[0]],
-                        "bytes": [new[1]], "err_pages": [new[2]],
-                        "batch_ts": [last_ts]})
-
+# --- stateful aggregate: per-host running crawl stats -----------------------
 
 def host_expr():
     """Host state-group key from a url. No trailing '/' required:
@@ -201,17 +154,15 @@ def host_expr():
 
 
 def host_rollup_stream(parsed: DataFrame) -> DataFrame:
-    """Stateful per-host rollup (applyInPandasWithState). Emits the updated
-    running totals for every host seen in each micro-batch."""
-    return (parsed
-            .withColumn("host", host_expr())
-            .groupBy("host")
-            .applyInPandasWithState(
-                _host_rollup,
-                outputStructType=HOST_ROLLUP_SCHEMA,
-                stateStructType=HOST_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    """Stateful per-host rollup: a streaming aggregate, to be written in
+    update mode. Emits, for every host seen in a micro-batch, its running
+    totals (pages, bytes, error pages) and batch_ts, the latest warc_ts
+    seen for the host so far."""
+    return (parsed.groupBy(host_expr().alias("host"))
+            .agg(F.count(F.lit(1)).alias("pages"),
+                 F.sum("html_bytes").alias("bytes"),
+                 F.count_if(F.col("status") != "ok").alias("err_pages"),
+                 F.max("warc_ts").alias("batch_ts")))
 
 
 def _atomic_json_write(path: str, obj: dict) -> None:

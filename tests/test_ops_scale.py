@@ -1,5 +1,7 @@
-"""Scale-path behaviors of the dedup operators: parquet checkpointing of
-shared intermediates and the hot-shingle document-frequency cap."""
+"""Scale-path behaviors of the curation operators: release of cached
+shared intermediates, the hot-shingle and hot-cell caps, IVF codebook
+sizing, connected-components convergence, and the Bloom, URL-filter,
+line-dedup and PageRank properties."""
 import os
 import sys
 
@@ -32,54 +34,43 @@ def _write_docs(spark, tmp_path, rows):
     return sf_dir
 
 
-def test_minhash_ckpt_dir_writes_parquet_and_matches(spark, tmp_path,
-                                                     monkeypatch):
-    """SPARK_GRAFT_CKPT_DIR (the 100 TB path): intermediates go to parquet
-    instead of executor cache, with identical results."""
-    # 40-word docs differing in the last word: jaccard ~0.95, which the
-    # 16-hash/4-band LSH catches deterministically for this word set
-    words = [f"w{i}" for i in range(40)]
-    a = " ".join(words)
-    b = " ".join(words[:39] + ["altword"])
-    rows = [a, b, "totally different words here one two three four five six"]
-    sf_dir = _write_docs(spark, tmp_path, rows)
-
-    base = sorted(map(tuple, ops.dedup_minhash_lsh(spark, sf_dir).collect()))
-
-    ckpt = str(tmp_path / "ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", ckpt)
-    ckpted = sorted(map(tuple, ops.dedup_minhash_lsh(spark, sf_dir).collect()))
-    assert ckpted == base and base  # near-dup pair found both ways
-    written = os.listdir(ckpt)
-    # paths carry a per-invocation unique suffix (clobber protection);
-    # round 3: one materialized stage (shingles + signatures together)
-    assert any(d.startswith("minhash_shingle_stage-") for d in written)
-    # once results are consumed, cleanup_checkpoints reclaims the storage
-    # (unbounded accumulation otherwise — each invocation writes new paths)
-    assert ops.cleanup_checkpoints() == len(written)
-    assert os.listdir(ckpt) == []
-    assert ops.cleanup_checkpoints() == 0  # idempotent
+def _cache_entries(spark):
+    """Entries in the session's CacheManager: one per distinct cached plan
+    (``cache()`` of a plan already cached adds none)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
 
 
-def test_cc_pair_cache_invalidated_by_cleanup(spark, tmp_path, monkeypatch):
-    """ADVICE r4: cleanup_checkpoints() must also drop the memoized
-    MinHash pair DataFrames (_CC_PAIRS_CACHE) — in SPARK_GRAFT_CKPT_DIR
-    mode a retained handle lazily reads the reclaimed parquet path, so the
-    next dedup_cluster_* call would fail instead of re-materializing."""
+def test_cleanup_releases_every_materialized_frame(spark, tmp_path):
+    """The two CC dedups share one cached MinHash pair set through the
+    CacheManager, and cleanup_checkpoints() releases every frame
+    _materialized cached; a DataFrame already returned recomputes what it
+    read from the cache."""
     words = [f"w{i}" for i in range(40)]
     rows = [" ".join(words), " ".join(words[:39] + ["altword"]),
             "totally different words here one two three four five six"]
     sf_dir = _write_docs(spark, tmp_path, rows)
-    ckpt = str(tmp_path / "ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", ckpt)
-    base = sorted(map(tuple, ops.dedup_cluster_cc(spark, sf_dir).collect()))
-    assert base
-    assert ops.cleanup_checkpoints() > 0
-    assert ops._CC_PAIRS_CACHE == {}
-    # before the fix this read a deleted checkpoint path and raised
-    again = sorted(map(tuple, ops.dedup_cluster_cc(spark, sf_dir).collect()))
-    assert again == base
     ops.cleanup_checkpoints()
+    assert _cache_entries(spark) == 0
+
+    cc = ops.dedup_cluster_cc(spark, sf_dir)
+    cc_rows = sorted(map(tuple, cc.collect()))
+    n = _cache_entries(spark)
+    assert n > 0
+    best = ops.dedup_cluster_keep_best(spark, sf_dir)
+    best_rows = sorted(map(tuple, best.collect()))
+    assert _cache_entries(spark) == n  # the pair set is not cached twice
+    assert len(cc_rows) == 3 and len(best_rows) == 3
+    assert sum(r[-1] for r in cc_rows) == 2  # the near-dup pair is one cluster
+
+    released = ops.cleanup_checkpoints()
+    assert _cache_entries(spark) == 0
+    assert released > 0
+    assert ops.cleanup_checkpoints() == 0  # idempotent
+    assert sorted(map(tuple, cc.collect())) == cc_rows
+    assert sorted(map(tuple, best.collect())) == best_rows
 
 
 def test_ivf_codebook_scales_with_corpus(spark, tmp_path):
@@ -257,7 +248,7 @@ def test_ivf_hot_cell_split_bounds_tasks_and_keeps_pairs(spark):
     n_cent = ops._ivf_n_centroids(ops._emb_count(spark, TESTDATA_SF))
     cents = (emb.filter(F.col("vec_id") < n_cent)
              .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
-    assigned = ops._materialized(ops._ivf_assign(emb, cents), "ivf_split_test")
+    assigned = ops._materialized(ops._ivf_assign(emb, cents))
 
     pops = {r["cell"]: r["pop"] for r in ops._cell_pops(assigned).collect()}
     mean = sum(pops.values()) / len(pops)

@@ -1,8 +1,9 @@
 """The shared row-expanding stage and literal tables
 (htmlparser_spark._rowmap), the rule that every Python stage of the package
 pickles by reference, the rule that every literal table is a
-``LocalRelation``, and the rule that only the three named stages cross
-the boundary as pandas."""
+``LocalRelation``, the rule that only the two named stages cross the
+boundary as pandas, and the rule that only ``build_session`` reads the
+environment."""
 import ast
 import os
 import sys
@@ -187,9 +188,6 @@ PANDAS_STAGES = {
     # the last curate_ops stage that perfbench/eventlog.py finds by the node
     # name MapInPandas, which keeps the traced arrow.* readings non-zero
     "htmlparser_spark/ops.py": {"_shingle_stage"},
-    # the per-host rollup (applyInPandasWithState) moves to
-    # transformWithState only if that is less code (ROADMAP item 5)
-    "htmlparser_spark/streaming/job.py": {"host_rollup_stream"},
 }
 PANDAS_CALLS = ("mapInPandas", "applyInPandas", "applyInPandasWithState",
                 "pandas_udf")
@@ -250,6 +248,51 @@ def k(df):
     assert _pandas_stage_calls(ast.parse(src)) == [
         (3, "parse_pages"), (7, "g"), (8, None), (10, "_cos"), (13, "_sig"),
         (20, "k"), (22, "k"), (24, "k")]
+
+
+# the deployment settings a session is built with (SPARK_GRAFT_CPUS,
+# SPARK_DRIVER_MEMORY); every other setting is an argument or a constant
+ENV_READS = {"htmlparser_spark/pipeline/job.py": {"build_session"}}
+
+
+def _environ_reads(tree):
+    """(line, top-level definition or None) of every ``os.environ`` or
+    ``os.getenv`` read, and of every import of either from ``os``."""
+    return sorted({
+        (n.lineno, getattr(top, "name", None)) for top in tree.body
+        for n in ast.walk(top)
+        if (isinstance(n, ast.Attribute) and n.attr in ("environ", "getenv")
+            and getattr(n.value, "id", None) == "os")
+        or (isinstance(n, ast.ImportFrom) and n.module == "os"
+            and any(a.name in ("environ", "getenv") for a in n.names))})
+
+
+def test_only_build_session_reads_the_environment():
+    """A setting read from the environment is a second code path that no
+    caller's arguments show."""
+    found = _package_findings(_environ_reads)
+    stray = {f: [(line, fn) for line, fn in reads
+                 if fn not in ENV_READS.get(f, ())]
+             for f, reads in found.items()}
+    stray = {f: reads for f, reads in stray.items() if reads}
+    assert not stray, stray
+    assert {f: {fn for _l, fn in r} for f, r in found.items()} == ENV_READS
+
+
+def test_environ_guard_sees_a_read():
+    src = '''
+import os
+from os import environ
+def build_session():
+    return os.environ.get("A", "1")
+def f():
+    return os.getenv("B"), os.environ["C"]
+X = os.environ.get("D")
+def g(env=os.environ):
+    return env.get("E"), os.path.join("a", "b")
+'''
+    assert _environ_reads(ast.parse(src)) == [
+        (3, None), (5, "build_session"), (7, "f"), (8, None), (9, "g")]
 
 
 @pytest.fixture(scope="module")

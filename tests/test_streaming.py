@@ -1,6 +1,8 @@
 """Structured Streaming tests: incremental kernel runs with exactly-once
 file sink, watermarked window aggregation, stateful per-host rollup."""
+import datetime
 import os
+import re
 import sys
 
 import pytest
@@ -9,12 +11,13 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from htmlparser_spark.pipeline.job import parse_pages
 from htmlparser_spark.pipeline.schema import PAGES_SCHEMA
 from htmlparser_spark.streaming.job import (
     error_window_stream, host_rollup_stream, parse_page_stream,
     read_page_stream, run_stream_once,
 )
-from htmlparser_spark.synth import synth_pages
+from htmlparser_spark.synth import EPOCH, synth_pages
 
 
 @pytest.fixture(scope="module")
@@ -129,19 +132,52 @@ def test_stream_stateful_host_rollup_accumulates(spark, tmp_path):
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination()
-        return {r.host: (r.pages, r.bytes, r.err_pages)
+        return {r.host: (r.pages, r.bytes, r.err_pages, r.batch_ts)
                 for r in spark.read.parquet(out_dir).collect()}
 
+    def expected(*drops):
+        """{host: (error pages, latest warc_ts)} of the drops' pages,
+        parsed in batch."""
+        pages = spark.read.schema(PAGES_SCHEMA).parquet(
+            *[os.path.join(src, d) for d in drops])
+        out = {}
+        for r in parse_pages(pages).select("url", "status", "warc_ts") \
+                .collect():
+            host = re.match(r"(?i)[a-z][a-z0-9+.-]*://([^/]+)",
+                            r.url).group(1).lower()
+            err, ts = out.get(host, (0, r.warc_ts))
+            out[host] = (err + (r.status != "ok"), max(ts, r.warc_ts))
+        return out
+
     first = run_rollup("roll1")
-    assert first and sum(p for p, _, _ in first.values()) == n1
+    assert first and sum(v[0] for v in first.values()) == n1
+    assert {h: v[2:] for h, v in first.items()} == expected("d1")
 
     # second drop with overlapping hosts: state carries over, totals grow
-    n2 = _write_batch(spark, src, 30, seed=5, name="d2")
+    _write_batch(spark, src, 30, seed=5, name="d2")
     second = run_rollup("roll2")
-    # only hosts present in batch 2 re-emit; their totals include batch 1
+    # only hosts present in batch 2 re-emit; their totals include batch 1,
+    # and batch_ts is the latest warc_ts of the host over both drops
     assert second
     grew = [h for h in second if h in first and second[h][0] > first[h][0]]
     assert grew, "expected at least one host accumulating across batches"
+    exp2 = expected("d1", "d2")
+    assert {h: v[2:] for h, v in second.items()} \
+        == {h: exp2[h] for h in second}
+
+    # a late page of a known host that fails to parse: one more error
+    # page, and batch_ts stays the host's latest warc_ts, not this batch's
+    host = "host0000.example"
+    late = (f"https://{host}/late", EPOCH - datetime.timedelta(days=1),
+            None, "", "en")
+    spark.createDataFrame([late], PAGES_SCHEMA).write.parquet(
+        os.path.join(src, "d3"))
+    third = run_rollup("roll3")
+    assert set(third) == {host}
+    assert third[host][2:] == expected("d1", "d2", "d3")[host]
+    assert third[host][0] == second[host][0] + 1
+    assert third[host][2] == second[host][2] + 1
+    assert third[host][3] == second[host][3]
 
 
 def test_stream_dedup_drops_redelivered_snapshots(spark, tmp_path):
@@ -150,7 +186,6 @@ def test_stream_dedup_drops_redelivered_snapshots(spark, tmp_path):
     once; distinct snapshots all survive. Hermetic pages (no intra-batch
     duplicates, all event times inside the watermark horizon) so the
     assertion is exact."""
-    import datetime
 
     from htmlparser_spark.streaming.job import dedup_page_stream
 
