@@ -1,9 +1,10 @@
 """Relational / dedup / similarity / text-analysis operators (SURVEY.md §2.3
 + training-data-pipeline ops), each as a (spark, sf_dir) -> DataFrame callable
-with a matching ANSI-SQL oracle in __spark_entry__.oracle_sql().
+with a matching ANSI-SQL oracle in __spark_entry__.oracle_sql(). An op's
+parameters are module constants, the values its oracle hard-codes.
 
-Scale notes (these run on local[32] here, but are shaped for a 1000-executor
-cluster):
+Scale notes (each op is shaped for a 1000-executor cluster, whatever master
+runs it):
   - small dims (nation/region/customer) are broadcast;
   - pairwise dedup ops never build an n² cross join — candidates come from an
     equi-join on shingle / band-signature keys (shuffle keyed on content);
@@ -13,7 +14,7 @@ cluster):
 """
 from __future__ import annotations
 
-from functools import partial
+from functools import partial, reduce
 from hashlib import md5 as _md5
 
 import numpy as np
@@ -233,7 +234,7 @@ def _shingle_batches(batches, minhash, simhash, columns):
         yield pd.DataFrame(rows, columns=list(columns))
 
 
-def _shingle_array(df, n=3):
+def _shingle_array(df):
     """Distinct word 3-gram shingles per doc as ONE array column — a pure
     map-side JVM expression, no explode/shuffle. Used where the consumer
     needs the SHINGLE STRINGS downstream (jaccard's equi-join): measured
@@ -247,7 +248,6 @@ def _shingle_array(df, n=3):
     after cutting to the first max(size-2, 1) entries the result is the
     exact shingle set, including the short-doc edge cases (docs with < 3
     words yield their words joined)."""
-    assert n == 3, "shingle construction is specialized to 3-grams"
     words = F.split("text", " ")
     w2 = F.slice(words, 2, F.greatest(F.size(words) - 1, F.lit(0)))
     w3 = F.slice(words, 3, F.greatest(F.size(words) - 2, F.lit(0)))
@@ -259,9 +259,9 @@ def _shingle_array(df, n=3):
         F.filter(F.array_distinct(sh), lambda s: F.length(s) > 0).alias("shs"))
 
 
-def _shingles(df, n=3):
+def _shingles(df):
     """Exploded (doc_id, shingle) rows for content-keyed equi-joins."""
-    return _shingle_array(df, n).select(
+    return _shingle_array(df).select(
         "doc_id", F.explode("shs").alias("shingle"))
 
 
@@ -299,9 +299,10 @@ def _shingle_sets(spark, sf_dir):
 
 
 SHINGLE_DF_CAP = 64  # drop shingles appearing in more than this many docs
+JACCARD_THRESHOLD = 0.5  # near-dup pair: shingle Jaccard >= this
 
 
-def dedup_ngram_jaccard(spark, sf_dir, threshold=0.5):
+def dedup_ngram_jaccard(spark, sf_dir):
     """n-gram Jaccard near-dup pairs via shingle equi-join (the scalable
     shape: candidates share ≥1 shingle; shuffle keys on shingle content).
 
@@ -330,7 +331,7 @@ def dedup_ngram_jaccard(spark, sf_dir, threshold=0.5):
     return (inter.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
             .withColumn("jaccard", F.round(
                 F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-            .filter(F.col("jaccard") >= threshold)
+            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select("doc_a", "doc_b", "jaccard"))
 
 
@@ -345,7 +346,7 @@ N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
 
 
-def dedup_minhash_lsh(spark, sf_dir, threshold=0.5):
+def dedup_minhash_lsh(spark, sf_dir):
     """MinHash + LSH banding: shingle → 16 minhashes → 4 band signatures →
     bucket equi-join for candidates → exact Jaccard verify. The oracle SQL
     mirrors the identical (portable) hash, so results match exactly.
@@ -385,7 +386,7 @@ def dedup_minhash_lsh(spark, sf_dir, threshold=0.5):
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
-    return _verified_jaccard(cand, st.select("doc_id", "shs"), threshold)
+    return _verified_jaccard(cand, st.select("doc_id", "shs"))
 
 
 def _band_signatures(st: DataFrame) -> DataFrame:
@@ -405,8 +406,7 @@ def _band_signatures(st: DataFrame) -> DataFrame:
             .select("doc_id", "bs.band", "bs.sig"))
 
 
-def _verified_jaccard(cand: DataFrame, arr: DataFrame,
-                      threshold: float) -> DataFrame:
+def _verified_jaccard(cand: DataFrame, arr: DataFrame) -> DataFrame:
     """Exact-Jaccard verification of a candidate pair set: broadcast the
     tiny pair set against the per-doc shingle-array table twice (both joins
     map-side), intersect the two distinct-shingle arrays per pair —
@@ -418,21 +418,22 @@ def _verified_jaccard(cand: DataFrame, arr: DataFrame,
             .join(vb, "doc_b")
             .withColumn("jaccard", F.round(
                 inter / (F.size("shs_a") + F.size("shs_b") - inter), 6))
-            .filter(F.col("jaccard") >= threshold)
+            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select("doc_a", "doc_b", "jaccard"))
 
 
 INC_NEW_MOD = 5  # doc_id % 5 == 0 → the "new ingest batch"; rest = history
 
 
-def dedup_incremental(spark, sf_dir, threshold=0.5):
+def dedup_incremental(spark, sf_dir):
     """Incremental dedup of a new ingest batch against the historical
     corpus — the recurring-crawl shape: history is already signed (its band
     signatures are a materialized table maintained across ingests), each
     new batch signs itself map-side and probes history with a band/sig
     equi-join. Output: one row per NEW doc with dup_of = the smallest
-    historical doc it verifies against at jaccard ≥ threshold (null if
-    clean) and an is_dup flag. New batch = doc_id % 5 == 0, deterministic.
+    historical doc it verifies against at jaccard ≥ JACCARD_THRESHOLD
+    (null if clean) and an is_dup flag. New batch = doc_id % 5 == 0,
+    deterministic.
 
     Scale shape: the new batch is small relative to history, so its
     signature set BROADCASTS — history's signature table never reshuffles
@@ -452,7 +453,7 @@ def dedup_incremental(spark, sf_dir, threshold=0.5):
             .select(F.col("old_id").alias("doc_a"),
                     F.col("new_id").alias("doc_b"))
             .distinct())
-    verified = _verified_jaccard(cand, st.select("doc_id", "shs"), threshold)
+    verified = _verified_jaccard(cand, st.select("doc_id", "shs"))
     dup = (verified.groupBy(F.col("doc_b").alias("doc_id"))
            .agg(F.min("doc_a").alias("dup_of")))
     return (docs.filter(is_new).select("doc_id")
@@ -461,17 +462,15 @@ def dedup_incremental(spark, sf_dir, threshold=0.5):
                     F.col("dup_of").isNotNull().cast("int").alias("is_dup")))
 
 
-def dedup_lsh_eval(spark, sf_dir, threshold=0.5):
+def dedup_lsh_eval(spark, sf_dir):
     """Quality evaluation of the MinHash-LSH approximate dedup against the
     exact (hot-shingle-capped) Jaccard pair set — the acceptance gate a
     pipeline runs before trusting banded LSH at scale, mirroring what
     embedding_ann_recall does for ANN. One row: true/found/hit pair counts
     plus precision and recall (ratios of integers, rounded — exact across
     engines). Both sides are the operators' own plans."""
-    truth = dedup_ngram_jaccard(spark, sf_dir, threshold) \
-        .select("doc_a", "doc_b")
-    found = dedup_minhash_lsh(spark, sf_dir, threshold) \
-        .select("doc_a", "doc_b")
+    truth = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    found = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     hits = truth.join(found, ["doc_a", "doc_b"])
     return (truth.agg(F.count("*").alias("n_true"))
             .crossJoin(found.agg(F.count("*").alias("n_found")))
@@ -584,68 +583,87 @@ def _emb_clustered(spark, sf_dir):
                     .alias("v")))
 
 
-def _exact_topk(emb, k, n_queries, q_lo=0):
+ANN_K = 3          # neighbors per query, in every top-k and recall op
+ANN_N_QUERIES = 5  # queries per search: vec_id in [q_lo, q_lo + 5)
+
+
+def _query_window(q_lo, n_queries):
+    """The query vectors of a search: vec_id in [q_lo, q_lo + n_queries)."""
+    return (F.col("vec_id") >= q_lo) & (F.col("vec_id") < q_lo + n_queries)
+
+
+def _queries(df, vec, q_lo, n_queries, *keep):
+    """The query side of a search, small by construction and broadcast by
+    every caller: (query_id, q<vec>, *keep) over the query window."""
+    return (df.filter(_query_window(q_lo, n_queries))
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col(vec).alias("q" + vec), *keep))
+
+
+def _top_k(cand, order, k, out):
+    """Per-query top-k of a (query_id, vec_id, ...) candidate table: rank
+    by the Column ``order`` with ties to the lower vec_id, keep rank <= k,
+    return (query_id, vec_id, rank, out). Spark's WindowGroupLimit pushes
+    the rank filter below the query_id exchange, so each task ships at most
+    k rows per query."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "vec_id", "rank", out))
+
+
+def _cosine_top_k(cand):
+    """The ANN_K highest-cosine neighbors of each query in a (query_id, qv,
+    vec_id, v) candidate table, the query itself excluded."""
+    scored = (cand.filter(F.col("vec_id") != F.col("query_id"))
+              .withColumn("cos", _cosine(F.col("qv"), F.col("v"))))
+    return _top_k(scored, F.col("cos").desc(), ANN_K,
+                  F.round("cos", 4).alias("cos_r"))
+
+
+def _exact_topk(emb, q_lo):
     """Brute-force cosine top-k over an embedding DataFrame: the exactness
     baseline. Queries (a small fixed set) are broadcast; the corpus side
     never shuffles."""
-    q = (emb.filter((F.col("vec_id") >= q_lo)
-                    & (F.col("vec_id") < q_lo + n_queries))
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")))
-    scored = (emb.crossJoin(F.broadcast(q))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("cos", _cosine(F.col("qv"), F.col("v"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank",
-                    F.round("cos", 4).alias("cos_r")))
+    q = _queries(emb, "v", q_lo, ANN_N_QUERIES)
+    return _cosine_top_k(emb.crossJoin(F.broadcast(q)))
 
 
-def embedding_topk(spark, sf_dir, k=3, n_queries=5):
+def embedding_topk(spark, sf_dir):
     """Brute-force cosine top-k (exact ANN baseline): broadcast queries,
     numpy-vectorized scoring, WindowGroupLimit rank pushdown."""
-    return _exact_topk(_emb(spark, sf_dir), k, n_queries)
+    return _exact_topk(_emb(spark, sf_dir), 0)
 
 
-def _lsh_planes(n_planes: int) -> np.ndarray:
-    """The (n_planes × 64) sign-LSH hyperplanes, seeded from md5, so every
-    worker derives the same matrix from n_planes alone."""
+LSH_N_PLANES = 8
+
+
+def _lsh_planes() -> np.ndarray:
+    """The (LSH_N_PLANES × 64) sign-LSH hyperplanes, seeded from md5, so
+    every worker derives the same matrix."""
     return np.array([[int(_md5(f"plane:{p}:{d}".encode()).hexdigest()[:8],
                           16) / 0x7FFFFFFF - 1.0
-                      for d in range(64)] for p in range(n_planes)],
+                      for d in range(64)] for p in range(LSH_N_PLANES)],
                     dtype=np.float64)
 
 
 @arrow_udf(StringType())
-def _lsh_signature(v: pa.Array, n_planes: pa.Array) -> pa.Array:
+def _lsh_signature(v: pa.Array) -> pa.Array:
     """Sign bits of each vector against the hyperplanes: ONE matmul per
-    Arrow batch instead of n_planes interpreted-HOF folds per row."""
-    bits = (_matrix(v) @ _lsh_planes(n_planes[0].as_py()).T >= 0
-            ).astype(np.uint8)
+    Arrow batch instead of LSH_N_PLANES interpreted-HOF folds per row."""
+    bits = (_matrix(v) @ _lsh_planes().T >= 0).astype(np.uint8)
     return pa.array(["".join("1" if b else "0" for b in row)
                      for row in bits], pa.string())
 
 
-def embedding_ann_lsh(spark, sf_dir, k=3, n_queries=5, n_planes=8):
+def embedding_ann_lsh(spark, sf_dir):
     """Sign-LSH bucketed ANN (the 100TB path: equi-join on bucket signature
     instead of a cross join). Hyperplanes are seeded pseudo-random vectors
     derived from md5 — deterministic. Rows-only checked (recall < 1 by
     design vs the brute-force baseline)."""
-    emb = _emb(spark, sf_dir).withColumn(
-        "bucket", _lsh_signature(F.col("v"), F.lit(n_planes)))
-    q = (emb.filter(F.col("vec_id") < n_queries)
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                 F.col("bucket")))
-    cand = (emb.join(F.broadcast(q), "bucket")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("cos", _cosine(F.col("qv"), F.col("v"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank",
-                    F.round("cos", 4).alias("cos_r")))
+    emb = _emb(spark, sf_dir).withColumn("bucket", _lsh_signature(F.col("v")))
+    q = _queries(emb, "v", 0, ANN_N_QUERIES, "bucket")
+    return _cosine_top_k(emb.join(F.broadcast(q), "bucket"))
 
 
 N_IVF_MIN_CENTROIDS = 16
@@ -701,75 +719,62 @@ def _ivf_centroids(emb: DataFrame, n_cent: int) -> DataFrame:
             .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")))
 
 
-def _ivf_topk(emb, n_cent, k, n_queries, q_lo=0, probes=None):
-    """IVF-style ANN over an embedding DataFrame: the corpus is inverted
-    into ~√n cells (nearest-centroid assignment); a query scans only its
-    N_IVF_PROBES closest cells. Centroids are the vectors with vec_id <
-    n_cent — deterministic, so the DuckDB oracle reproduces the exact
-    result (unlike sign-LSH whose recall depends on plane draws). At 100 TB
-    the assignment is one map-side numpy pass and each query touches
-    ~probes/cells of the corpus; cells are the shuffle key."""
-    cents = _ivf_centroids(emb, n_cent)
-    assigned = _ivf_assign(emb, cents)
-    return _ivf_search(emb, cents, assigned, k, n_queries, q_lo, probes)
-
-
-def _ivf_search(emb, cents, assigned, k, n_queries, q_lo=0, probes=None):
+def _ivf_search(emb, cents, assigned, q_lo, probes):
     """Probe + rank stage given a prebuilt (possibly materialized) cell
-    assignment — the probe-independent assignment is the expensive part, so
-    sweeps over probe budgets hoist it."""
-    probes = N_IVF_PROBES if probes is None else probes
-    # per-query probe cells = its `probes` nearest centroids
-    q = (emb.filter((F.col("vec_id") >= q_lo)
-                    & (F.col("vec_id") < q_lo + n_queries))
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")))
-    qc = q.crossJoin(F.broadcast(cents)) \
-        .withColumn("cos_c", _cosine(F.col("qv"), F.col("cv")))
+    assignment: each query scans only its `probes` nearest cells. The
+    probe-independent assignment is the expensive part, so sweeps over
+    probe budgets hoist it."""
+    qc = (_queries(emb, "v", q_lo, ANN_N_QUERIES)
+          .crossJoin(F.broadcast(cents))
+          .withColumn("cos_c", _cosine(F.col("qv"), F.col("cv"))))
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("cos_c").desc(), F.col("cent_id").asc())
     probe_cells = (qc.withColumn("rn", F.row_number().over(w_probe))
                    .filter(F.col("rn") <= probes)
                    .select("query_id", "qv", F.col("cent_id").alias("cell")))
-    # search only the probed cells
-    cand = (assigned.join(F.broadcast(probe_cells), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("cos", _cosine(F.col("qv"), F.col("v"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank",
-                    F.round("cos", 4).alias("cos_r")))
+    return _cosine_top_k(assigned.join(F.broadcast(probe_cells), "cell"))
 
 
-def embedding_ann_ivf(spark, sf_dir, k=3, n_queries=5):
-    """IVF ANN top-k: sqrt(n) codebook, numpy matmul cell assignment,
-    2-cell probe — the scale path next to embedding_topk's exact scan."""
-    return _ivf_topk(_emb(spark, sf_dir),
-                     _ivf_n_centroids(_emb_count(spark, sf_dir)), k, n_queries)
+def embedding_ann_ivf(spark, sf_dir):
+    """IVF ANN top-k: sqrt(n) codebook (the vectors with vec_id < n_cent,
+    so the DuckDB oracle rebuilds it), numpy matmul cell assignment,
+    N_IVF_PROBES-cell probe — the scale path next to embedding_topk's
+    exact scan."""
+    emb = _emb(spark, sf_dir)
+    cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
+    return _ivf_search(emb, cents, _ivf_assign(emb, cents), 0, N_IVF_PROBES)
 
 
-def _recall_at_k(exact_df, approx_df):
+def _recall_counts(exact_df, approx_df):
+    """Per-query integer |approx ∩ exact| hit counts vs the baseline size —
+    the all-integer recall shape the driver's hash compare needs."""
     exact = exact_df.select("query_id", "vec_id")
     approx = approx_df.select("query_id", "vec_id")
     hits = (exact.join(approx, ["query_id", "vec_id"])
-            .groupBy("query_id").agg(F.count("*").alias("n_hits")))
-    base = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
+            .groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits")))
+    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
     return (base.join(hits, "query_id", "left")
             .select("query_id",
-                    F.round(F.coalesce(F.col("n_hits"), F.lit(0))
-                            / F.col("n_exact"), 4).alias("recall")))
+                    F.coalesce("n_hits", F.lit(0)).cast("long")
+                    .alias("n_hits"),
+                    "n_exact"))
 
 
-def embedding_ann_recall(spark, sf_dir, k=3, n_queries=5):
+def _recall_at_k(exact_df, approx_df):
+    """Per-query recall: the hit ratio of _recall_counts, rounded."""
+    return _recall_counts(exact_df, approx_df).select(
+        "query_id",
+        F.round(F.col("n_hits") / F.col("n_exact"), 4).alias("recall"))
+
+
+def embedding_ann_recall(spark, sf_dir):
     """Recall@k of the IVF index against the brute-force exact baseline —
     the evaluation query an ANN deployment runs before trusting the
     approximate path. Both sides are the operators' own plans; the result
     is per-query |approx ∩ exact| / k. Deterministic (both operators
     are), so the oracle reproduces it exactly."""
-    return _recall_at_k(
-        embedding_topk(spark, sf_dir, k=k, n_queries=n_queries),
-        embedding_ann_ivf(spark, sf_dir, k=k, n_queries=n_queries))
+    return _recall_at_k(embedding_topk(spark, sf_dir),
+                        embedding_ann_ivf(spark, sf_dir))
 
 
 SWEEP_Q_LO = 200  # probe-sweep queries sit OUTSIDE the codebook (n_cent < 200
@@ -779,7 +784,7 @@ SWEEP_Q_LO = 200  # probe-sweep queries sit OUTSIDE the codebook (n_cent < 200
 SWEEP_PROBES = (1, 2, 3)
 
 
-def embedding_ann_probe_sweep(spark, sf_dir, k=3, n_queries=5):
+def embedding_ann_probe_sweep(spark, sf_dir):
     """The probe-tuning table an IVF deployment reads before fixing nprobe:
     recall@k of the IVF index vs the exact baseline, swept over probe
     budgets AND over two query distributions — the md5-uniform embeddings
@@ -791,7 +796,7 @@ def embedding_ann_probe_sweep(spark, sf_dir, k=3, n_queries=5):
     must be run per-corpus. Hits are INTEGER counts (recall = hits / (k ×
     n_queries)), so the oracle compare is exact, no float-average drift."""
     n_cent = _ivf_n_centroids(_emb_count(spark, sf_dir))
-    total = float(k * n_queries)
+    total = float(ANN_K * ANN_N_QUERIES)
     parts = []
     for dist, emb in (("uniform", _emb(spark, sf_dir)),
                       ("clustered", _emb_clustered(spark, sf_dir))):
@@ -802,11 +807,9 @@ def embedding_ann_probe_sweep(spark, sf_dir, k=3, n_queries=5):
         cents = _ivf_centroids(emb, n_cent)
         assigned = _materialized(_ivf_assign(emb, cents))
         exact = _materialized(
-            _exact_topk(emb, k, n_queries, q_lo=SWEEP_Q_LO)
-            .select("query_id", "vec_id"))
+            _exact_topk(emb, SWEEP_Q_LO).select("query_id", "vec_id"))
         for probes in SWEEP_PROBES:
-            approx = _ivf_search(emb, cents, assigned, k, n_queries,
-                                 q_lo=SWEEP_Q_LO, probes=probes) \
+            approx = _ivf_search(emb, cents, assigned, SWEEP_Q_LO, probes) \
                 .select("query_id", "vec_id")
             parts.append(
                 exact.join(approx, ["query_id", "vec_id"])
@@ -816,40 +819,40 @@ def embedding_ann_probe_sweep(spark, sf_dir, k=3, n_queries=5):
                         F.col("n_hits"),
                         F.round(F.col("n_hits") / F.lit(total), 4)
                         .alias("recall")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    return reduce(DataFrame.unionAll, parts)
 
 
-def dedup_embedding_cosine(spark, sf_dir, threshold=0.40, max_cell=None):
+COSINE_DUP_THRESHOLD = 0.40       # dedup_embedding_cosine, dedup_semantic_cc
+COSINE_BALANCED_THRESHOLD = 0.95  # dedup_embedding_cosine_balanced
+MAX_CELL = 16  # dedup_embedding_cosine_balanced's sub-cell population cap
+
+
+def _cosine_dups(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cos_r) of the (vec_a, va, vec_b, vb) pairs whose
+    cosine is >= threshold."""
+    return (pairs.withColumn("cos", _cosine(F.col("va"), F.col("vb")))
+            .filter(F.col("cos") >= threshold)
+            .select("vec_a", "vec_b", F.round("cos", 4).alias("cos_r")))
+
+
+def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-dup pairs. Scale path: candidates restricted to
     pairs sharing an IVF cell (same deterministic ~√n-centroid assignment as
     embedding_ann_ivf) — the shuffle key is the cell, never an n² cross
     join. Cell count grows as √n with the corpus, so expected cell
-    population is ~√n and within-cell pairing stays ~O(n) total.
-
-    max_cell (opt-in): bound per-task pair work on SKEWED corpora by hash-
-    splitting oversized cells (_cell_pairs_balanced) — emits the identical
-    pair set (driver-proven via dedup_embedding_cosine_balanced's oracle).
-    Default None keeps the plain join: on near-uniform corpora the split's
-    extra broadcast + replication buys nothing."""
+    population is ~√n and within-cell pairing stays ~O(n) total (skewed
+    cells: dedup_embedding_cosine_balanced)."""
     emb = _emb(spark, sf_dir)
     cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
     assigned = _ivf_assign(emb, cents)
-    if max_cell is not None:
-        pairs = _cell_pairs_balanced(assigned, max_cell)
-    else:
-        a = assigned.select(F.col("cell"), F.col("vec_id").alias("vec_a"),
-                            F.col("v").alias("va"))
-        b = assigned.select(F.col("cell"), F.col("vec_id").alias("vec_b"),
-                            F.col("v").alias("vb"))
-        pairs = (a.join(b, "cell")
-                 .filter(F.col("vec_a") < F.col("vec_b"))
-                 .select("vec_a", "va", "vec_b", "vb"))
-    pairs = (pairs.withColumn("cos", _cosine(F.col("va"), F.col("vb")))
-             .filter(F.col("cos") >= threshold))
-    return pairs.select("vec_a", "vec_b", F.round("cos", 4).alias("cos_r"))
+    a = assigned.select(F.col("cell"), F.col("vec_id").alias("vec_a"),
+                        F.col("v").alias("va"))
+    b = assigned.select(F.col("cell"), F.col("vec_id").alias("vec_b"),
+                        F.col("v").alias("vb"))
+    pairs = (a.join(b, "cell")
+             .filter(F.col("vec_a") < F.col("vec_b"))
+             .select("vec_a", "va", "vec_b", "vb"))
+    return _cosine_dups(pairs, COSINE_DUP_THRESHOLD)
 
 
 def _cell_pops(assigned: DataFrame) -> DataFrame:
@@ -952,8 +955,7 @@ def _cell_pairs_balanced(assigned: DataFrame, max_cell: int) -> DataFrame:
     return within.unionAll(cross)
 
 
-def dedup_embedding_cosine_balanced(spark, sf_dir, threshold=0.95,
-                                    max_cell=16):
+def dedup_embedding_cosine_balanced(spark, sf_dir):
     """dedup_embedding_cosine's pair join on the CLUSTERED distribution —
     where the blob-aligned cells are hot (embedding_ivf_cell_stats) — with
     the oversized-cell split. The oracle is the PLAIN unsplit SQL pair
@@ -962,13 +964,11 @@ def dedup_embedding_cosine_balanced(spark, sf_dir, threshold=0.95,
     'recall unchanged')."""
     emb = _emb_clustered(spark, sf_dir)
     cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
-    pairs = (_cell_pairs_balanced(_ivf_assign(emb, cents), max_cell)
-             .withColumn("cos", _cosine(F.col("va"), F.col("vb")))
-             .filter(F.col("cos") >= threshold))
-    return pairs.select("vec_a", "vec_b", F.round("cos", 4).alias("cos_r"))
+    pairs = _cell_pairs_balanced(_ivf_assign(emb, cents), MAX_CELL)
+    return _cosine_dups(pairs, COSINE_BALANCED_THRESHOLD)
 
 
-def dedup_semantic_cc(spark, sf_dir, threshold=0.40):
+def dedup_semantic_cc(spark, sf_dir):
     """SemDeDup-shaped semantic dedup: connected components over the
     embedding-cosine near-dup pair graph, keeping one canonical vector per
     semantic cluster. Same reason as dedup_cluster_cc: cosine similarity is
@@ -980,7 +980,7 @@ def dedup_semantic_cc(spark, sf_dir, threshold=0.40):
     the CC rounds shuffle only the pair set (O(log n) rounds, see
     _cc_labels), and the final labeling join strategy is left to AQE."""
     pairs = _materialized(
-        dedup_embedding_cosine(spark, sf_dir, threshold)
+        dedup_embedding_cosine(spark, sf_dir)
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")))
     labels = _cc_labels(pairs).select(F.col("doc_id").alias("vec_id"),
                                       "cluster_id")
@@ -1167,7 +1167,10 @@ def events_value_quantiles(spark, sf_dir):
                     F.round(F.col("p")[2], 4).alias("p99")))
 
 
-def token_heavy_hitters(spark, sf_dir, k=20):
+HEAVY_HITTERS_K = 20
+
+
+def token_heavy_hitters(spark, sf_dir):
     """Global top-k most frequent tokens — vocabulary head inspection.
     Scale shape: map-side partial counts into the (token) aggregate, then
     TakeOrderedAndProject computes the global top-k as per-partition
@@ -1177,7 +1180,8 @@ def token_heavy_hitters(spark, sf_dir, k=20):
               .select(F.explode(F.split("text", " ")).alias("token"))
               .filter(F.col("token") != "")
               .groupBy("token").agg(F.count("*").alias("n")))
-    top = counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(k)
+    top = (counts.orderBy(F.col("n").desc(), F.col("token").asc())
+           .limit(HEAVY_HITTERS_K))
     w = Window.orderBy(F.col("n").desc(), F.col("token").asc())
     return top.withColumn("rank", F.row_number().over(w))
 
@@ -1306,7 +1310,10 @@ def corpus_train_test_split(spark, sf_dir):
                     .otherwise("test").alias("split")))
 
 
-def text_tfidf_top_terms(spark, sf_dir, k=3):
+TFIDF_K = 3
+
+
+def text_tfidf_top_terms(spark, sf_dir):
     """TF-IDF top-k terms per document: tf = per-(doc, token) count, idf =
     ln((N+1)/(df+1)), rank per doc. Scale shape: ONE tokenize pass — the
     document-frequency table derives from the tf table (tf already has
@@ -1330,7 +1337,7 @@ def text_tfidf_top_terms(spark, sf_dir, k=3):
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("token").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TFIDF_K)
             .select("doc_id", "token", "tf", "df", "rank",
                     F.round("tfidf", 4).alias("tfidf_r")))
 
@@ -1467,15 +1474,15 @@ def _cc_labels(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
         "large-star/small-star rounds — input pair set is pathological")
 
 
-def _minhash_pairs(spark, sf_dir, threshold) -> DataFrame:
+def _minhash_pairs(spark, sf_dir) -> DataFrame:
     """Materialized MinHash-LSH pair set of the CC dedups. Running
     dedup_cluster_cc and dedup_cluster_keep_best in one session caches it
     once: cache() of a plan already cached returns the existing entry."""
     return _materialized(
-        dedup_minhash_lsh(spark, sf_dir, threshold).select("doc_a", "doc_b"))
+        dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"))
 
 
-def dedup_cluster_cc(spark, sf_dir, threshold=0.5):
+def dedup_cluster_cc(spark, sf_dir):
     """Cluster-and-keep-one dedup: the step that turns PAIR detection
     (MinHash-LSH) into an actual dedup decision. Near-duplicate relations
     are not transitive, so a pipeline that drops `doc_b` of every pair
@@ -1492,7 +1499,7 @@ def dedup_cluster_cc(spark, sf_dir, threshold=0.5):
     large fraction of the corpus (30-50%), far past broadcast size — AQE
     broadcasts it when it happens to be small, shuffles on doc_id when not.
     """
-    labels = _cc_labels(_minhash_pairs(spark, sf_dir, threshold))
+    labels = _cc_labels(_minhash_pairs(spark, sf_dir))
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     return (docs.join(labels, "doc_id", "left")
             .select("doc_id",
@@ -1501,7 +1508,7 @@ def dedup_cluster_cc(spark, sf_dir, threshold=0.5):
                         .cast("int")))
 
 
-def dedup_cluster_keep_best(spark, sf_dir, threshold=0.5):
+def dedup_cluster_keep_best(spark, sf_dir):
     """Cluster-and-keep-BEST dedup: the same connected components over the
     MinHash-LSH pair graph as dedup_cluster_cc, but the survivor per
     cluster is the highest-QUALITY document (rounded score, ties → lowest
@@ -1515,7 +1522,7 @@ def dedup_cluster_keep_best(spark, sf_dir, threshold=0.5):
     cluster — WindowGroupLimit-eligible, and the quality score is computed
     map-side on the corpus scan (no extra join to attach it)."""
     *_, score = _quality_exprs()
-    labels = _cc_labels(_minhash_pairs(spark, sf_dir, threshold))
+    labels = _cc_labels(_minhash_pairs(spark, sf_dir))
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", score.alias("quality_score")))
     lab = (docs.join(labels, "doc_id", "left")
@@ -1534,16 +1541,16 @@ def dedup_cluster_keep_best(spark, sf_dir, threshold=0.5):
 HOST_CAP = 10
 
 
-def corpus_host_cap(spark, sf_dir, cap=HOST_CAP):
+def corpus_host_cap(spark, sf_dir):
     """Per-host document cap: crawl pipelines bound how many documents any
     single host contributes (SEO farms and mirrors otherwise dominate the
     corpus). Rank documents within each source by quality score (doc_id as
-    the deterministic tiebreak) and keep the top `cap`.
+    the deterministic tiebreak) and keep the top HOST_CAP.
 
     Scale shape: the quality score is computed map-side on the SAME scan
     (no join to attach it), and the rank-≤-cap filter is recognized by
     Spark 3.5+'s WindowGroupLimit rule, which installs a map-side per-host
-    top-`cap` BEFORE the exchange — a hot host ships `cap` rows per
+    top-HOST_CAP BEFORE the exchange — a hot host ships HOST_CAP rows per
     upstream task instead of its full document set, so host skew is bounded
     by design (verified in tests/test_plan_shapes.py)."""
     *_, score = _quality_exprs()
@@ -1553,7 +1560,7 @@ def corpus_host_cap(spark, sf_dir, cap=HOST_CAP):
         F.col("quality_score").desc(), F.col("doc_id").asc())
     return (docs
             .withColumn("host_rank", F.row_number().over(w))
-            .filter(F.col("host_rank") <= cap)
+            .filter(F.col("host_rank") <= HOST_CAP)
             .select("doc_id", "source", "quality_score", "host_rank"))
 
 
@@ -2028,7 +2035,7 @@ def dedup_bloom(spark, sf_dir):
     fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), which suits this
     corpus's small history but saturates as history grows — ~3% of
     distinct new docs read positive at 10³ history docs, ~93% at 10⁴
-    (ROADMAP item 3 sizes a windowed filter to a target rate)."""
+    (ROADMAP item 2 sizes a windowed filter to a target rate)."""
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", F.md5("text").alias("h")))
     is_new = F.col("doc_id") % INC_NEW_MOD == 0
@@ -2460,11 +2467,8 @@ def _l2_assign(embfp: DataFrame, cent_rows: list) -> DataFrame:
     _argmin_l2 kernel. Zero shuffle; ties resolve to the lowest cent_id
     (cent_rows is sorted), matching the oracle's
     ORDER BY dist ASC, cent_id ASC."""
-    cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([r[1] for r in cent_rows], dtype=np.int64)
-    c_sq = np.square(C).sum(axis=1)
     return _vector_stage(
-        embfp, "x", partial(_l2_assign_kernel, cent_ids, C, c_sq),
+        embfp, "x", partial(_l2_assign_kernel, *_l2_codebook(cent_rows)),
         "vec_id bigint, x array<bigint>, cell bigint, dist bigint")
 
 
@@ -2517,7 +2521,7 @@ def _kmeans_fit(embfp: DataFrame, k: int, rounds: int):
     return assigned, cent_rows
 
 
-def embedding_kmeans(spark, sf_dir, k=KMEANS_K, rounds=KMEANS_ROUNDS):
+def embedding_kmeans(spark, sf_dir):
     """Distributed Lloyd's k-means over the embeddings — the clustering
     backbone curation methods build on (SemDeDup cells, cluster-balanced
     sampling, prototype pruning). Fixed k and round count, deterministic
@@ -2527,7 +2531,7 @@ def embedding_kmeans(spark, sf_dir, k=KMEANS_K, rounds=KMEANS_ROUNDS):
     monotonically decreases), and the centroid component sum as an integer
     fingerprint of the fitted codebook."""
     embfp = _emb_fp(spark, sf_dir)
-    assigned, cent_rows = _kmeans_fit(embfp, k, rounds)
+    assigned, cent_rows = _kmeans_fit(embfp, KMEANS_K, KMEANS_ROUNDS)
     pops = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dist").alias("inertia"))
     cents = local_frame(
@@ -2537,18 +2541,20 @@ def embedding_kmeans(spark, sf_dir, k=KMEANS_K, rounds=KMEANS_ROUNDS):
             .select("cell", "n", "inertia", "cent_sum"))
 
 
-def corpus_prototype_prune(spark, sf_dir, keep_frac=0.5,
-                           k=KMEANS_K, rounds=KMEANS_ROUNDS):
+PRUNE_KEEP_FRAC = 0.5
+
+
+def corpus_prototype_prune(spark, sf_dir):
     """SSL-prototype pruning (Sorscher et al., "Beyond neural scaling
     laws"): cluster the corpus, rank each document by distance to its
-    cluster centroid, and keep the ceil(keep_frac·pop) LEAST prototypical
-    (largest-distance) per cluster — redundant near-centroid examples are
-    what large corpora can afford to drop. Rank ties break on vec_id.
+    cluster centroid, and keep the ceil(PRUNE_KEEP_FRAC·pop) LEAST
+    prototypical (largest-distance) per cluster — redundant near-centroid
+    examples are what large corpora can afford to drop. Rank ties break on vec_id.
     Per-cluster quota (not a global cutoff) so no cluster is wiped out.
     Scale shape: the ranking is one window over the assignment — shuffle
     keys on cell, and the k-means rounds before it are map-only passes."""
     embfp = _emb_fp(spark, sf_dir)
-    assigned, _ = _kmeans_fit(embfp, k, rounds)
+    assigned, _ = _kmeans_fit(embfp, KMEANS_K, KMEANS_ROUNDS)
     w = Window.partitionBy("cell").orderBy(F.col("dist").desc(),
                                            F.col("vec_id").asc())
     wc = Window.partitionBy("cell")
@@ -2556,7 +2562,7 @@ def corpus_prototype_prune(spark, sf_dir, keep_frac=0.5,
             .withColumn("rank", F.row_number().over(w).cast("long"))
             .withColumn("pop", F.count(F.lit(1)).over(wc))
             .filter(F.col("rank")
-                    <= F.ceil(F.lit(float(keep_frac)) * F.col("pop")))
+                    <= F.ceil(F.lit(float(PRUNE_KEEP_FRAC)) * F.col("pop")))
             .select("vec_id", "cell", "dist", "rank"))
 
 
@@ -2671,7 +2677,7 @@ def _pq_encode_kernel(CB, cb_sq, batch, X):
             np.tile(np.arange(M, dtype=np.int64), len(X)), codes, dists)
 
 
-def embedding_pq_encode(spark, sf_dir, trained=False):
+def embedding_pq_encode(spark, sf_dir):
     """Product-quantization encode: each vector compresses to M=4 sub-codes
     (one per 16-dim slice, nearest codebook entry by integer squared-L2),
     i.e. 512 B of float32 becomes 4 small ints — the memory path that lets a
@@ -2679,14 +2685,23 @@ def embedding_pq_encode(spark, sf_dir, trained=False):
     into the batch function); long format (vec_id, sub, code, sqdist)
     keeps the schema stable and the oracle a plain argmin join. By construction the KS
     training vectors encode to themselves with sqdist 0 — pinned in
-    tests. trained=True swaps in the per-subspace-k-means codebook
-    (_pq_codebook_trained); the encode pass itself is identical."""
+    tests. The per-subspace-k-means codebook (_pq_codebook_trained)
+    encodes through the same _pq_encode_df."""
     embfp = _emb_fp(spark, sf_dir)
-    CB = (_pq_codebook_trained(embfp) if trained else _pq_codebook(embfp))
-    return _pq_encode_df(embfp, CB)
+    return _pq_encode_df(embfp, _pq_codebook(embfp))
 
 
-def _adc_rows(q_rows, CB):
+def _driver_rows(embfp: DataFrame, prefix: int, q_lo: int, n_queries: int):
+    """ONE driver collect, in vec_id order, of the rows with vec_id <
+    prefix (codebook entries) and of the query window: returns (all rows,
+    the query window's rows)."""
+    rows = (embfp.filter((F.col("vec_id") < prefix)
+                         | _query_window(q_lo, n_queries))
+            .orderBy("vec_id").collect())
+    return rows, [r for r in rows if q_lo <= r["vec_id"] < q_lo + n_queries]
+
+
+def _adc_table(spark, q_rows, CB) -> DataFrame:
     """Per-query (sub, code) partial ADC distances — n_queries·M·KS rows,
     built driver-side from the collected codebook (both already live on the
     driver) and destined for a broadcast."""
@@ -2699,11 +2714,30 @@ def _adc_rows(q_rows, CB):
                 .sum(axis=1)
             adc.extend((int(r["vec_id"]), s, c, int(d[c]))
                        for c in range(KS))
-    return adc
+    return local_frame(
+        spark, adc, "query_id bigint, sub bigint, code bigint, pdist bigint")
 
 
-def embedding_pq_topk(spark, sf_dir, k=3, n_queries=5, q_lo=0,
-                      trained=False):
+def _adc_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k by asymmetric distance: a partial-agg sum of the
+    per-subspace pdist of each (query_id, vec_id) candidate, smallest
+    first."""
+    adist = (cand.groupBy("query_id", "vec_id")
+             .agg(F.sum("pdist").alias("adist")))
+    return _top_k(adist, F.col("adist").asc(), k, "adist")
+
+
+def _pq_topk(spark, embfp: DataFrame, CB: np.ndarray, q_rows: list,
+             k: int) -> DataFrame:
+    """ADC top-k of the query rows over embfp's PQ codes under the
+    codebook CB (see embedding_pq_topk)."""
+    codes = _pq_encode_df(embfp, CB).select("vec_id", "sub", "code")
+    return _adc_top_k(
+        codes.join(F.broadcast(_adc_table(spark, q_rows, CB)), ["sub", "code"])
+        .filter(F.col("vec_id") != F.col("query_id")), k)
+
+
+def embedding_pq_topk(spark, sf_dir):
     """Asymmetric-distance (ADC) top-k over the PQ codes: per query,
     precompute the (sub × code) partial-distance table — n_queries·M·KS
     rows, built driver-side from the collected codebook and broadcast —
@@ -2711,32 +2745,13 @@ def embedding_pq_topk(spark, sf_dir, k=3, n_queries=5, q_lo=0,
     reconstructs every approximate distance without touching a single full
     vector. That join-a-tiny-ADC-table-against-compressed-codes shape is
     exactly why PQ scans survive 10⁹ vectors. All-integer distances keep
-    the compare exact. q_lo offsets the query window to vectors OUTSIDE
-    the training set (the realistic case — with q_lo=0 the first queries
-    ARE stand-in codebook entries, whose ADC distances come out exact and
-    bias any codebook comparison toward the stand-in)."""
+    the compare exact. The queries here are vec_id 0..4, which ARE stand-in
+    codebook entries: their ADC distances come out exact, which biases any
+    codebook comparison toward the stand-in, so embedding_pq_recall takes
+    a query window past the training prefix."""
     embfp = _emb_fp(spark, sf_dir)
-    # ONE driver collect serves both the codebook and the query vectors
-    rows = (embfp.filter((F.col("vec_id") < PQ_KS)
-                         | ((F.col("vec_id") >= q_lo)
-                            & (F.col("vec_id") < q_lo + n_queries)))
-            .orderBy("vec_id").collect())
-    CB = (_pq_codebook_trained(embfp) if trained
-          else _pq_codebook_from_rows(rows))
-    q_rows = [r for r in rows if q_lo <= r["vec_id"] < q_lo + n_queries]
-    adc_df = local_frame(
-        spark, _adc_rows(q_rows, CB),
-        "query_id bigint, sub bigint, code bigint, pdist bigint")
-    codes = _pq_encode_df(embfp, CB).select("vec_id", "sub", "code")
-    cand = (codes.join(F.broadcast(adc_df), ["sub", "code"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("pdist").alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(),
-                                               F.col("vec_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank", "adist"))
+    rows, q_rows = _driver_rows(embfp, PQ_KS, 0, ANN_N_QUERIES)
+    return _pq_topk(spark, embfp, _pq_codebook_from_rows(rows), q_rows, ANN_K)
 
 
 @arrow_udf(LongType())
@@ -2746,53 +2761,42 @@ def _sqdist_fp(a: pa.Array, b: pa.Array) -> pa.Array:
     return pa.array(np.square(_matrix(a) - _matrix(b)).sum(axis=1))
 
 
-def _exact_l2_topk(embfp, k, n_queries, q_lo=0):
+def _exact_l2_topk(embfp, k, n_queries, q_lo):
     """Brute-force integer-L2 top-k: the exactness baseline for the PQ
     path, same broadcast-queries shape as _exact_topk."""
-    q = (embfp.filter((F.col("vec_id") >= q_lo)
-                      & (F.col("vec_id") < q_lo + n_queries))
-         .select(F.col("vec_id").alias("query_id"), F.col("x").alias("qx")))
+    q = _queries(embfp, "x", q_lo, n_queries)
     scored = (embfp.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("query_id"))
               .withColumn("dist", _sqdist_fp(F.col("qx"), F.col("x"))))
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(),
-                                               F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank", "dist"))
+    return _top_k(scored, F.col("dist").asc(), k, "dist")
 
 
-def embedding_pq_recall(spark, sf_dir, k=3, n_queries=5, q_lo=0,
-                        trained=False):
+def embedding_pq_recall(spark, sf_dir, k=ANN_K, n_queries=ANN_N_QUERIES,
+                        q_lo=0, trained=False):
     """Recall@k of the PQ-ADC scan against the exact integer-L2 baseline —
     the acceptance query run before trusting a compressed index, in the
     SAME metric PQ approximates (L2 over the fixed-point components; recall
     vs a cosine baseline would conflate metric mismatch with quantization
-    loss). Integer hit counts; recall = n_hits / n_exact. trained=True
+    loss). Integer hit counts; recall = n_hits / n_exact. The registered
+    query runs embedding_pq_topk's search; embedding_pq_recall_trained
     measures the per-subspace-k-means codebook instead of the
-    deterministic stand-in — the number a deployment would quote
-    (measure it at q_lo >= PQ_KS so the queries aren't codebook
-    entries)."""
+    deterministic stand-in — the number a deployment would quote —
+    with k=10 over 30 queries at q_lo=200 >= PQ_KS, so the queries
+    aren't codebook entries."""
     embfp = _emb_fp(spark, sf_dir)
-    return _recall_counts(
-        _exact_l2_topk(embfp, k, n_queries, q_lo=q_lo),
-        embedding_pq_topk(spark, sf_dir, k=k, n_queries=n_queries,
-                          q_lo=q_lo, trained=trained))
+    rows, q_rows = _driver_rows(embfp, PQ_KS, q_lo, n_queries)
+    CB = (_pq_codebook_trained(embfp) if trained
+          else _pq_codebook_from_rows(rows))
+    return _recall_counts(_exact_l2_topk(embfp, k, n_queries, q_lo),
+                          _pq_topk(spark, embfp, CB, q_rows, k))
 
 
-def _recall_counts(exact_df, approx_df):
-    """Per-query integer |approx ∩ exact| hit counts vs the baseline size —
-    the all-integer recall shape the driver's hash compare needs."""
-    exact = exact_df.select("query_id", "vec_id")
-    approx = approx_df.select("query_id", "vec_id")
-    hits = (exact.join(approx, ["query_id", "vec_id"])
-            .groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits")))
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    return (base.join(hits, "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n_hits", F.lit(0)).cast("long")
-                    .alias("n_hits"),
-                    "n_exact"))
+def _l2_codebook(cent_rows: list) -> tuple:
+    """(cent_ids, C, ‖c‖²) int64 arrays of sorted (cent_id, vector) rows —
+    the integer-L2 codebook every assignment kernel binds."""
+    cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
+    C = np.array([r[1] for r in cent_rows], dtype=np.int64)
+    return cent_ids, C, np.square(C).sum(axis=1)
 
 
 def _ivfpq_index(embfp: DataFrame, cent_rows: list, CB: np.ndarray) \
@@ -2802,11 +2806,9 @@ def _ivfpq_index(embfp: DataFrame, cent_rows: list, CB: np.ndarray) \
     of the same Arrow batch — full vectors are never stored, shuffled, or
     revisited after this scan, which is the entire point of the layout at
     10⁹ vectors. Output is M rows per vector: (vec_id, cell, sub, code)."""
-    cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([r[1] for r in cent_rows], dtype=np.int64)
     return _vector_stage(
         embfp, "x",
-        partial(_ivfpq_kernel, cent_ids, C, np.square(C).sum(axis=1),
+        partial(_ivfpq_kernel, *_l2_codebook(cent_rows),
                 CB, np.square(CB).sum(axis=2)),
         "vec_id bigint, cell bigint, sub bigint, code bigint")
 
@@ -2817,8 +2819,29 @@ def _ivfpq_kernel(cent_ids, C, c_sq, CB, cb_sq, batch, X):
     return vec_ids, np.repeat(cent_ids[best], len(CB)), subs, codes
 
 
-def embedding_ann_ivfpq(spark, sf_dir, k=3, n_queries=5, probes=None,
-                        q_lo=0, trained=False):
+def _ivfpq_topk(spark, embfp: DataFrame, cent_rows: list, CB: np.ndarray,
+                q_rows: list, k: int) -> DataFrame:
+    """IVF-PQ search of the query rows (see embedding_ann_ivfpq): each
+    query probes the N_IVF_PROBES cells of cent_rows nearest to it, ties
+    to the lower cent_id, and ranks those cells' codes under CB by ADC."""
+    cent_ids, C, _ = _l2_codebook(cent_rows)
+    probe_rows = []
+    for r in q_rows:
+        qx = np.array(list(r["x"]), dtype=np.int64)
+        d = np.square(C - qx[None, :]).sum(axis=1)
+        order = np.lexsort((cent_ids, d))  # dist asc, cent_id asc on ties
+        probe_rows.extend((int(r["vec_id"]), int(cent_ids[i]))
+                          for i in order[:N_IVF_PROBES])
+    probe_df = local_frame(spark, probe_rows, "query_id bigint, cell bigint")
+    cand = (_ivfpq_index(embfp, cent_rows, CB)
+            .join(F.broadcast(probe_df), "cell")
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .join(F.broadcast(_adc_table(spark, q_rows, CB)),
+                  ["query_id", "sub", "code"]))
+    return _adc_top_k(cand, k)
+
+
+def embedding_ann_ivfpq(spark, sf_dir):
     """IVF-PQ composed index — the FAISS-style architecture production ANN
     actually deploys at 10⁹+ vectors: the corpus inverts into ~√n cells by
     integer-L2 nearest centroid, vectors inside cells live ONLY as their
@@ -2828,63 +2851,29 @@ def embedding_ann_ivfpq(spark, sf_dir, k=3, n_queries=5, probes=None,
     table) plus the compressed code table — never a full vector, never a
     non-probed cell. Everything is exact integer arithmetic, so the DuckDB
     oracle replays cell assignment, encoding, probing, and ADC ranking
-    bit-identically. q_lo/trained mirror embedding_pq_topk: offset the
-    query window past the training prefix and/or swap in the
-    per-subspace-k-means codebook — the index/search plans are
-    identical either way."""
-    probes = N_IVF_PROBES if probes is None else probes
+    bit-identically. _ivfpq_topk takes any codebook and query window: the
+    index/search plans are identical for the per-subspace-k-means
+    codebook."""
     embfp = _emb_fp(spark, sf_dir)
     n_cent = _ivf_n_centroids(_emb_count(spark, sf_dir))
     # ONE driver collect serves the IVF centroids, the PQ codebook, and
-    # the query vectors (low-vec_id prefixes of the table, plus the query
-    # window when q_lo pushes it past them)
-    rows = (embfp.filter((F.col("vec_id") < max(n_cent, PQ_KS))
-                         | ((F.col("vec_id") >= q_lo)
-                            & (F.col("vec_id") < q_lo + n_queries)))
-            .orderBy("vec_id").collect())
+    # the query vectors
+    rows, q_rows = _driver_rows(embfp, max(n_cent, PQ_KS), 0, ANN_N_QUERIES)
     cent_rows = [(int(r["vec_id"]), list(r["x"])) for r in rows
                  if r["vec_id"] < n_cent]
-    CB = (_pq_codebook_trained(embfp) if trained
-          else _pq_codebook_from_rows(rows))
-    index = _ivfpq_index(embfp, cent_rows, CB)
-    q_rows = [r for r in rows if q_lo <= r["vec_id"] < q_lo + n_queries]
-    cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([r[1] for r in cent_rows], dtype=np.int64)
-    probe_rows = []
-    for r in q_rows:
-        qx = np.array(list(r["x"]), dtype=np.int64)
-        d = np.square(C - qx[None, :]).sum(axis=1)
-        order = np.lexsort((cent_ids, d))  # dist asc, cent_id asc on ties
-        probe_rows.extend((int(r["vec_id"]), int(cent_ids[i]))
-                          for i in order[:probes])
-    probe_df = local_frame(spark, probe_rows, "query_id bigint, cell bigint")
-    adc_df = local_frame(
-        spark, _adc_rows(q_rows, CB),
-        "query_id bigint, sub bigint, code bigint, pdist bigint")
-    cand = (index.join(F.broadcast(probe_df), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .join(F.broadcast(adc_df), ["query_id", "sub", "code"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("pdist").alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(),
-                                               F.col("vec_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank", "adist"))
+    return _ivfpq_topk(spark, embfp, cent_rows, _pq_codebook_from_rows(rows),
+                       q_rows, ANN_K)
 
 
-def embedding_ann_ivfpq_recall(spark, sf_dir, k=3, n_queries=5, q_lo=0,
-                               trained=False):
+def embedding_ann_ivfpq_recall(spark, sf_dir):
     """Recall@k of the composed IVF-PQ index vs the exact integer-L2
     baseline — the figure that separates cell-miss loss (a true neighbor in
     a non-probed cell) plus quantization loss from the exact scan; compare
     with embedding_pq_recall (quantization loss only) to attribute the
-    gap. q_lo/trained as in embedding_pq_recall."""
-    embfp = _emb_fp(spark, sf_dir)
+    gap."""
     return _recall_counts(
-        _exact_l2_topk(embfp, k, n_queries, q_lo=q_lo),
-        embedding_ann_ivfpq(spark, sf_dir, k=k, n_queries=n_queries,
-                            q_lo=q_lo, trained=trained))
+        _exact_l2_topk(_emb_fp(spark, sf_dir), ANN_K, ANN_N_QUERIES, 0),
+        embedding_ann_ivfpq(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2894,7 +2883,7 @@ def embedding_ann_ivfpq_recall(spark, sf_dir, k=3, n_queries=5, q_lo=0,
 RANGE_WINDOW_MIN = 60  # attribution window: clicks in the hour before a purchase
 
 
-def events_range_join(spark, sf_dir, window_minutes=RANGE_WINDOW_MIN):
+def events_range_join(spark, sf_dir):
     """Interval/range join — the attribution query (clicks within the hour
     BEFORE each purchase, same user), an operator Spark has no native
     physical strategy for: an equi+range predicate hash-joins on user_id
@@ -2912,7 +2901,7 @@ def events_range_join(spark, sf_dir, window_minutes=RANGE_WINDOW_MIN):
     with no attributable click survive with n_clicks = 0. µs offsets come
     from _ntz_micros (timezone-free naive-epoch µs = DuckDB epoch_us), the
     same helper the other event ops use."""
-    w_us = window_minutes * 60 * 1_000_000
+    w_us = RANGE_WINDOW_MIN * 60 * 1_000_000
     ev = _t(spark, sf_dir, "events")
     p = (ev.filter(F.col("event_type") == "purchase")
          .select(F.col("event_id").alias("purchase_id"), "user_id",
@@ -2939,7 +2928,7 @@ def events_range_join(spark, sf_dir, window_minutes=RANGE_WINDOW_MIN):
 KMV_K = 16  # sketch size; per-source distinct counts at test SFs are >= 25
 
 
-def corpus_distinct_kmv(spark, sf_dir, k=KMV_K):
+def corpus_distinct_kmv(spark, sf_dir):
     """Per-source distinct-document estimate via a K-minimum-values sketch —
     the portable alternative to HLL (approx_count_distinct) whose estimate
     the DuckDB oracle reproduces BIT-EXACTLY: hash every doc with the
@@ -2961,10 +2950,10 @@ def corpus_distinct_kmv(spark, sf_dir, k=KMV_K):
     stats = h.groupBy("source").agg(F.count(F.lit(1)).alias("n_exact"))
     w = Window.partitionBy("source").orderBy(F.col("h").asc())
     kth = (h.withColumn("rn", F.row_number().over(w))
-           .filter(F.col("rn") == k)
+           .filter(F.col("rn") == KMV_K)
            .select("source", F.col("h").alias("kth_min")))
     est = (F.when(F.col("kth_min").isNull(), F.col("n_exact"))
-           .otherwise(F.floor(F.lit(float(k - 1)) * F.lit(2.0 ** 32)
+           .otherwise(F.floor(F.lit(float(KMV_K - 1)) * F.lit(2.0 ** 32)
                               / F.col("kth_min"))))
     return (stats.join(kth, "source", "left")
             .select("source", "n_exact", "kth_min",
@@ -2976,14 +2965,13 @@ BADWORDS = ("slow", "big", "legacy")  # content blocklist (corpus-appropriate
 BADWORDS_MAX_PCT = 5                  # keep iff blocked words <= 5% of words
 
 
-def corpus_badwords_filter(spark, sf_dir, max_pct=BADWORDS_MAX_PCT,
-                           blocklist=BADWORDS):
+def corpus_badwords_filter(spark, sf_dir):
     """Blocked-word content filter — the C4 "bad words" stage in its
     modern ratio form (C4 dropped a page on ANY hit; Dolma/RefinedWeb-style
     taggers use a ratio threshold so a quoted word doesn't nuke a good
-    document). keep = blocked-word share ≤ max_pct%, decided as the pure
-    INTEGER inequality n_blocked·100 ≤ n_words·max_pct — no float ever
-    enters the decision, so the oracle compare is exact.
+    document). keep = blocked-word share ≤ BADWORDS_MAX_PCT%, decided as
+    the pure INTEGER inequality n_blocked·100 ≤ n_words·BADWORDS_MAX_PCT —
+    no float ever enters the decision, so the oracle compare is exact.
 
     Scale shape: blocklist ships as a literal array (real lists are a few
     thousand words — still a literal); occurrence counting is TWO-STEP so
@@ -2997,7 +2985,7 @@ def corpus_badwords_filter(spark, sf_dir, max_pct=BADWORDS_MAX_PCT,
     hash probe — it does NOT fix the complexity). Still map-side codegen
     over the existing scan, zero shuffle, zero Python (plan-pinned)."""
     words = F.filter(F.split("text", " "), lambda w: w != "")
-    blocked = F.array(*[F.lit(w) for w in blocklist])
+    blocked = F.array(*[F.lit(w) for w in BADWORDS])
     base = (_t(spark, sf_dir, "documents")
             .select("doc_id", words.alias("ws"),
                     F.array_intersect(words, blocked).alias("matched")))
@@ -3008,5 +2996,5 @@ def corpus_badwords_filter(spark, sf_dir, max_pct=BADWORDS_MAX_PCT,
         "doc_id",
         n_words.cast("long").alias("n_words"),
         n_blocked.cast("long").alias("n_blocked"),
-        (n_blocked * 100 <= n_words * F.lit(int(max_pct)))
+        (n_blocked * 100 <= n_words * F.lit(int(BADWORDS_MAX_PCT)))
         .cast("int").alias("keep"))

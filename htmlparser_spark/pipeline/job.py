@@ -18,6 +18,7 @@ from functools import lru_cache, partial, reduce
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions.partitioning import bucket
 
 from .._rowmap import local_frame
 from .kernel_stage import parse_batch, parsed_schema
@@ -186,7 +187,7 @@ def write_parsed_table(parsed: DataFrame, table: str,
     partitions and leaves completed ones intact (idempotent resume).
     Parquet fallback is in run_pipeline."""
     writer = (parsed.writeTo(table)
-              .partitionedBy(F.bucket(1024, F.col("url"))))
+              .partitionedBy(bucket(1024, F.col("url"))))
     if create:
         writer.createOrReplace()
     else:

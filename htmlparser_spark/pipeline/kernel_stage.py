@@ -2,7 +2,8 @@
 
 ``parse_batch`` under ``mapInPandas`` with output schema
 ``parsed_schema(columns)`` — built only by ``pipeline.job.parse_pages`` —
-is the only Python that runs on executors.
+is the parse stage. The other executor Python (sources, sinks, codecs,
+the vector and shingle stages) runs on ``mapInArrow``/``arrow_udf``.
 Batches cross the JVM↔Python boundary as Arrow record batches (never
 per-row); inside a batch the kernel loops documents (SURVEY.md §4.3). Every
 output is one row per page: per-link and per-node tables are JVM-side

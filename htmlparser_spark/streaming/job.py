@@ -360,7 +360,7 @@ def bloom_history_bits(history: DataFrame) -> DataFrame:
     the geometry is fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), and
     the filter saturates as history grows — ~3% of distinct new pages
     read positive at 10³ history documents, ~30% at 3·10³, ~93% at 10⁴
-    (ROADMAP item 3 sizes a windowed filter to a target rate)."""
+    (ROADMAP item 2 sizes a windowed filter to a target rate)."""
     pos = [_bloom_position(F.col("content_hash"), j).alias("pos")
            for j in range(BLOOM_K)]
     return history.select(F.explode(F.array(*pos)).alias("pos")).distinct()
@@ -413,7 +413,7 @@ def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
     Its accuracy is not: the geometry is fixed (m = 8192 bits, k = 3), so
     the filter saturates — ~93% of distinct new pages read maybe_dup = 1
     once the history reaches 10⁴ documents, ~100% at 10⁵ (see
-    bloom_history_bits and ROADMAP item 3). Crash-safe: see ``_drain``.
+    bloom_history_bits and ROADMAP item 2). Crash-safe: see ``_drain``.
 
     This drain always parses untranscoded, and resuming an out_dir a
     transcoded or plain-kind drain created fails fast instead of mixing

@@ -551,7 +551,7 @@ def test_kmv_under_k_groups_fall_back_to_exact(spark, tmp_path):
     assert n_big == ops.KMV_K + 9 and kth is not None and est > 0
 
 
-def test_badwords_filter_matches_python_reference(spark):
+def test_badwords_filter_matches_python_reference(spark, monkeypatch):
     """Integer keep rule (n_blocked*100 <= n_words*max_pct) vs a pure
     python recount on the real table; both keep and drop sides non-empty
     so the threshold actually discriminates on this corpus."""
@@ -574,8 +574,8 @@ def test_badwords_filter_matches_python_reference(spark):
     # a realistic-size blocklist (500 words, mostly never-matching) must
     # count identically — the two-step intersect lookup is occurrence-
     # exact regardless of list size
-    big = [f"blk{i}" for i in range(497)] + list(ops.BADWORDS)
+    monkeypatch.setattr(
+        ops, "BADWORDS", [f"blk{i}" for i in range(497)] + list(ops.BADWORDS))
     got_big = {r.doc_id: (r.n_words, r.n_blocked, r.keep)
-               for r in ops.corpus_badwords_filter(spark, sf,
-                                                   blocklist=big).collect()}
+               for r in ops.corpus_badwords_filter(spark, sf).collect()}
     assert got_big == want

@@ -105,15 +105,17 @@ def test_ivf_codebook_scales_with_corpus(spark, tmp_path):
 
 def test_jaccard_hot_shingle_cap_drops_ubiquitous_shingles(spark, tmp_path):
     """A shingle present in more than SHINGLE_DF_CAP docs must not create
-    candidate pairs on its own (the f² pair-blowup guard)."""
-    hot = "common boiler plate"  # one 3-gram shared by EVERY doc
+    candidate pairs on its own (the f² pair-blowup guard). The boilerplate
+    docs are that one 3-gram and nothing else, so without the cap every
+    pair of them scores Jaccard 1 — far above JACCARD_THRESHOLD."""
+    hot = "common boiler plate"  # the one 3-gram of each boilerplate doc
     n = ops.SHINGLE_DF_CAP + 5
-    rows = [f"{hot} unique{i}a unique{i}b unique{i}c unique{i}d" for i in range(n)]
-    # plus one true near-dup pair sharing rare shingles
+    rows = [hot] * n
+    # plus one true near-dup pair sharing rare shingles (Jaccard 7/9)
     rows += ["rare one two three four five six seven eight nine",
              "rare one two three four five six seven eight ten"]
     sf_dir = _write_docs(spark, tmp_path, rows)
-    got = ops.dedup_ngram_jaccard(spark, sf_dir, threshold=0.3).collect()
+    got = ops.dedup_ngram_jaccard(spark, sf_dir).collect()
     pairs = {(r.doc_a, r.doc_b) for r in got}
     # the hot shingle alone must not connect the n boilerplate docs
     assert all(a >= n or b >= n for a, b in pairs), pairs
@@ -281,14 +283,18 @@ def test_ivf_hot_cell_split_bounds_tasks_and_keeps_pairs(spark):
     ops.cleanup_checkpoints()
 
 
-def test_embedding_cosine_max_cell_optin_is_equivalent(spark):
-    """dedup_embedding_cosine(max_cell=...) must emit the identical pair set
-    as the default plain join (the opt-in only changes task granularity)."""
+def test_embedding_cosine_balanced_pairs_equal_plain_join(spark):
+    """dedup_embedding_cosine's plain within-cell join and the split join
+    (_cell_pairs_balanced) keep the identical near-dup pair set on the
+    uniform embeddings: the split only changes task granularity."""
+    emb = ops._emb(spark, TESTDATA_SF)
+    cents = ops._ivf_centroids(
+        emb, ops._ivf_n_centroids(ops._emb_count(spark, TESTDATA_SF)))
+    pairs = ops._cell_pairs_balanced(ops._ivf_assign(emb, cents), 8)
+    bal = sorted(map(tuple, ops._cosine_dups(
+        pairs, ops.COSINE_DUP_THRESHOLD).collect()))
     base = sorted(map(tuple,
                       ops.dedup_embedding_cosine(spark, TESTDATA_SF).collect()))
-    bal = sorted(map(tuple,
-                     ops.dedup_embedding_cosine(spark, TESTDATA_SF,
-                                                max_cell=8).collect()))
     assert bal == base and base
 
 

@@ -4,6 +4,7 @@ so a refactor that silently adds a shuffle or demotes a broadcast fails
 here, not at 100 TB. Assertions read the EXECUTED plan string — the same
 evidence docs/PLANS.md documents."""
 import os
+import re
 import sys
 
 import pytest
@@ -236,7 +237,7 @@ def test_gopher_rules_map_only_no_python(spark):
     assert "EvalPython" not in p, p
 
 
-def test_badwords_filter_map_only_no_python(spark):
+def test_badwords_filter_map_only_no_python(spark, monkeypatch):
     """The blocked-word ratio filter is pure codegen array arithmetic on
     the document's own text (the blocklist is a literal array): zero
     Exchange, zero Python eval — at corpus scale it rides the scan for
@@ -246,8 +247,9 @@ def test_badwords_filter_map_only_no_python(spark):
     p = plan_of(ops.corpus_badwords_filter(spark, SF))
     assert "Exchange" not in p, p
     assert "EvalPython" not in p, p
-    big = [f"blk{i}" for i in range(497)] + list(ops.BADWORDS)
-    p = plan_of(ops.corpus_badwords_filter(spark, SF, blocklist=big))
+    monkeypatch.setattr(
+        ops, "BADWORDS", [f"blk{i}" for i in range(497)] + list(ops.BADWORDS))
+    p = plan_of(ops.corpus_badwords_filter(spark, SF))
     assert "Exchange" not in p, p
     assert "EvalPython" not in p, p
 
@@ -328,6 +330,60 @@ def test_ivfpq_search_broadcasts_probes_and_adc(spark):
     p = plan_of(ops.embedding_ann_ivfpq(spark, SF))
     assert p.count("BroadcastHashJoin") >= 2, p
     assert "SortMergeJoin" not in p, p
+
+
+def _depth(line: str) -> int:
+    """Where a plan line's node starts: past its ``+- `` / ``:- `` tree
+    prefix (0 for the root)."""
+    m = re.match(r"[ :]*[+:]- ", line)
+    return m.end() if m else 0
+
+
+def _subtrees(plan: str, node: str) -> list:
+    """The text of every subtree of ``plan`` rooted at a ``node`` line: the
+    node's line and the lines after it that sit deeper in the tree."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        if not line[_depth(line):].startswith(node):
+            continue
+        end = i + 1
+        while end < len(lines) and _depth(lines[end]) > _depth(line):
+            end += 1
+        out.append("\n".join(lines[i:end]))
+    return out
+
+
+@pytest.mark.parametrize("name", [
+    "embedding_topk", "embedding_ann_lsh", "embedding_ann_ivf",
+    "embedding_pq_topk", "embedding_ann_ivfpq", "_exact_l2_topk"])
+def test_topk_plans_push_the_rank_down_past_a_broadcast_query_side(spark,
+                                                                   name):
+    """Every per-query top-k rides WindowGroupLimit (each task ships at most
+    k rows per query into the query_id exchange), and the query side of
+    the search is a broadcast, so the corpus never shuffles to meet it."""
+    if name == "_exact_l2_topk":
+        df = ops._exact_l2_topk(ops._emb_fp(spark, SF), ops.ANN_K,
+                                ops.ANN_N_QUERIES, 0)
+    else:
+        df = getattr(ops, name)(spark, SF)
+    p = plan_of(df)
+    assert "WindowGroupLimit" in p, p
+    assert any("query_id" in t
+               for t in _subtrees(p, "BroadcastExchange")), p
+
+
+def test_subtrees_reads_a_plan_tree():
+    plan = """Project [a]
++- BroadcastHashJoin [k], [k]
+   :- Filter x
+   :  +- Scan t
+   +- BroadcastExchange Mode
+      +- LocalTableScan [query_id, k]
++- Other"""
+    assert _subtrees(plan, "BroadcastExchange") == [
+        "   +- BroadcastExchange Mode\n      +- LocalTableScan [query_id, k]"]
+    assert _subtrees(plan, "Filter") == ["   :- Filter x\n   :  +- Scan t"]
 
 
 def test_kmeans_update_partial_aggregates_below_exchange(spark):

@@ -322,17 +322,23 @@ def test_pq_trained_improves_quantization_and_recall(spark):
 
 
 def test_ivfpq_trained_out_of_training_queries(spark):
-    """The composed IVF-PQ accepts the trained codebook + offset query
+    """The IVF-PQ search helper takes the trained codebook + offset query
     window: same index/search plans, and recall on out-of-training
     queries must not degrade vs the stand-in codebook (the same
     comparison embedding_pq_recall pins for the pure-PQ path)."""
+    embfp = ops._emb_fp(spark, SF)
+    n_cent = ops._ivf_n_centroids(ops._emb_count(spark, SF))
+    rows, q_rows = ops._driver_rows(embfp, max(n_cent, ops.PQ_KS), 200, 30)
+    cent_rows = [(r["vec_id"], list(r["x"])) for r in rows
+                 if r["vec_id"] < n_cent]
+    exact = ops._exact_l2_topk(embfp, 10, 30, 200)
     hits = {}
-    for trained in (False, True):
-        rows = ops.embedding_ann_ivfpq_recall(
-            spark, SF, k=10, n_queries=30, q_lo=200,
-            trained=trained).collect()
-        assert all(r["n_exact"] == 10 for r in rows) and len(rows) == 30
-        hits[trained] = sum(r["n_hits"] for r in rows)
+    for trained, CB in ((False, ops._pq_codebook_from_rows(rows)),
+                        (True, ops._pq_codebook_trained(embfp))):
+        got = ops._recall_counts(exact, ops._ivfpq_topk(
+            spark, embfp, cent_rows, CB, q_rows, 10)).collect()
+        assert all(r["n_exact"] == 10 for r in got) and len(got) == 30
+        hits[trained] = sum(r["n_hits"] for r in got)
     assert hits[True] >= hits[False]
 
 

@@ -143,8 +143,11 @@ def test_write_parsed_table_uses_partition_overwrite(spark):
     """Resume semantics of the Iceberg sink (no iceberg jar in sandbox, so
     the writer chain is verified against a duck-typed recorder): default
     resume path must use dynamic partition overwrite, create=True replaces.
-    The session fixture is needed because F.bucket requires an active
-    SparkContext."""
+    The session fixture is needed because the bucket transform requires an
+    active SparkContext. The transform is partitioning.bucket: F.bucket is
+    deprecated in PySpark 4 and warns on every call."""
+    import warnings
+
     from htmlparser_spark.pipeline.job import write_parsed_table
 
     calls = []
@@ -165,7 +168,12 @@ def test_write_parsed_table_uses_partition_overwrite(spark):
             calls.append(f"writeTo:{table}")
             return FakeWriter()
 
-    write_parsed_table(FakeDF(), "cat.db.parsed")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        write_parsed_table(FakeDF(), "cat.db.parsed")
+    assert not [w for w in caught
+                if issubclass(w.category, FutureWarning)], \
+        [str(w.message) for w in caught]
     assert calls == ["writeTo:cat.db.parsed", "partitionedBy",
                      "overwritePartitions"]
     calls.clear()
