@@ -24,7 +24,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import DoubleType, LongType, StringType
+from pyspark.sql.types import DoubleType, LongType
 
 from ._rowmap import arrow_schema, local_frame
 
@@ -647,21 +647,23 @@ def _lsh_planes() -> np.ndarray:
                     dtype=np.float64)
 
 
-@arrow_udf(StringType())
-def _lsh_signature(v: pa.Array) -> pa.Array:
-    """Sign bits of each vector against the hyperplanes: ONE matmul per
-    Arrow batch instead of LSH_N_PLANES interpreted-HOF folds per row."""
-    bits = (_matrix(v) @ _lsh_planes().T >= 0).astype(np.uint8)
-    return pa.array(["".join("1" if b else "0" for b in row)
-                     for row in bits], pa.string())
+def _lsh_bucket_kernel(batch, V):
+    """The bucket of each vector, its sign bits against the hyperplanes:
+    ONE matmul per Arrow batch instead of LSH_N_PLANES interpreted-HOF
+    folds per row."""
+    bits = (V @ _lsh_planes().T >= 0).astype(np.uint8)
+    return (batch.column("vec_id"), batch.column("v"),
+            ["".join("1" if b else "0" for b in row) for row in bits])
 
 
 def embedding_ann_lsh(spark, sf_dir):
     """Sign-LSH bucketed ANN (the 100TB path: equi-join on bucket signature
     instead of a cross join). Hyperplanes are seeded pseudo-random vectors
     derived from md5 — deterministic. Rows-only checked (recall < 1 by
-    design vs the brute-force baseline)."""
-    emb = _emb(spark, sf_dir).withColumn("bucket", _lsh_signature(F.col("v")))
+    design vs the brute-force baseline). The bucket comes from a vector
+    stage, not a UDF the join's isnotnull(bucket) filter would re-run."""
+    emb = _vector_stage(_emb(spark, sf_dir), "v", _lsh_bucket_kernel,
+                        "vec_id bigint, v array<double>, bucket string")
     q = _queries(emb, "v", 0, ANN_N_QUERIES, "bucket")
     return _cosine_top_k(emb.join(F.broadcast(q), "bucket"))
 
@@ -844,7 +846,8 @@ def dedup_embedding_cosine(spark, sf_dir):
     cells: dedup_embedding_cosine_balanced)."""
     emb = _emb(spark, sf_dir)
     cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
-    assigned = _ivf_assign(emb, cents)
+    # one assignment pass feeds both sides of the cell self-join
+    assigned = _materialized(_ivf_assign(emb, cents))
     a = assigned.select(F.col("cell"), F.col("vec_id").alias("vec_a"),
                         F.col("v").alias("va"))
     b = assigned.select(F.col("cell"), F.col("vec_id").alias("vec_b"),
@@ -964,7 +967,8 @@ def dedup_embedding_cosine_balanced(spark, sf_dir):
     'recall unchanged')."""
     emb = _emb_clustered(spark, sf_dir)
     cents = _ivf_centroids(emb, _ivf_n_centroids(_emb_count(spark, sf_dir)))
-    pairs = _cell_pairs_balanced(_ivf_assign(emb, cents), MAX_CELL)
+    assigned = _materialized(_ivf_assign(emb, cents))  # read on 4 paths
+    pairs = _cell_pairs_balanced(assigned, MAX_CELL)
     return _cosine_dups(pairs, COSINE_BALANCED_THRESHOLD)
 
 

@@ -257,6 +257,19 @@ def _recount(spark: SparkSession, sink_dir: str, metrics: dict):
         return dict.fromkeys(metrics)  # no commit (or no file) yet
 
 
+CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CKPT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing"
+                   ".FileSystemBasedCheckpointFileManager")
+
+
+def _file_checkpoints(spark: SparkSession, out_dir: str) -> bool:
+    """Whether a drain into ``out_dir`` runs its query on FS_CKPT_MANAGER:
+    the session names no manager of its own and ``out_dir``'s Hadoop
+    FileSystem (its scheme, else the default FS) is the local one."""
+    return (spark.conf.get(CKPT_MANAGER_KEY, None) is None
+            and hadoop_path(spark, out_dir)[1].getUri().getScheme() == "file")
+
+
 def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
            kind: str, transcode: bool, aggs: dict,
            history_dir: str | None = None) -> dict:
@@ -303,10 +316,26 @@ def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
         bits = int(state["bits"], 16)
         frame = bloom_dedup_stream(frame, local_frame(spark, [
             (p,) for p in range(BLOOM_M) if bits >> p & 1], "pos bigint"))
-    q = write_parsed_stream(
-        frame.observe("drain", *[c.alias(k) for k, c in metrics.items()]),
-        out_dir, sink)
-    q.awaitTermination()
+    # On file: the query's logs (offsets, commits, sources/0, the sink's
+    # _spark_metadata) commit through the FileSystem manager: Spark's
+    # default FileContext one stats each rename through
+    # RawLocalFileSystem.getFileLinkStatus, which forks `readlink` when
+    # Hadoop has no native library. Both check the destination, then call
+    # RawLocalFileSystem.rename (the local AbstractFileSystem does not
+    # override renameInternal), so this removes forks, not a guarantee.
+    # Other schemes keep the default: on HDFS the FileContext rename is the
+    # atomic one. The logs take the conf when start() builds the query.
+    scoped = _file_checkpoints(spark, out_dir)
+    if scoped:
+        spark.conf.set(CKPT_MANAGER_KEY, FS_CKPT_MANAGER)
+    try:
+        q = write_parsed_stream(
+            frame.observe("drain", *[c.alias(k) for k, c in metrics.items()]),
+            out_dir, sink)
+        q.awaitTermination()
+    finally:
+        if scoped:
+            spark.conf.unset(CKPT_MANAGER_KEY)
     after = _last_committed_batch(spark, sink_dir)
     seen = {p.batchId: p.observedMetrics["drain"] for p in q.recentProgress
             if "drain" in p.observedMetrics

@@ -424,3 +424,44 @@ def test_kmv_rank_k_uses_window_group_limit(spark):
     p = plan_of(ops.corpus_distinct_kmv(spark, SF))
     assert "WindowGroupLimit" in p, p
     assert "Python" not in p, p
+
+
+def _final_plan(df) -> str:
+    """The final adaptive plan of ``df`` after one ``collect()``, with the
+    plans of cached relations cut out (they ran when they were cached)."""
+    df.collect()
+    kept, cut = [], None
+    for line in plan_of(df).split("== Initial Plan ==")[0].splitlines():
+        # a cached plan prints its own stages without a tree prefix, so
+        # it ends at the first line no deeper than its InMemoryRelation
+        start = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and start > cut:
+            continue
+        cut = start if line[start:].startswith("InMemoryRelation") else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
+def test_lsh_signature_runs_once_per_join_side(spark):
+    """The bucket is a vector-stage column, so the join's inferred
+    isnotnull(bucket) filter reads it: one signature pass per side (the
+    corpus and the broadcast queries), plus the cosine UDF."""
+    p = _final_plan(ops.embedding_ann_lsh(spark, SF))
+    assert p.count("MapInArrow") == 2, p
+    assert p.count("ArrowEvalPython") == 1, p
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_embedding_cosine", "dedup_embedding_cosine_balanced"])
+def test_embedding_dedups_assign_cells_once(spark, name):
+    """Both sides of the cell pair join read one cached IVF assignment:
+    the op caches one plan holding the assignment stage, and its pair
+    plan runs no assignment of its own."""
+    n = len(ops._MATERIALIZED)
+    p = _final_plan(getattr(ops, name)(spark, SF))
+    cached = ops._MATERIALIZED[n:]
+    assert len(cached) == 1
+    assignment = plan_of(cached[0]).split("== Initial Plan ==")[0]
+    assert assignment.count("MapInArrow") == 1, assignment
+    assert "MapInArrow" not in p, p
+    ops.cleanup_checkpoints()

@@ -7,8 +7,9 @@ drop-directory listing stays on the driver, the commit-log listing resolves
 its py4j classes once, build_session captures no call sites, runs the
 driver JVM C1-only and refuses a running session it did not configure, a
 Bloom drain after the first launches no job outside its query, a degenerate
-Bloom seed is refused, and the Bloom recount reads only files the sink
-committed."""
+Bloom seed is refused, the Bloom recount reads only files the sink
+committed, and a drain into a file: sink runs its checkpoint logs on the
+FileSystem manager without leaving that conf in the session."""
 import json
 import os
 import shutil
@@ -432,3 +433,95 @@ def test_bloom_fold_skips_uncommitted_files(spark, tmp_path, recounts):
     assert _state_bits(out) == want
     orphan_bits = _rebuilt_bits(spark, orphan_dir)
     assert orphan_bits - want  # the orphan would have set new bits
+
+
+FC_CKPT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing"
+                   ".FileContextBasedCheckpointFileManager")
+
+
+@pytest.fixture
+def queries(monkeypatch):
+    """The streaming queries the drains start, in call order."""
+    seen = []
+    start = job.write_parsed_stream
+
+    def spy(frame, out_dir, sink="parsed"):
+        seen.append(start(frame, out_dir, sink))
+        return seen[-1]
+
+    monkeypatch.setattr(job, "write_parsed_stream", spy)
+    return seen
+
+
+def _log_managers(q):
+    """Class names of the checkpoint managers of ``q``'s offset and commit
+    logs."""
+    sq = q._jsq.streamingQuery()
+    return {log.fileManager().getClass().getName()
+            for log in (sq.offsetLog(), sq.commitLog())}
+
+
+def test_file_drains_commit_through_the_filesystem_manager(spark, tmp_path,
+                                                           queries):
+    """On file: every drain kind runs its offset and commit logs on the
+    FileSystem checkpoint manager (the FileContext default forks `readlink`
+    per rename stat without Hadoop's native library) and leaves the
+    session conf as it found it."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _drop(src, 0)
+    before = spark.conf.getAll
+    job.run_stream_once(spark, src, out)
+    job.run_links_stream_once(spark, src, out)
+    job.run_bloom_stream_once(spark, src, str(tmp_path / "out_b"),
+                              os.path.join(out, "parsed"))
+    assert [_log_managers(q) for q in queries] == [{job.FS_CKPT_MANAGER}] * 3
+    assert spark.conf.getAll == before
+    assert spark.conf.get(job.CKPT_MANAGER_KEY, None) is None
+
+
+def test_drain_restores_the_session_conf_when_it_raises(spark, tmp_path,
+                                                        monkeypatch):
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _drop(src, 0)
+    before = spark.conf.getAll
+    during = []
+
+    def fail(frame, out_dir, sink="parsed"):
+        during.append(spark.conf.get(job.CKPT_MANAGER_KEY))
+        raise RuntimeError("injected failure to start")
+
+    monkeypatch.setattr(job, "write_parsed_stream", fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        job.run_stream_once(spark, src, out)
+    assert during == [job.FS_CKPT_MANAGER]
+    assert spark.conf.getAll == before
+
+
+def test_drain_keeps_a_manager_the_caller_set(spark, tmp_path, queries):
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _drop(src, 0)
+    spark.conf.set(job.CKPT_MANAGER_KEY, FC_CKPT_MANAGER)
+    try:
+        assert job.run_stream_once(spark, src, out) == _full(spark, out)
+        assert spark.conf.get(job.CKPT_MANAGER_KEY) == FC_CKPT_MANAGER
+    finally:
+        spark.conf.unset(job.CKPT_MANAGER_KEY)
+    assert [_log_managers(q) for q in queries] == [{FC_CKPT_MANAGER}]
+
+
+def test_other_schemes_keep_the_default_manager(spark, tmp_path):
+    """Only the local file system swaps managers: an explicit other scheme,
+    or a scheme-less path under another default FS (a cluster's hdfs://),
+    keeps Spark's default. Hadoop's http file system stands in for a
+    remote one; resolving it opens no connection."""
+    assert job._file_checkpoints(spark, str(tmp_path / "out"))
+    assert job._file_checkpoints(spark, f"file://{tmp_path}/out")
+    assert not job._file_checkpoints(spark, "http://localhost:1/out")
+    hconf = spark._jsc.hadoopConfiguration()
+    default_fs = hconf.get("fs.defaultFS")
+    hconf.set("fs.defaultFS", "http://localhost:1")
+    try:
+        assert not job._file_checkpoints(spark, "/data/out")
+    finally:
+        hconf.set("fs.defaultFS", default_fs)
+    assert job._file_checkpoints(spark, "/data/out")

@@ -14,8 +14,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from htmlparser_spark.pipeline.job import parse_pages
 from htmlparser_spark.pipeline.schema import PAGES_SCHEMA
 from htmlparser_spark.streaming.job import (
-    error_window_stream, host_rollup_stream, parse_page_stream,
-    read_page_stream, run_stream_once,
+    CKPT_MANAGER_KEY, FS_CKPT_MANAGER, error_window_stream,
+    host_rollup_stream, parse_page_stream, read_page_stream, run_stream_once,
 )
 from htmlparser_spark.synth import EPOCH, synth_pages
 
@@ -303,12 +303,16 @@ def test_stream_transcode_flag_must_stay_constant(spark, tmp_path):
     assert r["rows_total"] > 0
 
 
-def test_stream_kill_resume_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("manager", [None, FS_CKPT_MANAGER],
+                         ids=["default", "filesystem"])
+def test_stream_kill_resume_exactly_once(spark, tmp_path, manager):
     """Kill a drain mid-stream (SIGKILL, no cleanup), restart from the
     checkpoint, and assert the parsed sink equals an uninterrupted run's —
     the streaming analogue of the batch kill-resume test. The file sink's
     commit log makes readers ignore any part files a killed attempt left
-    uncommitted; the source checkpoint replays the unfinished micro-batch."""
+    uncommitted; the source checkpoint replays the unfinished micro-batch.
+    The killed drain commits through Spark's default checkpoint manager or
+    the FileSystem one (what run_stream_once uses on file:)."""
     import signal
     import subprocess
     import sys
@@ -330,7 +334,10 @@ def test_stream_kill_resume_exactly_once(spark, tmp_path):
         "    read_page_stream, parse_page_stream, write_parsed_stream)\n"
         "spark = (SparkSession.builder.master('local[2]')\n"
         "         .config('spark.sql.shuffle.partitions', '4')\n"
-        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "         .config('spark.ui.enabled', 'false')\n"
+        + (f"         .config({CKPT_MANAGER_KEY!r}, {manager!r})\n"
+           if manager else "") +
+        "         .getOrCreate())\n"
         f"pages = read_page_stream(spark, {src!r}, max_files_per_trigger=1)\n"
         f"q = write_parsed_stream(parse_page_stream(pages), {out_kill!r})\n"
         "q.awaitTermination()\n"
