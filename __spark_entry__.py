@@ -700,8 +700,8 @@ def corpus_charset_sniff(spark, sf_dir):
     (url, encoding, method, md5(decoded text)) — so a drift in either the
     sniff decision or one byte of any page's transcoded text fails the
     value-hash gate. The kernel's own UTF-8-replacement decode stays
-    untouched (reference parity, Program.cs:3); sources/charset.py's
-    transcode_to_utf8 feeds it valid UTF-8 for the non-UTF-8 minority."""
+    untouched (reference parity, Program.cs:3); run_pipeline(transcode=
+    True) feeds it valid UTF-8 for the non-UTF-8 minority."""
     from htmlparser_spark.sources.charset import decoded_text
     pages = synth_charset_pages(spark, N_CHARSET_CORPUS, seed=42,
                                 partitions=4)

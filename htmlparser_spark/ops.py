@@ -2007,61 +2007,76 @@ def corpus_url_filter(spark, sf_dir):
 # --- Bloom-filter membership dedup -----------------------------------------------------
 
 BLOOM_M = 8192  # bits
+BLOOM_K = 3     # hash functions
 
 
 def _bloom_position(hash_col, j: int):
-    """Bit position of hash function j for a hash column — THE Bloom
-    geometry, shared by the batch dedup_bloom fold/probe and the streaming
-    bloom_history_bits/bloom_dedup_stream so the two paths can never drift
-    (a drifted fold would silently reintroduce false negatives)."""
+    """Bit position of hash function j for a hash column: THE Bloom
+    geometry, read only by bloom_bits and bloom_probe (a fold that drifted
+    from its probe would read as false negatives)."""
     return _portable_hash32(hash_col, F.lit(f"bloom{j}")) % BLOOM_M
-BLOOM_K = 3     # hash functions
+
+
+def bloom_bits(hash_col: str):
+    """The Bloom fold, shared by dedup_bloom and the stream drain: the set
+    bit positions of a frame's ``hash_col`` as ONE aggregate, an array of
+    at most BLOOM_M distinct ints (each collect_set combines map-side)."""
+    return F.array_distinct(F.concat(*[
+        F.collect_set(_bloom_position(F.col(hash_col), j))
+        for j in range(BLOOM_K)]))
+
+
+def bloom_probe(df: DataFrame, hash_col: str, bits: DataFrame) -> DataFrame:
+    """The Bloom probe, shared by dedup_bloom and the stream drain: ``df``
+    plus maybe_dup, 1 iff all k bit positions of its ``hash_col`` are among
+    the ``pos`` rows of ``bits`` (≤ m rows; 1 for every duplicate of a
+    folded hash). One broadcast left join per hash function and no
+    aggregate: it never shuffles ``df`` and is legal in append mode."""
+    hit = F.lit(True)
+    for j in range(BLOOM_K):
+        df = (df.withColumn(f"_pos{j}", _bloom_position(F.col(hash_col), j))
+              .join(F.broadcast(bits.select(F.col("pos").alias(f"_pos{j}"),
+                                            F.lit(1).alias(f"_set{j}"))),
+                    f"_pos{j}", "left"))
+        hit = hit & F.col(f"_set{j}").isNotNull()
+    return (df.withColumn("maybe_dup", hit.cast("int"))
+            .drop(*[f"_{c}{j}" for c in ("pos", "set")
+                    for j in range(BLOOM_K)]))
 
 
 def dedup_bloom(spark, sf_dir):
     """Bloom-filter dedup of a new ingest batch against history — the
     constant-memory scale path when the historical corpus is too big to
     join per ingest: history's content hashes are folded into an m-bit
-    Bloom filter ONCE (here materialized as its ≤m set bit positions);
-    each new doc tests its k=3 bit positions against the broadcast filter.
-    maybe_dup = all k bits set (Bloom positive, possibly false); is_dup =
-    exact content match (ground truth) — together they expose the
+    Bloom filter ONCE (bloom_bits: its ≤m set bit positions); each new doc
+    tests its k=3 bit positions against the broadcast filter (bloom_probe).
+    maybe_dup = all k bits set (Bloom positive, possibly false);
+    is_dup = exact content match (ground truth) — together they expose the
     filter's observed false-positive rate, the number a deployment tunes
     m/k by. Split convention matches dedup_incremental (doc_id % 5 == 0 is
     the new batch).
 
     Scale shape: the filter is O(m) bits REGARDLESS of history size, so its
-    broadcast stays bounded. History folds map-side to ≤m distinct
-    positions (partial distinct below the exchange); the probe is a
-    broadcast hash join; the ground-truth join broadcasts the small new
-    batch's hashes. Per-ingest cost is O(|batch| + m), independent of
-    |history|. The false-positive rate is NOT bounded: the geometry is
+    broadcast stays bounded. History folds in one global aggregate; the
+    probe is k broadcast hash joins that never shuffle the new batch; the
+    ground-truth join broadcasts history's distinct hashes, the one hash
+    exchange. The false-positive rate is NOT bounded: the geometry is
     fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), which suits this
     corpus's small history but saturates as history grows — ~3% of
-    distinct new docs read positive at 10³ history docs, ~93% at 10⁴
-    (ROADMAP item 2 sizes a windowed filter to a target rate)."""
+    distinct new docs read positive at 10³ history docs, 426 of 1,000 new
+    docs (1 true duplicate) at sf0.1's 4·10³, ~93% at 10⁴ (ROADMAP item 2
+    sizes a windowed filter to a target rate)."""
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", F.md5("text").alias("h")))
     is_new = F.col("doc_id") % INC_NEW_MOD == 0
-    pos = [_bloom_position(F.col("h"), j).alias("pos")
-           for j in range(BLOOM_K)]
-    hist_bits = (docs.filter(~is_new)
-                 .select(F.explode(F.array(*pos)).alias("pos"))
-                 .distinct())
-    new_pos = (docs.filter(is_new)
-               .select("doc_id", "h", F.explode(F.array(*pos)).alias("pos")))
-    bloom_hit = (new_pos
-                 .join(F.broadcast(hist_bits.withColumn("set_", F.lit(1))),
-                       "pos", "left")
-                 .groupBy("doc_id", "h")
-                 .agg((F.sum(F.coalesce(F.col("set_"), F.lit(0)))
-                       == BLOOM_K).cast("int").alias("maybe_dup")))
-    hist_h = docs.filter(~is_new).select("h").distinct()
-    truth = (bloom_hit.join(F.broadcast(hist_h.withColumn("t", F.lit(1))),
-                            "h", "left")
-             .select("doc_id", "maybe_dup",
-                     F.coalesce(F.col("t"), F.lit(0)).alias("is_dup")))
-    return truth.select("doc_id", "maybe_dup", "is_dup")
+    hist = docs.filter(~is_new)
+    bits = hist.agg(bloom_bits("h").alias("b")).select(
+        F.explode("b").alias("pos"))
+    hist_h = hist.select("h").distinct().withColumn("is_dup", F.lit(1))
+    return (bloom_probe(docs.filter(is_new), "h", bits)
+            .join(F.broadcast(hist_h), "h", "left")
+            .select("doc_id", "maybe_dup",
+                    F.coalesce(F.col("is_dup"), F.lit(0)).alias("is_dup")))
 
 
 # --- hashing-trick quality-classifier inference ----------------------------------------

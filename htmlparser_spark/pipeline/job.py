@@ -309,8 +309,7 @@ def lineage_of(parsed: DataFrame, buckets: int,
 
 def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
                  *, num_partitions: int | None = None,
-                 lang: str | None = None, dedup: bool = True,
-                 resume: bool = True, extract: bool = True,
+                 lang: str | None = None, resume: bool = True,
                  emit_links: bool = False, transcode: bool = False) -> dict:
     """Full job. Returns a metrics dict (S8). Output layout:
     ``{out_dir}/parsed`` (parquet), ``{out_dir}/_lineage`` (parquet), and
@@ -376,8 +375,7 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # FUSED into the kernel stage: with_sniffed_encoding adds the
         # (codegen) `encoding` column in the same scan projection, and
         # parse_batch re-encodes the non-UTF-8 minority where the bytes
-        # enter Python anyway — one source scan, where the union-shaped
-        # transcode_to_utf8 would execute the source once per branch.
+        # enter Python anyway — one source scan, no extra Python hop.
         from htmlparser_spark.sources.charset import with_sniffed_encoding
         df = with_sniffed_encoding(df).drop("method")
     parsed_path = os.path.join(out_dir, "parsed")
@@ -448,22 +446,20 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
         # repartition + size-tier salting (S3/S4) worth a raw-page shuffle
         df = repartition_pages(df, num_partitions)
     columns = EMIT_LINKS_COLUMNS if emit_links else None
-    parsed = parse_pages(df, extract=extract, columns=columns)
+    parsed = parse_pages(df, columns=columns)
     # the single exchange: parsed rows, keyed on part_key — it clusters the
     # partitionBy(part_key) sink AND (because part_key is a function of url)
     # co-locates every snapshot of a url for the dedup window below
     parsed = parsed.repartition(num_partitions, "part_key")
-    if dedup:
-        # latest-snapshot-wins on the parsed rows. partitionBy(part_key,url)
-        # is satisfied by the part_key hashpartitioning already in place
-        # (hash exprs ⊆ window clustering), so this adds a sort but NO new
-        # exchange — verified in the executed plan (docs/PLANS.md). Tiebreak
-        # matches dedup_latest: deterministic on raw content, never row
-        # order.
-        w = Window.partitionBy("part_key", "url").orderBy(
-            F.col("warc_ts").desc(), F.col("content_hash").desc())
-        parsed = (parsed.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
+    # S6 latest-snapshot-wins on the parsed rows. partitionBy(part_key,url)
+    # is satisfied by the part_key hashpartitioning already in place (hash
+    # exprs ⊆ window clustering), so this adds a sort but NO new exchange —
+    # verified in the executed plan (docs/PLANS.md). Tiebreak matches
+    # dedup_latest: deterministic on raw content, never row order.
+    w = Window.partitionBy("part_key", "url").orderBy(
+        F.col("warc_ts").desc(), F.col("content_hash").desc())
+    parsed = (parsed.withColumn("_rn", F.row_number().over(w))
+              .filter(F.col("_rn") == 1).drop("_rn"))
     parsed = parsed.observe(
         "kernel_metrics",
         F.count(F.lit(1)).alias("pages"),

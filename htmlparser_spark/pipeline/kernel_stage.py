@@ -90,15 +90,11 @@ def parse_batch(batches: Iterator[pd.DataFrame], extract: bool = True,
         raw_lens = ([len(h) if h is not None else 0 for h in htmls]
                     if "html_bytes" in cols else None)
         if "encoding" in pdf.columns:
-            # fused charset transcode (run_pipeline(transcode=True)): the
-            # sniff is a codegen column computed in the SAME scan projection,
-            # and the re-encode happens here — where the page bytes have
+            # charset transcode (run_pipeline(transcode=True)): the sniff
+            # is a codegen column computed in the SAME scan projection, and
+            # the re-encode happens here — where the page bytes have
             # already crossed the Arrow boundary for the parse — so the
-            # stage costs one source scan and zero extra Python hops. The
-            # union-shaped sources.charset.transcode_to_utf8 executes its
-            # source once per branch, which at 100 TB (or over a ranged
-            # WARC fetch) reads the corpus twice; this path exists so the
-            # pipeline never does.
+            # stage costs one source scan and zero extra Python hops.
             if decode_bytes is None:
                 from ..sources.charset import decode_bytes
             htmls = [h if h is None or e == "utf-8"

@@ -8,9 +8,11 @@ of pages are windows-1252 / Shift_JIS / GB18030 / UTF-16, declared by a BOM
 or a ``<meta charset>``. Feeding those bytes to a UTF-8-only decode turns
 every non-ASCII character into U+FFFD mojibake. This module is the opt-in
 ingest pass that fixes that WITHOUT touching kernel parity: sniff the
-encoding per page (pure codegen — zero Python), transcode only the non-UTF-8
-minority to UTF-8 bytes (an ``arrow_udf`` on that small slice), and hand
-the kernel what it already expects.
+encoding per page (pure codegen — zero Python) and decode with
+``decode_bytes``. The parse pipeline re-encodes the non-UTF-8 minority to
+UTF-8 bytes inside its kernel stage (``run_pipeline(transcode=True)``,
+``pipeline/kernel_stage.parse_batch``), so the kernel gets what it
+already expects.
 
 Sniffing follows the WHATWG "encoding sniffing algorithm" shape
 (https://html.spec.whatwg.org/multipage/parsing.html#determining-the-character-encoding),
@@ -34,16 +36,15 @@ to a char), so the regex runs JVM-side on any input. Unknown labels fall
 through to the default, like a browser.
 
 Scale shape: the sniff is per-row codegen expressions (no exchange, no
-Python); the transcode ``arrow_udf`` runs only on rows whose sniffed encoding
-is not already UTF-8 — at Common-Crawl ratios ~95% of bytes never leave the
-JVM, and the slow slice is Arrow-batched numpy-free string codec work.
+Python); the re-encode touches only rows whose sniffed encoding is not
+already UTF-8, where their bytes cross into Python for the parse anyway.
 """
 from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import StringType
 
 # WHATWG encoding-label table (subset: the labels that actually occur at
 # web scale), label → canonical name. Python codec spellings in _CODECS.
@@ -114,7 +115,7 @@ def decode_bytes(data: bytes, encoding: str) -> str:
     """One page's bytes → str under the sniffed encoding (replacement on
     invalid sequences, like the kernel's UTF-8 path), leading BOM stripped —
     the same normalization ``kernel.api.decode_input`` applies, so the
-    transcode composes with the parse kernel bit-for-bit."""
+    kernel stage's re-encode composes with the parse bit-for-bit."""
     s = bytes(data).decode(_CODECS.get(encoding, "utf-8"), "replace")
     if s[:1] == "﻿":
         s = s[1:]
@@ -127,45 +128,9 @@ def _decode_udf(html: pa.Array, encoding: pa.Array) -> pa.Array:
                      zip(html.to_pylist(), encoding.to_pylist())], pa.string())
 
 
-@F.arrow_udf(BinaryType())
-def _transcode_udf(html: pa.Array, encoding: pa.Array) -> pa.Array:
-    return pa.array([decode_bytes(b, e).encode("utf-8") for b, e in
-                     zip(html.to_pylist(), encoding.to_pylist())], pa.binary())
-
-
 def decoded_text(df: DataFrame, html_col: str = "html",
                  out_col: str = "text_u") -> DataFrame:
     """Append the charset-aware decoded text of every page (sniff + decode).
     Used by analytics that read page text directly from raw bytes."""
     s = with_sniffed_encoding(df, html_col)
     return s.withColumn(out_col, _decode_udf(F.col(html_col), F.col("encoding")))
-
-
-def transcode_to_utf8(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """Pages-schema df → same schema with every page whose encoding was
-    DETECTED as non-UTF-8 re-encoded to valid UTF-8 bytes.
-
-    Split-path: rows sniffed utf-8 (the vast majority at crawl ratios) pass
-    through UNTOUCHED — no Python, no copy, a utf-8 BOM is left in place
-    for the kernel's own BOM strip (parity path), and undeclared legacy
-    bytes (sniffed utf-8 by default) keep their raw bytes so the kernel's
-    U+FFFD-replacement decode stays the single defined behavior for them.
-    Only the detected non-UTF-8 slice runs the Arrow-batched transcode.
-    Both branches are map-only; the union adds no exchange.
-
-    CAVEAT — the two branches each execute the SOURCE plan: with no
-    exchange between the source and the filters there is nothing for
-    Spark to reuse, so a bare scan is read twice (and an expensive source
-    like a ranged WARC fetch runs twice). Use this standalone shape when
-    the source is a cheap re-readable scan and you need transcoded BYTES
-    out (e.g. rewriting a WARC); the parse pipeline instead fuses the
-    re-encode into its kernel stage (`run_pipeline(transcode=True)` —
-    one scan, zero extra Python hops, see pipeline/kernel_stage.py).
-    """
-    s = with_sniffed_encoding(df, html_col)
-    fast = s.filter(F.col("encoding") == "utf-8").drop("encoding", "method")
-    slow = (s.filter(F.col("encoding") != "utf-8")
-            .withColumn(html_col,
-                        _transcode_udf(F.col(html_col), F.col("encoding")))
-            .drop("encoding", "method"))
-    return fast.unionByName(slow)

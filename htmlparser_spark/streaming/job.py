@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._rowmap import flat_map, local_frame, one_row
-from ..ops import BLOOM_K, BLOOM_M, _bloom_position
+from ..ops import BLOOM_M, bloom_bits, bloom_probe
 from ..pipeline.job import (
     explode_pages, hadoop_path, jvm_class, parse_pages, with_part_key)
 from ..pipeline.schema import PAGES_SCHEMA, PARSED_SCHEMA
@@ -216,13 +216,6 @@ def _last_committed_batch(spark: SparkSession, sink_dir: str) -> int:
     return max((int(m[1]) for m in ids if m), default=-1)
 
 
-def _bits_metric():
-    """A frame's set Bloom bit positions as ONE aggregate (≤ BLOOM_M ints)."""
-    return F.array_distinct(F.concat(*[
-        F.collect_set(_bloom_position(F.col("content_hash"), j))
-        for j in range(BLOOM_K)]))
-
-
 def _bitmap(positions, bitmap: str | None = None) -> str:
     """``bitmap`` ∪ ``positions`` packed as BLOOM_M/4 hex digits (2 KiB)."""
     n = int(bitmap or "0", 16)
@@ -237,7 +230,7 @@ def _seed_bits(spark: SparkSession, history_dir: str) -> str:
     row = (spark.read.schema(PARSED_SCHEMA).parquet(history_dir)
            .agg(F.count(F.lit(1)).alias("n"),
                 F.count_if(F.col("content_hash") != 0).alias("hashed"),
-                _bits_metric().alias("bits")).collect()[0])
+                bloom_bits("content_hash").alias("bits")).collect()[0])
     if row.n and not row.hashed:
         raise ValueError(
             f"Bloom history {history_dir!r}: all {row.n} rows have "
@@ -295,7 +288,7 @@ def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
         state = {**want, "last_batch": -1, "totals": dict.fromkeys(aggs, 0)}
         if bloom:
             state["seed_bits"] = state["bits"] = _seed_bits(spark, history_dir)
-    metrics = {**aggs, "bits": _bits_metric()} if bloom else aggs
+    metrics = {**aggs, "bits": bloom_bits("content_hash")} if bloom else aggs
     sink_dir = os.path.join(out_dir, sink)
 
     def advance(rows, last_batch, base):
@@ -314,7 +307,7 @@ def _drain(spark: SparkSession, frame: DataFrame, out_dir: str, sink: str,
         state = advance([_recount(spark, sink_dir, metrics)], before, empty)
     if bloom:
         bits = int(state["bits"], 16)
-        frame = bloom_dedup_stream(frame, local_frame(spark, [
+        frame = bloom_probe(frame, "content_hash", local_frame(spark, [
             (p,) for p in range(BLOOM_M) if bits >> p & 1], "pos bigint"))
     # On file: the query's logs (offsets, commits, sources/0, the sink's
     # _spark_metadata) commit through the FileSystem manager: Spark's
@@ -379,54 +372,6 @@ def run_links_stream_once(spark: SparkSession, src_dir: str,
                   {"links_total": F.count(F.lit(1))})
 
 
-def bloom_history_bits(history: DataFrame) -> DataFrame:
-    """Fold a historical parsed corpus's content hashes into the ≤ BLOOM_M
-    set bit positions of a Bloom filter — the bit geometry comes from the
-    SHARED ops._bloom_position helper (also used by the batch dedup_bloom),
-    so the stream and batch paths cannot drift. Map-side explode + partial
-    distinct below ONE exchange; output is ≤ m rows regardless of history
-    size, so the broadcast stays bounded. The false-positive rate does not:
-    the geometry is fixed (m = BLOOM_M = 8192 bits, k = BLOOM_K = 3), and
-    the filter saturates as history grows — ~3% of distinct new pages
-    read positive at 10³ history documents, ~30% at 3·10³, ~93% at 10⁴
-    (ROADMAP item 2 sizes a windowed filter to a target rate)."""
-    pos = [_bloom_position(F.col("content_hash"), j).alias("pos")
-           for j in range(BLOOM_K)]
-    return history.select(F.explode(F.array(*pos)).alias("pos")).distinct()
-
-
-def bloom_dedup_stream(parsed: DataFrame, hist_bits: DataFrame) -> DataFrame:
-    """Tag a parsed page stream with maybe_dup against the history Bloom
-    filter: one stream-static BROADCAST left join per hash function (k=3),
-    no aggregation — stateless per row, so it is legal in append mode and
-    costs nothing beyond the map stage of each micro-batch. maybe_dup = 1
-    iff all k probed bits are set (Bloom positive: every true duplicate of
-    a history document is flagged — no false negatives — plus the filter's
-    m/k-governed false-positive minority). Works identically on a BATCH
-    DataFrame (pinned by a stream-vs-batch differential test).
-
-    Scale shape: the probe never shuffles the stream — k broadcast joins +
-    codegen hashes; per-micro-batch cost is O(|batch|), independent of
-    history size. run_bloom_stream_once keeps the bit set in its state
-    file and folds in each drain's observed bit positions, so filter
-    maintenance is O(|batch|) too."""
-    out = parsed
-    hits = []
-    for j in range(BLOOM_K):
-        pos_j = _bloom_position(F.col("content_hash"), j)
-        bits_j = (hist_bits.select(F.col("pos").alias(f"_pos{j}"))
-                  .withColumn(f"_set{j}", F.lit(1)))
-        out = (out.withColumn(f"_pos{j}", pos_j)
-               .join(F.broadcast(bits_j), f"_pos{j}", "left"))
-        hits.append(F.coalesce(F.col(f"_set{j}"), F.lit(0)))
-    n_set = hits[0]
-    for h in hits[1:]:
-        n_set = n_set + h
-    out = out.withColumn("maybe_dup", (n_set == F.lit(BLOOM_K)).cast("int"))
-    return out.drop(*[f"_pos{j}" for j in range(BLOOM_K)],
-                    *[f"_set{j}" for j in range(BLOOM_K)])
-
-
 def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
                           history_dir: str) -> dict:
     """Continuous-ingest dedup drain: parse pending page drops and tag
@@ -442,7 +387,7 @@ def run_bloom_stream_once(spark: SparkSession, src_dir: str, out_dir: str,
     Its accuracy is not: the geometry is fixed (m = 8192 bits, k = 3), so
     the filter saturates — ~93% of distinct new pages read maybe_dup = 1
     once the history reaches 10⁴ documents, ~100% at 10⁵ (see
-    bloom_history_bits and ROADMAP item 2). Crash-safe: see ``_drain``.
+    ops.dedup_bloom and ROADMAP item 2). Crash-safe: see ``_drain``.
 
     This drain always parses untranscoded, and resuming an out_dir a
     transcoded or plain-kind drain created fails fast instead of mixing

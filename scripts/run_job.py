@@ -5,7 +5,7 @@
 Usage:
   spark-submit --py-files dist/htmlparser_spark.zip scripts/run_job.py \
       --src /path/to/pages_parquet --out /path/to/out \
-      [--partitions 256] [--lang en] [--no-dedup] [--no-resume] [--synth N]
+      [--partitions 256] [--lang en] [--no-resume] [--synth N]
 
 The module zip is built by scripts/make_pyfiles.py. On a cluster the master /
 executor topology comes from spark-submit flags; this script only declares the
@@ -34,9 +34,7 @@ def main(argv=None):
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--lang", default=None)
-    ap.add_argument("--no-dedup", action="store_true")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-extract", action="store_true")
     ap.add_argument("--synth", type=int, default=None,
                     help="generate N synthetic pages instead of reading --src")
     ap.add_argument("--warc", default=None,
@@ -76,9 +74,7 @@ def main(argv=None):
         spark, src, args.out,
         num_partitions=args.partitions,
         lang=args.lang,
-        dedup=not args.no_dedup,
         resume=not args.no_resume,
-        extract=not args.no_extract,
         emit_links=args.emit_links,
         transcode=args.transcode,
     )

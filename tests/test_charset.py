@@ -1,7 +1,7 @@
 """Charset sniff + transcode (sources/charset.py): WHATWG-prescan-shaped
-encoding detection as pure codegen, vectorized transcode of the detected
-non-UTF-8 slice, and the parity guarantee that the parse kernel's own
-UTF-8-replacement decode (Program.cs:3) is untouched."""
+encoding detection as pure codegen, the kernel stage's re-encode of the
+detected non-UTF-8 slice, and the parity guarantee that the parse kernel's
+own UTF-8-replacement decode (Program.cs:3) is untouched."""
 import os
 import sys
 
@@ -13,7 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from htmlparser_spark.kernel.api import parse_html
 from htmlparser_spark.sources.charset import (
-    decode_bytes, sniff_encoding, transcode_to_utf8, with_sniffed_encoding)
+    decode_bytes, sniff_encoding, with_sniffed_encoding)
 from htmlparser_spark.synth import (
     CHARSET_SAMPLES, expected_charset_text, gen_charset_page,
     synth_charset_pages)
@@ -115,34 +115,6 @@ def test_decode_matches_ground_truth(spark, sniffed):
             (i, i % 10, enc)
 
 
-def test_transcode_split_path(spark):
-    pages = synth_charset_pages(spark, N, seed=SEED, partitions=2)
-    out = {r.url: bytes(r.html) for r in transcode_to_utf8(pages).collect()}
-    for i in range(N):
-        url, _, raw, _, _ = gen_charset_page(SEED, i)
-        got = out[url]
-        cls = i % 10
-        if cls in (4, 5, 6, 7, 8):      # detected non-UTF-8 → re-encoded
-            assert got != raw
-            assert got.decode("utf-8") == expected_charset_text(SEED, i)
-        else:                           # utf-8 / default → byte passthrough
-            assert got == raw
-
-
-def test_transcoded_page_parses_clean(spark):
-    """Transcode composes with the kernel: the Shift_JIS and UTF-16 pages'
-    sample text must appear VERBATIM in extracted main_text, while the raw
-    (untranscoded) bytes would produce mojibake."""
-    pages = synth_charset_pages(spark, N, seed=SEED, partitions=2)
-    out = {r.url: bytes(r.html) for r in transcode_to_utf8(pages).collect()}
-    for i, key in ((6, "shift_jis"), (7, "gb18030"), (8, "utf-16le")):
-        url, _, raw, _, _ = gen_charset_page(SEED, i)
-        fixed = parse_html(out[url])
-        assert fixed["status"] == "ok"
-        assert CHARSET_SAMPLES[key][:6] in fixed["main_text"]
-        assert CHARSET_SAMPLES[key][:6] not in parse_html(raw)["main_text"]
-
-
 def test_kernel_decode_parity_untouched():
     """Reference parity: the kernel itself still decodes UTF-8-with-
     replacement regardless of any meta declaration (Program.cs:3 semantics,
@@ -191,10 +163,10 @@ def test_run_pipeline_transcode_flag(spark, tmp_path):
 def test_pipeline_transcode_scans_source_once(spark, tmp_path):
     """The fused transcode costs ONE execution of the source (sniff is a
     codegen column in the same projection; the re-encode rides the kernel's
-    existing Arrow crossing). The union-shaped transcode_to_utf8 would run
-    the source once per branch — with a ranged-WARC source that is two
-    fetches of every planned record. Counted with a per-row accumulator
-    inside a mapInPandas source."""
+    existing Arrow crossing). A split of the pages by encoding into two
+    branches reunited by a union would run the source once per branch —
+    with a ranged-WARC source that is two fetches of every planned record.
+    Counted with a per-row accumulator inside a mapInPandas source."""
     from htmlparser_spark.pipeline.job import run_pipeline
     from htmlparser_spark.pipeline.schema import PAGES_SCHEMA
     from htmlparser_spark.synth import gen_charset_page
@@ -217,35 +189,43 @@ def test_pipeline_transcode_scans_source_once(spark, tmp_path):
     assert acc.value == n  # exactly one pass over the source
 
 
-def test_parse_batch_fused_encoding_column():
-    """parse_batch's encoding-aware path (pandas level, no Spark): rows
-    carrying a sniffed non-utf-8 encoding are re-encoded before the parse;
-    utf-8 rows and null rows pass through untouched."""
-    import datetime as dt
-
+def test_parse_batch_fused_encoding_column(sniffed):
+    """parse_batch's encoding-aware path (pandas level; the encodings come
+    from the Spark sniff): a page of every charset class parses exactly as
+    the plain kernel stage parses its expected bytes — the raw bytes for a
+    utf-8 or default page, the re-encoded UTF-8 bytes for a detected
+    non-UTF-8 one — and a null row passes through."""
     import pandas as pd
 
     from htmlparser_spark.pipeline.kernel_stage import parse_batch
 
-    jp = CHARSET_SAMPLES["shift_jis"]
-    # class-6 generator page: shift_jis bytes with a meta declaration
-    url, ts, raw, _t, _l = gen_charset_page(SEED, 6)
-    u8 = decode_bytes(raw, "shift_jis").encode("utf-8")  # ground truth
-    pdf = pd.DataFrame({
-        "url": [url, "https://a.example/u8", "https://a.example/null"],
-        "warc_ts": [ts, ts, ts],
-        "html": [raw, u8, None],
-        "lang": ["", "", ""],
-        "encoding": ["shift_jis", "utf-8", "utf-8"],
-    })
-    out = pd.concat(list(parse_batch(iter([pdf]))))
-    by_url = dict(zip(out["url"], out["main_text"]))
-    st = dict(zip(out["url"], out["status"]))
-    assert jp[:6] in by_url[url]                         # transcoded
-    assert "�" not in by_url[url]
-    # fused path == feeding pre-transcoded utf-8 bytes, bit for bit
-    assert by_url[url] == by_url["https://a.example/u8"]
-    assert st["https://a.example/null"] == "err:null-input"
+    pages = [gen_charset_page(SEED, i) for i in range(10)]  # one per class
+    urls = [p[0] for p in pages] + ["https://a.example/null"]
+    raws = [p[2] for p in pages]
+    encs = [sniffed[url][0] for url in urls[:10]]
+    want = [raw if enc == "utf-8" else decode_bytes(raw, enc).encode()
+            for raw, enc in zip(raws, encs)]
+    assert [i for i in range(10) if raws[i] != want[i]] == [4, 5, 6, 7, 8]
+
+    def parse(html, **encoding):
+        pdf = pd.DataFrame({"url": urls, "warc_ts": pages[0][1],
+                            "html": html + [None], "lang": "", **encoding})
+        return (pd.concat(list(parse_batch(iter([pdf]))))
+                .drop(columns="html_bytes").to_dict("records"))
+
+    fused = parse(raws, encoding=encs + ["utf-8"])
+    plain = parse(want)
+    for i in range(10):
+        assert fused[i] == plain[i], (i, encs[i])
+    assert fused[10]["status"] == "err:null-input"
+    # the legacy-charset pages read their sample text verbatim, where the
+    # kernel's own decode of their raw bytes reads mojibake
+    for i, key in ((4, "windows-1252"), (6, "shift_jis"),
+                   (7, "gb18030"), (8, "utf-16le")):
+        assert CHARSET_SAMPLES[key][:6] in fused[i]["main_text"], (i, key)
+        assert "�" not in fused[i]["main_text"], (i, key)
+        assert (CHARSET_SAMPLES[key][:6]
+                not in parse_html(raws[i])["main_text"]), (i, key)
 
 
 def test_resume_enforces_transcode_flag(spark, tmp_path):

@@ -192,11 +192,13 @@ def test_url_filter_map_only_broadcast_blocklist(spark):
 
 
 def test_bloom_probe_broadcasts_filter_bits(spark):
-    """The Bloom probe must broadcast the (≤ m)-row bit-position set and
-    the history hash set — per-ingest cost independent of history size.
-    The only hash exchanges key the NEW batch's per-doc aggregate."""
+    """The Bloom probe must broadcast the (≤ m)-row bit-position set (one
+    join per hash function) and the history hash set — per-ingest cost
+    independent of history size. The new batch is never shuffled: the one
+    hash exchange is the distinct of history's hashes."""
     p = plan_of(ops.dedup_bloom(spark, SF))
-    assert p.count("BroadcastHashJoin") >= 2, p
+    assert p.count("Exchange hashpartitioning") == 1, p
+    assert p.count("BroadcastHashJoin") >= ops.BLOOM_K + 1, p
     assert "SortMergeJoin" not in p, p
 
 

@@ -2,8 +2,8 @@
 (htmlparser_spark._rowmap), the rule that every Python stage of the package
 pickles by reference, the rule that every literal table is a
 ``LocalRelation``, the rule that only the two named stages cross the
-boundary as pandas, and the rule that only ``build_session`` reads the
-environment."""
+boundary as pandas, the rule that only ``build_session`` reads the
+environment, and the rule that only ``ops.py`` names the Bloom geometry."""
 import ast
 import os
 import sys
@@ -293,6 +293,44 @@ def g(env=os.environ):
 '''
     assert _environ_reads(ast.parse(src)) == [
         (3, None), (5, "build_session"), (7, "f"), (8, None), (9, "g")]
+
+
+BLOOM_GEOMETRY = ("_bloom_position", "BLOOM_K")
+
+
+def _bloom_geometry_names(tree):
+    """(line, name) of every name, attribute or import naming the Bloom
+    hash functions."""
+    return sorted({
+        (n.lineno, name) for n in ast.walk(tree)
+        for name in ([a.name for a in n.names]
+                     if isinstance(n, ast.ImportFrom)
+                     else [getattr(n, "id", getattr(n, "attr", None))])
+        if name in BLOOM_GEOMETRY})
+
+
+def test_only_ops_names_the_bloom_geometry():
+    """The batch op and the stream drain fold and probe through
+    ``ops.bloom_bits`` and ``ops.bloom_probe``; a module that computes bit
+    positions itself is a second fold or probe that can drift from them
+    (a drifted fold reads as false negatives)."""
+    found = _package_findings(_bloom_geometry_names, "__spark_entry__.py")
+    assert set(found) == {"htmlparser_spark/ops.py"}, found
+
+
+def test_bloom_guard_sees_a_name():
+    src = '''
+from htmlparser_spark.ops import BLOOM_K, BLOOM_M, _bloom_position
+from ..ops import bloom_bits
+def f(c):
+    return [_bloom_position(c, j) for j in range(BLOOM_K)]
+g = ops._bloom_position
+def h():
+    return ops.BLOOM_K, ops.BLOOM_M, bloom_bits("h")
+'''
+    assert _bloom_geometry_names(ast.parse(src)) == [
+        (2, "BLOOM_K"), (2, "_bloom_position"), (5, "BLOOM_K"),
+        (5, "_bloom_position"), (6, "_bloom_position"), (8, "BLOOM_K")]
 
 
 @pytest.fixture(scope="module")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from htmlparser_spark.ops import BLOOM_M
+from htmlparser_spark.ops import BLOOM_M, bloom_bits
 from htmlparser_spark.pipeline.job import build_session, jvm_class
 from htmlparser_spark.pipeline.schema import PARSED_SCHEMA
 from htmlparser_spark.streaming import job
@@ -94,7 +94,7 @@ def _rebuilt_bits(spark, *sinks):
             for d in sinks]
     for r in rows[1:]:
         rows[0] = rows[0].union(r)
-    return {r.pos for r in job.bloom_history_bits(rows[0]).collect()}
+    return set(rows[0].agg(bloom_bits("content_hash")).first()[0])
 
 
 def _jobs_in_group(sc, group, fn):

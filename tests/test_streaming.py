@@ -425,13 +425,20 @@ def test_rate_source_pages_parse_like_batch(spark, tmp_path):
         assert r["main_text"] == want["main_text"]
 
 
+def _bits_frame(history):
+    """The ``pos`` rows of the Bloom filter folded over ``history``."""
+    from htmlparser_spark.ops import bloom_bits
+    return history.agg(bloom_bits("content_hash").alias("b")).select(
+        F.explode("b").alias("pos"))
+
+
 def test_bloom_stream_flags_history_duplicates(spark, tmp_path):
     """Continuous-ingest dedup: a drain whose drop repeats history content
     must flag every true duplicate (Bloom guarantees no false negatives),
     and the streaming tags must equal the same expression applied in
     BATCH to the same rows — stream-static joins change nothing."""
-    from htmlparser_spark.streaming.job import (
-        bloom_dedup_stream, bloom_history_bits, run_bloom_stream_once)
+    from htmlparser_spark.ops import bloom_probe
+    from htmlparser_spark.streaming.job import run_bloom_stream_once
 
     src_h, out_h = str(tmp_path / "src_h"), str(tmp_path / "out_h")
     src_n, out_n = str(tmp_path / "src_n"), str(tmp_path / "out_n")
@@ -467,9 +474,9 @@ def test_bloom_stream_flags_history_duplicates(spark, tmp_path):
 
     # stream-vs-batch differential: same expression, same rows, same tags
     hist = spark.read.parquet(hist_dir)
-    batch = bloom_dedup_stream(
+    batch = bloom_probe(
         spark.read.parquet(os.path.join(out_n, "parsed")).drop("maybe_dup"),
-        bloom_history_bits(hist))
+        "content_hash", _bits_frame(hist))
     want = {(row.url, row.warc_ts): row.maybe_dup
             for row in batch.select("url", "warc_ts", "maybe_dup").collect()}
     got = {(row.url, row.warc_ts): row.maybe_dup for row in rows}
@@ -486,9 +493,8 @@ def test_bloom_incremental_drain_never_rescans_history(spark, tmp_path):
     drain-1 output)."""
     import json
 
-    from htmlparser_spark.ops import BLOOM_M
-    from htmlparser_spark.streaming.job import (
-        bloom_dedup_stream, bloom_history_bits, run_bloom_stream_once)
+    from htmlparser_spark.ops import BLOOM_M, bloom_bits, bloom_probe
+    from htmlparser_spark.streaming.job import run_bloom_stream_once
 
     src_h, out_h = str(tmp_path / "src_h"), str(tmp_path / "out_h")
     src_n, out_n = str(tmp_path / "src_n"), str(tmp_path / "out_n")
@@ -518,7 +524,7 @@ def test_bloom_incremental_drain_never_rescans_history(spark, tmp_path):
         rows = spark.read.parquet(hist_dir).select("content_hash")
         for d in dirs:
             rows = rows.union(spark.read.parquet(d).select("content_hash"))
-        return {r.pos for r in bloom_history_bits(rows).collect()}
+        return set(rows.agg(bloom_bits("content_hash")).first()[0])
 
     st1, bits1 = state_bits()
     assert st1["last_batch"] == 0
@@ -556,8 +562,8 @@ def test_bloom_incremental_drain_never_rescans_history(spark, tmp_path):
                  .union(spark.read.parquet(
                      *[os.path.join(parsed_dir, f) for f in files1])
                      .select("content_hash")))
-    want_df = bloom_dedup_stream(rows2.drop("maybe_dup"),
-                                 bloom_history_bits(full_hist))
+    want_df = bloom_probe(rows2.drop("maybe_dup"), "content_hash",
+                          _bits_frame(full_hist))
     want = {(r.url, r.warc_ts): r.maybe_dup
             for r in want_df.select("url", "warc_ts", "maybe_dup").collect()}
     got = {(r.url, r.warc_ts): r.maybe_dup
@@ -600,9 +606,8 @@ def test_bloom_crash_between_commit_and_fold_recovers(spark, tmp_path):
     completed drain."""
     import json
 
-    from htmlparser_spark.ops import BLOOM_M
-    from htmlparser_spark.streaming.job import (
-        bloom_history_bits, run_bloom_stream_once)
+    from htmlparser_spark.ops import BLOOM_M, bloom_bits
+    from htmlparser_spark.streaming.job import run_bloom_stream_once
 
     src_h, out_h = str(tmp_path / "src_h"), str(tmp_path / "out_h")
     src_n, out_n = str(tmp_path / "src_n"), str(tmp_path / "out_n")
@@ -637,7 +642,7 @@ def test_bloom_crash_between_commit_and_fold_recovers(spark, tmp_path):
                    .select("content_hash")))
     # recovery + this drain both folded: bits = history ∪ committed sink
     assert ({p for p in range(BLOOM_M) if bits >> p & 1}
-            == {r.pos for r in bloom_history_bits(rows).collect()})
+            == set(rows.agg(bloom_bits("content_hash")).first()[0]))
 
 
 def test_stream_flags_legacy_marker_refused(spark, tmp_path):
