@@ -39,7 +39,8 @@ SEED = 42
 def _session(cpus: int):
     from htmlparser_spark.pipeline.job import build_session
     # every number here is a warm repeat, where C2 pays back: the C1-only
-    # driver ran the relational suite ~28% slower (README), so keep C2
+    # driver ran the relational suite ~28% slower (README), so keep C2;
+    # build_session still appends the class archive's options
     return build_session(app=f"bench-local{cpus}", cpus=cpus,
                          shuffle_partitions=max(cpus, 8),
                          extra_conf={"spark.driver.defaultJavaOptions": ""})

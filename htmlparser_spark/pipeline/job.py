@@ -15,12 +15,14 @@ import os
 import re
 from functools import lru_cache, partial, reduce
 
+from pyspark import SparkContext
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions.partitioning import bucket
 
 from .._rowmap import local_frame
+from . import cds
 from .kernel_stage import parse_batch, parsed_schema
 from .schema import (
     LINEAGE_SCHEMA, PAGES_SCHEMA, PARSED_LINK_FIELDS, PARSED_SCHEMA)
@@ -37,7 +39,7 @@ BUCKET_TARGET_BYTES = 256 << 20  # scanned source bytes per bucket
 # again, and B = N keys leave ~1/e of the post-exchange tasks empty and the
 # fullest at 2-5x the mean; B = 4N leaves none empty up to N = 64 (1.5-2.75x).
 MIN_BUCKETS_PER_PARTITION = 4
-LINEAGE_FORMAT = 1  # bump it with any change to LINEAGE_SCHEMA's meaning
+LINEAGE_FORMAT = 2  # bump it with any change to LINEAGE_SCHEMA's meaning
 # The emit_links parsed sink: PARSED_SCHEMA plus the web-graph columns.
 EMIT_LINKS_COLUMNS = [f.name
                       for f in PARSED_SCHEMA.fields + PARSED_LINK_FIELDS]
@@ -63,6 +65,10 @@ SESSION_CONF = {
     # import on the first); errors lose it unless extra_conf sets "true"
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+# the driver JVM's class archive (cds.plan), decided by the first
+# build_session of the process: an option that changed between two calls
+# would make the second refuse the session the first one built
+_ARCHIVE = None
 
 
 def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
@@ -71,7 +77,10 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
     binary cells, AQE on as the skew backstop, Python workers reused.
     ``getOrCreate`` hands back a running session without applying static
     confs, so a running session whose master or static confs differ from
-    these is refused (ValueError) rather than returned unconfigured."""
+    these is refused (ValueError) rather than returned unconfigured.
+    A gateway it launches maps the driver JVM's class archive, or dumps
+    one at exit (pipeline/cds.py)."""
+    global _ARCHIVE
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = f"local[{cpus}]"
     conf = {
@@ -83,6 +92,12 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
         "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
         "spark.ui.enabled": "false",
         **(extra_conf or {})}
+    if _ARCHIVE is None:
+        _ARCHIVE = cds.plan(os.environ, SparkContext._gateway is None and
+                            "spark.driver.extraClassPath" not in conf)
+    java = conf["spark.driver.defaultJavaOptions"]
+    conf["spark.driver.defaultJavaOptions"] = (
+        f"{java} {_ARCHIVE.options}".strip())
     active = SparkSession.getActiveSession()
     if active is not None:  # getOrCreate would hand it back as it is
         stale = {k: active.conf.get(k, None) for k, v in conf.items()
@@ -94,8 +109,11 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
                 f"{active.sparkContext.master!r}, static confs {stale}) was "
                 f"not built with master {master!r} and these confs; call "
                 "spark.stop() on it first")
-    return (SparkSession.builder.appName(app).master(master)
-            .config(map=conf).getOrCreate())
+    with _ARCHIVE.environ(os.environ):
+        spark = (SparkSession.builder.appName(app).master(master)
+                 .config(map=conf).getOrCreate())
+    _ARCHIVE.keep(SparkContext._gateway)
+    return spark
 
 
 @lru_cache(maxsize=None)
@@ -287,12 +305,12 @@ def status_counts(parsed: DataFrame) -> DataFrame:
 
 # --- S9: lineage + resume ----------------------------------------------------
 
-def lineage_of(parsed: DataFrame, buckets: int,
-               transcode: bool = False) -> DataFrame:
+def lineage_of(parsed: DataFrame, buckets: int, transcode: bool = False,
+               lang: str | None = None) -> DataFrame:
     """Per-partition manifest: row counts + an order-insensitive checksum of
-    (url, status, main_text), plus the transcode flag the partition was
-    parsed under, the bucket count B its part_key was hashed with and the
-    manifest's LINEAGE_FORMAT. Written alongside the output; resume
+    (url, status, main_text), plus the transcode flag and lang filter the
+    partition was parsed under, the bucket count B its part_key was hashed
+    with and the manifest's LINEAGE_FORMAT. Written alongside the output; resume
     anti-joins completed part_keys."""
     row_hash = F.xxhash64("url", "status", "main_text")
     return parsed.groupBy("part_key").agg(
@@ -303,6 +321,7 @@ def lineage_of(parsed: DataFrame, buckets: int,
         # bit_xor: order-insensitive and overflow-free under ANSI mode
         F.bit_xor(row_hash).alias("checksum"),
     ).withColumns({"transcode": F.lit(bool(transcode)),
+                   "lang": F.lit(lang or None).cast("string"),
                    "buckets": F.lit(int(buckets)),
                    "format": F.lit(LINEAGE_FORMAT)})
 
@@ -316,6 +335,9 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
     with ``emit_links=True`` also ``{out_dir}/links`` (parquet). The sinks
     are partitioned on part_key = pmod(xxhash64(url), B), with B sized to
     the input (sink_buckets) and recorded in the manifest for resume.
+
+    lang: keep only pages of that language. A resumed sink must keep it,
+    like transcode below: the manifest records it per partition.
 
     transcode: opt-in charset ingest pass (sources/charset.py) — sniff each
     page's encoding (BOM / meta prescan, pure codegen) and re-encode the
@@ -395,7 +417,8 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
             done_rows = []
     if done_rows:
         # completed partitions are never re-parsed, so a resume adopts the
-        # recorded B and transcode flag, and refuses what it cannot vouch for
+        # recorded B and refuses a transcode flag or lang filter other
+        # than its own, and any manifest it cannot vouch for
         formats = {r.format for r in done_rows}
         if formats != {LINEAGE_FORMAT}:
             raise ValueError(f"resumed sink's manifest has format {formats}, "
@@ -407,13 +430,15 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
                              f"{recorded}, not one; re-run with resume=False "
                              f"(full re-parse) or a fresh out_dir")
         (num_buckets,) = recorded
-        prior = {r.transcode for r in done_rows}
-        if prior != {bool(transcode)}:
-            raise ValueError(
-                f"transcode={bool(transcode)} on a resumed sink whose "
-                f"completed partitions were parsed with "
-                f"transcode={sorted(prior, key=str)}; re-run with "
-                f"resume=False (full re-parse) or a fresh out_dir")
+        for name, value in (("transcode", bool(transcode)),
+                            ("lang", lang or None)):
+            prior = {r[name] for r in done_rows}
+            if prior != {value}:
+                raise ValueError(
+                    f"{name}={value!r} on a resumed sink whose completed "
+                    f"partitions were parsed with {name}="
+                    f"{sorted(prior, key=str)}; re-run with resume=False "
+                    f"(full re-parse) or a fresh out_dir")
     else:
         num_buckets = sink_buckets(df, num_partitions)
     if emit_links and done_rows:
@@ -510,7 +535,8 @@ def run_pipeline(spark: SparkSession, src: str | DataFrame, out_dir: str,
          .option("partitionOverwriteMode", overwrite)
          .partitionBy("part_key").parquet(links_path))
 
-    new_lineage = lineage_of(inc, num_buckets, transcode=transcode)
+    new_lineage = lineage_of(inc, num_buckets, transcode=transcode,
+                             lang=lang)
     if done_rows:
         new_lineage = new_lineage.unionByName(
             local_frame(spark, done_rows, LINEAGE_SCHEMA))

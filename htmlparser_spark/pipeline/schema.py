@@ -109,6 +109,10 @@ LINEAGE_SCHEMA = StructType([
     # resume compares it against the current run's flag and fails fast on
     # mismatch, since completed partitions are never re-parsed.
     StructField("transcode", BooleanType()),
+    # the run_pipeline(lang=...) filter the partition was parsed under
+    # (null: none), checked like transcode: a completed partition holds
+    # that language's pages only
+    StructField("lang", StringType()),
     # the B of part_key = pmod(xxhash64(url), B) (job.sink_buckets): resume
     # adopts it and refuses a manifest without exactly one value
     StructField("buckets", IntegerType()),

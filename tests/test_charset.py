@@ -249,6 +249,25 @@ def test_resume_enforces_transcode_flag(spark, tmp_path):
     assert rows and all(r.transcode is True for r in rows)
 
 
+def test_resume_enforces_lang_filter(spark, tmp_path):
+    """The lineage manifest records the lang filter per partition, and a
+    resume with another filter or none fails fast (its completed partitions
+    hold only the first filter's pages), while the same filter proceeds."""
+    from htmlparser_spark.pipeline.job import run_pipeline
+    from htmlparser_spark.synth import synth_pages
+
+    out = str(tmp_path / "out")
+    pages = synth_pages(spark, 20, seed=SEED, partitions=2)
+    n_de = run_pipeline(spark, pages, out, lang="de")["pages"]
+    assert n_de > 0
+    for other in (None, "en"):
+        with pytest.raises(ValueError, match=f"lang={other!r} on a resumed"):
+            run_pipeline(spark, pages, out, lang=other)
+    assert run_pipeline(spark, pages, out, lang="de")["pages"] == n_de
+    rows = spark.read.parquet(str(tmp_path / "out" / "_lineage")).collect()
+    assert rows and all(r.lang == "de" for r in rows)
+
+
 def test_fused_transcode_keeps_raw_byte_accounting():
     """html_bytes means RAW capture bytes even when the fused transcode
     rebinds the kernel's input to re-encoded utf-8 (lineage n_bytes and

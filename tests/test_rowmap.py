@@ -380,11 +380,11 @@ def test_local_frame_is_a_local_relation(spark, rows, schema):
 
 def test_local_frame_takes_manifest_rows(spark, tmp_path):
     """The resume path re-ships the lineage manifest it collected: ``Row``s
-    with bigint, boolean and int fields."""
+    with bigint, boolean, string and int fields."""
     path = str(tmp_path / "_lineage")
     written = [Row(part_key=k, n_rows=3 * k, n_ok=k, n_bytes=1 << 40,
-                   n_errors=0, checksum=-k, transcode=k % 2 == 0, buckets=16,
-                   format=1)
+                   n_errors=0, checksum=-k, transcode=k % 2 == 0,
+                   lang=None if k % 2 else "en", buckets=16, format=2)
                for k in range(5)]
     local_frame(spark, written, LINEAGE_SCHEMA).write.parquet(path)
     rows = spark.read.schema(LINEAGE_SCHEMA).parquet(path).collect()

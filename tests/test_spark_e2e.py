@@ -292,7 +292,7 @@ def _resume_refuses(spark, corpus, tmp_path, cases):
     run_pipeline(spark, corpus, out, num_partitions=4)
     lineage_path = os.path.join(out, "_lineage")
     rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).collect()
-    assert len(rows) >= 2 and {(r.buckets, r.format) for r in rows} == {(16, 1)}
+    assert len(rows) >= 2 and {(r.buckets, r.format) for r in rows} == {(16, 2)}
 
     def snapshot():
         return sorted((os.path.join(d, f), os.stat(os.path.join(d, f)).st_size,
@@ -329,18 +329,21 @@ def test_resume_refuses_lineage_without_one_bucket_count(spark, corpus,
 
 def test_resume_refuses_lineage_of_another_format(spark, corpus, tmp_path):
     """A manifest whose rows lack the layout `format` (written before it
-    existed, with or without `buckets`) or hold another one is refused
-    before any of its other columns is read."""
+    existed, with or without `buckets`) or hold another one — format 1,
+    written before the `lang` column — is refused, not migrated, before
+    any of its other columns is read."""
     no_format = [f for f in LINEAGE_SCHEMA.fields if f.name != "format"]
     legacy = [f for f in no_format if f.name in (
         "part_key", "n_rows", "n_ok", "checksum")]
+    format1 = [f for f in LINEAGE_SCHEMA.fields if f.name != "lang"]
     _resume_refuses(spark, corpus, tmp_path, [
         (lambda rows: [tuple(r[f.name] for f in legacy) for r in rows],
          _ddl(legacy), r"format \{None\}"),
         (lambda rows: [tuple(r[f.name] for f in no_format) for r in rows],
          _ddl(no_format), r"format \{None\}"),
-        (lambda rows: [{**r.asDict(), "format": 2} for r in rows],
-         LINEAGE_SCHEMA, r"format \{2\}")])
+        (lambda rows: [tuple(1 if f.name == "format" else r[f.name]
+                             for f in format1) for r in rows],
+         _ddl(format1), r"format \{1\}")])
 
 
 def test_sink_layout_sized_to_input(spark, tmp_path):

@@ -5,7 +5,8 @@ aggregate of the sink, through crashes between the sink commit and the
 state write, lost state, replayed batches and lost progress. Also: the
 drop-directory listing stays on the driver, the commit-log listing resolves
 its py4j classes once, build_session captures no call sites, runs the
-driver JVM C1-only and refuses a running session it did not configure, a
+driver JVM C1-only (keeping the class archive when a caller replaces that
+option) and refuses a running session it did not configure, a
 Bloom drain after the first launches no job outside its query, a degenerate
 Bloom seed is refused, the Bloom recount reads only files the sink
 committed, and a drain into a file: sink runs its checkpoint logs on the
@@ -23,6 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from htmlparser_spark.ops import BLOOM_M, bloom_bits
+from htmlparser_spark.pipeline.cds import CLASSPATH_ENV, archive_path
 from htmlparser_spark.pipeline.job import build_session, jvm_class
 from htmlparser_spark.pipeline.schema import PARSED_SCHEMA
 from htmlparser_spark.streaming import job
@@ -158,7 +160,8 @@ def test_build_session_captures_no_call_site():
     """build_session turns off DataFrame call-site capture. The conf is
     static, so it holds only in a driver whose session build_session
     creates: the probe runs in a fresh interpreter, where a Column function
-    then sends no ``PySparkCurrentOrigin`` update."""
+    then sends no ``PySparkCurrentOrigin`` update. It inherits the run's
+    tmp class-archive cache (conftest.py), so it neither dumps nor maps."""
     probe = """
 from pyspark.sql import functions as F
 from htmlparser_spark.pipeline.job import build_session
@@ -179,21 +182,43 @@ spark.stop()
 
 @pytest.mark.parametrize("extra_conf, c1_only", [
     (None, True), ({"spark.driver.defaultJavaOptions": ""}, False)])
-def test_build_session_runs_the_driver_jvm_c1_only(extra_conf, c1_only):
+def test_build_session_runs_the_driver_jvm_c1_only(extra_conf, c1_only,
+                                                   tmp_path):
     """build_session launches the driver JVM with C2 off; an extra_conf
-    naming ``spark.driver.defaultJavaOptions`` replaces it. The JVM starts
-    once per interpreter, so each case runs in a fresh one."""
+    naming ``spark.driver.defaultJavaOptions`` replaces it and keeps the
+    class archive's options. The JVM starts once per interpreter, so each
+    case runs in a fresh one, on a cache holding junk at the archive's
+    name: the JVM refuses it without a word on stdout, runs unshared,
+    gives the same rows and leaves the file as it was."""
     probe = f"""
+import json
 from htmlparser_spark.pipeline.job import build_session
 spark = build_session(cpus=1, extra_conf={extra_conf!r})
-print("\\n".join(spark._jvm.java.lang.management.ManagementFactory
-                .getRuntimeMXBean().getInputArguments()))
+print(json.dumps({{
+    "args": list(spark._jvm.java.lang.management.ManagementFactory
+                 .getRuntimeMXBean().getInputArguments()),
+    "rows": [list(r) for r in spark.sql(
+        "SELECT id % 3, sum(id) FROM range(100) GROUP BY 1 ORDER BY 1")
+        .collect()]}}))
 spark.stop()
 """
-    out = subprocess.run([sys.executable, "-c", probe], cwd=REPO, env={
-        **os.environ, "PYTHONPATH": REPO}, capture_output=True, text=True,
-        timeout=300, check=True).stdout
-    assert ("-XX:TieredStopAtLevel=1" in out.splitlines()) is c1_only
+    env = {k: v for k, v in os.environ.items() if k not in CLASSPATH_ENV}
+    env.update(PYTHONPATH=REPO, XDG_CACHE_HOME=str(tmp_path / "cache"),
+               SPARK_CONF_DIR=str(tmp_path / "conf"))
+    archive = archive_path(env)
+    os.makedirs(os.path.dirname(archive))
+    junk = bytes(range(256)) * 4096
+    with open(archive, "wb") as f:
+        f.write(junk)
+    (out,) = subprocess.run([sys.executable, "-c", probe], cwd=REPO, env=env,
+                            capture_output=True, text=True, timeout=300,
+                            check=True).stdout.splitlines()
+    out = json.loads(out)
+    assert ("-XX:TieredStopAtLevel=1" in out["args"]) is c1_only
+    assert f"-XX:SharedArchiveFile={archive}" in out["args"]
+    assert out["rows"] == [[k, sum(range(k, 100, 3))] for k in range(3)]
+    with open(archive, "rb") as f:
+        assert f.read() == junk
 
 
 def test_build_session_refuses_a_session_it_did_not_configure(spark):

@@ -6,6 +6,7 @@ htmlparser_spark from the zip. Also pins the confs each way of starting
 the job puts on its session."""
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -16,7 +17,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from htmlparser_spark.pipeline import job
+from htmlparser_spark.pipeline import cds, job
 from scripts.make_pyfiles import build
 
 
@@ -44,13 +45,26 @@ class _Builder:
         return self
 
 
-def test_build_session_conf_is_unchanged(monkeypatch):
+def test_build_session_conf_is_unchanged(monkeypatch, tmp_path):
+    """The confs of a first session in a process with no gateway running
+    and an empty class-archive cache: the archive options ask for a dump."""
     b = _Builder()
     monkeypatch.setattr(job, "SparkSession", SimpleNamespace(
         builder=b, getActiveSession=lambda: None))
-    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(job, "SparkContext", SimpleNamespace(_gateway=None))
+    monkeypatch.setattr(job, "_ARCHIVE", None)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "conf"))
+    for name in ("SPARK_DRIVER_MEMORY", "PYSPARK_GATEWAY_PORT",
+                 *cds.CLASSPATH_ENV):
+        monkeypatch.delenv(name, raising=False)
     assert job.build_session(cpus=4) is b
     assert (b.app, b.master_url) == ("htmlparser-spark", "local[4]")
+    java = b.conf.pop("spark.driver.defaultJavaOptions")
+    assert re.fullmatch(
+        r"-XX:TieredStopAtLevel=1 -XX:ArchiveClassesAtExit="
+        + re.escape(str(tmp_path / "htmlparser_spark")) + r"/spark-\w+\."
+        + str(os.getpid()) + r"\.part -Xlog:cds\*=off", java), java
     assert b.conf == {
         "spark.sql.shuffle.partitions": "4",
         "spark.sql.adaptive.enabled": "true",
@@ -64,7 +78,6 @@ def test_build_session_conf_is_unchanged(monkeypatch):
         "spark.sql.files.maxPartitionBytes": "128m",
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         "spark.python.sql.dataFrameDebugging.enabled": "false",
-        "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
         "spark.ui.enabled": "false",
     }
 
