@@ -15,7 +15,7 @@ def class_archive_cache(tmp_path_factory):
     (pipeline/cds.py): the run, and every interpreter it starts, sees a
     cache dir under tmp. This process takes that cache's dump claim and
     holds it to exit without dumping, and its own sessions start without
-    the archive, so no session of the run dumps (9-15 s at its JVM's exit)
+    the archive, so no session of the run dumps (4-8 s in its start)
     or maps: each starts as with no archive. Tests of the archive itself
     give each case a cache dir of its own."""
     with pytest.MonkeyPatch.context() as mp:

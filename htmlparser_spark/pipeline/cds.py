@@ -1,12 +1,19 @@
 """A class-data-sharing (CDS) archive for the driver JVM.
 
 A cold session spends about half its start loading and verifying the same
-~11k Spark classes. JDK 17 can write the classes a JVM loaded into a
-dynamic archive when it exits (``-XX:ArchiveClassesAtExit``) and map that
-archive on later starts (``-XX:SharedArchiveFile``). ``build_session``
-asks ``plan`` once per process: it maps the archive when there is one, and
-otherwise lets one process at a time record its classes and dump them when
-its JVM exits.
+Spark classes. JDK 17 can write the classes a running JVM has loaded into
+a dynamic archive (the ``VM.cds dynamic_dump`` diagnostic command, on a
+JVM started with ``-XX:+RecordDynamicDumpInfo``) and map that archive on
+later starts (``-XX:SharedArchiveFile``). ``build_session`` asks ``plan``
+once per process: it maps the archive when there is one, and otherwise
+lets one process at a time dump the classes its session start loaded,
+right after that start.
+
+The archive holds the classes of a session start and nothing a job loads
+later. So it is the same whichever session dumped it, and it shortens the
+start of every session without changing how a job runs. (An archive
+dumped at JVM exit held whatever the dumping session had run, so how much
+faster a later cold job ran depended on which session had come first.)
 
 The archive lives in ``${XDG_CACHE_HOME:-~/.cache}/htmlparser_spark/``,
 named by a hash of the java binary and its ``release`` file, the
@@ -15,31 +22,30 @@ named by a hash of the java binary and its ``release`` file, the
 
 Three facts of the JVM shape the rules:
 - An archive cut short crashes every JVM that maps it (SIGBUS). A dump is
-  therefore written under a ``.part`` name and promoted only when its JVM
-  exited with code 0 under this process's eyes; a killed or failed dump
-  is deleted.
-- A dump fails, and prints to the driver's stdout, when a non-empty
-  directory is on the classpath. Spark's launcher puts the conf dir there,
-  so the gateway starts with ``SPARK_CONF_DIR`` pointing at an empty
-  directory, and only when the effective conf dir holds nothing but
-  ``*.template`` files and the launcher adds no other classpath entry.
-- A dump costs 9-15 s at JVM exit, so only one process dumps at a time,
-  and a dump that did not exit 0 (killed past perfbench's 20 s bound,
-  say) leaves ``<key>.failed``: later sessions start without the
-  archive and dump no more, so a box where dumps cannot finish pays
-  once. Delete the marker to try again.
+  therefore written under a ``.part`` name and promoted only after the
+  JVM reported it done; a failed dump is deleted.
+- A dump fails when a non-empty directory is on the classpath. Spark's
+  launcher puts the conf dir there, so the gateway starts with
+  ``SPARK_CONF_DIR`` pointing at an empty directory, and only when the
+  effective conf dir holds nothing but ``*.template`` files and the
+  launcher adds no other classpath entry.
+- A dump holds the JVM at a safepoint for 4-8 s, and HotSpot ends the
+  JVM when a write fails during it. So only one process dumps at a time,
+  none dumps onto a file system with less than ``MIN_FREE`` bytes free,
+  and a dump that failed leaves ``<key>.failed``: later sessions start
+  without the archive and dump no more. Delete the marker to try again.
 """
 from __future__ import annotations
 
-import atexit
 import fcntl
 import glob
 import hashlib
 import os
 import shutil
-import subprocess
 from contextlib import contextmanager, suppress
 from dataclasses import dataclass
+
+from py4j.protocol import Py4JError, Py4JJavaError
 
 # cds warnings go to the JVM's stdout, which the gateway shares with Python
 QUIET = "-Xlog:cds*=off"
@@ -47,7 +53,7 @@ QUIET = "-Xlog:cds*=off"
 # the conf dir; with any of it set, the session starts without the archive
 CLASSPATH_ENV = ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
                  "SPARK_DIST_CLASSPATH")
-DUMP_WAIT_S = 120  # bound on the wait for a dumping JVM at interpreter exit
+MIN_FREE = 1 << 30  # free bytes under the cache for a dump (~70 MB) to run
 
 
 @dataclass
@@ -57,8 +63,10 @@ class Launch:
     starts with (None: the caller's, untouched)."""
     options: str = ""
     conf_dir: str | None = None
-    # the dumping gateways, when this process holds the dump claim
-    dumping: list | None = None
+    # while this process holds the dump claim and has not dumped: the
+    # archive's final name and the claim's locked file descriptor
+    final: str | None = None
+    lock: int | None = None
 
     @contextmanager
     def environ(self, environ):
@@ -76,12 +84,70 @@ class Launch:
             else:
                 environ["SPARK_CONF_DIR"] = saved
 
-    def keep(self, gateway) -> None:
-        """Record the process of ``gateway`` when this process dumps."""
-        proc = getattr(gateway, "proc", None)
-        if self.dumping is not None and proc is not None \
-                and proc not in self.dumping:
-            self.dumping.append(proc)
+    def dump(self, spark) -> None:
+        """Dump the classes that ``spark``'s JVM has loaded, once, when
+        this process holds the dump claim: to ``<key>.<pid>.part``, linked
+        to the final name (no clobber) only after the JVM reported the
+        dump done. A dump that failed is deleted and leaves
+        ``<key>.failed``; one that took the JVM down re-raises."""
+        if self.final is None:
+            return
+        final, self.final = self.final, None
+        key = final[:-len(".jsa")]
+        part = f"{key}.{os.getpid()}.part"
+        alive = False  # the JVM came back from the dump
+        try:
+            _dynamic_dump(spark, part)
+            alive = True
+            os.link(part, final)
+        except FileExistsError:
+            pass  # another process promoted one first
+        except Exception as e:
+            with suppress(OSError), open(key + ".failed", "w") as f:
+                f.write(f"{type(e).__name__}: {str(e).strip()[:500]}\n")
+            # a Java exception is the JVM refusing the dump; any other
+            # error of the call means py4j lost the gateway
+            if not (alive or isinstance(e, Py4JJavaError)):
+                raise
+        finally:
+            with suppress(OSError):
+                os.unlink(part)
+            os.close(self.lock)
+
+
+def _dynamic_dump(spark, path: str) -> None:
+    """``jcmd <pid> VM.cds dynamic_dump <path>`` from inside the JVM,
+    through the DiagnosticCommand MBean. It returns once the file is
+    written. The platform MBean server's class is not exported, so py4j
+    calls ``MBeanServer.invoke`` by reflection."""
+    gateway, jvm = spark.sparkContext._gateway, spark._jvm
+
+    def array(cls, *items):
+        out = gateway.new_array(cls, len(items))
+        for i, item in enumerate(items):
+            out[i] = item
+        return out
+
+    cls = jvm.java.lang.Class
+    invoke = cls.forName("javax.management.MBeanServer").getMethod(
+        "invoke", array(cls, *map(cls.forName, (
+            "javax.management.ObjectName", "java.lang.String",
+            "[Ljava.lang.Object;", "[Ljava.lang.String;"))))
+    string, obj = jvm.java.lang.String, jvm.java.lang.Object
+    system = jvm.java.lang.System
+    out = system.out  # the JDK prints "Dynamic dump to file" on System.out
+    system.setOut(system.err)
+    try:
+        invoke.invoke(
+            jvm.java.lang.management.ManagementFactory
+            .getPlatformMBeanServer(),
+            array(obj, jvm.javax.management.ObjectName(
+                      "com.sun.management:type=DiagnosticCommand"),
+                  "vmCds", array(obj, array(string, "dynamic_dump", path)),
+                  array(string, "[Ljava.lang.String;")))
+    finally:
+        with suppress(Py4JError, OSError):  # the dump may have ended the JVM
+            system.setOut(out)
 
 
 def _spark_home() -> str:
@@ -111,7 +177,7 @@ def archive_path(environ) -> str:
             h.update(f"\0{e.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
     cache = environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
     return os.path.join(cache, "htmlparser_spark",
-                        f"spark-{h.hexdigest()[:24]}.jsa")
+                        f"session-{h.hexdigest()[:24]}.jsa")
 
 
 def plan(environ, launches: bool) -> Launch:
@@ -134,7 +200,8 @@ def plan(environ, launches: bool) -> Launch:
             return Launch()
         if os.path.isfile(final):
             return Launch(f"-XX:SharedArchiveFile={final} {QUIET}", empty)
-        if os.path.exists(final[:-len(".jsa")] + ".failed"):
+        if (os.path.exists(final[:-len(".jsa")] + ".failed")
+                or shutil.disk_usage(empty).free < MIN_FREE):
             return Launch()
         return _claim_dump(final, empty)
     except OSError:
@@ -156,33 +223,4 @@ def _claim_dump(final: str, empty: str) -> Launch:
     for stale in glob.glob(glob.escape(key) + ".*.part"):
         with suppress(OSError):
             os.unlink(stale)
-    part = f"{key}.{os.getpid()}.part"
-    launch = Launch(f"-XX:ArchiveClassesAtExit={part} {QUIET}", empty, [])
-    atexit.register(_promote, part, final, lock, launch.dumping)
-    return launch
-
-
-def _promote(part: str, final: str, lock: int, procs: list) -> None:
-    """At interpreter exit: end each dumping JVM (it exits when its stdin
-    closes), and promote ``part`` to ``final`` without clobbering only if
-    every one exited with code 0 and left it; a killed, failed or overdue
-    dump is deleted and leaves the ``.failed`` marker with the exit
-    codes."""
-    for proc in procs:
-        proc.stdin.close()
-        try:
-            proc.wait(timeout=DUMP_WAIT_S)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
-    codes = [proc.returncode for proc in procs]
-    if codes and not any(codes) and os.path.isfile(part):
-        with suppress(OSError):  # FileExistsError: one was promoted first
-            os.link(part, final)
-    elif codes:
-        with suppress(OSError):
-            with open(final[:-len(".jsa")] + ".failed", "w") as f:
-                f.write(f"dump JVM exit codes {codes}\n")
-    with suppress(OSError):
-        os.unlink(part)
-    os.close(lock)
+    return Launch(f"-XX:+RecordDynamicDumpInfo {QUIET}", empty, final, lock)

@@ -79,7 +79,7 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
     confs, so a running session whose master or static confs differ from
     these is refused (ValueError) rather than returned unconfigured.
     A gateway it launches maps the driver JVM's class archive, or dumps
-    one at exit (pipeline/cds.py)."""
+    the classes its start loaded into one (pipeline/cds.py)."""
     global _ARCHIVE
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = f"local[{cpus}]"
@@ -112,7 +112,7 @@ def build_session(app="htmlparser-spark", cpus=None, shuffle_partitions=None,
     with _ARCHIVE.environ(os.environ):
         spark = (SparkSession.builder.appName(app).master(master)
                  .config(map=conf).getOrCreate())
-    _ARCHIVE.keep(SparkContext._gateway)
+    _ARCHIVE.dump(spark)
     return spark
 
 
